@@ -315,9 +315,10 @@ def cmd_textqc(args) -> dict:
     spark = _spark(args)
     t0 = time.time()
     d = spark.read.parquet(args.table)
-    out = repetition_stats(language_id(token_count(quality_score(
-        pii_scrub(d, text_col=args.text_col)), text_col=args.text_col),
-        text_col=args.text_col), text_col=args.text_col)
+    out = d
+    for feature_pass in (pii_scrub, quality_score, token_count, language_id,
+                         repetition_stats):
+        out = feature_pass(out, text_col=args.text_col)
     stats: dict = {}
     if args.benchmark:
         bench = spark.read.parquet(args.benchmark)

@@ -790,6 +790,53 @@ def _score_match_group(
                          "score": scores[order]})
 
 
+def _segment_blocks(spark: SparkSession, dirs: list[str], metas: list[dict],
+                    avgdl: float, term_ids: list[int]) -> DataFrame:
+    """The posting blocks of ``term_ids`` across index segments, each
+    tagged with its segment number ``seg``: one ``tb`` + ``term_id``
+    pruned scan per segment, block maxes bound-corrected for the global
+    avgdl (f(avgdl_g) <= f(avgdl_seg) * avgdl_g/avgdl_seg when avgdl_g >
+    avgdl_seg because every denominator term shrinks by at most that
+    ratio; <= unchanged bound otherwise)."""
+    blocks = None
+    for si, (d, m) in enumerate(zip(dirs, metas)):
+        buckets = sorted({tid % int(m["n_buckets"]) for tid in term_ids})
+        scale = max(1.0, avgdl / max(float(m["avgdl"]), 1e-12))
+        part = (
+            spark.read.parquet(IndexPaths(d).postings)
+            .where(F.col("tb").isin(buckets)
+                   & F.col("term_id").isin(term_ids))
+            .select("term_id", "salt", "block_id", "n_docs",
+                    "first_doc_id", "last_doc_id", "doc_gaps", "tf_bytes",
+                    "dl_bytes",
+                    (F.col("block_max_tf_norm") * F.lit(scale))
+                    .alias("block_max_tf_norm"))
+            .withColumn("seg", F.lit(si))
+        )
+        blocks = part if blocks is None else blocks.unionByName(part)
+    return blocks
+
+
+def _segment_allowed(spark: SparkSession, dirs: list[str],
+                     metas: list[dict], pred) -> DataFrame:
+    """The ``(doc_id, salt, seg)`` rows of every segment's doc_stats
+    that pass ``pred`` (pushed to each parquet scan), salted with THAT
+    segment's n_ranges so allowed ids land in the same group as their
+    posting blocks."""
+    allowed = None
+    for si, (d, m) in enumerate(zip(dirs, metas)):
+        part = (
+            spark.read.parquet(IndexPaths(d).doc_stats)
+            .where(pred)
+            .select("doc_id",
+                    salt_expr(F.col("doc_id"), int(m["n_ranges"]))
+                    .alias("salt"))
+            .withColumn("seg", F.lit(si))
+        )
+        allowed = part if allowed is None else allowed.unionByName(part)
+    return allowed
+
+
 def search_topk_multi(
     spark: SparkSession,
     index_dirs: list[str],
@@ -874,26 +921,7 @@ def search_topk_multi(
         for t in q_terms
     }
 
-    # union the segments' matching blocks; bound-correct block maxes
-    # (f(avgdl_g) <= f(avgdl_seg) * avgdl_g/avgdl_seg when avgdl_g >
-    # avgdl_seg because every denominator term shrinks by at most that
-    # ratio; <= unchanged bound otherwise)
-    blocks = None
-    for si, (d, m) in enumerate(zip(index_dirs, metas)):
-        buckets = sorted({tid % int(m["n_buckets"]) for tid in q_term_ids})
-        scale = max(1.0, avgdl / max(float(m["avgdl"]), 1e-12))
-        part = (
-            spark.read.parquet(IndexPaths(d).postings)
-            .where(F.col("tb").isin(buckets)
-                   & F.col("term_id").isin(q_term_ids))
-            .select("term_id", "salt", "block_id", "n_docs",
-                    "first_doc_id", "last_doc_id", "doc_gaps", "tf_bytes",
-                    "dl_bytes",
-                    (F.col("block_max_tf_norm") * F.lit(scale))
-                    .alias("block_max_tf_norm"))
-            .withColumn("seg", F.lit(si))
-        )
-        blocks = part if blocks is None else blocks.unionByName(part)
+    blocks = _segment_blocks(spark, index_dirs, metas, avgdl, q_term_ids)
 
     n_q = len(q_terms)
     disjunctive = operator == "or"
@@ -903,22 +931,7 @@ def search_topk_multi(
     ]
 
     if doc_filter is not None:
-        # per-segment doc_stats scan (predicate pushed down), salted with
-        # THAT segment's n_ranges so allowed ids land in the same group
-        # as their posting blocks
-        allowed_df = None
-        for si, (d, m) in enumerate(zip(index_dirs, metas)):
-            part = (
-                spark.read.parquet(IndexPaths(d).doc_stats)
-                .where(doc_filter)
-                .select(
-                    "doc_id",
-                    salt_expr(F.col("doc_id"), int(m["n_ranges"]))
-                    .alias("salt"))
-                .withColumn("seg", F.lit(si))
-            )
-            allowed_df = (part if allowed_df is None
-                          else allowed_df.unionByName(part))
+        allowed_df = _segment_allowed(spark, index_dirs, metas, doc_filter)
 
         def score_group_f(blocks_pdf: pd.DataFrame,
                           allowed_pdf: pd.DataFrame) -> pd.DataFrame:

@@ -231,7 +231,7 @@ import json
 import math
 import re as _re
 from dataclasses import dataclass, field as _field
-from functools import reduce
+from functools import cached_property, reduce
 
 import numpy as np
 import pandas as pd
@@ -247,7 +247,6 @@ from prow_jobs_scraper_spark.functions.xxh64 import term_id_py
 from prow_jobs_scraper_spark.index.build import (
     BM25Params,
     IndexPaths,
-    salt_expr,
     with_doc_ids,
 )
 
@@ -2233,6 +2232,36 @@ def _compile_score_script(source: str, params: dict):
     return body, tuple(fields)
 
 
+# `_score` as a standalone identifier — not a field or param name
+# ending in it (doc['quality_score'].value, params.max_score)
+_SCORE_IDENT = _re.compile(r"(?<![\w.'])_score\b")
+
+
+def _painless_script(sc, ctx: str) -> tuple:
+    """An ES ``script`` — the source-string shorthand or ``{"source",
+    "params", "lang"}`` — -> ``(source, params)`` for
+    :func:`_compile_score_script`. Another lang, unknown keys (a stored
+    script ``id``) and non-dict params fail loud."""
+    if isinstance(sc, str):
+        sc = {"source": sc}
+    if not isinstance(sc, dict):
+        raise DslError(f"{ctx} needs a script, got {sc!r}")
+    unknown = set(sc) - {"source", "params", "lang"}
+    if unknown:
+        raise DslError(
+            f"unsupported script keys {sorted(unknown)} on {ctx} "
+            f"(stored scripts by id are out of grammar)")
+    if sc.get("lang", "painless") != "painless":
+        raise DslError(
+            f"{ctx}: unsupported script lang {sc['lang']!r} (only the "
+            f"painless subset compiles)")
+    params = sc.get("params", {})
+    if not isinstance(params, dict):
+        raise DslError(f"{ctx}: script params must be a dict, got "
+                       f"{params!r}")
+    return sc.get("source"), params
+
+
 def _parse_script_score(body: dict) -> QuerySpec:
     """ES ``script_score`` query -> a :class:`QuerySpec` carrying a
     :class:`FunctionScore` whose single function evaluates the
@@ -2255,24 +2284,8 @@ def _parse_script_score(body: dict) -> QuerySpec:
             f"unsupported script_score options {sorted(unknown)}")
     if "query" not in body:
         raise DslError("script_score needs a query")
-    script = body.get("script")
-    if isinstance(script, str):
-        script = {"source": script}
-    if not isinstance(script, dict):
-        raise DslError(f"script_score needs a script, got {script!r}")
-    if script.get("lang", "painless") != "painless":
-        raise DslError(
-            f"unsupported script lang {script['lang']!r} "
-            f"(only the painless subset compiles)")
-    sunknown = set(script) - {"source", "params", "lang"}
-    if sunknown:
-        raise DslError(
-            f"unsupported script keys {sorted(sunknown)} "
-            f"(stored scripts by id are out of grammar)")
-    params = script.get("params", {})
-    if not isinstance(params, dict):
-        raise DslError(f"bad script params {params!r}")
-    raw, fields = _compile_score_script(script.get("source"), params)
+    source, params = _painless_script(body.get("script"), "script_score")
+    raw, fields = _compile_score_script(source, params)
 
     neg_err = ("cast(raise_error('script_score produced a negative "
                "score') as double)")
@@ -2289,7 +2302,7 @@ def _parse_script_score(body: dict) -> QuerySpec:
         wrapped=parse_query(body["query"]),
         funcs=[FScoreFn(filter_sql=None, weight=1.0, value_sql="1.0",
                         fields=fields, script=compiled,
-                        script_src=(script.get("source"),
+                        script_src=(source,
                                     tuple(sorted(params.items()))))],
         score_mode="multiply", boost_mode="replace",
         max_boost=None, min_score=min_score, boost=boost)
@@ -2938,18 +2951,16 @@ def search_dsl(
     score, with a deterministic order where ES would use internal doc
     order.
     """
-    spark = docs_df.sparkSession
     spec = parse_query(query)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if k <= 0:
-        return empty
+        return _no_hits(docs_df.sparkSession)
     if ("doc_id" not in docs_df.columns
             and not {"conv_id", "turn_idx"} <= set(docs_df.columns)):
         raise DslError("search_dsl needs a doc_id (or conv_id+turn_idx) "
                        "column to identify results")
     mf = _matched_frame(docs_df, spec, params or BM25Params())
     if mf is None:
-        return empty
+        return _no_hits(docs_df.sparkSession)
     frame, scored = mf
     out = frame.select("doc_id", F.col("__dsl_score").alias("score"))
     order = ([F.desc("score"), F.asc("doc_id")] if scored
@@ -2974,12 +2985,7 @@ def scan_dsl(
     at 10^12 turns the "scan" is just a filtered scan, not 10^9 HTTP
     round-trips. Columns = the input's own columns.
     """
-    spec = parse_query(query)
-    mf = _matched_frame(docs_df, spec, params or BM25Params())
-    if mf is None:
-        return docs_df.where(F.lit(False))
-    keep = [c for c in docs_df.columns]
-    return mf[0].select(*keep)
+    return _scan(_CorpusBackend(docs_df, params), query)
 
 
 def count_dsl(
@@ -2993,6 +2999,20 @@ def count_dsl(
     them (one map-side-partial aggregation)."""
     return (scan_dsl(docs_df, query, params)
             .agg(F.count(F.lit(1)).alias("count")))
+
+
+def _no_hits(spark: SparkSession) -> DataFrame:
+    return spark.createDataFrame([], "doc_id long, score double")
+
+
+def _keyed(docs_df: DataFrame) -> DataFrame:
+    """The corpus with the engine's doc_id attached when only the
+    transcript key (conv_id, turn_idx) identifies its rows; aggs never
+    need an id, so a frame with neither passes through."""
+    if ("doc_id" not in docs_df.columns
+            and {"conv_id", "turn_idx"} <= set(docs_df.columns)):
+        return with_doc_ids(docs_df)
+    return docs_df
 
 
 def _matched_frame(
@@ -3024,10 +3044,7 @@ def _compile_specs(
     (ok, score_expr, qual_expr, scored)]). ``ok=False`` marks a spec
     provably empty. Single-query callers pass a 1-list; the _msearch
     batch amortizes the scan across queries."""
-    if ("doc_id" not in docs_df.columns
-            and {"conv_id", "turn_idx"} <= set(docs_df.columns)):
-        docs_df = with_doc_ids(docs_df)  # aggs never need an id; attach
-        # the engine key only when the transcript key columns exist
+    docs_df = _keyed(docs_df)
 
     if any(sp.has_fuzzy() for sp in specs):
         expander = _token_vocab_expander(docs_df)
@@ -3479,33 +3496,14 @@ def _parse_script_fields(request: dict):
             f"script_fields must be a non-empty dict, got {sf!r}")
     out = []
     for name, spec in sf.items():
-        if not isinstance(name, str) or name in ("doc_id", "score"):
-            raise DslError(
-                f"script_fields name {name!r} collides with a hit "
-                f"column")
+        if not isinstance(name, str):
+            raise DslError(f"bad script_fields name {name!r}")
         if not isinstance(spec, dict) or set(spec) != {"script"}:
             raise DslError(
                 f"script_fields entry {name!r} takes exactly a script, "
                 f"got {spec!r}")
-        sc = spec["script"]
-        if isinstance(sc, str):
-            sc = {"source": sc}
-        if not isinstance(sc, dict):
-            raise DslError(
-                f"bad script for script_fields {name!r}: {sc!r}")
-        unknown = set(sc) - {"source", "params", "lang"}
-        if unknown:
-            raise DslError(
-                f"unsupported script options {sorted(unknown)} on "
-                f"script_fields {name!r}")
-        if sc.get("lang", "painless") != "painless":
-            raise DslError(
-                f"script_fields {name!r}: only painless is supported")
-        params = sc.get("params", {})
-        if not isinstance(params, dict):
-            raise DslError(
-                f"script_fields {name!r} params must be a dict")
-        fn, fields = _compile_score_script(sc.get("source"), params)
+        fn, fields = _compile_score_script(*_painless_script(
+            spec["script"], f"script_fields {name!r}"))
         out.append((name, fn, fields))
     return out
 
@@ -3548,14 +3546,15 @@ def _parse_source(request: dict):
     return merged or None
 
 
-def _apply_fields(out: DataFrame, field_frame: DataFrame, src, sfs,
-                  order) -> DataFrame:
+def _apply_fields(out: DataFrame, be, src, sfs, order) -> DataFrame:
     """Join ``_source`` fields / compute ``script_fields`` onto the
-    FINAL hits page — one page-sized join-back (the highlight
-    precedent; the corpus/doc_stats is touched only for the joined
-    rows' columns), then the request ordering is restored."""
+    FINAL hits page — one page-sized join-back from the backend's field
+    frame (the highlight precedent; the corpus/doc_stats is touched
+    only for the joined rows' columns), then the request ordering is
+    restored."""
     want = list(dict.fromkeys(
         (src or []) + [f for _, _, fl in (sfs or []) for f in fl]))
+    field_frame = be.field_frame(want)
     missing = [f for f in want if f not in field_frame.columns]
     if missing:
         raise DslError(
@@ -3739,10 +3738,6 @@ def _apply_highlight(hits: DataFrame, docs_df: DataFrame,
     missing = [f for f, _, _ in fields if f not in docs_df.columns]
     if missing:
         raise DslError(f"highlight fields {missing} are not columns")
-    if "doc_id" not in docs_df.columns \
-            and {"conv_id", "turn_idx"} <= set(docs_df.columns):
-        docs_df = with_doc_ids(docs_df)  # raw transcripts: attach the
-        # engine key so the top-k join-back can resolve
     out = hits.join(
         docs_df.select("doc_id", *[f for f, _, _ in fields]),
         "doc_id", "left")
@@ -4021,8 +4016,7 @@ def _parse_knn(body: dict) -> KnnSpec:
                    filter=fspec)
 
 
-def _knn_hits(docs_df: DataFrame, knn: KnnSpec,
-              params: BM25Params) -> DataFrame:
+def _knn_hits(docs_df: DataFrame, knn: KnnSpec) -> DataFrame:
     """The vector side: exact top-k -> (doc_id, __knn_score). ONE scan,
     all-Catalyst arithmetic (zip_with + aggregate — no UDF), one
     TakeOrderedAndProject; the filter qualifies BEFORE the cut. Docs
@@ -4033,14 +4027,12 @@ def _knn_hits(docs_df: DataFrame, knn: KnnSpec,
     dense-vector transforms: cosine/dot (1+raw)/2, l2 1/(1+d^2)."""
     frame = docs_df
     if knn.filter is not None:
-        mf = _matched_frame(docs_df, knn.filter, params)
+        # filter context: qualification only, the BM25 params never score
+        mf = _matched_frame(docs_df, knn.filter, BM25Params())
         if mf is None:
             return docs_df.sparkSession.createDataFrame(
                 [], "doc_id long, __knn_score double")
         frame = mf[0]
-    elif "doc_id" not in frame.columns \
-            and {"conv_id", "turn_idx"} <= set(frame.columns):
-        frame = with_doc_ids(frame)
     vec = F.col(knn.field)
     dim = len(knn.qvec)
     qa = F.array(*[F.lit(x) for x in knn.qvec])
@@ -4130,35 +4122,25 @@ def _knn_combo_guard(request: dict, collapse, rescore, hl) -> None:
             "ranking are not supported)")
 
 
-def _execute_knn_request(
-    docs_df: DataFrame,
-    request: dict,
-    params: BM25Params | None = None,
-) -> DataFrame:
-    """``_search`` with a ``knn`` section (naive executor): the vector
-    side is one exact scan + top-k; with a ``query`` the two sides
-    merge by score sum over a k-row full-outer join (never
+def _knn_request(be, request: dict) -> DataFrame:
+    """``_search`` with a ``knn`` section: the vector side is one exact
+    scan + top-k over the backend's corpus rows; with a ``query`` the
+    two sides merge by score sum over a k-row full-outer join (never
     corpus-sized)."""
-    params = params or BM25Params()
+    corpus = be.corpus("knn")
     knn = _parse_knn(request["knn"])
-    size = int(request.get("size", DEFAULT_SIZE))
-    frm = int(request.get("from", 0))
-    if size < 0 or frm < 0:
-        raise DslError("size/from must be non-negative")
-    khits, kids = _collect_knn_hits(_knn_hits(docs_df, knn, params))
+    size, frm = _page(request)
+    khits, kids = _collect_knn_hits(_knn_hits(corpus, knn))
+    q = be.qualify(request["query"]) if "query" in request else None
     qs = None
-    if "query" in request:
-        mf = _matched_frame(docs_df, parse_query(request["query"]),
-                            params)
-        if mf is not None:
-            qframe = mf[0].select("doc_id",
-                                  F.col("__dsl_score").alias("__q"))
-            qtop = (qframe.orderBy(F.desc("__q"), F.asc("doc_id"))
-                    .limit(frm + size + knn.k))
-            if kids:
-                qtop = qtop.unionByName(
-                    qframe.where(F.col("doc_id").isin(kids)))
-            qs = qtop.dropDuplicates(["doc_id"])
+    if q is not None:
+        qframe = q[0].select("doc_id", F.col("__dsl_score").alias("__q"))
+        qtop = (qframe.orderBy(F.desc("__q"), F.asc("doc_id"))
+                .limit(frm + size + knn.k))
+        if kids:
+            qtop = qtop.unionByName(
+                qframe.where(F.col("doc_id").isin(kids)))
+        qs = qtop.dropDuplicates(["doc_id"])
     return _merge_knn_hits(khits, qs, size, frm)
 
 
@@ -4169,6 +4151,271 @@ def _validate_request_keys(request: dict) -> None:
             f"unsupported _search options {sorted(unknown)} (honored: "
             f"{sorted(_REQUEST_KEYS)}; ignored metadata: "
             f"{sorted(_REQUEST_NOOP_KEYS)})")
+
+
+def _page(request: dict) -> tuple[int, int]:
+    """``(size, from)`` of a ``_search`` body (ES defaults 10 / 0)."""
+    size = int(request.get("size", DEFAULT_SIZE))
+    frm = int(request.get("from", 0))
+    if size < 0 or frm < 0:
+        raise DslError("size/from must be non-negative")
+    return size, frm
+
+
+# ---- the request layer -------------------------------------------------
+#
+# `_search`, aggs and scan are written once, against a backend. A
+# backend answers: the top-k of a query (`topk`); its qualifying set as
+# (frame of doc_id, __dsl_score [, fields], scored?) or None when
+# provably empty (`qualify`); the qualifying rows plus the background
+# set aggregations run over (`rows` — a provably-empty query yields the
+# background's empty frame, so real column types survive: metrics go
+# null, counts 0, buckets vanish, the ES behaviour); the rows holding
+# page fields (`field_frame`) or raw corpus rows (`corpus`); and the
+# fuzzy/mlt-resolved spec highlight tags (`resolved_spec`).
+
+
+class _CorpusBackend:
+    """The naive executor: every answer comes from the corpus frame —
+    a qualifying set is one stats agg + one map-side pass over the rows
+    (:func:`_matched_frame`), and every column rides along."""
+
+    def __init__(self, docs_df: DataFrame, params: BM25Params | None):
+        self.spark = docs_df.sparkSession
+        self.docs_df = docs_df
+        self.params = params or BM25Params()
+
+    def topk(self, query: dict, k: int) -> DataFrame:
+        return search_dsl(self.docs_df, query, k, self.params)
+
+    def qualify(self, query: dict, fields: list[str] = ()):
+        return _matched_frame(self.docs_df, parse_query(query),
+                              self.params)
+
+    def rows(self, query: dict, scored: bool = False, text: bool = False):
+        q = self.qualify(query)
+        frame = self.docs_df.where(F.lit(False)) if q is None else q[0]
+        return frame, self.docs_df
+
+    def corpus(self, what: str) -> DataFrame:
+        return _keyed(self.docs_df)
+
+    def field_frame(self, want: list[str]) -> DataFrame:
+        return _keyed(self.docs_df)
+
+    def resolved_spec(self, query: dict) -> QuerySpec:
+        spec = parse_query(query)
+        if spec.has_fuzzy():
+            spec = _resolve_fuzzy(spec, _token_vocab_expander(self.docs_df))
+        if spec.has_mlt():
+            spec = _resolve_mlt(spec, _corpus_mlt_stats(self.docs_df))
+        return spec
+
+
+class _IndexBackend:
+    """The indexed executor: qualifying sets resolve against posting
+    blocks of a compressed index or segment list, fields read from the
+    segments' ``doc_stats`` (every non-text input column — the ES
+    doc-values analogue). ``docs_df`` is read only for what the index
+    does not hold: raw text (highlight, significant_text, the text
+    field as a page field), vectors (knn), and match_phrase adjacency
+    when the segments lack the positions sidecar."""
+
+    def __init__(self, spark: SparkSession, index_dir: str | list[str],
+                 docs_df: DataFrame | None):
+        self.spark = spark
+        self.index_dir = index_dir
+        self.docs_df = docs_df
+
+    @cached_property
+    def segs(self):
+        return _load_segments(self.index_dir)
+
+    @cached_property
+    def stats(self) -> DataFrame:
+        return _doc_stats_union(self.spark, self.segs[0])
+
+    def topk(self, query: dict, k: int) -> DataFrame:
+        return search_dsl_indexed(self.spark, self.index_dir, query, k,
+                                  self.docs_df)
+
+    def qualify(self, query: dict, fields: list[str] = ()):
+        spec = parse_query(query)
+        dirs, metas, n_docs, avgdl = self.segs
+        _validate_sql_fields(self.spark, dirs, spec)
+        missing = [f for f in fields if f not in self.stats.columns]
+        if missing:
+            raise DslError(
+                f"fields {missing} are not in doc_stats (the index "
+                f"persists every non-text input column)")
+        if n_docs == 0:
+            return None
+        anchor, scored = _qualify_indexed(self.spark, dirs, metas, n_docs,
+                                          avgdl, spec, self.docs_df)
+        if anchor is None:
+            return None
+        frame = anchor.select("doc_id", F.col("score").alias("__dsl_score"))
+        if fields:
+            frame = frame.join(self.stats.select("doc_id", *fields),
+                               "doc_id")
+        return frame, scored
+
+    def rows(self, query: dict, scored: bool = False, text: bool = False):
+        base = self.corpus("significant_text") if text else self.stats
+        q = self.qualify(query)
+        if q is None:
+            return base.where(F.lit(False)), base
+        if scored:
+            return base.join(q[0], "doc_id"), base
+        return base.join(q[0].select("doc_id"), "doc_id", "left_semi"), base
+
+    def corpus(self, what: str) -> DataFrame:
+        if self.docs_df is None:
+            raise DslError(
+                f"{what} needs docs_df: the compressed index holds "
+                f"postings and doc_stats, not the raw rows")
+        return _keyed(self.docs_df)
+
+    def field_frame(self, want: list[str]) -> DataFrame:
+        missing = [f for f in want if f not in self.stats.columns]
+        if missing and self.docs_df is None:
+            raise DslError(
+                f"_source/script_fields reference field(s) {missing} "
+                f"not in doc_stats — pass docs_df for non-persisted "
+                f"fields")
+        return self.corpus("_source") if missing else self.stats
+
+    def resolved_spec(self, query: dict) -> QuerySpec:
+        dirs, metas, n_docs, _avgdl = self.segs
+        return _resolve_from_index(self.spark, dirs, metas, n_docs,
+                                   parse_query(query))
+
+
+def _execute_request(be, request: dict) -> DataFrame:
+    """The ``_search`` body over a backend (see :func:`execute_request`)."""
+    if not isinstance(request, dict):
+        raise DslError("request must be a dict")
+    _validate_request_keys(request)
+    collapse = _parse_collapse(request)
+    rescore = _parse_rescore(request)
+    hl = _parse_highlight(request)
+    sort = request.get("sort")
+    after = request.get("search_after")
+    if hl is not None and (rescore is not None or collapse is not None
+                           or sort is not None):
+        raise DslError("highlight cannot be combined with sort/"
+                       "collapse/rescore (the default ordering must be "
+                       "restorable after the highlight join)")
+    hl_docs = None if hl is None else be.corpus("highlight")
+    sfs = _parse_script_fields(request)
+    src = _parse_source(request)
+    if (sfs is not None or src is not None) and (
+            hl is not None or rescore is not None or collapse is not None
+            or "knn" in request or "aggs" in request or sort is not None):
+        raise DslError(
+            "_source/script_fields are supported on the default-"
+            "ordering and search_after paths only (the joined page "
+            "must be re-orderable)")
+    taken = {"doc_id", "score", *(src or [])}
+    for name, _fn, _fields in sfs or []:
+        if name in taken:
+            # withColumn would silently overwrite the hit column
+            raise DslError(
+                f"script_fields name {name!r} collides with a hit or "
+                f"_source/fields column")
+    if "knn" in request:
+        _knn_combo_guard(request, collapse, rescore, hl)
+        return _knn_request(be, request)
+    if "aggs" in request:
+        if "sort" in request or "search_after" in request \
+                or collapse is not None or rescore is not None \
+                or hl is not None:
+            raise DslError("aggs requests return buckets only; sort/"
+                           "search_after/collapse/rescore/highlight "
+                           "cannot be honored")
+        return _aggregate(be, request)
+    if collapse is not None and after is not None:
+        raise DslError("collapse with search_after is not supported")
+    size, frm = _page(request)
+    query = request.get("query", {"match_all": {}})
+    if rescore is not None:
+        if sort is not None or collapse is not None or after is not None:
+            raise DslError("rescore cannot be combined with sort/"
+                           "collapse/search_after (ES rejects rescore "
+                           "with sort; cursors/collapse would see two "
+                           "different orderings)")
+        window, rq, qw, rqw, mode = rescore
+        if window is None:
+            window = frm + size  # the ES default
+        base = be.topk(query, max(window, frm + size))
+        q = be.qualify(rq)
+        rs = (None if q is None else
+              q[0].select("doc_id", F.col("__dsl_score").alias("__rs")))
+        return _apply_rescore(base, rs, window, qw, rqw, mode, size, frm)
+    if sort is not None or collapse is not None:
+        # ES custom sort / collapse over the whole qualifying set
+        # (scores still computed, as ES does under track_scores)
+        if after is not None:
+            raise DslError(
+                "search_after with a custom sort is not supported "
+                "(cursors cover the default _score/doc_id sort)")
+        keys = {f for f, _ in _parse_sort(sort)} if sort is not None \
+            else set()
+        if collapse is not None:
+            keys.add(collapse)
+        q = be.qualify(query, sorted(keys - {"_score", "doc_id"}))
+        if q is None:
+            return _no_hits(be.spark)
+        frame = q[0]
+        if collapse is not None:
+            frame = _apply_collapse(frame, collapse, "__dsl_score", sort)
+        return _sorted_hits(frame, "__dsl_score",
+                            "_score" if sort is None else sort, size, frm)
+    order = [F.desc("score"), F.asc("doc_id")]
+    if after is not None:
+        if frm:
+            raise DslError(
+                "search_after cannot be combined with from (ES rule)")
+        q = be.qualify(query)
+        if q is None:
+            return _no_hits(be.spark)
+        frame, scored = q
+        if not scored:
+            order = [F.asc("doc_id")]
+        out = (frame.select("doc_id", F.col("__dsl_score").alias("score"))
+               .where(_search_after_pred(scored, after))
+               .orderBy(*order).limit(size))
+    else:
+        out = be.topk(query, frm + size)
+        out = out.offset(frm) if frm else out
+    if hl is not None:
+        out = _apply_highlight(out, hl_docs, be.resolved_spec(query), hl)
+    if sfs is not None or src is not None:
+        out = _apply_fields(out, be, src, sfs, order)
+    return out
+
+
+def _aggregate(be, request: dict) -> DataFrame:
+    """The ``aggs`` body over a backend (see :func:`dsl_aggregate`). The
+    samplers cut by score, so only they ask for the score column;
+    significant_text analyzes raw text, so it (alone or under a
+    sampler/global bucket) asks for corpus rows."""
+    agg_name, kind, body, sub, siblings = _parse_aggs_block(request)
+    text = kind == "significant_text" or (
+        kind in ("sampler", "diversified_sampler", "global")
+        and any(isinstance(v, dict) and "significant_text" in v
+                for v in sub.values()))
+    frame, bg = be.rows(request.get("query", {"match_all": {}}),
+                        scored=kind in ("sampler", "diversified_sampler"),
+                        text=text)
+    return _apply_agg(frame, agg_name, kind, body, sub, siblings,
+                      bg_frame=bg)
+
+
+def _scan(be, query: dict) -> DataFrame:
+    """The full qualifying set in the backend's own row shape."""
+    frame, rows = be.rows(query)
+    return frame.select(*rows.columns)
 
 
 def execute_request(
@@ -4195,138 +4442,7 @@ def execute_request(
     rescore/highlight stay on the default-ordering paths and fail loud
     when combined with sort/collapse/each other's conflicts.
     """
-    if not isinstance(request, dict):
-        raise DslError("request must be a dict")
-    _validate_request_keys(request)
-    collapse = _parse_collapse(request)
-    rescore = _parse_rescore(request)
-    hl = _parse_highlight(request)
-    if hl is not None and (rescore is not None or collapse is not None
-                           or request.get("sort") is not None):
-        raise DslError("highlight cannot be combined with sort/"
-                       "collapse/rescore (the default ordering must be "
-                       "restorable after the highlight join)")
-    sfs = _parse_script_fields(request)
-    src = _parse_source(request)
-    if (sfs is not None or src is not None) and (
-            hl is not None or rescore is not None or collapse is not None
-            or "knn" in request or "aggs" in request
-            or request.get("sort") is not None):
-        raise DslError(
-            "_source/script_fields are supported on the default-"
-            "ordering and search_after paths only (the joined page "
-            "must be re-orderable)")
-    if "knn" in request:
-        _knn_combo_guard(request, collapse, rescore, hl)
-        return _execute_knn_request(docs_df, request, params)
-    if "aggs" in request:
-        if "sort" in request or "search_after" in request \
-                or collapse is not None or rescore is not None \
-                or hl is not None:
-            raise DslError("aggs requests return buckets only; sort/"
-                           "search_after/collapse/rescore/highlight "
-                           "cannot be honored")
-        return dsl_aggregate(docs_df, request, params)
-    if collapse is not None and request.get("search_after") is not None:
-        raise DslError("collapse with search_after is not supported")
-    size = int(request.get("size", DEFAULT_SIZE))
-    frm = int(request.get("from", 0))
-    if size < 0 or frm < 0:
-        raise DslError("size/from must be non-negative")
-    query = request.get("query", {"match_all": {}})
-    sort = request.get("sort")
-    if rescore is not None:
-        if sort is not None or collapse is not None \
-                or request.get("search_after") is not None:
-            raise DslError("rescore cannot be combined with sort/"
-                           "collapse/search_after (ES rejects rescore "
-                           "with sort; cursors/collapse would see two "
-                           "different orderings)")
-        window, rq, qw, rqw, mode = rescore
-        if window is None:
-            window = frm + size  # the ES default
-        depth = max(window, frm + size)
-        base = search_dsl(docs_df, query, depth, params)
-        mf = _matched_frame(docs_df, parse_query(rq),
-                            params or BM25Params())
-        rs = (mf[0].select("doc_id", F.col("__dsl_score").alias("__rs"))
-              if mf is not None else None)
-        return _apply_rescore(base, rs, window, qw, rqw, mode, size, frm)
-    if sort is not None:
-        # ES custom sort: order the qualifying set by field / _score
-        # keys (scores still computed, as ES does under track_scores)
-        if request.get("search_after") is not None:
-            raise DslError(
-                "search_after with a custom sort is not supported "
-                "(cursors cover the default _score/doc_id sort)")
-        spec = parse_query(query)
-        mf = _matched_frame(docs_df, spec, params or BM25Params())
-        if mf is None:
-            return docs_df.sparkSession.createDataFrame(
-                [], "doc_id long, score double")
-        frame = mf[0]
-        if collapse is not None:
-            frame = _apply_collapse(frame, collapse, "__dsl_score", sort)
-        return _sorted_hits(frame, "__dsl_score", sort, size, frm)
-    if collapse is not None:
-        spec = parse_query(query)
-        mf = _matched_frame(docs_df, spec, params or BM25Params())
-        if mf is None:
-            return docs_df.sparkSession.createDataFrame(
-                [], "doc_id long, score double")
-        frame = _apply_collapse(mf[0], collapse, "__dsl_score", None)
-        out = (frame.select("doc_id",
-                            F.col("__dsl_score").alias("score"))
-               .orderBy(F.desc("score"), F.asc("doc_id"))
-               .limit(frm + size))
-        return out.offset(frm) if frm else out
-    after = request.get("search_after")
-    if after is not None:
-        if frm:
-            raise DslError(
-                "search_after cannot be combined with from (ES rule)")
-        spec = parse_query(query)
-        spark = docs_df.sparkSession
-        mf = _matched_frame(docs_df, spec, params or BM25Params())
-        if mf is None:
-            return spark.createDataFrame([], "doc_id long, score double")
-        frame, scored = mf
-        out = frame.select("doc_id", F.col("__dsl_score").alias("score"))
-        order = ([F.desc("score"), F.asc("doc_id")] if scored
-                 else [F.asc("doc_id")])
-        out = (out.where(_search_after_pred(scored, after))
-               .orderBy(*order).limit(size))
-        if hl is not None:
-            out = _apply_highlight(
-                out, docs_df, _resolved_spec_naive(docs_df, query), hl)
-        if sfs is not None or src is not None:
-            out = _apply_fields(out, with_doc_ids(docs_df)
-                                if "doc_id" not in docs_df.columns
-                                else docs_df, src, sfs, order)
-        return out
-    out = search_dsl(docs_df, query, frm + size, params)
-    out = out.offset(frm) if frm else out
-    if hl is not None:
-        out = _apply_highlight(
-            out, docs_df, _resolved_spec_naive(docs_df, query), hl)
-    if sfs is not None or src is not None:
-        out = _apply_fields(out, with_doc_ids(docs_df)
-                            if "doc_id" not in docs_df.columns
-                            else docs_df, src, sfs,
-                            [F.desc("score"), F.asc("doc_id")])
-    return out
-
-
-def _resolved_spec_naive(docs_df: DataFrame, query: dict) -> QuerySpec:
-    """parse + fuzzy/mlt resolution against the corpus — the spec whose
-    text clauses are the concrete terms the executor actually matched
-    (highlighting must tag the EXPANDED terms, as ES does)."""
-    spec = parse_query(query)
-    if spec.has_fuzzy():
-        spec = _resolve_fuzzy(spec, _token_vocab_expander(docs_df))
-    if spec.has_mlt():
-        spec = _resolve_mlt(spec, _corpus_mlt_stats(docs_df))
-    return spec
+    return _execute_request(_CorpusBackend(docs_df, params), request)
 
 
 def _search_after_pred(scored: bool, after):
@@ -4424,21 +4540,8 @@ def _agg_script_col(ctx: str, sc):
     ``_score`` has no meaning in the aggregation context (ES
     aggregations run over the qualifying set, not scored hits) and
     fails loud."""
-    if isinstance(sc, str):
-        sc = {"source": sc}
-    if not isinstance(sc, dict):
-        raise DslError(f"bad {ctx} script {sc!r}")
-    unknown = set(sc) - {"source", "params", "lang"}
-    if unknown:
-        raise DslError(
-            f"unsupported script options {sorted(unknown)} on {ctx}")
-    if sc.get("lang", "painless") != "painless":
-        raise DslError(f"{ctx}: only painless scripts are supported")
-    params = sc.get("params", {})
-    if not isinstance(params, dict):
-        raise DslError(f"{ctx} script params must be a dict")
-    source = sc.get("source")
-    if isinstance(source, str) and "_score" in source:
+    source, params = _painless_script(sc, ctx)
+    if isinstance(source, str) and _SCORE_IDENT.search(source):
         raise DslError(
             f"{ctx}: _score is not available in the aggregation "
             f"context")
@@ -4899,14 +5002,7 @@ def dsl_aggregate(
     Catalyst partial-aggregates map-side, so the shuffle carries one row
     per (partition, bucket), not per doc.
     """
-    agg_name, kind, body, sub, siblings = _parse_aggs_block(request)
-    spec = parse_query(request.get("query", {"match_all": {}}))
-    mf = _matched_frame(docs_df, spec, params or BM25Params())
-    # provably-empty query: aggregate the empty frame (keeps real column
-    # types; metrics go null / counts 0, buckets vanish — ES behaviour)
-    frame = docs_df.where(F.lit(False)) if mf is None else mf[0]
-    return _apply_agg(frame, agg_name, kind, body, sub, siblings,
-                      bg_frame=docs_df)
+    return _aggregate(_CorpusBackend(docs_df, params), request)
 
 
 def _parse_aggs_block(request: dict):
@@ -6838,7 +6934,7 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
             _parse_diversified(body, sub)
         if fld not in frame.columns:
             raise DslError(
-                f"diversified_sampler field {fld!r} not in the frame")
+                f"diversified_sampler field {fld!r} is not available")
         if "__dsl_score" not in frame.columns:
             frame = frame.withColumn("__dsl_score", F.lit(0.0))
         wv = (Window.partitionBy(fld)
@@ -7187,6 +7283,20 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
 _K_ALL = 1 << 62  # no per-salt cut: clause combination needs every match
 
 
+def _term_positions(spark: SparkSession, dirs: list[str],
+                    metas: list[dict], tid: int) -> DataFrame:
+    """``(doc_id, positions)`` of one term from every segment's
+    positions sidecar — a tb + term_id pruned read per segment."""
+    out = None
+    for d, m in zip(dirs, metas):
+        part = (spark.read.parquet(IndexPaths(d).positions)
+                .where((F.col("tb") == tid % int(m["n_buckets"]))
+                       & (F.col("term_id") == tid))
+                .select("doc_id", "positions"))
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
 def _clause_frame_indexed(
     spark: SparkSession,
     dirs: list[str],
@@ -7206,6 +7316,7 @@ def _clause_frame_indexed(
     combine downstream."""
     from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
         _score_match_group,
+        _segment_blocks,
     )
 
     k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
@@ -7237,22 +7348,7 @@ def _clause_frame_indexed(
     rarity = [tid_of[t]
               for t in sorted(live, key=lambda t: (df_of_tid[tid_of[t]], t))]
 
-    blocks = None
-    for si, (d, m) in enumerate(zip(dirs, metas)):
-        buckets = sorted({tid % int(m["n_buckets"]) for tid in q_term_ids})
-        scale = max(1.0, avgdl / max(float(m["avgdl"]), 1e-12))
-        part = (
-            spark.read.parquet(IndexPaths(d).postings)
-            .where(F.col("tb").isin(buckets)
-                   & F.col("term_id").isin(q_term_ids))
-            .select("term_id", "salt", "block_id", "n_docs",
-                    "first_doc_id", "last_doc_id", "doc_gaps", "tf_bytes",
-                    "dl_bytes",
-                    (F.col("block_max_tf_norm") * F.lit(scale))
-                    .alias("block_max_tf_norm"))
-            .withColumn("seg", F.lit(si))
-        )
-        blocks = part if blocks is None else blocks.unionByName(part)
+    blocks = _segment_blocks(spark, dirs, metas, avgdl, q_term_ids)
     n_q, disj = len(live), not conj
 
     def score_all(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -7323,16 +7419,9 @@ def _clause_frame_indexed(
                     "span_first needs docs_df for the position bound, "
                     "or every index segment built with "
                     "store_positions=True")
-            pos = None
-            for d, m in zip(dirs, metas):
-                nb = int(m["n_buckets"])
-                p = (spark.read.parquet(IndexPaths(d).positions)
-                     .where((F.col("tb") == tid % nb)
-                            & (F.col("term_id") == tid))
-                     .select("doc_id", "positions"))
-                pos = p if pos is None else pos.unionByName(p)
             verified = (
-                pos.join(frame.select("doc_id"), "doc_id")
+                _term_positions(spark, dirs, metas, tid)
+                .join(frame.select("doc_id"), "doc_id")
                 .where(F.element_at("positions", 1)
                        < F.lit(c.span_first_end))
                 .select("doc_id"))
@@ -7364,23 +7453,12 @@ def _clause_frame_indexed(
                 raise DslError(
                     "span_not needs docs_df for the position check, or "
                     "every index segment built with store_positions=True")
-            inc_tid = tid_of[terms[0]]
-            exc_tid = term_id_py(exc_t)
-            inc_pos, exc_pos = None, None
-            for d, m in zip(dirs, metas):
-                nb = int(m["n_buckets"])
-                pf = spark.read.parquet(IndexPaths(d).positions)
-                ip = (pf.where((F.col("tb") == inc_tid % nb)
-                               & (F.col("term_id") == inc_tid))
-                      .select("doc_id", "positions"))
-                ep = (pf.where((F.col("tb") == exc_tid % nb)
-                               & (F.col("term_id") == exc_tid))
-                      .select("doc_id",
-                              F.col("positions").alias("exc_positions")))
-                inc_pos = ip if inc_pos is None else inc_pos.unionByName(ip)
-                exc_pos = ep if exc_pos is None else exc_pos.unionByName(ep)
+            exc_pos = _term_positions(
+                spark, dirs, metas, term_id_py(exc_t)
+            ).withColumnRenamed("positions", "exc_positions")
             verified = (
-                inc_pos.join(frame.select("doc_id"), "doc_id")
+                _term_positions(spark, dirs, metas, tid_of[terms[0]])
+                .join(frame.select("doc_id"), "doc_id")
                 .join(exc_pos, "doc_id", "left")
                 .where(span_not_exists_expr(
                     F.col("positions"), F.col("exc_positions"), pre, post))
@@ -7481,6 +7559,44 @@ def _prunable_for_topk(spec: QuerySpec) -> bool:
     return True
 
 
+def _bool_clause_tids(spec: QuerySpec):
+    """A prunable spec's must/should text clauses as ``[(is_must,
+    conjunctive, [term_id, ...])]``, or None when the query provably
+    matches nothing (an unanalyzable must, or no analyzable clause)."""
+    clauses = []
+    for is_must, lst in ((True, spec.must), (False, spec.should)):
+        for c in lst:
+            terms = _clause_terms(c)
+            if terms:
+                clauses.append((is_must, c.operator == "and",
+                                [term_id_py(t) for t in terms]))
+            elif is_must:
+                return None
+    return clauses or None
+
+
+def _live_clauses(clauses: list, df_of: dict, msm: int):
+    """Drop the terms the index lacks: a conjunctive clause missing a
+    term, or a disjunctive one with none present, is dead — fatal for a
+    must, dropped for a should. -> ``[(is_must, conj, sorted live
+    term_ids)]``, or None when the query provably matches nothing."""
+    live_clauses = []
+    for is_must, conj, tl in clauses:
+        if conj:
+            live = sorted(set(tl)) if all(t in df_of for t in tl) else []
+        else:
+            live = sorted({t for t in tl if t in df_of})
+        if live:
+            live_clauses.append((is_must, conj, live))
+        elif is_must:
+            return None
+    has_must = any(c[0] for c in live_clauses)
+    n_should = sum(1 for c in live_clauses if not c[0])
+    if (msm > 0 and n_should < msm) or (not has_must and n_should == 0):
+        return None
+    return live_clauses
+
+
 def _search_dsl_pruned(
     spark: SparkSession,
     dirs: list[str],
@@ -7489,83 +7605,38 @@ def _search_dsl_pruned(
     avgdl: float,
     spec: QuerySpec,
     k: int,
-) -> DataFrame | None:
+) -> DataFrame:
     """Top-k for a prunable bool query via cross-clause block-max
     pruning — ONE kernel over the union of clause terms per
     (segment, salt) group instead of one score-all frame per clause
     (round-3 verdict #2: a hot ``should`` term no longer produces a
     df-sized frame + shuffle; it contributes via block-skipped decodes
     or is cut by the MaxScore suffix bound, see
-    :func:`..compressed._wand_bool_topk`). Returns None only on shapes
-    :func:`_prunable_for_topk` should have rejected; rank+score
-    identical to the score-all path (pytest-gated)."""
+    :func:`..compressed._wand_bool_topk`); rank+score identical to the
+    score-all path (pytest-gated)."""
     from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
+        _segment_allowed,
+        _segment_blocks,
         _wand_bool_topk,
     )
 
     k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    clauses = []  # (is_must, conjunctive, [term_id, ...])
-    for is_must, lst in ((True, spec.must), (False, spec.should)):
-        for c in lst:
-            terms = _clause_terms(c)
-            if not terms:
-                if is_must:
-                    return empty  # unanalyzable must: nothing matches
-                continue
-            clauses.append((is_must, c.operator == "and",
-                            [term_id_py(t) for t in terms]))
-    if not clauses:
-        return None
-
+    clauses = _bool_clause_tids(spec)
+    if clauses is None:
+        return _no_hits(spark)
     # global df per term, summed across segments (multi-segment rule of
-    # search_topk_multi); absent terms kill conj clauses / shrink disj
+    # search_topk_multi)
     all_tids = sorted({t for _, _, tl in clauses for t in tl})
     df_of = _df_stats_multi(spark, dirs, metas, all_tids)
-
-    live_clauses = []
-    for is_must, conj, tl in clauses:
-        if conj:
-            if any(t not in df_of for t in tl):
-                if is_must:
-                    return empty
-                continue
-            live = sorted(set(tl))
-        else:
-            live = sorted({t for t in tl if t in df_of})
-            if not live:
-                if is_must:
-                    return empty
-                continue
-        live_clauses.append((is_must, conj, live))
     msm = spec.minimum_should_match()
-    has_must = any(c[0] for c in live_clauses)
-    n_should = sum(1 for c in live_clauses if not c[0])
-    if msm > 0 and n_should < msm:
-        return empty
-    if not live_clauses or (not has_must and n_should == 0):
-        return empty
+    live_clauses = _live_clauses(clauses, df_of, msm)
+    if live_clauses is None:
+        return _no_hits(spark)
 
     union_tids = sorted({t for _, _, tl in live_clauses for t in tl})
     idfs = {t: math.log(1.0 + (n_docs - df_of[t] + 0.5)
                         / (df_of[t] + 0.5)) for t in union_tids}
-
-    blocks = None
-    for si, (d, m) in enumerate(zip(dirs, metas)):
-        buckets = sorted({t % int(m["n_buckets"]) for t in union_tids})
-        scale = max(1.0, avgdl / max(float(m["avgdl"]), 1e-12))
-        part = (
-            spark.read.parquet(IndexPaths(d).postings)
-            .where(F.col("tb").isin(buckets)
-                   & F.col("term_id").isin(union_tids))
-            .select("term_id", "salt", "block_id", "n_docs",
-                    "first_doc_id", "last_doc_id", "doc_gaps", "tf_bytes",
-                    "dl_bytes",
-                    (F.col("block_max_tf_norm") * F.lit(scale))
-                    .alias("block_max_tf_norm"))
-            .withColumn("seg", F.lit(si))
-        )
-        blocks = part if blocks is None else blocks.unionByName(part)
+    blocks = _segment_blocks(spark, dirs, metas, avgdl, union_tids)
 
     cl_arrays = [(m_, c_, np.array(tl, dtype=np.int64))
                  for m_, c_, tl in live_clauses]
@@ -7578,18 +7649,7 @@ def _search_dsl_pruned(
         pred = " AND ".join(
             [f"({p})" for p in spec.filter_sql]
             + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql])
-        allowed_df = None
-        for si, (d, m) in enumerate(zip(dirs, metas)):
-            part = (
-                spark.read.parquet(IndexPaths(d).doc_stats)
-                .where(pred)
-                .select("doc_id",
-                        salt_expr(F.col("doc_id"),
-                                  int(m["n_ranges"])).alias("salt"))
-                .withColumn("seg", F.lit(si))
-            )
-            allowed_df = (part if allowed_df is None
-                          else allowed_df.unionByName(part))
+        allowed_df = _segment_allowed(spark, dirs, metas, pred)
 
         def topk_cogrp(blocks_pdf: pd.DataFrame,
                        allowed_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -7643,24 +7703,19 @@ def search_dsl_indexed(
     """
     spec = parse_query(query)
     _require_indexed_field(spec)
-    empty = spark.createDataFrame([], "doc_id long, score double")
     if k <= 0:
-        return empty
+        return _no_hits(spark)
     dirs, metas, n_docs, avgdl = _load_segments(index_dir)
     _validate_sql_fields(spark, dirs, spec)
     if n_docs == 0:
-        return empty
-
+        return _no_hits(spark)
     if _prunable_for_topk(spec):
-        out = _search_dsl_pruned(spark, dirs, metas, n_docs, avgdl,
-                                 spec, k)
-        if out is not None:
-            return out
-
+        return _search_dsl_pruned(spark, dirs, metas, n_docs, avgdl,
+                                  spec, k)
     anchor, scored = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
                                       spec, docs_df)
     if anchor is None:
-        return empty
+        return _no_hits(spark)
     order = ([F.desc("score"), F.asc("doc_id")] if scored
              else [F.asc("doc_id")])
     return anchor.orderBy(*order).limit(k)
@@ -7686,6 +7741,7 @@ def search_dsl_many_indexed(
     fetch. Everything else (phrase, filters, nesting) falls back to its
     own exact :func:`search_dsl_indexed` call and unions in."""
     from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
+        _segment_blocks,
         _wand_bool_topk,
     )
 
@@ -7710,20 +7766,8 @@ def search_dsl_many_indexed(
                 or spec.must_not_sql or spec.match_all:
             fallback.append((qid, q))
             continue
-        clauses, dead = [], False
-        for is_must, lst in ((True, spec.must), (False, spec.should)):
-            for c in lst:
-                terms = _clause_terms(c)
-                if not terms:
-                    if is_must:
-                        dead = True
-                        break
-                    continue
-                clauses.append((is_must, c.operator == "and",
-                                [term_id_py(t) for t in terms]))
-            if dead:
-                break
-        if dead or not clauses:
+        clauses = _bool_clause_tids(spec)
+        if clauses is None:
             continue  # provably empty: contributes no rows
         raw_batch.append((qid, spec.minimum_should_match(), clauses))
         all_tids.update(t for _, _, tl in clauses for t in tl)
@@ -7734,28 +7778,8 @@ def search_dsl_many_indexed(
         compiled = []  # (qid, msm, k, cl_arrays, idfs, tids)
         union_live: set[int] = set()
         for qid, msm, clauses in raw_batch:
-            live_clauses, dead = [], False
-            for is_must, conj, tl in clauses:
-                if conj:
-                    if any(t not in df_of for t in tl):
-                        if is_must:
-                            dead = True
-                            break
-                        continue
-                    live = sorted(set(tl))
-                else:
-                    live = sorted({t for t in tl if t in df_of})
-                    if not live:
-                        if is_must:
-                            dead = True
-                            break
-                        continue
-                live_clauses.append((is_must, conj, live))
-            has_must = any(c[0] for c in live_clauses)
-            n_should = sum(1 for c in live_clauses if not c[0])
-            if (dead or not live_clauses
-                    or (msm > 0 and n_should < msm)
-                    or (not has_must and n_should == 0)):
+            live_clauses = _live_clauses(clauses, df_of, msm)
+            if live_clauses is None:
                 continue
             tids_q = sorted({t for _, _, tl in live_clauses for t in tl})
             idfs_q = {t: math.log(1.0 + (n_docs - df_of[t] + 0.5)
@@ -7768,25 +7792,8 @@ def search_dsl_many_indexed(
             union_live.update(tids_q)
 
         if compiled:
-            blocks = None
-            union_list = sorted(union_live)
-            for si, (d, m) in enumerate(zip(dirs, metas)):
-                buckets = sorted({t % int(m["n_buckets"])
-                                  for t in union_list})
-                scale = max(1.0, avgdl / max(float(m["avgdl"]), 1e-12))
-                part = (
-                    spark.read.parquet(IndexPaths(d).postings)
-                    .where(F.col("tb").isin(buckets)
-                           & F.col("term_id").isin(union_list))
-                    .select("term_id", "salt", "block_id", "n_docs",
-                            "first_doc_id", "last_doc_id", "doc_gaps",
-                            "tf_bytes", "dl_bytes",
-                            (F.col("block_max_tf_norm") * F.lit(scale))
-                            .alias("block_max_tf_norm"))
-                    .withColumn("seg", F.lit(si))
-                )
-                blocks = (part if blocks is None
-                          else blocks.unionByName(part))
+            blocks = _segment_blocks(spark, dirs, metas, avgdl,
+                                     sorted(union_live))
 
             def batch_grp(pdf: pd.DataFrame) -> pd.DataFrame:
                 by_term_all = {int(t): g
@@ -7875,6 +7882,24 @@ def _df_stats_multi(
     return out
 
 
+def _resolve_from_index(spark: SparkSession, dirs: list[str],
+                        metas: list[dict], n_docs: int,
+                        spec: QuerySpec) -> QuerySpec:
+    """fuzzy/mlt resolution against the INDEX: fuzzy expands over the
+    terms dim, mlt reads per-term df through the driver-side postings
+    df cache — |like-tokens| lookups, never a corpus scan."""
+    if spec.has_fuzzy():
+        spec = _resolve_fuzzy(spec, _terms_dim_expander(spark, dirs))
+    if spec.has_mlt():
+        def stats(field, terms):
+            dfm = _df_stats_multi(spark, dirs, metas,
+                                  [term_id_py(t) for t in terms])
+            return n_docs, {t: dfm.get(term_id_py(t), 0)
+                            for t in terms}
+        spec = _resolve_mlt(spec, stats)
+    return spec
+
+
 def _qualify_indexed(
     spark: SparkSession,
     dirs: list[str],
@@ -7893,17 +7918,7 @@ def _qualify_indexed(
     costs one extra postings-sized join per level, never a corpus scan.
     """
     _require_indexed_field(spec)
-    if spec.has_fuzzy():
-        spec = _resolve_fuzzy(spec, _terms_dim_expander(spark, dirs))
-    if spec.has_mlt():
-        def _index_mlt_stats(field, terms):
-            # per-term df through the driver-side postings df cache —
-            # |like-tokens| lookups, never a corpus scan
-            dfm = _df_stats_multi(spark, dirs, metas,
-                                  [term_id_py(t) for t in terms])
-            return n_docs, {t: dfm.get(term_id_py(t), 0)
-                            for t in terms}
-        spec = _resolve_mlt(spec, _index_mlt_stats)
+    spec = _resolve_from_index(spark, dirs, metas, n_docs, spec)
 
     def clause_frame(c: TextClause) -> DataFrame | None:
         return _clause_frame_indexed(spark, dirs, metas, n_docs, avgdl,
@@ -7960,18 +7975,18 @@ def _qualify_indexed(
                           .otherwise(F.col("score")).alias("score")))
         return fr, scored
 
+    def children_union(children) -> DataFrame | None:
+        parts = [fr.select("doc_id", "score")
+                 for fr in map(clause_frame, children) if fr is not None]
+        return reduce(DataFrame.unionByName, parts) if parts else None
+
     def dismax_frame(dm: DisMax) -> DataFrame | None:
         """ES dis_max from the index: union the children's score
         frames, combine per doc as best + tie_breaker * (sum - best)
         — one postings-sized aggregation, never a corpus scan."""
-        parts = []
-        for c in dm.children:
-            fr = clause_frame(c)
-            if fr is not None:
-                parts.append(fr.select("doc_id", "score"))
-        if not parts:
+        u = children_union(dm.children)
+        if u is None:
             return None
-        u = reduce(DataFrame.unionByName, parts)
         agg = u.groupBy("doc_id").agg(F.max("score").alias("mx"),
                                       F.sum("score").alias("sm"))
         return agg.select(
@@ -7986,14 +8001,9 @@ def _qualify_indexed(
         (candidate-sized join, never a corpus scan) — the Lucene
         CoveringQuery rule exactly as the naive executor compiles it
         (truncate to long, clamp >= 1, NULL minimum never matches)."""
-        parts = []
-        for c in ts.children:
-            fr = clause_frame(c)
-            if fr is not None:
-                parts.append(fr.select("doc_id", "score"))
-        if not parts:
+        u = children_union(ts.children)
+        if u is None:
             return None
-        u = reduce(DataFrame.unionByName, parts)
         agg = u.groupBy("doc_id").agg(
             F.sum("score").alias("score"),
             F.count(F.lit(1)).alias("__ts_cnt"))
@@ -8075,30 +8085,15 @@ def _qualify_indexed(
     msm = spec.minimum_should_match()
 
     # ---- should frames: union -> per-doc (sum, matched-count)
-    should_frames = []
-    n_scoring_should = 0
-    for c in spec.should:
-        fr = clause_frame(c)
-        if fr is not None:
-            should_frames.append(fr.select("doc_id", "score"))
-            n_scoring_should += 1
-    for child in spec.should_bool:
-        fr, _ = child_qualify(child)
-        if fr is not None:
-            should_frames.append(fr.select("doc_id", "score"))
-            n_scoring_should += 1
-    for dm in spec.should_dismax:
-        fr = dismax_frame(dm)
-        if fr is not None:
-            should_frames.append(fr.select("doc_id", "score"))
-            n_scoring_should += 1
-    for tctx, ts in spec.terms_set:
-        if tctx != "should":
-            continue
-        fr = terms_set_frame(ts)
-        if fr is not None:
-            should_frames.append(fr.select("doc_id", "score"))
-            n_scoring_should += 1
+    should_frames = [
+        fr.select("doc_id", "score") for fr in (
+            [clause_frame(c) for c in spec.should]
+            + [child_qualify(child)[0] for child in spec.should_bool]
+            + [dismax_frame(dm) for dm in spec.should_dismax]
+            + [terms_set_frame(ts) for tctx, ts in spec.terms_set
+               if tctx == "should"])
+        if fr is not None]
+    n_scoring_should = len(should_frames)
     n_live_should = n_scoring_should + len(spec.should_sql)
     if spec.should_sql:
         # meta-in-should: resolves against doc_stats, counts toward
@@ -8178,18 +8173,10 @@ def _qualify_indexed(
         anchor = anchor.join(allowed, "doc_id", "left_semi")
 
     # ---- must_not text clauses / child bools: anti-join matching ids
-    for c in spec.must_not:
-        fr = clause_frame(c)
-        if fr is not None:
-            anchor = anchor.join(fr.select("doc_id"), "doc_id", "left_anti")
-    for tctx, ts in spec.terms_set:
-        if tctx != "must_not":
-            continue
-        fr = terms_set_frame(ts)
-        if fr is not None:
-            anchor = anchor.join(fr.select("doc_id"), "doc_id", "left_anti")
-    for child in spec.must_not_bool:
-        fr, _ = child_qualify(child)
+    for fr in ([clause_frame(c) for c in spec.must_not]
+               + [terms_set_frame(ts) for tctx, ts in spec.terms_set
+                  if tctx == "must_not"]
+               + [child_qualify(child)[0] for child in spec.must_not_bool]):
         if fr is not None:
             anchor = anchor.join(fr.select("doc_id"), "doc_id", "left_anti")
 
@@ -8199,26 +8186,6 @@ def _qualify_indexed(
         return (anchor.select(
             "doc_id", F.lit(spec.const_boost).alias("score")), True)
     return anchor, scored
-
-
-def _sigtext_corpus(docs_df: DataFrame | None,
-                    id_frame: DataFrame | None):
-    """Resolve the raw-text corpus ``significant_text`` needs on the
-    indexed executor (the compressed index stores postings, not text)
-    and semi-join it down to the qualifying id frame (``None`` means
-    provably empty). Returns ``(frame, corpus)``; shared by the
-    top-level and sampler-inner branches of
-    :func:`dsl_aggregate_indexed`."""
-    if docs_df is None:
-        raise DslError(
-            "significant_text on the indexed executor needs docs_df "
-            "(the compressed index stores postings, not raw text)")
-    corpus = (docs_df if "doc_id" in docs_df.columns
-              else with_doc_ids(docs_df))
-    frame = (corpus.where(F.lit(False)) if id_frame is None
-             else corpus.join(id_frame.select("doc_id"), "doc_id",
-                              "left_semi"))
-    return frame, corpus
 
 
 def dsl_aggregate_indexed(
@@ -8236,8 +8203,9 @@ def dsl_aggregate_indexed(
     the FULL qualifying set (no top-k cut anywhere).
 
     Equals :func:`dsl_aggregate` on the union corpus (pytest-gated).
-    ``docs_df`` is only consulted for ``match_phrase`` adjacency when
-    the segments lack the positions sidecar.
+    ``docs_df`` is only consulted for ``significant_text`` (raw text)
+    and for ``match_phrase`` adjacency when the segments lack the
+    positions sidecar.
 
     At 10^12 turns this is the scale path for the reference's report
     metrics (counts/rates per week, reference src/jobsautoreport/
@@ -8245,87 +8213,7 @@ def dsl_aggregate_indexed(
     one grouped aggregation over doc_stats, vs a full corpus scan in
     the naive executor.
     """
-    agg_name, kind, body, sub, siblings = _parse_aggs_block(request)
-    spec = parse_query(request.get("query", {"match_all": {}}))
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-    _validate_sql_fields(spark, dirs, spec)
-    stats = _doc_stats_union(spark, dirs)
-    if n_docs == 0:
-        empty = stats.where(F.lit(False))
-        return _apply_agg(empty, agg_name, kind, body, sub, siblings,
-                          bg_frame=empty)
-    anchor, _scored = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
-                                       spec, docs_df)
-    if kind == "sampler":
-        # the cut happens on the ANCHOR (doc_id, score) frame — one
-        # TakeOrderedAndProject over postings-resolved candidates —
-        # then the inner agg proceeds exactly like a top-level one
-        # over the sampled id set
-        if siblings:
-            # match the naive executor's _apply_agg guard: a sibling
-            # pipeline next to a sampler is out of grammar — fail loud
-            # instead of silently dropping the sibling column
-            raise DslError(
-                "sibling pipelines need a single-level terms/histogram/"
-                "date_histogram aggregation next to them")
-        n, (gname, gkind, gbody, gsub, gsibs) = _parse_sampler(body, sub)
-        cut = (None if anchor is None else
-               anchor.orderBy(F.desc("score"), F.asc("doc_id"))
-               .limit(n).select("doc_id"))
-        if gkind == "significant_text":
-            frame, corpus = _sigtext_corpus(docs_df, cut)
-            return _apply_agg(frame, gname, gkind, gbody, gsub, gsibs,
-                              bg_frame=corpus)
-        frame = (stats.where(F.lit(False)) if cut is None
-                 else stats.join(cut, "doc_id", "left_semi"))
-        return _apply_agg(frame, gname, gkind, gbody, gsub, gsibs,
-                          bg_frame=stats)
-    if kind == "diversified_sampler":
-        # the per-value cap joins the diversify field onto the ANCHOR
-        # (doc_id, score) frame from doc_stats, windows per value,
-        # then cuts — the corpus is still never touched
-        if siblings:
-            raise DslError(
-                "sibling pipelines need a single-level terms/histogram/"
-                "date_histogram aggregation next to them")
-        n, m, fld, (gname, gkind, gbody, gsub, gsibs) = \
-            _parse_diversified(body, sub)
-        if fld not in stats.columns:
-            raise DslError(
-                f"diversified_sampler field {fld!r} not in doc_stats")
-        cut = None
-        if anchor is not None:
-            wv = (Window.partitionBy(fld)
-                  .orderBy(F.desc("score"), F.asc("doc_id")))
-            cut = (anchor.join(stats.select("doc_id", fld),
-                               "doc_id", "left")
-                   .withColumn("__dvr", F.row_number().over(wv))
-                   .where(F.col("__dvr") <= m)
-                   .orderBy(F.desc("score"), F.asc("doc_id"))
-                   .limit(n).select("doc_id"))
-        if gkind == "significant_text":
-            frame, corpus = _sigtext_corpus(docs_df, cut)
-            return _apply_agg(frame, gname, gkind, gbody, gsub, gsibs,
-                              bg_frame=corpus)
-        frame = (stats.where(F.lit(False)) if cut is None
-                 else stats.join(cut, "doc_id", "left_semi"))
-        return _apply_agg(frame, gname, gkind, gbody, gsub, gsibs,
-                          bg_frame=stats)
-    if kind == "significant_text":
-        # the index stores postings, not raw text — the qualifying set
-        # resolves from the index, the token analysis reads docs_df
-        # (the same corpus requirement match_phrase has without the
-        # positions sidecar)
-        frame, corpus = _sigtext_corpus(docs_df, anchor)
-        return _apply_agg(frame, agg_name, kind, body, sub, siblings,
-                          bg_frame=corpus)
-    # provably-empty query: aggregate the empty doc_stats frame (real
-    # column types; metrics null / counts 0, buckets vanish — ES rule)
-    frame = (stats.where(F.lit(False)) if anchor is None
-             else stats.join(anchor.select("doc_id"), "doc_id",
-                             "left_semi"))
-    return _apply_agg(frame, agg_name, kind, body, sub, siblings,
-                      bg_frame=stats)
+    return _aggregate(_IndexBackend(spark, index_dir, docs_df), request)
 
 
 def execute_request_indexed(
@@ -8339,228 +8227,8 @@ def execute_request_indexed(
     and ``aggs`` dispatch — the indexed twin of
     :func:`execute_request`, same semantics, pytest-pinned identical.
     """
-    if not isinstance(request, dict):
-        raise DslError("request must be a dict")
-    _validate_request_keys(request)
-    collapse = _parse_collapse(request)
-    rescore = _parse_rescore(request)
-    hl = _parse_highlight(request)
-    if hl is not None and (rescore is not None or collapse is not None
-                           or request.get("sort") is not None):
-        raise DslError("highlight cannot be combined with sort/"
-                       "collapse/rescore (the default ordering must be "
-                       "restorable after the highlight join)")
-    if hl is not None and docs_df is None:
-        raise DslError("highlight needs docs_df: the index does not "
-                       "store field text")
-    sfs = _parse_script_fields(request)
-    src = _parse_source(request)
-    if (sfs is not None or src is not None) and (
-            hl is not None or rescore is not None or collapse is not None
-            or "knn" in request or "aggs" in request
-            or request.get("sort") is not None):
-        raise DslError(
-            "_source/script_fields are supported on the default-"
-            "ordering and search_after paths only (the joined page "
-            "must be re-orderable)")
-
-    def _field_frame(want: list[str]) -> DataFrame:
-        # _source/script_fields columns join from doc_stats (the
-        # doc-values analogue — every non-text input column persists);
-        # anything else (e.g. the indexed text field) needs docs_df,
-        # like highlight
-        dirs, _m, _n, _a = _load_segments(index_dir)
-        stats = _doc_stats_union(spark, dirs)
-        if all(f in stats.columns for f in want):
-            return stats
-        if docs_df is not None:
-            dd = (docs_df if "doc_id" in docs_df.columns
-                  else with_doc_ids(docs_df))
-            if all(f in dd.columns for f in want):
-                return dd
-            missing = [f for f in want if f not in dd.columns]
-        else:
-            missing = [f for f in want if f not in stats.columns]
-        raise DslError(
-            f"_source/script_fields reference field(s) {missing} not "
-            f"in doc_stats — pass docs_df for non-persisted fields")
-
-    def _fields_wanted() -> list[str]:
-        return list(dict.fromkeys(
-            (src or []) + [f for _, _, fl in (sfs or []) for f in fl]))
-    if "knn" in request:
-        _knn_combo_guard(request, collapse, rescore, hl)
-        if docs_df is None:
-            raise DslError("knn needs docs_df: the index stores no "
-                           "vectors (the ANN scale paths are the "
-                           "LSH/IVF operators)")
-        knn = _parse_knn(request["knn"])
-        ksize = int(request.get("size", DEFAULT_SIZE))
-        kfrm = int(request.get("from", 0))
-        if ksize < 0 or kfrm < 0:
-            raise DslError("size/from must be non-negative")
-        khits, kids = _collect_knn_hits(
-            _knn_hits(docs_df, knn, BM25Params()))
-        qs = None
-        if "query" in request:
-            qtop = search_dsl_indexed(
-                spark, index_dir, request["query"],
-                kfrm + ksize + knn.k, docs_df)
-            if kids:
-                # the knn docs' query scores, whatever their BM25
-                # rank — an ids FILTER rides filter context, so the
-                # scores are identical to the plain query's
-                qtop = qtop.unionByName(search_dsl_indexed(
-                    spark, index_dir,
-                    {"bool": {"must": [request["query"]],
-                              "filter": [{"ids": {"values": kids}}]}},
-                    knn.k, docs_df))
-            qs = (qtop.withColumnRenamed("score", "__q")
-                  .dropDuplicates(["doc_id"]))
-        return _merge_knn_hits(khits, qs, ksize, kfrm)
-    if "aggs" in request:
-        if "sort" in request or "search_after" in request \
-                or collapse is not None or rescore is not None \
-                or hl is not None:
-            raise DslError("aggs requests return buckets only; sort/"
-                           "search_after/collapse/rescore/highlight "
-                           "cannot be honored")
-        return dsl_aggregate_indexed(spark, index_dir, request, docs_df)
-    if collapse is not None and request.get("search_after") is not None:
-        raise DslError("collapse with search_after is not supported")
-    size = int(request.get("size", DEFAULT_SIZE))
-    frm = int(request.get("from", 0))
-    if size < 0 or frm < 0:
-        raise DslError("size/from must be non-negative")
-    query = request.get("query", {"match_all": {}})
-    sort = request.get("sort")
-    if rescore is not None:
-        if sort is not None or collapse is not None \
-                or request.get("search_after") is not None:
-            raise DslError("rescore cannot be combined with sort/"
-                           "collapse/search_after (ES rejects rescore "
-                           "with sort; cursors/collapse would see two "
-                           "different orderings)")
-        window, rq, qw, rqw, mode = rescore
-        if window is None:
-            window = frm + size  # the ES default
-        depth = max(window, frm + size)
-        base = search_dsl_indexed(spark, index_dir, query, depth, docs_df)
-        rs_spec = parse_query(rq)
-        dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-        rs = None
-        if n_docs:
-            _validate_sql_fields(spark, dirs, rs_spec)
-            anchor, _ = _qualify_indexed(spark, dirs, metas, n_docs,
-                                         avgdl, rs_spec, docs_df)
-            if anchor is not None:
-                rs = anchor.select("doc_id",
-                                   F.col("score").alias("__rs"))
-        return _apply_rescore(base, rs, window, qw, rqw, mode, size, frm)
-    if sort is not None or collapse is not None:
-        # indexed custom sort / collapse: the anchor carries (doc_id,
-        # score) only, so field keys join in from doc_stats (the
-        # doc-values analogue)
-        if request.get("search_after") is not None:
-            raise DslError(
-                "search_after with a custom sort is not supported "
-                "(cursors cover the default _score/doc_id sort)")
-        spec = parse_query(query)
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-        if n_docs == 0:
-            return empty
-        anchor, _scored = _qualify_indexed(spark, dirs, metas, n_docs,
-                                           avgdl, spec, docs_df)
-        if anchor is None:
-            return empty
-        # doc_id lives on the anchor itself; the indexed text field is
-        # NOT in doc_stats (only non-text columns persist) — reject it
-        # as a grammar error rather than an opaque unresolved column
-        fields = sorted(
-            {f for f, _ in _parse_sort(sort)
-             if f not in ("_score", "doc_id")} if sort is not None
-            else set())
-        if collapse is not None and collapse != "doc_id":
-            fields = sorted(set(fields) | {collapse})
-        frame = anchor
-        if fields:
-            stats = _doc_stats_union(spark, dirs)
-            missing = [f for f in fields if f not in stats.columns]
-            if missing:
-                raise DslError(
-                    f"sort/collapse fields {missing} are not in "
-                    f"doc_stats (the index persists every non-text "
-                    f"input column)")
-            frame = anchor.join(stats.select("doc_id", *fields),
-                                "doc_id")
-        if collapse is not None:
-            frame = _apply_collapse(frame, collapse, "score", sort)
-        if sort is not None:
-            return _sorted_hits(frame, "score", sort, size, frm)
-        out = (frame.select("doc_id", "score")
-               .orderBy(F.desc("score"), F.asc("doc_id"))
-               .limit(frm + size))
-        return out.offset(frm) if frm else out
-    after = request.get("search_after")
-    if after is not None:
-        if frm:
-            raise DslError(
-                "search_after cannot be combined with from (ES rule)")
-        spec = parse_query(query)
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-        if n_docs == 0:
-            return empty
-        anchor, scored = _qualify_indexed(spark, dirs, metas, n_docs,
-                                          avgdl, spec, docs_df)
-        if anchor is None:
-            return empty
-        order = ([F.desc("score"), F.asc("doc_id")] if scored
-                 else [F.asc("doc_id")])
-        out = (anchor.where(_search_after_pred(scored, after))
-               .orderBy(*order).limit(size))
-        if hl is not None:
-            out = _apply_highlight(
-                out, docs_df,
-                _resolved_spec_indexed(spark, index_dir, query), hl)
-        if sfs is not None or src is not None:
-            out = _apply_fields(out, _field_frame(_fields_wanted()),
-                                src, sfs, order)
-        return out
-    out = search_dsl_indexed(spark, index_dir, query, frm + size, docs_df)
-    out = out.offset(frm) if frm else out
-    if hl is not None:
-        out = _apply_highlight(
-            out, docs_df,
-            _resolved_spec_indexed(spark, index_dir, query), hl)
-    if sfs is not None or src is not None:
-        out = _apply_fields(out, _field_frame(_fields_wanted()),
-                            src, sfs,
-                            [F.desc("score"), F.asc("doc_id")])
-    return out
-
-
-def _resolved_spec_indexed(spark: SparkSession,
-                           index_dir: str | list[str],
-                           query: dict) -> QuerySpec:
-    """parse + fuzzy/mlt resolution against the INDEX (terms dim +
-    postings df cache) — the indexed twin of
-    :func:`_resolved_spec_naive`, for highlighting expanded terms."""
-    spec = parse_query(query)
-    if not (spec.has_fuzzy() or spec.has_mlt()):
-        return spec
-    dirs, metas, n_docs, _avgdl = _load_segments(index_dir)
-    if spec.has_fuzzy():
-        spec = _resolve_fuzzy(spec, _terms_dim_expander(spark, dirs))
-    if spec.has_mlt():
-        def stats(field, terms):
-            dfm = _df_stats_multi(spark, dirs, metas,
-                                  [term_id_py(t) for t in terms])
-            return n_docs, {t: dfm.get(term_id_py(t), 0)
-                            for t in terms}
-        spec = _resolve_mlt(spec, stats)
-    return spec
+    return _execute_request(_IndexBackend(spark, index_dir, docs_df),
+                            request)
 
 
 def scan_dsl_indexed(
@@ -8577,17 +8245,7 @@ def scan_dsl_indexed(
     (pytest-gated); ``docs_df`` is only consulted for ``match_phrase``
     adjacency when segments lack the positions sidecar.
     """
-    spec = parse_query(query)
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-    _validate_sql_fields(spark, dirs, spec)
-    stats = _doc_stats_union(spark, dirs)
-    if n_docs == 0:
-        return stats.where(F.lit(False))
-    anchor, _scored = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
-                                       spec, docs_df)
-    if anchor is None:
-        return stats.where(F.lit(False))
-    return stats.join(anchor.select("doc_id"), "doc_id", "left_semi")
+    return _scan(_IndexBackend(spark, index_dir, docs_df), query)
 
 
 def count_dsl_indexed(

@@ -296,3 +296,31 @@ def test_cli_textqc(spark, tmp_path, capsys):
     r2 = _run(capsys, ["textqc", "--table", src, "--output", out2])
     assert r2["n_docs"] == 6 and "n_contaminated_docs" not in r2
     assert "is_contaminated" not in spark.read.parquet(out2).columns
+
+
+def test_cli_textqc_text_col(spark, tmp_path, capsys):
+    """`textqc --text-col` names the text column for EVERY feature pass:
+    a table whose text lives in `body` (no `text` column at all) gets
+    the same quality_score the operator computes on that column."""
+    import pandas as pd
+
+    from prow_jobs_scraper_spark.operators.textqc import quality_score
+
+    src = str(tmp_path / "qc_body")
+    out = str(tmp_path / "qc_body_out")
+    docs = pd.DataFrame({
+        "doc_id": range(3),
+        "body": ["the quick brown fox jumps over the lazy dog today",
+                 "spam spam spam spam spam spam",
+                 "mail me at bob@example.com about the run"],
+    })
+    spark.createDataFrame(docs).write.mode("overwrite").parquet(src)
+    r = _run(capsys, ["textqc", "--table", src, "--output", out,
+                      "--text-col", "body"])
+    assert r["n_docs"] == 3 and r["n_pii_docs"] == 1
+    got = {row["doc_id"]: row["quality_score"]
+           for row in spark.read.parquet(out).collect()}
+    want = {row["doc_id"]: row["quality_score"] for row in quality_score(
+        spark.read.parquet(src), text_col="body").collect()}
+    assert got == pytest.approx(want)
+    assert got[0] > got[1] > 0

@@ -3283,6 +3283,41 @@ def test_scripted_agg_sources(spark, docs, docs_pdf, dsl_index):
             dsl_aggregate(docs, {"aggs": {"x": bad}}).collect()
 
 
+def test_agg_script_reads_field_ending_in_score(spark, docs,
+                                                tmp_path_factory):
+    """Only a standalone `_score` is rejected in an agg script: a field
+    whose name ends in it (`doc['quality_score'].value`) compiles, and
+    both executors answer it (quality_score persists in doc_stats)."""
+    from prow_jobs_scraper_spark.operators.textqc import quality_score
+    from prow_jobs_scraper_spark.search.dsl import (
+        dsl_aggregate,
+        dsl_aggregate_indexed,
+    )
+
+    qdocs = quality_score(docs).select(*docs.columns,
+                                       "quality_score").cache()
+    idx = str(tmp_path_factory.mktemp("qscore_idx"))
+    build_index(spark, qdocs, idx, BuildConfig(n_ranges=4, n_buckets=2))
+    req = {"query": {"match": {"text": "spark"}},
+           "aggs": {"q": {"avg": {"script": {
+               "source": "doc['quality_score'].value * params.m",
+               "params": {"m": 100}}}}}}
+    got = dsl_aggregate(qdocs, req).toPandas()
+    pdf = qdocs.toPandas()
+    hit = tokenize_pandas(pdf["text"]).map(lambda ts: "spark" in ts)
+    assert hit.sum() > 0
+    np.testing.assert_allclose(
+        got["q"], [(pdf.loc[hit, "quality_score"] * 100).mean()],
+        rtol=1e-12)
+    pd.testing.assert_frame_equal(
+        dsl_aggregate_indexed(spark, idx, req).toPandas(), got)
+    bad = {"aggs": {"q": {"avg": {"script": "_score * 2"}}}}
+    with pytest.raises(DslError, match="_score"):
+        dsl_aggregate(qdocs, bad)
+    with pytest.raises(DslError, match="_score"):
+        dsl_aggregate_indexed(spark, idx, bad)
+
+
 def test_matrix_stats(spark, docs, docs_pdf, dsl_index):
     """ES `matrix_stats` (the matrix aggregations module): one row per
     ordered field pair with count/mean/sample variance/skewness
@@ -4990,6 +5025,77 @@ def test_execute_request_indexed_matches_naive(spark, docs, dsl_index):
     assert int(a["n"].iloc[0]) == int(wa["n"].iloc[0])
     with pytest.raises(DslError):
         execute_request_indexed(spark, dsl_index, {"from": -1})
+
+
+_GQ = {"match": {"text": "spark"}}
+_GHL = {"fields": {"text": {}}, "number_of_fragments": 0}
+_GAGG = {"g": {"terms": {"field": "role"}}}
+_GKNN = {"field": "vec", "query_vector": [1.0, 0.0], "k": 3}
+_GRS = {"query": {"rescore_query": _GQ}}
+_GCOL = {"field": "role"}
+_GSF = {"x": {"script": "doc['turn_idx'].value"}}
+_HL_MSG = "highlight cannot be combined"
+_AGG_MSG = "aggs requests return buckets only"
+_RS_MSG = "rescore cannot be combined"
+_SRC_MSG = "_source/script_fields are supported"
+_KNN_MSG = "knn combines with query/size/from only"
+GUARD_CASES = [
+    ({"highlight": _GHL, "sort": ["turn_idx"]}, _HL_MSG),
+    ({"highlight": _GHL, "collapse": _GCOL}, _HL_MSG),
+    ({"highlight": _GHL, "rescore": _GRS}, _HL_MSG),
+    ({"aggs": _GAGG, "sort": ["turn_idx"]}, _AGG_MSG),
+    ({"aggs": _GAGG, "search_after": [1]}, _AGG_MSG),
+    ({"aggs": _GAGG, "collapse": _GCOL}, _AGG_MSG),
+    ({"aggs": _GAGG, "rescore": _GRS}, _AGG_MSG),
+    ({"aggs": _GAGG, "highlight": _GHL}, _AGG_MSG),
+    ({"collapse": _GCOL, "search_after": [1]},
+     "collapse with search_after is not supported"),
+    ({"rescore": _GRS, "sort": ["turn_idx"]}, _RS_MSG),
+    ({"rescore": _GRS, "collapse": _GCOL}, _RS_MSG),
+    ({"rescore": _GRS, "search_after": [1.0, 1]}, _RS_MSG),
+    ({"sort": ["turn_idx"], "search_after": [1]},
+     "search_after with a custom sort is not supported"),
+    ({"search_after": [1.0, 1], "from": 2},
+     "search_after cannot be combined with from"),
+    ({"size": -1}, "size/from must be non-negative"),
+    ({"from": -1}, "size/from must be non-negative"),
+    ({"_source": ["role"], "sort": ["turn_idx"]}, _SRC_MSG),
+    ({"_source": ["role"], "aggs": _GAGG}, _SRC_MSG),
+    ({"_source": ["role"], "knn": _GKNN}, _SRC_MSG),
+    ({"_source": ["role"], "rescore": _GRS}, _SRC_MSG),
+    ({"_source": ["role"], "collapse": _GCOL}, _SRC_MSG),
+    ({"script_fields": _GSF, "sort": ["turn_idx"]}, _SRC_MSG),
+    ({"script_fields": _GSF, "aggs": _GAGG}, _SRC_MSG),
+    ({"script_fields": _GSF, "knn": _GKNN}, _SRC_MSG),
+    ({"script_fields": _GSF, "rescore": _GRS}, _SRC_MSG),
+    ({"script_fields": _GSF, "collapse": _GCOL}, _SRC_MSG),
+    ({"knn": _GKNN, "aggs": _GAGG}, _KNN_MSG),
+    ({"knn": _GKNN, "sort": ["turn_idx"]}, _KNN_MSG),
+    # a script field may not overwrite a requested _source/fields column
+    ({"_source": ["role"],
+      "script_fields": {"role": {"script": "doc['turn_idx'].value"}}},
+     "script_fields name 'role' collides"),
+    ({"fields": ["turn_idx"],
+      "script_fields": {"turn_idx": {"script": "doc['turn_idx'].value"}}},
+     "script_fields name 'turn_idx' collides"),
+]
+
+
+@pytest.mark.parametrize("executor", ["naive", "indexed"])
+@pytest.mark.parametrize("request_body,message", GUARD_CASES,
+                         ids=["+".join(r) for r, _ in GUARD_CASES])
+def test_request_guards_match_across_executors(
+        spark, docs, dsl_index, executor, request_body, message):
+    """Every `_search` combination guard raises the same DslError on
+    the naive and the indexed executor."""
+    import re  # noqa: PLC0415
+
+    req = {"query": _GQ, **request_body}
+    with pytest.raises(DslError, match=re.escape(message)):
+        if executor == "naive":
+            execute_request(docs, req)
+        else:
+            execute_request_indexed(spark, dsl_index, req, docs_df=docs)
 
 
 # --------------------------------------------------------------------------

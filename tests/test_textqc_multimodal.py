@@ -570,5 +570,5 @@ def test_contamination_broadcast_plan(spark):
                                   "text string")
     plan = Q.contamination_check(df, bench)._jdf.queryExecution(
     ).executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
+    assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
