@@ -67,7 +67,8 @@ def _bm25_topk(spark, sf_dir):
     'and' = every query term required (the reference's operator:and,
     query.py:47-74); mode 'or' = ES match default, any term scores.
     The compressed path answers 'or' with MaxScore/block-max pruning
-    (search/compressed.py::_wand_or_topk, rank-identity pytest-gated);
+    (search/compressed.py::_wand_bool_topk, one should clause,
+    rank-identity pytest-gated);
     this oracle-checked entry runs the naive DataFrame plans."""
     from prow_jobs_scraper_spark.search.naive import naive_bm25_topk
 
@@ -88,7 +89,8 @@ def _bm25_topk_or(spark, sf_dir):
     reference pins operator:and, query.py:47-74; the engine supports
     both): docs containing ANY query term score, sum over terms present.
     The compressed path answers this with MaxScore/block-max pruning
-    (search/compressed.py::_wand_or_topk, rank-identity pytest-gated);
+    (search/compressed.py::_wand_bool_topk, one should clause,
+    rank-identity pytest-gated);
     this oracle-checked entry runs the naive DataFrame plan."""
     from prow_jobs_scraper_spark.search.naive import naive_bm25_topk
 

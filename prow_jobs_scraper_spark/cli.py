@@ -82,11 +82,7 @@ def cmd_package(args) -> dict:
 
 
 def cmd_search(args) -> dict:
-    from prow_jobs_scraper_spark.search.compressed import (
-        search_topk,
-        search_topk_filtered,
-        search_topk_multi,
-    )
+    from prow_jobs_scraper_spark.search.compressed import search_topk_multi
 
     spark = _spark(args)
     t0 = time.time()
@@ -206,16 +202,10 @@ def cmd_search(args) -> dict:
                   if args.corpus else None)
         rows = search_phrase(spark, dirs[0], corpus,
                              args.query, args.k).collect()
-    elif len(dirs) > 1:  # incremental segments: base,delta1,delta2,...
+    else:  # one index or segments base,delta1,delta2,... — one path
         rows = search_topk_multi(spark, dirs, args.query, args.k,
                                  operator=args.operator,
                                  doc_filter=flt).collect()
-    elif flt:
-        rows = search_topk_filtered(spark, args.index, args.query, args.k,
-                                    flt, operator=args.operator).collect()
-    else:
-        rows = search_topk(spark, args.index, args.query, args.k,
-                           operator=args.operator).collect()
     return {
         "query": args.query,
         "k": args.k,

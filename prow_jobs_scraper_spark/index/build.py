@@ -50,6 +50,7 @@ Key design points (vs BASELINE.json north_rule):
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import time
@@ -402,13 +403,18 @@ def build_index(
         json.dump(meta, f, indent=1)
 
     # ---- which buckets are already committed? (resume point)
+    # A manifest append commits by moving its part file in; a kill
+    # during the first append leaves none, which means nothing is
+    # committed. A part file that cannot be read is corruption: fail
+    # loud rather than re-encode every bucket next to the old rows.
     committed: set[int] = set()
-    if os.path.exists(paths.manifest):
+    if glob.glob(os.path.join(paths.manifest, "part-*")):
         try:
             mrows = spark.read.parquet(paths.manifest).select("tb").collect()
-            committed = {int(r["tb"]) for r in mrows}
-        except Exception:
-            committed = set()
+        except Exception as e:
+            raise RuntimeError(
+                f"unreadable build manifest {paths.manifest}: {e}") from e
+        committed = {int(r["tb"]) for r in mrows}
     todo = [tb for tb in range(cfg.n_buckets) if tb not in committed]
     if not todo:
         return {**meta, "resumed": True, "n_new_buckets": 0,
@@ -660,7 +666,7 @@ def compact_segments(
     # decoded postings stream: one row per (term, doc) posting.
     # ONE decode_blocks_bulk call per Arrow batch — the bulk API's
     # amortization exists precisely so no per-block Python loop is paid
-    # (same pattern as search/compressed._decode_term).
+    # (same pattern as search/compressed._Postings.decode).
     def decode(batches):
         import pandas as pd  # noqa: PLC0415
 

@@ -1,22 +1,36 @@
 """Compressed-index BM25 top-k with block skipping + block-max pruning.
 
+One match top-k path serves every entry point. A single index is a
+segment list of one (:func:`_load_segments`), so :func:`search_topk`,
+:func:`search_topk_filtered` and :func:`search_topk_multi` are short
+wrappers over :func:`_match_topk`, and :func:`search_topk_many` runs the
+same planner and kernel per query over one shared scan.
+
 Query lifecycle (cf. SURVEY.md §3.2 "ours"):
 
 1. analyze the query with the engine tokenizer (same as index build);
-2. broadcast-size lookup of the query terms in ``term_stats`` (term-bucket
-   ``tb`` directory pruning + Parquet min/max on ``term``) — conjunctive
-   semantics: any missing term short-circuits to an empty result;
-3. scan only the matching posting blocks (again tb-pruned);
-4. one distributed scoring pass grouped by ``salt`` — every term's
-   postings were range-partitioned on the SAME doc-id ranges at build
-   time, so each salt group holds all query terms' postings for one doc
-   range: a co-partitioned conjunctive merge with zero replication;
-5. per-salt numpy kernel: decode the rarest term, then for each further
-   term decode only blocks whose [first_doc_id, last_doc_id] span touches
-   surviving candidates (searchsorted block skipping); single-term queries
-   process blocks in descending block-max order and stop once the k-th
-   score exceeds the next block's upper bound (block-max pruning);
-6. local top-k per salt → global ``orderBy(score desc, doc_id).limit(k)``
+2. df per term from each segment's ``term_stats`` (term-bucket ``tb``
+   directory pruning + Parquet min/max on ``term_id``) through the
+   driver-side cache, summed across segments (:func:`_df_stats_multi`);
+   :func:`_plan_match` keeps the live terms — conjunctive semantics:
+   any missing term short-circuits to an empty result; disjunctive:
+   missing terms drop — with their idf and rarity order;
+3. scan only the matching posting blocks (:func:`_segment_blocks`,
+   again tb-pruned), each tagged with its segment;
+4. one distributed scoring pass grouped by ``(seg, salt)`` — every
+   term's postings were range-partitioned on the SAME doc-id ranges at
+   build time, so each group holds all query terms' postings for one
+   doc range of one segment: a co-partitioned merge with zero
+   replication; a metadata filter cogroups the allowed doc ids
+   (:func:`_segment_allowed`) with the blocks;
+5. per-group numpy kernel :func:`_score_match_group`: one live term runs
+   a block-max pruned scan in descending block-max order that stops
+   once the k-th score exceeds the next block's upper bound; AND decodes
+   the rarest term, then for each further term only blocks whose
+   [first_doc_id, last_doc_id] span touches surviving candidates
+   (searchsorted block skipping); OR is the MaxScore arm of
+   :func:`_wand_bool_topk` with one should clause;
+6. local top-k per group → global ``orderBy(score desc, doc_id).limit(k)``
    (TakeOrderedAndProject).
 
 Rank-identity: float64 everywhere, same formula and tie order as the
@@ -28,6 +42,7 @@ from __future__ import annotations
 import json
 import math
 from functools import reduce
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -52,6 +67,11 @@ _DF_CACHE: dict[tuple, dict[int, int]] = {}
 _DF_CACHE_MAX_IDS = 64       # distinct index identities kept
 _DF_CACHE_MAX_TERMS = 1 << 20  # per identity; queried terms only
 
+_K_ALL = 1 << 62  # no per-group cut: callers combine or verify every match
+_HITS = "doc_id long, score double"
+_NO_IDS = np.empty(0, dtype=np.int64)
+_NO_SCORES = np.empty(0, dtype=np.float64)
+
 
 def _index_identity(paths: IndexPaths, meta: dict) -> tuple:
     return (paths.root, str(meta.get("build_id")),
@@ -66,8 +86,7 @@ def _df_stats(
     n_buckets: int,
 ) -> dict[int, int]:
     """df per term_id from term_stats, through the cache -> only terms
-    PRESENT in the corpus appear in the result (same contract as the
-    inline fetch this replaces)."""
+    PRESENT in the corpus appear in the result."""
     key = _index_identity(paths, meta)
     if key not in _DF_CACHE and len(_DF_CACHE) >= _DF_CACHE_MAX_IDS:
         _DF_CACHE.clear()
@@ -96,33 +115,159 @@ def _df_stats(
     return {t: cached[t] for t in term_ids if cached.get(t, 0) > 0}
 
 
+def _load_segments(index_dir: str | list[str]):
+    """-> (dirs, metas, global n_docs, global avgdl) for one index
+    directory (a list of one segment, whose avgdl is kept bit-for-bit)
+    or a segment list; BM25 params must agree across segments."""
+    dirs = [index_dir] if isinstance(index_dir, str) else list(index_dir)
+    metas = []
+    for d in dirs:
+        with open(IndexPaths(d).meta) as f:
+            metas.append(json.load(f))
+    n_docs = sum(int(m["n_docs"]) for m in metas)
+    if len(metas) == 1:
+        avgdl = float(metas[0]["avgdl"])
+    else:
+        avgdl = (sum(float(m["avgdl"]) * int(m["n_docs"]) for m in metas)
+                 / n_docs if n_docs else 0.0)
+    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    if any((float(m["k1"]), float(m["b"])) != (k1, b) for m in metas):
+        raise ValueError("segments disagree on BM25 params")
+    return dirs, metas, n_docs, avgdl
+
+
+def _df_stats_multi(
+    spark: SparkSession,
+    dirs: list[str],
+    metas: list[dict],
+    term_ids: list[int],
+) -> dict[int, int]:
+    """Global df per term summed across segments, each segment's fetch
+    through the driver-side cache (:func:`_df_stats`, pruned with that
+    segment's own bucket layout) — a warm repeated query runs ZERO
+    stats jobs, and overlapping terms are fetched at most once per
+    segment."""
+    out: dict[int, int] = {}
+    for d, m in zip(dirs, metas):
+        seg = _df_stats(spark, IndexPaths(d), m, list(term_ids),
+                        int(m["n_buckets"]))
+        for tid, df in seg.items():
+            out[tid] = out.get(tid, 0) + int(df)
+    return out
+
+
+def _idf(n_docs: int, df: int) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+class _Match(NamedTuple):
+    """A planned match: idf per live term and the live term ids rarest
+    first (ties broken on the term text)."""
+
+    idfs: dict[int, float]
+    rarity: list[int]
+    disjunctive: bool
+
+
+def _plan_match(terms: list[str], df_of: dict[int, int], n_docs: int,
+                conjunctive: bool, boost: float = 1.0) -> _Match | None:
+    """Plan one match over its distinct analyzed ``terms`` and the
+    global ``df_of``, or None when it matches nothing: a conjunctive
+    match needs every term in the corpus, a disjunctive one drops the
+    absent terms. ``boost`` (the ES per-clause boost) folds into the
+    idf — scores AND the kernels' block-max bounds are linear in it, so
+    pruning stays exact under scaling."""
+    tid_of = {t: term_id_py(t) for t in terms}
+    live = [t for t in terms if tid_of[t] in df_of]
+    if not live or (conjunctive and len(live) < len(terms)):
+        return None
+    idfs = {tid_of[t]: boost * _idf(n_docs, df_of[tid_of[t]]) for t in live}
+    rarity = [tid_of[t]
+              for t in sorted(live, key=lambda t: (df_of[tid_of[t]], t))]
+    return _Match(idfs, rarity, not conjunctive)
+
+
 def _tf_norm(tfs: np.ndarray, dls: np.ndarray, avgdl: float, k1: float, b: float):
     tf = tfs.astype(np.float64)
     dl = dls.astype(np.float64)
     return tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / max(avgdl, 1e-12)))
 
 
-def _decode_term(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode all of one term's blocks in a salt group (already doc-ordered
-    across blocks: salts are disjoint ranges, blocks disjoint within).
-    One vectorized pass over all blocks — per-block decode overhead
-    dominated hot-term latency (codec.decode_blocks_bulk docstring)."""
-    pdf = pdf.sort_values("first_doc_id")
-    return codec.decode_blocks_bulk(
-        pdf["n_docs"].to_numpy(), pdf["first_doc_id"].to_numpy(),
-        list(pdf["doc_gaps"]), list(pdf["tf_bytes"]), list(pdf["dl_bytes"]),
-    )
+def _find(sorted_ids: np.ndarray, ids: np.ndarray):
+    """-> (found mask, clipped insert positions) of ``ids`` in the
+    SORTED array ``sorted_ids``."""
+    if sorted_ids.size == 0:
+        return (np.zeros(ids.size, dtype=bool),
+                np.zeros(ids.size, dtype=np.int64))
+    pos = np.minimum(np.searchsorted(sorted_ids, ids), sorted_ids.size - 1)
+    return sorted_ids[pos] == ids, pos
+
+
+class _Postings:
+    """One (segment, salt) group's posting blocks per term, doc-ordered,
+    behind a block-decode cache keyed ``(term_id, block row)``. Batch
+    callers pass one shared ``cache`` per group so a block decoded for
+    one query is reused by every other query touching the term there —
+    the keys agree because every query sorts the same term frame."""
+
+    def __init__(self, by_term: dict, idfs: dict, avgdl: float, k1: float,
+                 b: float, cache: dict | None = None):
+        self.frames = {
+            int(t): g.sort_values("first_doc_id").reset_index(drop=True)
+            for t, g in by_term.items()
+        }
+        self.idfs, self.avgdl, self.k1, self.b = idfs, avgdl, k1, b
+        self.cache = {} if cache is None else cache
+
+    def n_postings(self, tid: int) -> int:
+        return int(self.frames[tid]["n_docs"].sum())
+
+    def decode(self, tid: int, rows=None):
+        """(ids, tfs, dls) of block ``rows`` (ascending; every block
+        when None) of ``tid``, concatenated in doc order. Uncached
+        blocks decode in ONE vectorized call — per-block decode overhead
+        dominated hot-term latency (codec.decode_blocks_bulk docstring)."""
+        g = self.frames[tid]
+        rows = range(len(g)) if rows is None else [int(r) for r in rows]
+        miss = [r for r in rows if (tid, r) not in self.cache]
+        if miss:
+            sub = g.iloc[miss]
+            nd = sub["n_docs"].to_numpy()
+            cols = codec.decode_blocks_bulk(
+                nd, sub["first_doc_id"].to_numpy(), list(sub["doc_gaps"]),
+                list(sub["tf_bytes"]), list(sub["dl_bytes"]))
+            cuts = np.cumsum(nd)[:-1]
+            for r, *parts in zip(miss, *(np.split(c, cuts) for c in cols)):
+                self.cache[(tid, r)] = tuple(parts)
+        if not rows:
+            return _NO_IDS, _NO_IDS, _NO_IDS
+        return tuple(np.concatenate(p)
+                     for p in zip(*(self.cache[(tid, r)] for r in rows)))
+
+    def score(self, tid: int, cand: np.ndarray):
+        """-> (found mask over SORTED ``cand``, idf·tf_norm of ``tid`` at
+        the found ids), decoding only blocks whose [first, last] doc
+        span holds a candidate (block skipping)."""
+        g = self.frames[tid]
+        lo = np.searchsorted(cand, g["first_doc_id"].to_numpy(np.int64),
+                             side="left")
+        hi = np.searchsorted(cand, g["last_doc_id"].to_numpy(np.int64),
+                             side="right")
+        ids, tfs, dls = self.decode(tid, np.flatnonzero(hi > lo))
+        found, pos = _find(ids, cand)
+        pos = pos[found]
+        return found, self.idfs[tid] * _tf_norm(
+            tfs[pos], dls[pos], self.avgdl, self.k1, self.b)
+
+    def contrib(self, tid: int, cand: np.ndarray) -> np.ndarray:
+        """idf·tf_norm of ``tid`` at SORTED ``cand`` (0 where absent)."""
+        found, s = self.score(tid, cand)
+        out = np.zeros(cand.size, dtype=np.float64)
+        out[found] = s
+        return out
 
 
 _PRUNE_CHUNK = 64
-
-
-def _in_sorted(ids: np.ndarray, allowed: np.ndarray) -> np.ndarray:
-    """Boolean membership of ``ids`` in the SORTED array ``allowed``."""
-    if allowed.size == 0:
-        return np.zeros(ids.size, dtype=bool)
-    pos = np.minimum(np.searchsorted(allowed, ids), allowed.size - 1)
-    return allowed[pos] == ids
 
 
 def _single_term_topk(
@@ -139,8 +284,8 @@ def _single_term_topk(
     (at most one chunk of over-decode vs block-at-a-time WAND).
     """
     blocks = pdf.sort_values("block_max_tf_norm", ascending=False)
-    best_ids = np.empty(0, dtype=np.int64)
-    best_scores = np.empty(0, dtype=np.float64)
+    best_ids = _NO_IDS
+    best_scores = _NO_SCORES
     kth = -math.inf
     ubs = idf * blocks["block_max_tf_norm"].to_numpy(dtype=np.float64)
     for lo in range(0, len(blocks), _PRUNE_CHUNK):
@@ -158,7 +303,7 @@ def _single_term_topk(
         if allowed is not None:
             # filtered retrieval: the unfiltered block max still upper-
             # bounds any allowed doc's score, so early exit stays exact
-            keep = _in_sorted(ids, allowed)
+            keep = _find(allowed, ids)[0]
             ids, scores = ids[keep], scores[keep]
         all_ids = np.concatenate([best_ids, ids])
         all_scores = np.concatenate([best_scores, scores])
@@ -166,127 +311,6 @@ def _single_term_topk(
         best_ids, best_scores = all_ids[order], all_scores[order]
         if best_ids.size >= k:
             kth = best_scores[-1]
-    return best_ids, best_scores
-
-
-def _wand_or_topk(
-    by_term: dict, idfs: dict, k: int, avgdl: float, k1: float, b: float,
-    block_cache: dict | None = None,
-    allowed: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Disjunctive (operator: or) top-k inside one salt group — the
-    block-max pruning family's vectorizable member (the SURVEY §7 P3
-    promise): MaxScore candidate generation over block-max upper bounds
-    with block-skipped scoring.
-
-    Classic WAND pivots doc-at-a-time — per-row Python, this repo's
-    forbidden shape — and its interval form degrades when a sparse rare
-    block SPANS most of the doc range (its block-max then inflates every
-    interval's bound; measured 65% decode on the hot+rare shape).
-    MaxScore prunes by TERM instead, which vectorizes cleanly:
-
-    1. terms descend by upper bound ub_t = idf_t·max(block_max); suffix
-       sums give the best score reachable WITHOUT the first i terms;
-    2. visit terms in that order; each contributes its not-yet-seen
-       posting docs as candidates, fully scored in one numpy pass —
-       other terms' contributions come from block-skipped decodes
-       (only blocks containing candidate ids, per-block cache);
-    3. STOP when suffix_ub[i] < current k-th score — docs containing
-       none of the visited terms are bounded by exactly that suffix,
-       so the cut is exact. Hot+rare: the rare term seeds few
-       candidates, θ jumps above the hot term's ub, and the hot list's
-       untouched blocks are never decoded.
-    """
-    frames: dict[int, pd.DataFrame] = {
-        tid: g.sort_values("first_doc_id").reset_index(drop=True)
-        for tid, g in by_term.items()
-    }
-    # batch callers pass a shared cache so a block decoded for one query
-    # is reused by every other query referencing the term in this group
-    if block_cache is None:
-        block_cache = {}
-
-    def blocks_of(tid: int, idx: np.ndarray):
-        """Decode (cached) the given block rows of a term, concatenated
-        in doc order (rows are span-sorted and spans are disjoint)."""
-        outs = []
-        g = frames[tid]
-        for bi in idx:
-            key = (tid, int(bi))
-            if key not in block_cache:
-                row = g.iloc[int(bi)]
-                block_cache[key] = codec.decode_blocks_bulk(
-                    np.array([row["n_docs"]]),
-                    np.array([row["first_doc_id"]]),
-                    [row["doc_gaps"]], [row["tf_bytes"]], [row["dl_bytes"]],
-                )
-            outs.append(block_cache[key])
-        if not outs:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, z
-        return tuple(np.concatenate(parts) for parts in zip(*outs))
-
-    def contrib(tid: int, cand_ids: np.ndarray) -> np.ndarray:
-        """idf·tf_norm of ``tid`` at cand_ids (0 where absent), decoding
-        only blocks whose span contains a candidate."""
-        g = frames[tid]
-        firsts = g["first_doc_id"].to_numpy(dtype=np.int64)
-        lasts = g["last_doc_id"].to_numpy(dtype=np.int64)
-        lo = np.searchsorted(cand_ids, firsts, side="left")
-        hi = np.searchsorted(cand_ids, lasts, side="right")
-        out = np.zeros(cand_ids.size, dtype=np.float64)
-        touched = np.flatnonzero(hi > lo)
-        if touched.size == 0:
-            return out
-        ids_t, tfs_t, dls_t = blocks_of(tid, touched)
-        pos = np.searchsorted(ids_t, cand_ids)
-        pos_c = np.minimum(pos, ids_t.size - 1)
-        found = ids_t[pos_c] == cand_ids
-        if found.any():
-            out[found] = idfs[tid] * _tf_norm(
-                tfs_t[pos_c[found]], dls_t[pos_c[found]], avgdl, k1, b)
-        return out
-
-    ubs = {
-        tid: idfs[tid] * float(g["block_max_tf_norm"].max())
-        for tid, g in frames.items()
-    }
-    order = sorted(frames, key=lambda t: (-ubs[t], t))
-    # tail[i] = Σ_{j>=i} ub_j — the best score any doc lacking every term
-    # in order[:i] can reach
-    tail = np.cumsum([ubs[t] for t in order][::-1])[::-1]
-
-    best_ids = np.empty(0, dtype=np.int64)
-    best_scores = np.empty(0, dtype=np.float64)
-    kth = -math.inf
-    seen = np.empty(0, dtype=np.int64)  # sorted, already-scored doc ids
-    for i, tid in enumerate(order):
-        if best_ids.size >= k and tail[i] < kth:
-            break  # unseen docs lack every visited term: bound < θ
-        g = frames[tid]
-        ids_t, tfs_t, dls_t = blocks_of(tid, np.arange(len(g)))
-        if seen.size:
-            pos = np.searchsorted(seen, ids_t)
-            pos_c = np.minimum(pos, seen.size - 1)
-            new = seen[pos_c] != ids_t
-        else:
-            new = np.ones(ids_t.size, dtype=bool)
-        if allowed is not None:  # filtered retrieval restricts seeds
-            new &= _in_sorted(ids_t, allowed)
-        cand = ids_t[new]
-        if cand.size:
-            scores = idfs[tid] * _tf_norm(
-                tfs_t[new], dls_t[new], avgdl, k1, b)
-            for other in order:
-                if other != tid:
-                    scores = scores + contrib(other, cand)
-            all_ids = np.concatenate([best_ids, cand])
-            all_scores = np.concatenate([best_scores, scores])
-            sel = np.lexsort((all_ids, -all_scores))[:k]
-            best_ids, best_scores = all_ids[sel], all_scores[sel]
-            if best_ids.size >= k:
-                kth = best_scores[-1]
-        seen = np.union1d(seen, ids_t)
     return best_ids, best_scores
 
 
@@ -305,7 +329,8 @@ def _wand_bool_topk(
     """Cross-clause block-max pruned top-k for a whole BOOL query inside
     one salt group — the WAND family applied ACROSS clauses instead of
     per clause (round-3 verdict: the per-clause score-all was the one
-    plan in the tree not shippable at 100×).
+    plan in the tree not shippable at 100×). A disjunctive ``match`` is
+    the one-should-clause, ``msm=1`` case.
 
     ``clauses``: ``(is_must, conjunctive, term_ids)`` per text clause.
     Doc score = Σ must-clause scores + Σ MATCHED should-clause scores;
@@ -328,7 +353,12 @@ def _wand_bool_topk(
       suffix bound cannot beat the k-th QUALIFYING score. Exact: an
       unseen doc contains none of the visited terms, so its score is
       bounded by that suffix — and clause gating only ever LOWERS a
-      doc's score below the term-sum bound, never raises it.
+      doc's score below the term-sum bound, never raises it. MaxScore
+      prunes by TERM, which vectorizes cleanly; classic WAND pivots
+      doc-at-a-time (per-row Python), and its interval form degrades
+      when a sparse rare block spans most of the doc range. Hot+rare:
+      the rare term seeds few candidates, θ jumps above the hot term's
+      ub, and the hot list's untouched blocks are never decoded.
 
     ``allowed``: SORTED array of doc ids permitted into the top-k (ES
     filter context resolved against doc_stats; scores stay
@@ -336,61 +366,13 @@ def _wand_bool_topk(
     scoring; unfiltered block maxes still upper-bound every allowed
     doc's score, so both strategies stay exact.
 
-    ``block_cache``: batch callers (the indexed _msearch) pass a shared
-    dict so a block decoded for one query is reused by every other
-    query touching the term in this salt group — keys are (term_id,
-    row position in the term's doc-ordered frame), identical across
-    queries because the frame is the same term group.
+    ``block_cache``: the shared per-group cache of :class:`_Postings`.
     """
-    empty = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+    empty = (_NO_IDS, _NO_SCORES)
     if allowed is not None and allowed.size == 0:
         return empty
-    frames: dict[int, pd.DataFrame] = {
-        int(t): g.sort_values("first_doc_id").reset_index(drop=True)
-        for t, g in by_term.items()
-    }
-    present = set(frames)
-    if block_cache is None:
-        block_cache = {}
-
-    def blocks_of(tid: int, idx: np.ndarray):
-        outs = []
-        g = frames[tid]
-        for bi in idx:
-            key = (tid, int(bi))
-            if key not in block_cache:
-                row = g.iloc[int(bi)]
-                block_cache[key] = codec.decode_blocks_bulk(
-                    np.array([row["n_docs"]]),
-                    np.array([row["first_doc_id"]]),
-                    [row["doc_gaps"]], [row["tf_bytes"]], [row["dl_bytes"]],
-                )
-            outs.append(block_cache[key])
-        if not outs:
-            z = np.empty(0, dtype=np.int64)
-            return z, z, z
-        return tuple(np.concatenate(parts) for parts in zip(*outs))
-
-    def contrib(tid: int, cand_ids: np.ndarray) -> np.ndarray:
-        """idf·tf_norm of ``tid`` at SORTED cand_ids (0 where absent),
-        decoding only blocks whose span contains a candidate."""
-        g = frames[tid]
-        firsts = g["first_doc_id"].to_numpy(dtype=np.int64)
-        lasts = g["last_doc_id"].to_numpy(dtype=np.int64)
-        lo = np.searchsorted(cand_ids, firsts, side="left")
-        hi = np.searchsorted(cand_ids, lasts, side="right")
-        out = np.zeros(cand_ids.size, dtype=np.float64)
-        touched = np.flatnonzero(hi > lo)
-        if touched.size == 0:
-            return out
-        ids_t, tfs_t, dls_t = blocks_of(tid, touched)
-        pos = np.searchsorted(ids_t, cand_ids)
-        pos_c = np.minimum(pos, ids_t.size - 1)
-        found = ids_t[pos_c] == cand_ids
-        if found.any():
-            out[found] = idfs[tid] * _tf_norm(
-                tfs_t[pos_c[found]], dls_t[pos_c[found]], avgdl, k1, b)
-        return out
+    post = _Postings(by_term, idfs, avgdl, k1, b, block_cache)
+    present = set(post.frames)
 
     # restrict clauses to terms with postings in THIS doc range
     live_clauses: list[tuple[bool, bool, list[int]]] = []
@@ -420,7 +402,7 @@ def _wand_bool_topk(
 
     def score_candidates(cand: np.ndarray):
         """-> (qualifies, score) over SORTED candidate ids."""
-        contribs = {t: contrib(t, cand) for t in union_tids}
+        contribs = {t: post.contrib(t, cand) for t in union_tids}
         score = np.zeros(cand.size, dtype=np.float64)
         qual = np.ones(cand.size, dtype=bool)
         n_matched = np.zeros(cand.size, dtype=np.int64)
@@ -453,19 +435,14 @@ def _wand_bool_topk(
         # ---- anchor strategy
         def clause_cost(c):
             _, conj, tl = c
-            sizes = [int(frames[t]["n_docs"].sum()) for t in tl]
+            sizes = [post.n_postings(t) for t in tl]
             return min(sizes) if conj else sum(sizes)
 
         _, aconj, atids = min(must_cl, key=clause_cost)
-        if aconj:
-            seeds = [min(atids,
-                         key=lambda t: int(frames[t]["n_docs"].sum()))]
-        else:
-            seeds = list(atids)
-        cand = np.unique(np.concatenate(
-            [blocks_of(t, np.arange(len(frames[t])))[0] for t in seeds]))
+        seeds = [min(atids, key=post.n_postings)] if aconj else list(atids)
+        cand = np.unique(np.concatenate([post.decode(t)[0] for t in seeds]))
         if allowed is not None:
-            cand = cand[_in_sorted(cand, allowed)]
+            cand = cand[_find(allowed, cand)[0]]
         if cand.size == 0:
             return empty
         qual, score = score_candidates(cand)
@@ -474,26 +451,22 @@ def _wand_bool_topk(
         return cand[order], score[order]
 
     # ---- MaxScore strategy (should-only, msm >= 1)
-    ubs = {t: idfs[t] * float(frames[t]["block_max_tf_norm"].max())
+    ubs = {t: idfs[t] * float(post.frames[t]["block_max_tf_norm"].max())
            for t in union_tids}
     order_t = sorted(union_tids, key=lambda t: (-ubs[t], t))
+    # tail[i] = Σ_{j>=i} ub_j — the best score any doc lacking every term
+    # in order_t[:i] can reach
     tail = np.cumsum([ubs[t] for t in order_t][::-1])[::-1]
-    best_ids = np.empty(0, dtype=np.int64)
-    best_scores = np.empty(0, dtype=np.float64)
+    best_ids, best_scores = empty
     kth = -math.inf
-    seen = np.empty(0, dtype=np.int64)
+    seen = _NO_IDS  # sorted, already-scored doc ids
     for i, tid in enumerate(order_t):
         if best_ids.size >= k and tail[i] < kth:
-            break
-        ids_t = blocks_of(tid, np.arange(len(frames[tid])))[0]
-        if seen.size:
-            pos = np.searchsorted(seen, ids_t)
-            pos_c = np.minimum(pos, seen.size - 1)
-            new = seen[pos_c] != ids_t
-        else:
-            new = np.ones(ids_t.size, dtype=bool)
+            break  # unseen docs lack every visited term: bound < θ
+        ids_t = post.decode(tid)[0]
+        new = ~_find(seen, ids_t)[0]
         if allowed is not None:  # filtered retrieval restricts seeds
-            new &= _in_sorted(ids_t, allowed)
+            new &= _find(allowed, ids_t)[0]
         cand = ids_t[new]  # doc-ordered within a term -> sorted
         if cand.size:
             qual, score = score_candidates(cand)
@@ -509,285 +482,59 @@ def _wand_bool_topk(
     return best_ids, best_scores
 
 
-def search_topk(
-    spark: SparkSession,
-    index_dir: str,
-    query_text: str,
-    k: int,
-    operator: str = "and",
-) -> DataFrame:
-    """Top-k ``(doc_id, score)`` from the compressed index at ``index_dir``.
-
-    ``operator="and"`` — the reference's conjunctive match (ES ``match``
-    + ``operator: and``); ``operator="or"`` — the ES ``match`` default:
-    disjunctive BM25 with block-max WAND pruning (:func:`_wand_or_topk`),
-    rank-identical to the naive path and the numpy oracle (tested)."""
-    paths = IndexPaths(index_dir)
-    with open(paths.meta) as f:
-        meta = json.load(f)
-    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
-    k1, b, n_buckets = float(meta["k1"]), float(meta["b"]), int(meta["n_buckets"])
-
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    q_terms = sorted(set(tokenize_text(query_text)))
-    if not q_terms or n_docs == 0:
-        return empty
-
-    # term_id = xxhash64(term) computed CLIENT-side (bit-identity with
-    # Spark's xxhash64 is tested) — no cluster round-trip just to learn
-    # which term buckets to prune. At most one Spark job fetches df
-    # stats (pruned to the terms' tb directories + term_id row groups);
-    # terms already seen against this built index come from _DF_CACHE,
-    # so a warm repeated query runs zero stats jobs.
-    tid_of = {t: term_id_py(t) for t in q_terms}
-    q_term_ids = list(tid_of.values())
-    df_of_tid = _df_stats(spark, paths, meta, q_term_ids, n_buckets)
-    if operator == "and":
-        if any(tid not in df_of_tid for tid in q_term_ids):
-            return empty  # conjunctive AND: a missing term kills the query
-    else:
-        q_terms = [t for t in q_terms if tid_of[t] in df_of_tid]
-        if not q_terms:
-            return empty  # OR: only a fully-absent query is empty
-        q_term_ids = [tid_of[t] for t in q_terms]
-    dfs = {t: df_of_tid[tid_of[t]] for t in q_terms}
-    idfs = {
-        tid_of[t]: math.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
-        for t in q_terms
-    }
-    terms_by_rarity = [
-        tid_of[t] for t in sorted(q_terms, key=lambda t: (dfs[t], t))
-    ]
-
-    # tb pruning from the SURVIVING terms only (post df filter) — on the
-    # OR path absent terms no longer widen the partition-filter set
-    buckets = sorted({tid % n_buckets for tid in q_term_ids})
-    blocks = (
-        spark.read.parquet(paths.postings)
-        .where(F.col("tb").isin(buckets) & F.col("term_id").isin(q_term_ids))
-        .select("term_id", "salt", "block_id", "n_docs", "first_doc_id",
-                "last_doc_id", "doc_gaps", "tf_bytes", "dl_bytes",
-                "block_max_tf_norm")
-    )
-
-    n_q = len(q_terms)
-    disjunctive = operator == "or"
-
-    def score_salt(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({
-            "doc_id": pd.Series([], dtype="int64"),
-            "score": pd.Series([], dtype="float64"),
-        })
-        by_term = {t: g for t, g in pdf.groupby("term_id")}
-        if disjunctive and len(by_term) > 1:
-            ids, scores = _wand_or_topk(by_term, idfs, k, avgdl, k1, b)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-        if not disjunctive and len(by_term) < n_q:
-            return out_empty  # some term has no postings in this doc range
-
-        if len(by_term) == 1:
-            t = next(iter(by_term))
-            ids, scores = _single_term_topk(by_term[t], idfs[t], k, avgdl, k1, b)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        # rarest term defines the candidate set
-        t0 = terms_by_rarity[0]
-        cand_ids, cand_tfs, cand_dls = _decode_term(by_term[t0])
-        scores = idfs[t0] * _tf_norm(cand_tfs, cand_dls, avgdl, k1, b)
-
-        for t in terms_by_rarity[1:]:
-            if cand_ids.size == 0:
-                return out_empty
-            g = by_term[t].sort_values("first_doc_id")
-            firsts = g["first_doc_id"].to_numpy(dtype=np.int64)
-            lasts = g["last_doc_id"].to_numpy(dtype=np.int64)
-            # block skipping: decode only blocks whose range holds candidates
-            lo = np.searchsorted(cand_ids, firsts, side="left")
-            hi = np.searchsorted(cand_ids, lasts, side="right")
-            touched = np.flatnonzero(hi > lo)
-            if touched.size == 0:
-                return out_empty
-            sub = g.iloc[touched]
-            ids_t, tfs_t, _ = _decode_term(sub)
-            pos = np.searchsorted(ids_t, cand_ids)
-            pos_c = np.minimum(pos, ids_t.size - 1)
-            found = ids_t[pos_c] == cand_ids
-            if not found.any():
-                return out_empty
-            scores = scores[found] + idfs[t] * _tf_norm(
-                tfs_t[pos_c[found]], cand_dls[found], avgdl, k1, b
-            )
-            cand_ids, cand_dls = cand_ids[found], cand_dls[found]
-
-        order = np.lexsort((cand_ids, -scores))[:k]
-        return pd.DataFrame({"doc_id": cand_ids[order], "score": scores[order]})
-
-    local = blocks.groupBy("salt").applyInPandas(
-        score_salt, schema="doc_id long, score double"
-    )
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def search_topk_filtered(
-    spark: SparkSession,
-    index_dir: str,
-    query_text: str,
-    k: int,
-    doc_filter: str,
-    operator: str = "and",
-) -> DataFrame:
-    """ES bool-query parity: full-text match + metadata filter in ONE
-    top-k (the reference's actual query shape — ``match`` on the text
-    plus ts-range/term filters, src/jobsautoreport/query.py:28-99).
-
-    ES semantics are preserved exactly: the filter restricts WHICH docs
-    may enter the top-k, but scoring statistics (idf, avgdl, n_docs)
-    stay corpus-global — filter context does not affect scores. The
-    filter is a SQL predicate over ``doc_stats`` columns (``ts``,
-    ``role``, ``conv_id``, ``turn_idx``, ``dl``); Catalyst pushes it to
-    the doc_stats parquet scan, the allowed ids are co-grouped with the
-    posting blocks per doc-range salt (both sides carry the same salt,
-    so the cogroup is a co-partitioned merge), and the scoring kernels
-    intersect candidates against the allowed set. Block-max/MaxScore
-    pruning stays exact: an unfiltered bound upper-bounds every allowed
-    doc's score.
-    """
-    paths = IndexPaths(index_dir)
-    with open(paths.meta) as f:
-        meta = json.load(f)
-    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
-    k1, b = float(meta["k1"]), float(meta["b"])
-    n_buckets, n_ranges = int(meta["n_buckets"]), int(meta["n_ranges"])
-
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    q_terms = sorted(set(tokenize_text(query_text)))
-    if not q_terms or n_docs == 0:
-        return empty
-    tid_of = {t: term_id_py(t) for t in q_terms}
-    q_term_ids = list(tid_of.values())
-    df_of_tid = _df_stats(spark, paths, meta, q_term_ids, n_buckets)
-    if operator == "and":
-        if any(tid not in df_of_tid for tid in q_term_ids):
-            return empty
-    else:
-        q_terms = [t for t in q_terms if tid_of[t] in df_of_tid]
-        if not q_terms:
-            return empty
-        q_term_ids = [tid_of[t] for t in q_terms]
-    idfs = {
-        tid_of[t]: math.log(
-            1.0 + (n_docs - df_of_tid[tid_of[t]] + 0.5)
-            / (df_of_tid[tid_of[t]] + 0.5))
-        for t in q_terms
-    }
-    terms_by_rarity = [
-        tid_of[t]
-        for t in sorted(q_terms, key=lambda t: (df_of_tid[tid_of[t]], t))
-    ]
-
-    buckets = sorted({tid % n_buckets for tid in q_term_ids})
-    blocks = (
-        spark.read.parquet(paths.postings)
-        .where(F.col("tb").isin(buckets) & F.col("term_id").isin(q_term_ids))
-        .select("term_id", "salt", "block_id", "n_docs", "first_doc_id",
-                "last_doc_id", "doc_gaps", "tf_bytes", "dl_bytes",
-                "block_max_tf_norm")
-    )
-    allowed_df = (
-        spark.read.parquet(paths.doc_stats)
-        .where(doc_filter)
-        .select("doc_id", salt_expr(F.col("doc_id"), n_ranges).alias("salt"))
-    )
-
-    n_q = len(q_terms)
-    disjunctive = operator == "or"
-
-    def score_salt(blocks_pdf: pd.DataFrame,
-                   allowed_pdf: pd.DataFrame) -> pd.DataFrame:
-        allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-        return _score_match_group(blocks_pdf, idfs, k, avgdl, k1, b, n_q,
-                                  disjunctive, terms_by_rarity,
-                                  allowed=allowed)
-
-    local = blocks.groupBy("salt").cogroup(
-        allowed_df.groupBy("salt")
-    ).applyInPandas(score_salt, schema="doc_id long, score double")
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
 def _score_match_group(
-    blocks_pdf: pd.DataFrame,
-    idfs: dict[int, float],
+    by_term: dict,
+    match: _Match,
     k: int,
     avgdl: float,
     k1: float,
     b: float,
-    n_q: int,
-    disjunctive: bool,
-    terms_by_rarity: list[int],
     allowed: np.ndarray | None = None,
-) -> pd.DataFrame:
-    """Per-(segment, salt) scoring kernel shared by the filtered,
-    multi-segment and filtered-multi-segment paths: one salt group's
-    posting blocks for all query terms -> local top-k (doc_id, score).
+    block_cache: dict | None = None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The match kernel: one (segment, salt) group's posting blocks per
+    term -> local top-k ``(doc_ids, scores)`` of ``match``.
 
-    ``allowed``: SORTED array of doc ids permitted into the top-k
-    (ES filter context — scores already carry corpus-global stats), or
-    None for unfiltered. Conjunctive: rarest-first intersection with
-    block skipping (only blocks whose [first,last] range can hold a
-    surviving candidate are decoded); disjunctive: MaxScore
-    (:func:`_wand_or_topk`); single-term: block-max pruned scan."""
-    out_empty = pd.DataFrame({
-        "doc_id": pd.Series([], dtype="int64"),
-        "score": pd.Series([], dtype="float64"),
-    })
-    if not len(blocks_pdf):
-        return out_empty
-    if allowed is not None and allowed.size == 0:
-        return out_empty
-    by_term = {t: g for t, g in blocks_pdf.groupby("term_id")}
-    if disjunctive and len(by_term) > 1:
-        ids, scores = _wand_or_topk(by_term, idfs, k, avgdl, k1, b,
-                                    allowed=allowed)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
-    if not disjunctive and len(by_term) < n_q:
-        return out_empty
-    if len(by_term) == 1:
-        t = next(iter(by_term))
-        ids, scores = _single_term_topk(by_term[t], idfs[t], k,
-                                        avgdl, k1, b, allowed=allowed)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
-    t0 = terms_by_rarity[0]
-    cand_ids, cand_tfs, cand_dls = _decode_term(by_term[t0])
+    One live term runs the block-max pruned scan
+    (:func:`_single_term_topk`); a disjunctive match is the MaxScore arm
+    of :func:`_wand_bool_topk` with one should clause; a conjunctive one
+    intersects rarest-first, decoding only the blocks whose span can
+    hold a surviving candidate. ``allowed``: SORTED doc ids permitted
+    into the top-k (ES filter context — scores keep corpus-global
+    stats), or None. ``block_cache``: shared across a batch's queries
+    (:class:`_Postings`)."""
+    tids = [t for t in match.rarity if t in by_term]
+    if (not tids or (allowed is not None and allowed.size == 0)
+            or (not match.disjunctive and len(tids) < len(match.rarity))):
+        return _NO_IDS, _NO_SCORES  # a conjunctive term absent here
+    if len(tids) == 1:
+        return _single_term_topk(by_term[tids[0]], match.idfs[tids[0]], k,
+                                 avgdl, k1, b, allowed=allowed)
+    if match.disjunctive:
+        return _wand_bool_topk(
+            {t: by_term[t] for t in tids}, match.idfs,
+            [(False, False, np.array(tids, dtype=np.int64))], 1, k,
+            avgdl, k1, b, allowed=allowed, block_cache=block_cache)
+    post = _Postings({t: by_term[t] for t in tids}, match.idfs, avgdl,
+                     k1, b, block_cache)
+    ids, tfs, dls = post.decode(tids[0])
     if allowed is not None:
-        keep = _in_sorted(cand_ids, allowed)
-        cand_ids, cand_tfs, cand_dls = (
-            cand_ids[keep], cand_tfs[keep], cand_dls[keep])
-    scores = idfs[t0] * _tf_norm(cand_tfs, cand_dls, avgdl, k1, b)
-    for t in terms_by_rarity[1:]:
-        if cand_ids.size == 0:
-            return out_empty
-        g = by_term[t].sort_values("first_doc_id")
-        firsts = g["first_doc_id"].to_numpy(dtype=np.int64)
-        lasts = g["last_doc_id"].to_numpy(dtype=np.int64)
-        # block skipping: decode only blocks holding candidates
-        lo = np.searchsorted(cand_ids, firsts, side="left")
-        hi = np.searchsorted(cand_ids, lasts, side="right")
-        touched = np.flatnonzero(hi > lo)
-        if touched.size == 0:
-            return out_empty
-        ids_t, tfs_t, _ = _decode_term(g.iloc[touched])
-        pos = np.searchsorted(ids_t, cand_ids)
-        pos_c = np.minimum(pos, ids_t.size - 1)
-        found = ids_t[pos_c] == cand_ids
-        if not found.any():
-            return out_empty
-        scores = scores[found] + idfs[t] * _tf_norm(
-            tfs_t[pos_c[found]], cand_dls[found], avgdl, k1, b)
-        cand_ids, cand_dls = cand_ids[found], cand_dls[found]
-    order = np.lexsort((cand_ids, -scores))[:k]
-    return pd.DataFrame({"doc_id": cand_ids[order],
-                         "score": scores[order]})
+        keep = _find(allowed, ids)[0]
+        ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
+    scores = match.idfs[tids[0]] * _tf_norm(tfs, dls, avgdl, k1, b)
+    for t in tids[1:]:
+        found, s = post.score(t, ids)
+        ids, scores = ids[found], scores[found] + s
+    order = np.lexsort((ids, -scores))[:k]
+    return ids[order], scores[order]
+
+
+def _by_term(pdf: pd.DataFrame) -> dict[int, pd.DataFrame]:
+    return {int(t): g for t, g in pdf.groupby("term_id")}
+
+
+def _sorted_ids(pdf: pd.DataFrame) -> np.ndarray:
+    return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
 
 
 def _segment_blocks(spark: SparkSession, dirs: list[str], metas: list[dict],
@@ -837,6 +584,107 @@ def _segment_allowed(spark: SparkSession, dirs: list[str],
     return allowed
 
 
+def _group_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
+                 avgdl: float, term_ids: list[int], kernel,
+                 doc_filter: str | None = None) -> DataFrame:
+    """``(doc_id, score)`` rows of ``kernel(by_term, allowed)`` run on
+    every (segment, salt) group of the posting blocks of ``term_ids``.
+    ``doc_filter`` (SQL over doc_stats columns) cogroups each group's
+    SORTED allowed doc ids with its blocks — both sides carry the same
+    (seg, salt), so the cogroup is a co-partitioned merge; without a
+    filter ``allowed`` is None."""
+    groups = _segment_blocks(spark, dirs, metas, avgdl,
+                             term_ids).groupBy("seg", "salt")
+
+    def score(pdf: pd.DataFrame, allowed=None) -> pd.DataFrame:
+        ids, scores = kernel(_by_term(pdf), allowed)
+        return pd.DataFrame({"doc_id": ids, "score": scores})
+
+    if doc_filter is None:
+        return groups.applyInPandas(lambda pdf: score(pdf), schema=_HITS)
+    allowed_df = _segment_allowed(spark, dirs, metas, doc_filter)
+    return groups.cogroup(allowed_df.groupBy("seg", "salt")).applyInPandas(
+        lambda pdf, apdf: score(pdf, _sorted_ids(apdf)), schema=_HITS)
+
+
+def _match_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
+                 avgdl: float, match: _Match, k: int,
+                 doc_filter: str | None = None) -> DataFrame:
+    """Per-group local top-k ``(doc_id, score)`` of one planned match —
+    their union holds the global top-k; ``k=_K_ALL`` keeps every
+    match."""
+    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    return _group_frame(
+        spark, dirs, metas, avgdl, match.rarity,
+        lambda by_term, allowed: _score_match_group(
+            by_term, match, k, avgdl, k1, b, allowed),
+        doc_filter)
+
+
+def _match_topk(spark: SparkSession, index_dir: str | list[str],
+                query_text: str, k: int, operator: str,
+                doc_filter: str | None) -> DataFrame:
+    """The one match top-k behind :func:`search_topk`,
+    :func:`search_topk_filtered` and :func:`search_topk_multi`."""
+    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    terms = sorted(set(tokenize_text(query_text)))
+    if not terms or n_docs == 0:
+        return spark.createDataFrame([], _HITS)
+    # term_id = xxhash64(term) computed CLIENT-side (bit-identity with
+    # Spark's xxhash64 is tested) — no cluster round-trip just to learn
+    # which term buckets to prune
+    df_of = _df_stats_multi(spark, dirs, metas,
+                            [term_id_py(t) for t in terms])
+    match = _plan_match(terms, df_of, n_docs, operator == "and")
+    if match is None:
+        return spark.createDataFrame([], _HITS)
+    return (_match_frame(spark, dirs, metas, avgdl, match, k, doc_filter)
+            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
+
+
+def search_topk(
+    spark: SparkSession,
+    index_dir: str,
+    query_text: str,
+    k: int,
+    operator: str = "and",
+) -> DataFrame:
+    """Top-k ``(doc_id, score)`` from the compressed index at ``index_dir``.
+
+    ``operator="and"`` — the reference's conjunctive match (ES ``match``
+    + ``operator: and``); ``operator="or"`` — the ES ``match`` default:
+    disjunctive BM25 with MaxScore pruning (:func:`_wand_bool_topk`),
+    rank-identical to the naive path and the numpy oracle (tested)."""
+    return _match_topk(spark, index_dir, query_text, k, operator, None)
+
+
+def search_topk_filtered(
+    spark: SparkSession,
+    index_dir: str,
+    query_text: str,
+    k: int,
+    doc_filter: str,
+    operator: str = "and",
+) -> DataFrame:
+    """ES bool-query parity: full-text match + metadata filter in ONE
+    top-k (the reference's actual query shape — ``match`` on the text
+    plus ts-range/term filters, src/jobsautoreport/query.py:28-99).
+
+    ES semantics are preserved exactly: the filter restricts WHICH docs
+    may enter the top-k, but scoring statistics (idf, avgdl, n_docs)
+    stay corpus-global — filter context does not affect scores. The
+    filter is a SQL predicate over ``doc_stats`` columns (``ts``,
+    ``role``, ``conv_id``, ``turn_idx``, ``dl``); Catalyst pushes it to
+    the doc_stats parquet scan, the allowed ids are co-grouped with the
+    posting blocks per doc-range salt, and the scoring kernel
+    intersects candidates against the allowed set. Block-max/MaxScore
+    pruning stays exact: an unfiltered bound upper-bounds every allowed
+    doc's score.
+    """
+    return _match_topk(spark, index_dir, query_text, k, operator,
+                       doc_filter)
+
+
 def search_topk_multi(
     spark: SparkSession,
     index_dirs: list[str],
@@ -863,8 +711,8 @@ def search_topk_multi(
     the SEGMENT's avgdl; since the tf-norm denominator scales by at most
     avgdl_seg/avgdl_global, multiplying the stored bound by
     ``max(1, avgdl_global/avgdl_seg)`` upper-bounds the true global
-    value (proof in-line below), so block-max/MaxScore skipping never
-    drops a true top-k doc.
+    value (:func:`_segment_blocks`), so block-max/MaxScore skipping
+    never drops a true top-k doc.
 
     ``doc_filter``: optional SQL predicate over doc_stats columns —
     match + filter fanned out over segments is the reference's actual
@@ -874,86 +722,8 @@ def search_topk_multi(
     corpus-global stats, per-segment doc_stats scan with the predicate
     pushed down, allowed ids cogrouped with blocks per (segment, salt).
     """
-    metas = []
-    for d in index_dirs:
-        with open(IndexPaths(d).meta) as f:
-            metas.append(json.load(f))
-    n_docs = sum(int(m["n_docs"]) for m in metas)
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    if n_docs == 0:
-        return empty
-    avgdl = sum(float(m["avgdl"]) * int(m["n_docs"]) for m in metas) / n_docs
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
-    if any((float(m["k1"]), float(m["b"])) != (k1, b) for m in metas):
-        raise ValueError("segments disagree on BM25 params")
-
-    q_terms = sorted(set(tokenize_text(query_text)))
-    if not q_terms:
-        return empty
-    tid_of = {t: term_id_py(t) for t in q_terms}
-    q_term_ids = list(tid_of.values())
-
-    # global df = sum of per-segment dfs (bucket counts differ per
-    # segment, so prune each segment's stats fetch with its own layout)
-    df_of_tid: dict[int, int] = {}
-    for d, m in zip(index_dirs, metas):
-        buckets = sorted({tid % int(m["n_buckets"]) for tid in q_term_ids})
-        for r in (
-            spark.read.parquet(IndexPaths(d).term_stats)
-            .where(F.col("tb").isin(buckets)
-                   & F.col("term_id").isin(q_term_ids))
-            .select("term_id", "df").collect()
-        ):
-            tid = int(r["term_id"])
-            df_of_tid[tid] = df_of_tid.get(tid, 0) + int(r["df"])
-    if operator == "and":
-        if any(tid not in df_of_tid for tid in q_term_ids):
-            return empty
-    else:
-        q_terms = [t for t in q_terms if tid_of[t] in df_of_tid]
-        if not q_terms:
-            return empty
-        q_term_ids = [tid_of[t] for t in q_terms]
-    idfs = {
-        tid_of[t]: math.log(
-            1.0 + (n_docs - df_of_tid[tid_of[t]] + 0.5)
-            / (df_of_tid[tid_of[t]] + 0.5))
-        for t in q_terms
-    }
-
-    blocks = _segment_blocks(spark, index_dirs, metas, avgdl, q_term_ids)
-
-    n_q = len(q_terms)
-    disjunctive = operator == "or"
-    terms_by_rarity = [
-        tid_of[t]
-        for t in sorted(q_terms, key=lambda t: (df_of_tid[tid_of[t]], t))
-    ]
-
-    if doc_filter is not None:
-        allowed_df = _segment_allowed(spark, index_dirs, metas, doc_filter)
-
-        def score_group_f(blocks_pdf: pd.DataFrame,
-                          allowed_pdf: pd.DataFrame) -> pd.DataFrame:
-            allowed = np.sort(
-                allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-            return _score_match_group(blocks_pdf, idfs, k, avgdl, k1, b,
-                                      n_q, disjunctive, terms_by_rarity,
-                                      allowed=allowed)
-
-        local = blocks.groupBy("seg", "salt").cogroup(
-            allowed_df.groupBy("seg", "salt")
-        ).applyInPandas(score_group_f, schema="doc_id long, score double")
-        return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_match_group(pdf, idfs, k, avgdl, k1, b, n_q,
-                                  disjunctive, terms_by_rarity)
-
-    local = blocks.groupBy("seg", "salt").applyInPandas(
-        score_group, schema="doc_id long, score double"
-    )
-    return local.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _match_topk(spark, list(index_dirs), query_text, k, operator,
+                       doc_filter)
 
 
 def search_topk_many(
@@ -964,203 +734,96 @@ def search_topk_many(
     """Batch top-k for a whole query set in ONE distributed pass.
 
     ``queries``: ``[{"query_id": str, "query_text": str, "k": int,
-    "operator": "and"|"or", "doc_filter": str}, ...]`` (operator
-    optional, default "and"; "or" queries run the MaxScore kernel per
-    salt group; ``doc_filter`` optional — ES bool filter context per
-    query, same semantics as :func:`search_topk_filtered`; distinct
-    filters each get ONE pushed-down doc_stats scan shared by every
-    query using them, and the allowed ids cogroup with the blocks per
-    salt). Returns ``(query_id, doc_id, score)`` — per query the same
-    rows (and tie order) :func:`search_topk` /
-    :func:`search_topk_filtered` return one at a time (tested equal).
+    "operator": "and"|"or", "doc_filter": str}, ...]`` (query ids
+    unique; operator optional, default "and"; ``doc_filter`` optional —
+    ES bool filter context per query, same semantics as
+    :func:`search_topk_filtered`; distinct filters each get ONE
+    pushed-down doc_stats scan shared by every query using them, and
+    the allowed ids cogroup with the blocks per salt). Returns
+    ``(query_id, doc_id, score)`` — per query the same rows (and tie
+    order) :func:`search_topk` / :func:`search_topk_filtered` return one
+    at a time (tested equal).
 
     Per-query execution pays ~2 Spark jobs of fixed overhead; a batch
     amortizes that to 2 jobs TOTAL: one stats fetch for the union of all
     query terms, one scoring pass over the union of matching posting
-    blocks. Inside a salt group every term is bulk-decoded at most once
-    (cached) no matter how many queries reference it; queries then run
-    numpy searchsorted intersections over the shared decoded arrays.
+    blocks. Each query runs the same planner and kernel as
+    :func:`search_topk`; inside a group they share one block-decode
+    cache, so a block is decoded at most once no matter how many
+    queries reference it.
     """
-    paths = IndexPaths(index_dir)
-    with open(paths.meta) as f:
-        meta = json.load(f)
-    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
-    k1, b, n_buckets = float(meta["k1"]), float(meta["b"]), int(meta["n_buckets"])
-
-    empty = spark.createDataFrame([], "query_id string, doc_id long, score double")
+    k_of: dict[str, int] = {}
+    for q in queries:
+        if q["query_id"] in k_of:
+            raise ValueError(f"duplicate query_id {q['query_id']!r}")
+        k_of[q["query_id"]] = int(q["k"])
+    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    schema = "query_id string, doc_id long, score double"
+    empty = spark.createDataFrame([], schema)
     if n_docs == 0 or not queries:
         return empty
 
-    terms_of = {
-        q["query_id"]: sorted(set(tokenize_text(q["query_text"])))
-        for q in queries
-    }
-    k_of = {q["query_id"]: int(q["k"]) for q in queries}
-    tid_of = {t: term_id_py(t)
-              for ts in terms_of.values() for t in ts}
-    union_tids = sorted(set(tid_of.values()))
+    terms_of = {q["query_id"]: sorted(set(tokenize_text(q["query_text"])))
+                for q in queries}
+    union_tids = sorted({term_id_py(t)
+                         for ts in terms_of.values() for t in ts})
     if not union_tids:
         return empty
-    df_of_tid = _df_stats(spark, paths, meta, union_tids, n_buckets)
+    df_of = _df_stats_multi(spark, dirs, metas, union_tids)
 
-    op_of = {q["query_id"]: q.get("operator", "and") for q in queries}
     # distinct filter strings -> small int fid; queries share scans
-    flt_of = {q["query_id"]: q.get("doc_filter") for q in queries}
-    fid_of_str: dict[str, int] = {}
-    for f_ in flt_of.values():
-        if f_ is not None and f_ not in fid_of_str:
-            fid_of_str[f_] = len(fid_of_str)
-
-    # per-query plan; conjunctive AND drops queries with any missing
-    # term, disjunctive OR just drops the missing terms
-    plans = []  # (query_id, [tid by rarity], {tid: idf}, k, disj, fid)
-    needed_tids: set[int] = set()
-    for qid, ts in terms_of.items():
-        if op_of[qid] == "or":
-            ts = [t for t in ts if tid_of[t] in df_of_tid]
-            terms_of[qid] = ts
-        tids = [tid_of[t] for t in ts]
-        if not tids or any(tid not in df_of_tid for tid in tids):
+    fid_of: dict[str, int] = {}
+    plans = []  # (query_id, _Match, k, fid or None)
+    for q in queries:
+        qid = q["query_id"]
+        match = _plan_match(terms_of[qid], df_of, n_docs,
+                            q.get("operator", "and") == "and")
+        if match is None:
             continue
-        idfs = {
-            tid_of[t]: math.log(
-                1.0 + (n_docs - df_of_tid[tid_of[t]] + 0.5)
-                / (df_of_tid[tid_of[t]] + 0.5))
-            for t in ts
-        }
-        order = [tid_of[t]
-                 for t in sorted(ts, key=lambda t: (df_of_tid[tid_of[t]], t))]
-        fid = (fid_of_str[flt_of[qid]]
-               if flt_of[qid] is not None else None)
-        plans.append((qid, order, idfs, k_of[qid], op_of[qid] == "or", fid))
-        needed_tids.update(order)
+        flt = q.get("doc_filter")
+        fid = None if flt is None else fid_of.setdefault(flt, len(fid_of))
+        plans.append((qid, match, k_of[qid], fid))
     if not plans:
         return empty
 
-    buckets = sorted({tid % n_buckets for tid in needed_tids})
-    blocks = (
-        spark.read.parquet(paths.postings)
-        .where(F.col("tb").isin(buckets)
-               & F.col("term_id").isin(sorted(needed_tids)))
-        .select("term_id", "salt", "block_id", "n_docs", "first_doc_id",
-                "last_doc_id", "doc_gaps", "tf_bytes", "dl_bytes",
-                "block_max_tf_norm")
-    )
+    groups = _segment_blocks(
+        spark, dirs, metas, avgdl,
+        sorted({t for _, m, _, _ in plans for t in m.rarity}),
+    ).groupBy("seg", "salt")
 
-    def score_salt(pdf: pd.DataFrame,
-                   allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        by_term = {t: g for t, g in pdf.groupby("term_id")}
-        cache: dict[int, tuple] = {}
-        # shared across this group's OR queries; stores RAW block
-        # decodes, so sharing stays correct across per-query filters
-        or_block_cache: dict = {}
-        fid_arrays: dict[int, np.ndarray] = {}
-        if allowed_pdf is not None and len(allowed_pdf):
-            for f_, g in allowed_pdf.groupby("fid"):
-                fid_arrays[int(f_)] = np.sort(
-                    g["doc_id"].to_numpy(dtype=np.int64))
-
-        def decoded(tid: int):
-            if tid not in cache:
-                cache[tid] = _decode_term(by_term[tid])
-            return cache[tid]
-
-        out_q, out_i, out_s = [], [], []
-        for qid, order, idfs, k, disjunctive, fid in plans:
-            allowed = None
-            if fid is not None:
-                allowed = fid_arrays.get(
-                    fid, np.empty(0, dtype=np.int64))
-                if allowed.size == 0:
-                    continue  # nothing allowed in this doc range
-            if disjunctive:
-                present = [t for t in order if t in by_term]
-                if not present:
-                    continue
-                if len(present) > 1:
-                    ids, scores = _wand_or_topk(
-                        {t: by_term[t] for t in present}, idfs, k,
-                        avgdl, k1, b, block_cache=or_block_cache,
-                        allowed=allowed)
-                else:
-                    ids, scores = _single_term_topk(
-                        by_term[present[0]], idfs[present[0]], k,
-                        avgdl, k1, b, allowed=allowed)
-                if ids.size:
-                    out_q.extend([qid] * ids.size)
-                    out_i.append(ids)
-                    out_s.append(scores)
-                continue
-            if any(t not in by_term for t in order):
-                continue  # some term absent from this doc range
-            t0 = order[0]
-            cand_ids, cand_tfs, cand_dls = decoded(t0)
-            if allowed is not None:
-                keep = _in_sorted(cand_ids, allowed)
-                cand_ids, cand_tfs, cand_dls = (
-                    cand_ids[keep], cand_tfs[keep], cand_dls[keep])
-                if cand_ids.size == 0:
-                    continue
-            scores = idfs[t0] * _tf_norm(cand_tfs, cand_dls, avgdl, k1, b)
-            dead = False
-            for t in order[1:]:
-                if cand_ids.size == 0:
-                    dead = True
-                    break
-                ids_t, tfs_t, _ = decoded(t)
-                pos = np.searchsorted(ids_t, cand_ids)
-                pos_c = np.minimum(pos, ids_t.size - 1)
-                found = ids_t[pos_c] == cand_ids
-                if not found.any():
-                    dead = True
-                    break
-                scores = scores[found] + idfs[t] * _tf_norm(
-                    tfs_t[pos_c[found]], cand_dls[found], avgdl, k1, b)
-                cand_ids, cand_dls = cand_ids[found], cand_dls[found]
-            if dead or cand_ids.size == 0:
-                continue
-            sel = np.lexsort((cand_ids, -scores))[:k]
-            out_q.extend([qid] * sel.size)
-            out_i.append(cand_ids[sel])
-            out_s.append(scores[sel])
-        if not out_q:
+    def score_group(pdf: pd.DataFrame,
+                    allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
+        by_term = _by_term(pdf)
+        allowed_of = ({} if allowed_pdf is None else
+                      {int(f): _sorted_ids(g)
+                       for f, g in allowed_pdf.groupby("fid")})
+        cache: dict = {}  # one block-decode cache for the group's queries
+        outs = []
+        for qid, match, k, fid in plans:
+            allowed = None if fid is None else allowed_of.get(fid, _NO_IDS)
+            ids, scores = _score_match_group(by_term, match, k, avgdl, k1,
+                                             b, allowed, cache)
+            if ids.size:
+                outs.append(pd.DataFrame(
+                    {"query_id": qid, "doc_id": ids, "score": scores}))
+        if not outs:
             return pd.DataFrame({
                 "query_id": pd.Series([], dtype="object"),
                 "doc_id": pd.Series([], dtype="int64"),
                 "score": pd.Series([], dtype="float64"),
             })
-        return pd.DataFrame({
-            "query_id": out_q,
-            "doc_id": np.concatenate(out_i),
-            "score": np.concatenate(out_s),
-        })
+        return pd.concat(outs, ignore_index=True)
 
-    if fid_of_str:
-        # ONE pushed-down doc_stats scan per DISTINCT filter, salted to
-        # cogroup with the blocks (same shape as search_topk_filtered)
-        n_ranges = int(meta["n_ranges"])
-        allowed_df = None
-        for fstr, fid in fid_of_str.items():
-            part = (
-                spark.read.parquet(paths.doc_stats)
-                .where(fstr)
-                .select(F.lit(fid).alias("fid"), "doc_id",
-                        salt_expr(F.col("doc_id"), n_ranges).alias("salt"))
-            )
-            allowed_df = (part if allowed_df is None
-                          else allowed_df.unionByName(part))
-
-        local = blocks.groupBy("salt").cogroup(
-            allowed_df.groupBy("salt")
-        ).applyInPandas(
-            score_salt, schema="query_id string, doc_id long, score double")
+    if fid_of:
+        allowed_df = reduce(DataFrame.unionByName, [
+            _segment_allowed(spark, dirs, metas, flt)
+            .withColumn("fid", F.lit(fid)) for flt, fid in fid_of.items()])
+        local = groups.cogroup(allowed_df.groupBy("seg", "salt")) \
+            .applyInPandas(score_group, schema=schema)
     else:
-        def score_salt_plain(pdf: pd.DataFrame) -> pd.DataFrame:
-            return score_salt(pdf, None)
-
-        local = blocks.groupBy("salt").applyInPandas(
-            score_salt_plain,
-            schema="query_id string, doc_id long, score double")
+        local = groups.applyInPandas(lambda pdf: score_group(pdf),
+                                     schema=schema)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     k_dim = spark.createDataFrame(list(k_of.items()), "query_id string, k int")
     return (
@@ -1172,6 +835,7 @@ def search_topk_many(
         # row set — the window filter + join above don't guarantee it
         .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
     )
+
 
 def sloppy_exists_expr(pos_cols: list, seq_keys: list, slop: int):
     """Catalyst predicate: does an assignment of positions to phrase
@@ -1454,63 +1118,29 @@ def search_phrase(
         with_doc_ids,
     )
 
-    paths = IndexPaths(index_dir)
-    with open(paths.meta) as f:
-        meta = json.load(f)
-    n_docs, avgdl = int(meta["n_docs"]), float(meta["avgdl"])
-    k1, b, n_buckets = (float(meta["k1"]), float(meta["b"]),
-                        int(meta["n_buckets"]))
-
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    empty = spark.createDataFrame([], _HITS)
     phrase_terms = tokenize_text(phrase_text)  # ordered, duplicates kept
     if not phrase_terms or n_docs == 0 or k <= 0:
         return empty
-
     q_terms = sorted(set(phrase_terms))
-    tid_of = {t: term_id_py(t) for t in q_terms}
-    q_term_ids = list(tid_of.values())
-    df_of_tid = _df_stats(spark, paths, meta, q_term_ids, n_buckets)
-    if any(tid not in df_of_tid for tid in q_term_ids):
-        return empty  # phrase implies conjunctive
-    idfs = {
-        tid_of[t]: math.log(
-            1.0 + (n_docs - df_of_tid[tid_of[t]] + 0.5)
-            / (df_of_tid[tid_of[t]] + 0.5))
-        for t in q_terms
-    }
-    terms_by_rarity = [
-        tid_of[t]
-        for t in sorted(q_terms, key=lambda t: (df_of_tid[tid_of[t]], t))
-    ]
-
-    buckets = sorted({tid % n_buckets for tid in q_term_ids})
-    blocks = (
-        spark.read.parquet(paths.postings)
-        .where(F.col("tb").isin(buckets) & F.col("term_id").isin(q_term_ids))
-        .select("term_id", "salt", "block_id", "n_docs", "first_doc_id",
-                "last_doc_id", "doc_gaps", "tf_bytes", "dl_bytes",
-                "block_max_tf_norm")
-    )
-    n_q = len(q_terms)
-    k_all = 1 << 62  # no cut — every conjunctive candidate survives
-
-    def score_all(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_match_group(pdf, idfs, k_all, avgdl, k1, b, n_q,
-                                  False, terms_by_rarity)
-
-    cand = blocks.groupBy("salt").applyInPandas(
-        score_all, schema="doc_id long, score double")
+    df_of = _df_stats_multi(spark, dirs, metas,
+                            [term_id_py(t) for t in q_terms])
+    match = _plan_match(q_terms, df_of, n_docs, True)  # phrase => AND
+    if match is None:
+        return empty
+    # no cut — every conjunctive candidate survives to the verify
+    cand = _match_frame(spark, dirs, metas, avgdl, match, _K_ALL)
 
     if docs_df is None:
-        if not meta.get("has_positions"):
+        if not metas[0].get("has_positions"):
             raise ValueError(
                 "search_phrase without docs_df needs an index built with "
                 "BuildConfig(store_positions=True); this index has no "
                 "positions sidecar")
-        tid_seq = [tid_of[t] for t in phrase_terms]
         verified = phrase_verify_from_positions(
-            spark, [index_dir], [meta], cand, q_term_ids, tid_seq,
-            slop=slop)
+            spark, dirs, metas, cand, match.rarity,
+            [term_id_py(t) for t in phrase_terms], slop=slop)
     else:
         if "doc_id" not in docs_df.columns:
             docs_df = with_doc_ids(docs_df)

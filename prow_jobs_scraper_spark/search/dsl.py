@@ -249,6 +249,23 @@ from prow_jobs_scraper_spark.index.build import (
     IndexPaths,
     with_doc_ids,
 )
+from prow_jobs_scraper_spark.search.compressed import (
+    _K_ALL,
+    _by_term,
+    _df_stats_multi,
+    _group_frame,
+    _idf,
+    _load_segments,
+    _match_frame,
+    _plan_match,
+    _segment_blocks,
+    _wand_bool_topk,
+    phrase_verify_from_positions,
+    sloppy_tokens_expr,
+    span_not_exists_expr,
+    span_not_tokens_expr,
+    span_tokens_expr,
+)
 
 
 # --------------------------------------------------------------------------
@@ -3119,18 +3136,12 @@ def _compile_specs(
             # span_near desugar: the Lucene SpanNearQuery window rule
             # (compressed.span_exists_expr) — ordered/unordered at any
             # slop including 0 (unordered slop 0 is NOT adjacency)
-            from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-                span_tokens_expr,
-            )
             matched = span_tokens_expr(toks, tokenize_text(c.text),
                                        c.slop, c.span_in_order)
         elif c.phrase and c.slop > 0:
             # ES sloppy phrase: qualification via the shared nested-
             # exists predicate (compressed.sloppy_exists_expr semantics);
             # scoring stays slop-independent (module docstring)
-            from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-                sloppy_tokens_expr,
-            )
             matched = sloppy_tokens_expr(toks, tokenize_text(c.text),
                                          c.slop)
         elif c.phrase:
@@ -3156,9 +3167,6 @@ def _compile_specs(
             # one include occurrence p with NO exclude occurrence q in
             # [p - pre, p + post] — pure array higher-order functions,
             # one pass over the token array
-            from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-                span_not_tokens_expr,
-            )
             exc_t, pre, post = c.span_not
             matched = matched & span_not_tokens_expr(
                 toks, live[0], exc_t, pre, post)
@@ -6700,6 +6708,10 @@ def _apply_matrix_stats(frame: DataFrame, name: str,
       (``{"missing": {field: value}}``);
     - variance and covariance are SAMPLE (n-1) estimates, correlation
       their ratio (ES RunningStats); n <= 1 renders them NULL;
+    - a CONSTANT field (min == max, detected exactly — the raw-moment
+      difference E[x²]−E[x]² cancels to ulp noise, not 0, for
+      non-integer constants) has variance and covariances 0,
+      skewness/kurtosis 0 and a NULL correlation (0/0);
     - skewness = m3 / m2^1.5 and kurtosis = m4 / m2^2 (Pearson, not
       excess) over POPULATION central moments, computed closed-form
       from raw moments — deterministic and replayable in plain SQL,
@@ -6749,7 +6761,8 @@ def _apply_matrix_stats(frame: DataFrame, name: str,
     aggs = [F.count(F.lit(1)).alias("__n")]
     for f in fields:
         x = vals[f]
-        aggs += [F.avg(x).alias(f"__m1_{f}"),
+        aggs += [(F.min(x) == F.max(x)).alias(f"__const_{f}"),
+                 F.avg(x).alias(f"__m1_{f}"),
                  F.avg(x * x).alias(f"__m2_{f}"),
                  F.avg(x * x * x).alias(f"__m3_{f}"),
                  F.avg(x * x * x * x).alias(f"__m4_{f}")]
@@ -6769,12 +6782,18 @@ def _apply_matrix_stats(frame: DataFrame, name: str,
               - 3 * m1 * m1 * m1 * m1)
         return m1, m2, m3, m4
 
+    def _const(*fs):
+        return reduce(lambda a, b: a | b,
+                      [F.col(f"__const_{f}") for f in fs])
+
     def _cov(fi, fj):
         a, b = (fi, fj) if f"__xy_{fi}_{fj}" in row.columns else (fj, fi)
         exy = F.col(f"__xy_{a}_{b}")
-        # sample covariance: n/(n-1) * (E[xy] - E[x]E[y])
-        return F.when(n > 1, (exy - F.col(f"__m1_{fi}")
-                              * F.col(f"__m1_{fj}")) * n / (n - 1))
+        # sample covariance: n/(n-1) * (E[xy] - E[x]E[y]); exactly 0
+        # against a constant field
+        return F.when(n > 1, F.when(_const(fi, fj), F.lit(0.0)).otherwise(
+            (exy - F.col(f"__m1_{fi}") * F.col(f"__m1_{fj}"))
+            * n / (n - 1)))
 
     pairs = []
     for fi in fields:
@@ -6783,7 +6802,7 @@ def _apply_matrix_stats(frame: DataFrame, name: str,
             cov = _cov(fi, fj)
             var_j = _cov(fj, fj)
             corr = F.when(
-                (n > 1) & (cov.isNotNull()),
+                (n > 1) & ~_const(fi, fj),
                 cov / F.sqrt(_cov(fi, fi) * var_j))
             pairs.append(F.struct(
                 F.lit(fi).alias("field"),
@@ -6791,9 +6810,9 @@ def _apply_matrix_stats(frame: DataFrame, name: str,
                 F.col("__n").alias("doc_count"),
                 F.when(n > 0, m1).alias("mean"),
                 _cov(fi, fi).alias("variance"),
-                F.when(m2 > 0, m3 / F.pow(m2, F.lit(1.5)))
+                F.when(~_const(fi) & (m2 > 0), m3 / F.pow(m2, F.lit(1.5)))
                 .otherwise(F.when(n > 0, F.lit(0.0))).alias("skewness"),
-                F.when(m2 > 0, m4 / (m2 * m2))
+                F.when(~_const(fi) & (m2 > 0), m4 / (m2 * m2))
                 .otherwise(F.when(n > 0, F.lit(0.0))).alias("kurtosis"),
                 cov.alias("covariance"),
                 corr.alias("correlation"),
@@ -7280,9 +7299,6 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
 # indexed executor: per-clause score frames from the compressed index
 # --------------------------------------------------------------------------
 
-_K_ALL = 1 << 62  # no per-salt cut: clause combination needs every match
-
-
 def _term_positions(spark: SparkSession, dirs: list[str],
                     metas: list[dict], tid: int) -> DataFrame:
     """``(doc_id, positions)`` of one term from every segment's
@@ -7311,52 +7327,19 @@ def _clause_frame_indexed(
     or None when the clause is unsatisfiable. Global df = summed
     per-segment dfs and block maxes are bound-corrected by
     ``max(1, avgdl_global/avgdl_seg)`` exactly as
-    :func:`..compressed.search_topk_multi` (proof there); the per-
+    :func:`..compressed._segment_blocks` (proof there); the per-
     (segment, salt) kernel runs with NO top-k cut because clauses
     combine downstream."""
-    from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-        _score_match_group,
-        _segment_blocks,
-    )
-
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
     terms = _clause_terms(c)
     if not terms or n_docs == 0:
         return None
-    tid_of = {t: term_id_py(t) for t in terms}
-    q_term_ids = list(tid_of.values())
-    df_of_tid = _df_stats_multi(spark, dirs, metas, q_term_ids)
-    conj = c.operator == "and" or c.phrase
-    if conj:
-        if any(tid not in df_of_tid for tid in q_term_ids):
-            return None
-        live = terms
-    else:
-        live = [t for t in terms if tid_of[t] in df_of_tid]
-        if not live:
-            return None
-        q_term_ids = [tid_of[t] for t in live]
-    idfs = {
-        # the ES per-clause boost folds into the idf — scores AND the
-        # kernel's block-max bounds are linear in it, so pruning and
-        # scoring stay exact under scaling
-        tid_of[t]: c.boost * math.log(
-            1.0 + (n_docs - df_of_tid[tid_of[t]] + 0.5)
-            / (df_of_tid[tid_of[t]] + 0.5))
-        for t in live
-    }
-    rarity = [tid_of[t]
-              for t in sorted(live, key=lambda t: (df_of_tid[tid_of[t]], t))]
-
-    blocks = _segment_blocks(spark, dirs, metas, avgdl, q_term_ids)
-    n_q, disj = len(live), not conj
-
-    def score_all(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_match_group(pdf, idfs, _K_ALL, avgdl, k1, b, n_q,
-                                  disj, rarity)
-
-    frame = blocks.groupBy("seg", "salt").applyInPandas(
-        score_all, schema="doc_id long, score double")
+    df_of = _df_stats_multi(spark, dirs, metas,
+                            [term_id_py(t) for t in terms])
+    match = _plan_match(terms, df_of, n_docs,
+                        c.operator == "and" or c.phrase, boost=c.boost)
+    if match is None:
+        return None
+    frame = _match_frame(spark, dirs, metas, avgdl, match, _K_ALL)
 
     if c.phrase:
         ordered = tokenize_text(c.text)
@@ -7368,28 +7351,18 @@ def _clause_frame_indexed(
                 raise DslError(
                     "match_phrase needs docs_df for adjacency verify, or "
                     "every index segment built with store_positions=True")
-            from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-                phrase_verify_from_positions,
-            )
-
             verified = phrase_verify_from_positions(
-                spark, dirs, metas, frame,
-                q_term_ids, [tid_of[t] for t in ordered], slop=c.slop,
+                spark, dirs, metas, frame, match.rarity,
+                [term_id_py(t) for t in ordered], slop=c.slop,
                 span_in_order=c.span_in_order)
         else:
             if "doc_id" not in docs_df.columns:
                 docs_df = with_doc_ids(docs_df)
             if c.span_in_order is not None:
-                from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-                    span_tokens_expr,
-                )
                 pred = span_tokens_expr(
                     tokenize_column(F.col(c.field)), ordered, c.slop,
                     c.span_in_order)
             elif c.slop > 0:
-                from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-                    sloppy_tokens_expr,
-                )
                 pred = sloppy_tokens_expr(
                     tokenize_column(F.col(c.field)), ordered, c.slop)
             else:
@@ -7412,7 +7385,7 @@ def _clause_frame_indexed(
         # ascending: element_at 1 is the first occurrence) joined to
         # the candidate frame — index I/O only; with docs_df it's the
         # same semi-join recheck the phrase path uses.
-        tid = tid_of[terms[0]]
+        tid = term_id_py(terms[0])
         if docs_df is None:
             if not all(m.get("has_positions") for m in metas):
                 raise DslError(
@@ -7443,10 +7416,6 @@ def _clause_frame_indexed(
         # positions LEFT-joined (docs without the exclude term exclude
         # nothing) — index I/O only; with docs_df it's the semi-join
         # recheck the phrase path uses.
-        from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-            span_not_exists_expr,
-            span_not_tokens_expr,
-        )
         exc_t, pre, post = c.span_not
         if docs_df is None:
             if not all(m.get("has_positions") for m in metas):
@@ -7457,7 +7426,7 @@ def _clause_frame_indexed(
                 spark, dirs, metas, term_id_py(exc_t)
             ).withColumnRenamed("positions", "exc_positions")
             verified = (
-                _term_positions(spark, dirs, metas, tid_of[terms[0]])
+                _term_positions(spark, dirs, metas, term_id_py(terms[0]))
                 .join(frame.select("doc_id"), "doc_id")
                 .join(exc_pos, "doc_id", "left")
                 .where(span_not_exists_expr(
@@ -7614,12 +7583,6 @@ def _search_dsl_pruned(
     or is cut by the MaxScore suffix bound, see
     :func:`..compressed._wand_bool_topk`); rank+score identical to the
     score-all path (pytest-gated)."""
-    from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-        _segment_allowed,
-        _segment_blocks,
-        _wand_bool_topk,
-    )
-
     k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
     clauses = _bool_clause_tids(spec)
     if clauses is None:
@@ -7634,13 +7597,10 @@ def _search_dsl_pruned(
         return _no_hits(spark)
 
     union_tids = sorted({t for _, _, tl in live_clauses for t in tl})
-    idfs = {t: math.log(1.0 + (n_docs - df_of[t] + 0.5)
-                        / (df_of[t] + 0.5)) for t in union_tids}
-    blocks = _segment_blocks(spark, dirs, metas, avgdl, union_tids)
-
+    idfs = {t: _idf(n_docs, df_of[t]) for t in union_tids}
     cl_arrays = [(m_, c_, np.array(tl, dtype=np.int64))
                  for m_, c_, tl in live_clauses]
-
+    pred = None
     if spec.filter_sql or spec.must_not_sql:
         # metadata predicates -> allowed-id set from doc_stats, pushed
         # to the parquet scan and CO-GROUPED with the posting blocks
@@ -7649,33 +7609,12 @@ def _search_dsl_pruned(
         pred = " AND ".join(
             [f"({p})" for p in spec.filter_sql]
             + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql])
-        allowed_df = _segment_allowed(spark, dirs, metas, pred)
-
-        def topk_cogrp(blocks_pdf: pd.DataFrame,
-                       allowed_pdf: pd.DataFrame) -> pd.DataFrame:
-            allowed = np.sort(
-                allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-            by_term = {t: g for t, g in blocks_pdf.groupby("term_id")}
-            ids, scores = _wand_bool_topk(by_term, idfs, cl_arrays, msm,
-                                          k, avgdl, k1, b,
-                                          allowed=allowed)
-            return pd.DataFrame({"doc_id": ids, "score": scores})
-
-        frame = (
-            blocks.groupBy("seg", "salt")
-            .cogroup(allowed_df.groupBy("seg", "salt"))
-            .applyInPandas(topk_cogrp, schema="doc_id long, score double")
-        )
-        return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    def topk_grp(pdf: pd.DataFrame) -> pd.DataFrame:
-        by_term = {t: g for t, g in pdf.groupby("term_id")}
-        ids, scores = _wand_bool_topk(by_term, idfs, cl_arrays, msm, k,
-                                      avgdl, k1, b)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
-
-    frame = blocks.groupBy("seg", "salt").applyInPandas(
-        topk_grp, schema="doc_id long, score double")
+    frame = _group_frame(
+        spark, dirs, metas, avgdl, union_tids,
+        lambda by_term, allowed: _wand_bool_topk(
+            by_term, idfs, cl_arrays, msm, k, avgdl, k1, b,
+            allowed=allowed),
+        pred)
     return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
@@ -7740,11 +7679,6 @@ def search_dsl_many_indexed(
     same group, and the df stats for all queries come from one cached
     fetch. Everything else (phrase, filters, nesting) falls back to its
     own exact :func:`search_dsl_indexed` call and unions in."""
-    from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-        _segment_blocks,
-        _wand_bool_topk,
-    )
-
     qids, queries_raw, specs, sizes = _parse_msearch(requests)
     out_schema = "query_id string, doc_id long, score double"
     empty = spark.createDataFrame([], out_schema)
@@ -7782,8 +7716,7 @@ def search_dsl_many_indexed(
             if live_clauses is None:
                 continue
             tids_q = sorted({t for _, _, tl in live_clauses for t in tl})
-            idfs_q = {t: math.log(1.0 + (n_docs - df_of[t] + 0.5)
-                                  / (df_of[t] + 0.5)) for t in tids_q}
+            idfs_q = {t: _idf(n_docs, df_of[t]) for t in tids_q}
             compiled.append((
                 qid, msm, sizes[qid],
                 [(m_, c_, np.array(tl, dtype=np.int64))
@@ -7796,8 +7729,7 @@ def search_dsl_many_indexed(
                                      sorted(union_live))
 
             def batch_grp(pdf: pd.DataFrame) -> pd.DataFrame:
-                by_term_all = {int(t): g
-                               for t, g in pdf.groupby("term_id")}
+                by_term_all = _by_term(pdf)
                 cache: dict = {}  # shared across queries in this group
                 outs = []
                 for qid, msm, k, cl_arrays, idfs_q, tids_q in compiled:
@@ -7839,47 +7771,6 @@ def search_dsl_many_indexed(
         return empty
     combined = reduce(DataFrame.unionByName, results)
     return combined.orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-
-
-def _load_segments(index_dir: str | list[str]):
-    """-> (dirs, metas, global n_docs, global avgdl); BM25 params must
-    agree across segments."""
-    dirs = [index_dir] if isinstance(index_dir, str) else list(index_dir)
-    metas = []
-    for d in dirs:
-        with open(IndexPaths(d).meta) as f:
-            metas.append(json.load(f))
-    n_docs = sum(int(m["n_docs"]) for m in metas)
-    avgdl = (sum(float(m["avgdl"]) * int(m["n_docs"]) for m in metas)
-             / n_docs if n_docs else 0.0)
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
-    if any((float(m["k1"]), float(m["b"])) != (k1, b) for m in metas):
-        raise DslError("segments disagree on BM25 params")
-    return dirs, metas, n_docs, avgdl
-
-
-def _df_stats_multi(
-    spark: SparkSession,
-    dirs: list[str],
-    metas: list[dict],
-    term_ids: list[int],
-) -> dict[int, int]:
-    """Global df per term summed across segments, through the
-    driver-side per-index cache (:func:`..compressed._df_stats`) — a
-    warm repeated DSL query (same clauses, same built segments) runs
-    ZERO stats jobs, and multiple clauses referencing overlapping terms
-    fetch each term at most once per segment."""
-    from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-        _df_stats,
-    )
-
-    out: dict[int, int] = {}
-    for d, m in zip(dirs, metas):
-        seg = _df_stats(spark, IndexPaths(d), m, list(term_ids),
-                        int(m["n_buckets"]))
-        for tid, df in seg.items():
-            out[tid] = out.get(tid, 0) + int(df)
-    return out
 
 
 def _resolve_from_index(spark: SparkSession, dirs: list[str],

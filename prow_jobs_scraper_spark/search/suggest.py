@@ -653,10 +653,12 @@ def suggest_completion_indexed(
     from prow_jobs_scraper_spark.index.build import (  # noqa: PLC0415
         IndexPaths,
     )
-    from prow_jobs_scraper_spark.search.dsl import (  # noqa: PLC0415
-        _INDEXED_TEXT_FIELD,
+    from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
         _df_stats_multi,
         _load_segments,
+    )
+    from prow_jobs_scraper_spark.search.dsl import (  # noqa: PLC0415
+        _INDEXED_TEXT_FIELD,
     )
 
     if not isinstance(request, dict) or not request:
@@ -702,10 +704,12 @@ def suggest_terms_indexed(
     from prow_jobs_scraper_spark.index.build import (  # noqa: PLC0415
         IndexPaths,
     )
-    from prow_jobs_scraper_spark.search.dsl import (  # noqa: PLC0415
-        _INDEXED_TEXT_FIELD,
+    from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
         _df_stats_multi,
         _load_segments,
+    )
+    from prow_jobs_scraper_spark.search.dsl import (  # noqa: PLC0415
+        _INDEXED_TEXT_FIELD,
     )
 
     entries = parse_suggest(request)

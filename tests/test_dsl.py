@@ -3427,6 +3427,46 @@ def test_matrix_stats(spark, docs, docs_pdf, dsl_index):
             "aggs": {"a": {"avg": {"field": "turn_idx"}}}}}}).collect()
 
 
+
+def test_matrix_stats_constant_field(spark, transcripts, tmp_path):
+    """A constant non-integer field (3.3 on every doc) has variance 0,
+    covariance 0 against every field, skewness/kurtosis 0 and a NULL
+    correlation — on both executors. The raw-moment difference
+    E[x²]−E[x]² leaves ulp noise (≈−4e−15 here), which used to read as a
+    nonzero variance, a ±1/NaN diagonal correlation and garbage
+    moments."""
+    from pyspark.sql import functions as F
+
+    from prow_jobs_scraper_spark.search.dsl import (
+        dsl_aggregate,
+        dsl_aggregate_indexed,
+    )
+
+    seven = (transcripts.orderBy("conv_id", "turn_idx").limit(7)
+             .withColumn("c", F.lit(3.3)))
+    d = str(tmp_path / "const_idx")
+    build_index(spark, seven, d, BuildConfig(n_ranges=1, n_buckets=1))
+    req = {"aggs": {"m": {"matrix_stats": {"fields": ["c", "turn_idx"]}}}}
+    naive = dsl_aggregate(with_doc_ids(seven), req).toPandas()
+    indexed = dsl_aggregate_indexed(spark, d, req).toPandas()
+    pd.testing.assert_frame_equal(indexed, naive)
+    turns = seven.select("turn_idx").toPandas()["turn_idx"]
+    assert turns.nunique() > 1  # the other field really varies
+    for got in (naive, indexed):
+        assert (got["doc_count"] == 7).all()
+        c = got[got["field"] == "c"]
+        np.testing.assert_allclose(c["mean"], 3.3, rtol=1e-15)
+        assert (c["variance"] == 0.0).all()
+        assert (c["skewness"] == 0.0).all()
+        assert (c["kurtosis"] == 0.0).all()
+        with_c = got[(got["field"] == "c") | (got["other"] == "c")]
+        assert (with_c["covariance"] == 0.0).all()
+        assert with_c["correlation"].isna().all()
+        t = got[(got["field"] == "turn_idx") & (got["other"] == "turn_idx")]
+        np.testing.assert_allclose(t["variance"], turns.var(), rtol=1e-12)
+        np.testing.assert_allclose(t["correlation"], 1.0, rtol=1e-12)
+
+
 def test_top_metrics(spark, docs, docs_pdf, dsl_index):
     """ES `top_metrics` (size 1): the winning document's metric values
     by sort, flattened to `<name>_<field>` columns, bare and inside

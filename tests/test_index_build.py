@@ -157,6 +157,38 @@ def test_resume_skips_committed_buckets_and_is_identical(
     pd.testing.assert_frame_equal(a, b)
 
 
+
+def test_resume_fails_loud_on_corrupt_manifest(spark, transcripts,
+                                               tmp_path):
+    # a committed manifest part file that cannot be read is corruption,
+    # not "nothing committed": resuming must raise naming the manifest
+    # instead of re-encoding every bucket and appending duplicate rows
+    import glob  # noqa: PLC0415
+    import os  # noqa: PLC0415
+    import shutil  # noqa: PLC0415
+
+    d = str(tmp_path / "corrupt")
+    cfg = BuildConfig(n_ranges=2, n_buckets=2, n_chunks=1)
+    build_index(spark, transcripts, d, cfg)
+    parts = sorted(glob.glob(f"{d}/manifest/part-*"))
+    assert parts
+    with open(parts[0], "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(RuntimeError, match="unreadable build manifest"):
+        build_index(spark, transcripts, d, cfg)
+
+    # a kill during the FIRST manifest append leaves the directory with
+    # no committed part file: that still means nothing is committed
+    for p in glob.glob(f"{d}/manifest/*"):
+        if os.path.isdir(p):
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
+    os.makedirs(f"{d}/manifest/_temporary/0")
+    m = build_index(spark, transcripts, d, cfg)
+    assert m["resumed"] is False and m["n_new_buckets"] == 2
+
+
 def test_noop_rerun(spark, transcripts, tmp_path):
     d = str(tmp_path / "noop")
     cfg = BuildConfig(n_ranges=4, n_buckets=4)

@@ -185,8 +185,10 @@ def test_wand_prunes_block_decodes(spark, transcripts, tmp_path,
 
     monkeypatch.setattr(C.codec, "decode_blocks_bulk", counting)
     by_term = {t: g for t, g in blocks.groupby("term_id")}
-    ids, scores = C._wand_or_topk(by_term, idfs, 3, meta["avgdl"],
-                                  meta["k1"], meta["b"])
+    # an OR match is the MaxScore arm: one should clause, msm=1
+    clause = [(False, False, np.array(list(tids.values())))]
+    ids, scores = C._wand_bool_topk(by_term, idfs, clause, 1, 3,
+                                    meta["avgdl"], meta["k1"], meta["b"])
     assert ids.size == 3
     assert calls["n_blocks"] < total_blocks * 0.6, (
         f"WAND pruning ineffective ({calls['n_blocks']}/{total_blocks})")
@@ -505,3 +507,65 @@ def test_df_cache_overflow_refetches_current_query(spark, transcripts,
     assert len(got) > 0, "AND query starved by the cache clear"
     _assert_rank_identical(got, want, "post-overflow")
     C._DF_CACHE.clear()
+
+
+def test_batch_search_rejects_duplicate_query_id(spark, index_dir):
+    # a later query must not silently replace an earlier one under the
+    # same id (the _msearch parser's rule)
+    from prow_jobs_scraper_spark.search.compressed import search_topk_many
+
+    qs = [{"query_id": "q", "query_text": "spark", "k": 3},
+          {"query_id": "q", "query_text": "agent", "k": 5}]
+    with pytest.raises(ValueError, match="duplicate query_id 'q'"):
+        search_topk_many(spark, index_dir, qs)
+
+
+def _segment_copy(index_dir: str, dest: str, **meta_overrides) -> str:
+    """A second segment: a byte copy of ``index_dir`` under a new root,
+    meta.json patched with ``meta_overrides``."""
+    import json as _json
+    import shutil
+
+    shutil.copytree(index_dir, dest)
+    meta_path = f"{dest}/meta.json"
+    with open(meta_path) as f:
+        meta = _json.load(f)
+    meta.update(meta_overrides)
+    with open(meta_path, "w") as f:
+        _json.dump(meta, f)
+    return dest
+
+
+def test_multi_segment_df_fetch_goes_through_cache(spark, index_dir,
+                                                   tmp_path):
+    # one search_topk_multi query leaves a df-cache entry for EVERY
+    # segment's identity, so a warm repeat runs no term_stats job
+    import json as _json
+
+    from prow_jobs_scraper_spark.search import compressed as C
+
+    seg_b = _segment_copy(index_dir, str(tmp_path / "seg_b"))
+    C._DF_CACHE.clear()
+    C.search_topk_multi(spark, [index_dir, seg_b], "spark agent",
+                        5).collect()
+    for d in (index_dir, seg_b):
+        paths = C.IndexPaths(d)
+        with open(paths.meta) as f:
+            meta = _json.load(f)
+        assert C._index_identity(paths, meta) in C._DF_CACHE, d
+    C._DF_CACHE.clear()
+
+
+def test_segments_disagreeing_on_bm25_params_fail_loud(spark, index_dir,
+                                                       tmp_path):
+    # per-segment scores under different k1/b cannot be merged into one
+    # ranking: both multi-segment entry points refuse
+    from prow_jobs_scraper_spark.search.compressed import search_topk_multi
+    from prow_jobs_scraper_spark.search.dsl import search_dsl_indexed
+
+    seg_b = _segment_copy(index_dir, str(tmp_path / "seg_k1"), k1=2.0)
+    with pytest.raises(ValueError, match="segments disagree on BM25 params"):
+        search_topk_multi(spark, [index_dir, seg_b], "spark", 5)
+    with pytest.raises(ValueError, match="segments disagree on BM25 params"):
+        search_dsl_indexed(spark, [index_dir, seg_b],
+                           {"match": {"text": "spark"}}, 5)
