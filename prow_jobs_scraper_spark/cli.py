@@ -194,13 +194,14 @@ def cmd_search(args) -> dict:
             search_phrase,
         )
 
-        if len(dirs) > 1 or flt:
-            raise SystemExit("--phrase supports one index, no --filter")
-        # --corpus: adjacency re-check against the store; without it the
-        # index must carry the positions sidecar (store_positions=True)
+        if flt:
+            raise SystemExit("--phrase takes no --filter")
+        # --corpus: adjacency re-check against the store; without it
+        # every segment must carry the positions sidecar
+        # (store_positions=True)
         corpus = (spark.read.parquet(args.corpus)
                   if args.corpus else None)
-        rows = search_phrase(spark, dirs[0], corpus,
+        rows = search_phrase(spark, dirs, corpus,
                              args.query, args.k).collect()
     else:  # one index or segments base,delta1,delta2,... — one path
         rows = search_topk_multi(spark, dirs, args.query, args.k,
@@ -379,7 +380,7 @@ def main(argv: list[str] | None = None) -> int:
     s.add_argument("--corpus", default=None,
                    help="source corpus parquet for the --phrase adjacency "
                         "re-check; optional when the index was built with "
-                        "--store-positions")
+                        "--store-positions (every segment, for a list)")
     s.add_argument("--suggest", default=None,
                    help="ES suggest request JSON (or @file): the term "
                         "suggester against the index vocabulary, or "

@@ -33,6 +33,19 @@ Query lifecycle (cf. SURVEY.md §3.2 "ours"):
 6. local top-k per group → global ``orderBy(score desc, doc_id).limit(k)``
    (TakeOrderedAndProject).
 
+Every positional check (phrase at any slop, span_near, span_first,
+span_not) lives in one place, as Catalyst higher-order expressions. A
+:class:`_Positional` names the constraint; a position source answers
+``pos(term)`` (0-based positions as ``array<int>``) and ``adjacent``
+(the slop-0 fast path) — :class:`_TokenPositions` over a tokenized text
+column, :class:`_SidecarPositions` over the per-doc ``map<term_id,
+positions>`` pivot of the positions sidecar; :func:`_positional_pred`
+is the one predicate function over either source, used by the naive DSL
+and :func:`..naive.naive_phrase_topk` at slop > 0; and
+:func:`_verify_positions` is the one index-side verifier (sidecar read
++ pivot, or a ``docs_df`` re-check) behind :func:`search_phrase` and
+the DSL's indexed clauses.
+
 Rank-identity: float64 everywhere, same formula and tie order as the
 naive path and the numpy oracle (three-way agreement enforced in tests).
 """
@@ -49,10 +62,17 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from prow_jobs_scraper_spark.functions.tokenize import tokenize_text
+from prow_jobs_scraper_spark.functions.tokenize import (
+    tokenize_column,
+    tokenize_text,
+)
 from prow_jobs_scraper_spark.functions.xxh64 import term_id_py
 from prow_jobs_scraper_spark.index import codec
-from prow_jobs_scraper_spark.index.build import IndexPaths, salt_expr
+from prow_jobs_scraper_spark.index.build import (
+    IndexPaths,
+    salt_expr,
+    with_doc_ids,
+)
 
 # Driver-side df-stats cache: repeated queries against the same BUILT
 # index re-fetch only terms not seen before, and a fully-warm query
@@ -756,6 +776,10 @@ def search_topk_many(
     for q in queries:
         if q["query_id"] in k_of:
             raise ValueError(f"duplicate query_id {q['query_id']!r}")
+        if int(q["k"]) < 0:
+            raise ValueError(
+                f"k must be non-negative, got {q['k']} for query_id "
+                f"{q['query_id']!r}")
         k_of[q["query_id"]] = int(q["k"])
     dirs, metas, n_docs, avgdl = _load_segments(index_dir)
     k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
@@ -837,6 +861,36 @@ def search_topk_many(
     )
 
 
+def _exists_assignment(pos_cols: list, seq_keys: list, accept):
+    """Catalyst predicate: do positions ``p_i ∈ pos_cols[i]`` exist with
+    ``accept([p_0, ..., p_n-1])``, distinct for slots sharing a term?
+
+    ``pos_cols[i]`` = array<int> of slot i's term positions in the doc;
+    ``seq_keys[i]`` identifies the slot's term (equal keys ⇒ the
+    distinctness constraint applies). Built as NESTED ``F.exists``
+    lambdas — whole-stage-codegen, short-circuiting; worst case
+    O(Π|pos_i|) per doc, fine for human-length clauses (n ≤ ~6) and
+    documented as the trade for staying JVM-side (the alternative — a
+    per-doc priority-queue walk — would drop to a pandas UDF).
+    """
+    n = len(seq_keys)
+    if n == 1:
+        return F.size(pos_cols[0]) > 0
+
+    def build(i: int, chosen: list):
+        if i < n:
+            return F.exists(pos_cols[i],
+                            lambda p: build(i + 1, chosen + [p]))
+        cond = accept(chosen)
+        for j in range(n):
+            for kk in range(j + 1, n):
+                if seq_keys[j] == seq_keys[kk]:
+                    cond = cond & (chosen[j] != chosen[kk])
+        return cond
+
+    return build(0, [])
+
+
 def sloppy_exists_expr(pos_cols: list, seq_keys: list, slop: int):
     """Catalyst predicate: does an assignment of positions to phrase
     slots exist within ``slop``? — the Lucene sloppy-phrase rule
@@ -846,32 +900,14 @@ def sloppy_exists_expr(pos_cols: list, seq_keys: list, slop: int):
     A doc matches phrase slots 0..n-1 with slop s iff positions
     ``p_i ∈ pos_cols[i]`` exist (distinct positions for slots sharing a
     term) such that ``max_i(p_i - i) - min_i(p_i - i) <= s`` — slop 0
-    degenerates to adjacency-in-order (all displacements equal).
-
-    ``pos_cols[i]`` = array<int> of slot i's term positions in the doc;
-    ``seq_keys[i]`` identifies the slot's term (equal keys ⇒ the
-    distinctness constraint applies). Built as NESTED ``F.exists``
-    lambdas — whole-stage-codegen, short-circuiting; worst case
-    O(Π|pos_i|) per doc, fine for human-length phrases (n ≤ ~6) and
-    documented as the trade for staying JVM-side (the alternative — a
-    per-doc priority-queue walk — would drop to a pandas UDF).
+    degenerates to adjacency-in-order (all displacements equal). Built
+    by :func:`_exists_assignment`.
     """
-    n = len(seq_keys)
-    if n == 1:
-        return F.size(pos_cols[0]) > 0
+    def within(chosen):
+        disp = [p - F.lit(j) for j, p in enumerate(chosen)]
+        return F.greatest(*disp) - F.least(*disp) <= F.lit(slop)
 
-    def build(i: int, chosen: list):
-        if i == n:
-            disp = [chosen[j] - F.lit(j) for j in range(n)]
-            cond = (F.greatest(*disp) - F.least(*disp)) <= F.lit(slop)
-            for j in range(n):
-                for kk in range(j + 1, n):
-                    if seq_keys[j] == seq_keys[kk]:
-                        cond = cond & (chosen[j] != chosen[kk])
-            return cond
-        return F.exists(pos_cols[i], lambda p: build(i + 1, chosen + [p]))
-
-    return build(0, [])
+    return _exists_assignment(pos_cols, seq_keys, within)
 
 
 def span_exists_expr(pos_cols: list, seq_keys: list, slop: int,
@@ -891,49 +927,18 @@ def span_exists_expr(pos_cols: list, seq_keys: list, slop: int,
       position analyzer) whose covering window satisfies
       ``max - min - (k-1) <= slop``.
 
-    Same nested-``F.exists`` construction (whole-stage codegen,
-    short-circuiting, O(Π|pos_i|) worst case) and the same
-    human-length-clause boundedness argument as the sloppy predicate.
+    Built by :func:`_exists_assignment`, like the sloppy predicate.
     """
-    n = len(seq_keys)
-    if n == 1:
-        return F.size(pos_cols[0]) > 0
+    limit = F.lit(slop + len(seq_keys) - 1)
 
-    def build(i: int, chosen: list):
-        if i == n:
-            if in_order:
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [chosen[j] < chosen[j + 1] for j in range(n - 1)])
-                width = chosen[-1] - chosen[0]
-            else:
-                cond = F.lit(True)
-                for j in range(n):
-                    for kk in range(j + 1, n):
-                        if seq_keys[j] == seq_keys[kk]:
-                            cond = cond & (chosen[j] != chosen[kk])
-                width = F.greatest(*chosen) - F.least(*chosen)
-            return cond & (width <= F.lit(slop + n - 1))
-        return F.exists(pos_cols[i], lambda p: build(i + 1, chosen + [p]))
+    def window(chosen):
+        if in_order:
+            steps = [a < b for a, b in zip(chosen, chosen[1:])]
+            return (reduce(lambda a, b: a & b, steps)
+                    & (chosen[-1] - chosen[0] <= limit))
+        return F.greatest(*chosen) - F.least(*chosen) <= limit
 
-    return build(0, [])
-
-
-def span_tokens_expr(toks_col, ordered_terms: list[str], slop: int,
-                     in_order: bool):
-    """:func:`span_exists_expr` over a tokenized TEXT column — the
-    corpus twin of the positions-sidecar span verify, per-term position
-    arrays derived in-expression exactly like
-    :func:`sloppy_tokens_expr`."""
-    pos_of = {}
-    for t in set(ordered_terms):
-        idx = F.transform(
-            toks_col,
-            (lambda tt: lambda x, i:
-             F.when(x == F.lit(tt), i).otherwise(F.lit(-1)))(t))
-        pos_of[t] = F.filter(idx, lambda p: p >= 0)
-    return span_exists_expr(
-        [pos_of[t] for t in ordered_terms], ordered_terms, slop, in_order)
+    return _exists_assignment(pos_cols, seq_keys, window)
 
 
 def span_not_exists_expr(inc_pos, exc_pos, pre: int, post: int):
@@ -954,170 +959,171 @@ def span_not_exists_expr(inc_pos, exc_pos, pre: int, post: int):
     )
 
 
-def span_not_tokens_expr(toks_col, inc_term: str, exc_term: str,
-                         pre: int, post: int):
-    """:func:`span_not_exists_expr` over a tokenized TEXT column —
-    per-term position arrays derived in-expression exactly like
-    :func:`sloppy_tokens_expr`, so the corpus and positions-sidecar
-    paths share one semantics definition."""
-    pos_of = {}
-    for t in {inc_term, exc_term}:
+class _Positional(NamedTuple):
+    """One clause's positional constraint. ``terms`` are the analyzed
+    query tokens in order, duplicates kept; span_first and span_not
+    read the single term ``terms[0]``."""
+
+    terms: list
+    slop: int = 0
+    in_order: bool | None = None  # span_near (None: phrase rules)
+    first_end: int | None = None  # span_first end
+    exclude: tuple | None = None  # span_not (exclude_term, pre, post)
+
+    @property
+    def kind(self) -> str:
+        if self.first_end is not None:
+            return "span_first"
+        if self.exclude is not None:
+            return "span_not"
+        return "match_phrase" if self.in_order is None else "span_near"
+
+
+class _TokenPositions:
+    """Position source over a tokenized text column (the corpus)."""
+
+    def __init__(self, toks):
+        self.toks = toks
+
+    def pos(self, term: str):
+        """``filter(transform(toks, (x, i) -> if(x = t, i, -1)),
+        p -> p >= 0)`` — ascending 0-based positions, empty if absent."""
         idx = F.transform(
-            toks_col,
-            (lambda tt: lambda x, i:
-             F.when(x == F.lit(tt), i).otherwise(F.lit(-1)))(t))
-        pos_of[t] = F.filter(idx, lambda p: p >= 0)
-    return span_not_exists_expr(pos_of[inc_term], pos_of[exc_term],
-                                pre, post)
+            self.toks,
+            lambda x, i: F.when(x == F.lit(term), i).otherwise(F.lit(-1)))
+        return F.filter(idx, lambda p: p >= 0)
+
+    def adjacent(self, terms: list):
+        """Substring containment over the space-joined, sentinel-wrapped
+        tokens — exact because tokens never contain spaces."""
+        hay = F.concat(F.lit(" "), F.array_join(self.toks, " "), F.lit(" "))
+        return F.instr(hay, " " + " ".join(terms) + " ") > 0
 
 
-def sloppy_tokens_expr(toks_col, ordered_terms: list[str], slop: int):
-    """:func:`sloppy_exists_expr` over a tokenized TEXT column (the
-    corpus-fallback twin of the positions-sidecar path): per-term
-    position arrays are derived in-expression —
-    ``filter(transform(toks, (x, i) -> if(x = t, i, -1)), p -> p >= 0)``
-    — then fed to the same nested-exists predicate, so both verify
-    paths share one semantics definition."""
-    pos_of = {}
-    for t in set(ordered_terms):
-        idx = F.transform(
-            toks_col,
-            (lambda tt: lambda x, i:
-             F.when(x == F.lit(tt), i).otherwise(F.lit(-1)))(t))
-        pos_of[t] = F.filter(idx, lambda p: p >= 0)
-    return sloppy_exists_expr(
-        [pos_of[t] for t in ordered_terms], ordered_terms, slop)
+class _SidecarPositions:
+    """Position source over the per-doc ``pm: map<term_id, positions>``
+    pivot of the positions sidecar (see :func:`_verify_positions`)."""
+
+    def pos(self, term: str):
+        # map keys are bigint; small literals would infer int
+        return F.element_at("pm", F.lit(term_id_py(term)).cast("long"))
+
+    def adjacent(self, terms: list):
+        """``exists(P_0, p -> ∀i array_contains(P_i, p+i))`` — linear in
+        |P_0| instead of the sloppy nest's product bound; repeated
+        tokens resolve to the same term's list, so "a b a" verifies."""
+        def rest(p):
+            cond = F.lit(True)
+            for i, t in enumerate(terms[1:], start=1):
+                cond = cond & F.array_contains(self.pos(t), p + i)
+            return cond
+
+        return F.exists(self.pos(terms[0]), rest)
 
 
-def phrase_verify_from_positions(
+def _positional_pred(src, c: _Positional):
+    """The one boolean for a positional constraint over a position
+    source: phrase at slop 0 → ``adjacent``, phrase at slop > 0 →
+    :func:`sloppy_exists_expr`, span_near → :func:`span_exists_expr`
+    (unordered slop 0 is NOT adjacency), span_first → first position
+    < end (positions ascend), span_not → :func:`span_not_exists_expr`."""
+    t = c.terms
+    if c.first_end is not None:
+        return F.array_min(src.pos(t[0])) < F.lit(c.first_end)
+    if c.exclude is not None:
+        exc, pre, post = c.exclude
+        return span_not_exists_expr(src.pos(t[0]), src.pos(exc), pre, post)
+    if c.in_order is not None:
+        return span_exists_expr([src.pos(x) for x in t], t, c.slop,
+                                c.in_order)
+    if c.slop > 0:
+        return sloppy_exists_expr([src.pos(x) for x in t], t, c.slop)
+    return src.adjacent(t)
+
+
+def _verify_positions(
     spark: SparkSession,
     dirs: list[str],
     metas: list[dict],
     cand: DataFrame,
-    q_term_ids: list[int],
-    tid_seq: list[int],
-    slop: int = 0,
-    span_in_order: bool | None = None,
+    c: _Positional,
+    docs_df: DataFrame | None,
+    field: str = "text",
+    error=ValueError,
 ) -> DataFrame:
-    """doc_ids from ``cand`` where the phrase's terms appear adjacent
-    in order (``slop=0``) or within ``slop`` position moves (ES
-    ``match_phrase`` ``slop`` — :func:`sloppy_exists_expr` semantics),
-    proven from the positions sidecar alone (ES
-    ``index_options: positions``) — no corpus access. With
-    ``span_in_order`` set (True/False), the predicate is instead the
-    ``span_near`` rule (:func:`span_exists_expr`) at any slop
-    including 0 — unordered slop 0 is NOT adjacency, so span requests
-    never take the fast path below.
+    """The rows of ``cand`` (CONJUNCTIVE candidates: every term of
+    ``c.terms`` present) whose doc satisfies ``c``.
 
-    ``tid_seq`` is the phrase's term_ids in token order (duplicates
-    kept); ``cand`` must be CONJUNCTIVE candidates (every term present,
-    so ``element_at`` below never returns null). Works across segments:
-    each doc lives in exactly one segment (the ingest-dedup guarantee),
-    so a plain union of the pruned per-segment position reads is exact.
-
-    Plan shape: bucket+term pruned parquet read → join to the (small)
-    candidate set (AQE broadcasts it) → one-shuffle pivot to a per-doc
-    ``map<term_id, positions>`` → a Catalyst ``exists(P_0, p -> ∀i
-    array_contains(P_i, p+i))`` predicate (slop 0; the sloppy variant
-    nests one exists per slot), fully whole-stage-codegen. The read is
-    bounded by the phrase terms' posting sizes — at 10^12 turns that is
-    index I/O, not a corpus probe.
+    - ``docs_df`` given: it is semi-joined to the candidates and the
+      predicate runs over its tokenized ``field``;
+    - ``docs_df is None``: every segment must carry the positions
+      sidecar (``store_positions=True`` — ES ``index_options:
+      positions``), else ``error`` is raised. The sidecar is read pruned
+      to the clause's (tb, term_id)s, include and exclude terms alike,
+      joined to the (small) candidate set and pivoted once per doc to
+      ``map<term_id, positions>`` — no corpus access. Each doc lives in
+      exactly one segment (the ingest-dedup guarantee), so a plain union
+      of the per-segment reads is exact.
     """
-    pos = None
-    for d, m in zip(dirs, metas):
-        nb = int(m["n_buckets"])
-        bks = sorted({tid % nb for tid in q_term_ids})
-        p = (
-            spark.read.parquet(IndexPaths(d).positions)
-            .where(F.col("tb").isin(bks)
-                   & F.col("term_id").isin(q_term_ids))
-            .select("term_id", "doc_id", "positions")
-        )
-        pos = p if pos is None else pos.unionByName(p)
+    if docs_df is not None:
+        if "doc_id" not in docs_df.columns:
+            docs_df = with_doc_ids(docs_df)
+        src = _TokenPositions(tokenize_column(F.col(field)))
+        ok = (docs_df.join(cand.select("doc_id"), "doc_id", "left_semi")
+              .where(_positional_pred(src, c)).select("doc_id"))
+        return cand.join(ok, "doc_id")
+    if not all(m.get("has_positions") for m in metas):
+        raise error(
+            f"{c.kind} needs docs_df, or every index segment built with "
+            "BuildConfig(store_positions=True) (a positions sidecar)")
+    read = list(c.terms) + ([c.exclude[0]] if c.exclude else [])
+    tids = sorted({term_id_py(t) for t in read})
+    pos = reduce(DataFrame.unionByName, [
+        spark.read.parquet(IndexPaths(d).positions)
+        .where(F.col("tb").isin(sorted({t % int(m["n_buckets"])
+                                        for t in tids}))
+               & F.col("term_id").isin(tids))
+        .select("term_id", "doc_id", "positions")
+        for d, m in zip(dirs, metas)])
     pivoted = (
         pos.join(cand.select("doc_id"), "doc_id")
         .groupBy("doc_id")
         .agg(F.map_from_entries(
-            F.collect_list(F.struct("term_id", "positions"))
-        ).alias("pm"))
+            F.collect_list(F.struct("term_id", "positions"))).alias("pm"))
     )
-
-    def _key(tid):  # map keys are bigint; small literals infer int
-        return F.lit(tid).cast("long")
-
-    if span_in_order is not None:
-        pred = span_exists_expr(
-            [F.element_at("pm", _key(tid)) for tid in tid_seq],
-            tid_seq, slop, span_in_order)
-        return pivoted.where(pred).select("doc_id")
-    if slop > 0:
-        pred = sloppy_exists_expr(
-            [F.element_at("pm", _key(tid)) for tid in tid_seq],
-            tid_seq, slop)
-        return pivoted.where(pred).select("doc_id")
-
-    # slop=0 fast path — exists p in P(term_0): every later token i
-    # sits at p+i (duplicate phrase tokens resolve to the same term's
-    # list, so repeats ("a b a") verify correctly); linear in |P_0|
-    # instead of the sloppy nest's product bound.
-    def adjacent(p):
-        cond = F.lit(True)
-        for i, tid in enumerate(tid_seq[1:], start=1):
-            cond = cond & F.array_contains(
-                F.element_at("pm", _key(tid)), p + i)
-        return cond
-
-    return (
-        pivoted.where(F.exists(F.element_at("pm", _key(tid_seq[0])),
-                               adjacent))
-        .select("doc_id")
-    )
+    ok = pivoted.where(_positional_pred(_SidecarPositions(), c))
+    return cand.join(ok.select("doc_id"), "doc_id")
 
 
 def search_phrase(
     spark: SparkSession,
-    index_dir: str,
+    index_dir: str | list[str],
     docs_df: DataFrame | None,
     phrase_text: str,
     k: int,
     slop: int = 0,
 ) -> DataFrame:
     """Phrase top-k (ES ``match_phrase`` shape) from the compressed
-    index + adjacency verification.
+    index — or a segment list — + adjacency verification.
 
     Two stages, both exact:
     1. the index prunes to CONJUNCTIVE candidates — every doc containing
        all phrase terms, scored, with NO top-k cut (a phrase doc may sit
        arbitrarily deep in the match ranking, so cutting early would be
        wrong);
-    2. adjacency-in-order (``slop=0``) or within-``slop`` verification
+    2. :func:`_verify_positions` keeps the candidates whose terms are
+       adjacent in order (``slop=0``) or within ``slop`` position moves
        (ES ``match_phrase`` ``slop``, :func:`sloppy_exists_expr`
        semantics — qualification only; scoring is slop-independent),
-       one of two exact paths:
-       - ``docs_df is None`` (requires an index built with
-         ``store_positions=True`` — ES ``index_options: positions`` /
-         Lucene's .pos file): the positions sidecar is read pruned to
-         the phrase's (tb, term_id)s, pivoted per candidate doc, and a
-         Catalyst ``exists(P_0, p -> ∀i array_contains(P_i, p+i))``
-         predicate verifies the phrase — fully JVM-side, NO corpus
-         access at query time (at 10^12 turns the corpus join-back is a
-         100 TB-table probe; the positions read is bucket-pruned index
-         I/O bounded by the phrase terms' posting sizes);
-       - otherwise: candidates semi-join back to ``docs_df`` where a
-         substring predicate over the space-joined token array verifies
-         adjacency (exact: tokens never contain spaces). The standard
-         trade for indexes that skipped positions.
+       from the positions sidecar when ``docs_df is None`` (every
+       segment built with ``store_positions=True``; else
+       ``ValueError``) — no corpus access at query time — or from a
+       re-check against ``docs_df``, the standard trade for indexes
+       that skipped positions.
     Scoring = BM25 over the phrase's distinct terms with corpus-global
     stats (same formula as ``match``; rank-identical to
     :func:`..naive.naive_phrase_topk` on both paths, tested).
     """
-    from prow_jobs_scraper_spark.functions.tokenize import (  # noqa: PLC0415
-        tokenize_column,
-    )
-    from prow_jobs_scraper_spark.index.build import (  # noqa: PLC0415
-        with_doc_ids,
-    )
-
     dirs, metas, n_docs, avgdl = _load_segments(index_dir)
     empty = spark.createDataFrame([], _HITS)
     phrase_terms = tokenize_text(phrase_text)  # ordered, duplicates kept
@@ -1131,36 +1137,9 @@ def search_phrase(
         return empty
     # no cut — every conjunctive candidate survives to the verify
     cand = _match_frame(spark, dirs, metas, avgdl, match, _K_ALL)
-
-    if docs_df is None:
-        if not metas[0].get("has_positions"):
-            raise ValueError(
-                "search_phrase without docs_df needs an index built with "
-                "BuildConfig(store_positions=True); this index has no "
-                "positions sidecar")
-        verified = phrase_verify_from_positions(
-            spark, dirs, metas, cand, match.rarity,
-            [term_id_py(t) for t in phrase_terms], slop=slop)
-    else:
-        if "doc_id" not in docs_df.columns:
-            docs_df = with_doc_ids(docs_df)
-        if slop > 0:
-            pred = sloppy_tokens_expr(
-                tokenize_column(F.col("text")), phrase_terms, slop)
-        else:
-            joined = F.concat(
-                F.lit(" "),
-                F.array_join(tokenize_column(F.col("text")), " "),
-                F.lit(" "))
-            needle = " " + " ".join(phrase_terms) + " "
-            pred = F.instr(joined, needle) > 0
-        verified = (
-            docs_df.join(cand.select("doc_id"), "doc_id", "left_semi")
-            .where(pred)
-            .select("doc_id")
-        )
     return (
-        cand.join(verified, "doc_id")
+        _verify_positions(spark, dirs, metas, cand,
+                          _Positional(phrase_terms, slop), docs_df)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )

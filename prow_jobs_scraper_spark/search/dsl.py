@@ -172,7 +172,11 @@ Semantics (ES-faithful; deviations called out):
   :func:`..compressed.sloppy_exists_expr`); scoring stays
   slop-independent (ES weights sloppy matches by 1/(distance+1) inside
   phrase freq — a documented deviation, same family as the
-  metadata-scores-0 rule).
+  metadata-scores-0 rule). Phrase, span_near, span_first and span_not
+  qualify through one predicate function,
+  :func:`..compressed._positional_pred`, over a position source: the
+  token arrays here, the positions sidecar or a ``docs_df`` re-check in
+  the indexed executor (:func:`..compressed._verify_positions`).
 - metadata clauses (term/terms/range/exists/match_all) qualify but score
   0 wherever they appear. (ES gives a ``term`` inside ``must`` a small
   constant score; the reference only ever uses them in filter context,
@@ -251,6 +255,8 @@ from prow_jobs_scraper_spark.index.build import (
 )
 from prow_jobs_scraper_spark.search.compressed import (
     _K_ALL,
+    _Positional,
+    _TokenPositions,
     _by_term,
     _df_stats_multi,
     _group_frame,
@@ -258,13 +264,10 @@ from prow_jobs_scraper_spark.search.compressed import (
     _load_segments,
     _match_frame,
     _plan_match,
+    _positional_pred,
     _segment_blocks,
+    _verify_positions,
     _wand_bool_topk,
-    phrase_verify_from_positions,
-    sloppy_tokens_expr,
-    span_not_exists_expr,
-    span_not_tokens_expr,
-    span_tokens_expr,
 )
 
 
@@ -303,6 +306,16 @@ class TextClause:
     # Qualification-only; only meaningful on a single-term clause with
     # phrase=False (include/exclude are span_terms on the same field)
     span_not: tuple[str, int, int] | None = None
+
+    def positional(self) -> _Positional | None:
+        """The clause's positional constraint (phrase, span_near,
+        span_first or span_not), or None for a plain match."""
+        if not (self.phrase or self.span_first_end is not None
+                or self.span_not is not None):
+            return None
+        return _Positional(tokenize_text(self.text), self.slop,
+                           self.span_in_order, self.span_first_end,
+                           self.span_not)
 
 
 @dataclass(frozen=True)
@@ -3132,44 +3145,13 @@ def _compile_specs(
             ).cast("double")
             score = score + F.lit(idf) * tf * F.lit(k1 + 1.0) / (tf + denom)
             hits = hits + (tf > 0).cast("int")
-        if c.phrase and c.span_in_order is not None:
-            # span_near desugar: the Lucene SpanNearQuery window rule
-            # (compressed.span_exists_expr) — ordered/unordered at any
-            # slop including 0 (unordered slop 0 is NOT adjacency)
-            matched = span_tokens_expr(toks, tokenize_text(c.text),
-                                       c.slop, c.span_in_order)
-        elif c.phrase and c.slop > 0:
-            # ES sloppy phrase: qualification via the shared nested-
-            # exists predicate (compressed.sloppy_exists_expr semantics);
-            # scoring stays slop-independent (module docstring)
-            matched = sloppy_tokens_expr(toks, tokenize_text(c.text),
-                                         c.slop)
-        elif c.phrase:
-            ordered = tokenize_text(c.text)  # adjacency keeps duplicates
-            needle = " " + " ".join(ordered) + " "
-            hay = F.concat(F.lit(" "), F.array_join(toks, " "), F.lit(" "))
-            matched = F.instr(hay, needle) > 0
-        elif c.operator == "and":
-            matched = hits == len(live)
+        pc, src = c.positional(), _TokenPositions(toks)
+        if c.phrase:  # phrase / span_near: the predicate alone qualifies
+            matched = _positional_pred(src, pc)
         else:
-            matched = hits > 0
-        if c.span_first_end is not None:
-            # Lucene SpanFirstQuery: the single term's span must END
-            # at or before `end` — first 0-based position p satisfies
-            # p + 1 <= end, i.e. 1-based array_position <= end
-            # (array_position is 0 when absent; `matched` already
-            # requires presence)
-            matched = matched & (
-                F.array_position(toks, live[0])
-                <= F.lit(c.span_first_end).cast("long"))
-        if c.span_not is not None:
-            # Lucene SpanNotQuery (single-position spans): at least
-            # one include occurrence p with NO exclude occurrence q in
-            # [p - pre, p + post] — pure array higher-order functions,
-            # one pass over the token array
-            exc_t, pre, post = c.span_not
-            matched = matched & span_not_tokens_expr(
-                toks, live[0], exc_t, pre, post)
+            matched = hits == len(live) if c.operator == "and" else hits > 0
+            if pc is not None:  # span_first / span_not
+                matched = matched & _positional_pred(src, pc)
         if c.boost != 1.0:
             score = score * F.lit(c.boost)
         return True, score, matched
@@ -7299,20 +7281,6 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
 # indexed executor: per-clause score frames from the compressed index
 # --------------------------------------------------------------------------
 
-def _term_positions(spark: SparkSession, dirs: list[str],
-                    metas: list[dict], tid: int) -> DataFrame:
-    """``(doc_id, positions)`` of one term from every segment's
-    positions sidecar — a tb + term_id pruned read per segment."""
-    out = None
-    for d, m in zip(dirs, metas):
-        part = (spark.read.parquet(IndexPaths(d).positions)
-                .where((F.col("tb") == tid % int(m["n_buckets"]))
-                       & (F.col("term_id") == tid))
-                .select("doc_id", "positions"))
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
 def _clause_frame_indexed(
     spark: SparkSession,
     dirs: list[str],
@@ -7329,7 +7297,8 @@ def _clause_frame_indexed(
     ``max(1, avgdl_global/avgdl_seg)`` exactly as
     :func:`..compressed._segment_blocks` (proof there); the per-
     (segment, salt) kernel runs with NO top-k cut because clauses
-    combine downstream."""
+    combine downstream. A positional clause keeps the candidates
+    :func:`..compressed._verify_positions` proves."""
     terms = _clause_terms(c)
     if not terms or n_docs == 0:
         return None
@@ -7341,107 +7310,10 @@ def _clause_frame_indexed(
         return None
     frame = _match_frame(spark, dirs, metas, avgdl, match, _K_ALL)
 
-    if c.phrase:
-        ordered = tokenize_text(c.text)
-        if docs_df is None:
-            # ES index_options=positions: adjacency proven from the
-            # positions sidecar, no corpus access (see
-            # compressed.phrase_verify_from_positions)
-            if not all(m.get("has_positions") for m in metas):
-                raise DslError(
-                    "match_phrase needs docs_df for adjacency verify, or "
-                    "every index segment built with store_positions=True")
-            verified = phrase_verify_from_positions(
-                spark, dirs, metas, frame, match.rarity,
-                [term_id_py(t) for t in ordered], slop=c.slop,
-                span_in_order=c.span_in_order)
-        else:
-            if "doc_id" not in docs_df.columns:
-                docs_df = with_doc_ids(docs_df)
-            if c.span_in_order is not None:
-                pred = span_tokens_expr(
-                    tokenize_column(F.col(c.field)), ordered, c.slop,
-                    c.span_in_order)
-            elif c.slop > 0:
-                pred = sloppy_tokens_expr(
-                    tokenize_column(F.col(c.field)), ordered, c.slop)
-            else:
-                needle = " " + " ".join(ordered) + " "
-                hay = F.concat(
-                    F.lit(" "),
-                    F.array_join(tokenize_column(F.col(c.field)), " "),
-                    F.lit(" "))
-                pred = F.instr(hay, needle) > 0
-            verified = (
-                docs_df.join(frame.select("doc_id"), "doc_id", "left_semi")
-                .where(pred)
-                .select("doc_id")
-            )
-        frame = frame.join(verified, "doc_id")
-    if c.span_first_end is not None:
-        # Lucene SpanFirstQuery bound: first 0-based position p of the
-        # (single) term must satisfy p + 1 <= end. From the positions
-        # sidecar it's a tb+term-pruned read (positions stored
-        # ascending: element_at 1 is the first occurrence) joined to
-        # the candidate frame — index I/O only; with docs_df it's the
-        # same semi-join recheck the phrase path uses.
-        tid = term_id_py(terms[0])
-        if docs_df is None:
-            if not all(m.get("has_positions") for m in metas):
-                raise DslError(
-                    "span_first needs docs_df for the position bound, "
-                    "or every index segment built with "
-                    "store_positions=True")
-            verified = (
-                _term_positions(spark, dirs, metas, tid)
-                .join(frame.select("doc_id"), "doc_id")
-                .where(F.element_at("positions", 1)
-                       < F.lit(c.span_first_end))
-                .select("doc_id"))
-        else:
-            if "doc_id" not in docs_df.columns:
-                docs_df = with_doc_ids(docs_df)
-            pred = (F.array_position(
-                tokenize_column(F.col(c.field)), terms[0])
-                .between(1, c.span_first_end))
-            verified = (
-                docs_df.join(frame.select("doc_id"), "doc_id",
-                             "left_semi")
-                .where(pred).select("doc_id"))
-        frame = frame.join(verified, "doc_id")
-    if c.span_not is not None:
-        # Lucene SpanNotQuery bound (span_not_exists_expr): from the
-        # positions sidecar it's TWO tb+term-pruned reads — include
-        # positions inner-joined to the candidate frame, exclude
-        # positions LEFT-joined (docs without the exclude term exclude
-        # nothing) — index I/O only; with docs_df it's the semi-join
-        # recheck the phrase path uses.
-        exc_t, pre, post = c.span_not
-        if docs_df is None:
-            if not all(m.get("has_positions") for m in metas):
-                raise DslError(
-                    "span_not needs docs_df for the position check, or "
-                    "every index segment built with store_positions=True")
-            exc_pos = _term_positions(
-                spark, dirs, metas, term_id_py(exc_t)
-            ).withColumnRenamed("positions", "exc_positions")
-            verified = (
-                _term_positions(spark, dirs, metas, term_id_py(terms[0]))
-                .join(frame.select("doc_id"), "doc_id")
-                .join(exc_pos, "doc_id", "left")
-                .where(span_not_exists_expr(
-                    F.col("positions"), F.col("exc_positions"), pre, post))
-                .select("doc_id"))
-        else:
-            if "doc_id" not in docs_df.columns:
-                docs_df = with_doc_ids(docs_df)
-            verified = (
-                docs_df.join(frame.select("doc_id"), "doc_id", "left_semi")
-                .where(span_not_tokens_expr(
-                    tokenize_column(F.col(c.field)), terms[0], exc_t,
-                    pre, post))
-                .select("doc_id"))
-        frame = frame.join(verified, "doc_id")
+    pc = c.positional()
+    if pc is not None:
+        frame = _verify_positions(spark, dirs, metas, frame, pc, docs_df,
+                                  c.field, DslError)
     return frame
 
 
@@ -7516,9 +7388,8 @@ def _prunable_for_topk(spec: QuerySpec) -> bool:
             or spec.boosting is not None or spec.fscore is not None):
         return False
     cls = spec.must + spec.should
-    if not cls or any(c.phrase or c.boost != 1.0
-                      or c.span_first_end is not None
-                      or c.span_not is not None for c in cls):
+    if not cls or any(c.boost != 1.0 or c.positional() is not None
+                      for c in cls):
         # boosted clauses take the exact score-all path: the batch
         # kernels key their stats on the raw term, and one term may
         # appear under different boosts across clauses
@@ -7634,11 +7505,11 @@ def search_dsl_indexed(
     Metadata predicates (term/terms/range/exists) resolve against the
     segments' ``doc_stats`` columns (``conv_id``, ``turn_idx``, ``dl``,
     plus every ride-along metadata column persisted at build time);
-    ``match_phrase`` verifies adjacency either from the positions
-    sidecar (every segment built with ``store_positions=True`` —
-    ``docs_df`` may be None) or by re-check against ``docs_df`` (see
-    :func:`..compressed.search_phrase`). All text clauses must target
-    the single indexed text field.
+    positional clauses (phrase, span_near, span_first, span_not) verify
+    either from the positions sidecar (every segment built with
+    ``store_positions=True`` — ``docs_df`` may be None) or by re-check
+    against ``docs_df`` (:func:`..compressed._verify_positions`). All
+    text clauses must target the single indexed text field.
     """
     spec = parse_query(query)
     _require_indexed_field(spec)

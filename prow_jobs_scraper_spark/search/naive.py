@@ -20,6 +20,11 @@ from pyspark.sql import functions as F
 
 from prow_jobs_scraper_spark.functions.tokenize import tokenize_column, tokenize_text
 from prow_jobs_scraper_spark.index.build import BM25Params, with_doc_ids
+from prow_jobs_scraper_spark.search.compressed import (
+    _Positional,
+    _positional_pred,
+    _TokenPositions,
+)
 
 
 def naive_bm25_topk(
@@ -182,10 +187,8 @@ def naive_phrase_topk(
         ).cast("double")
         score = score + F.lit(idf) * tf * F.lit(k1 + 1.0) / (tf + denom)
     if slop > 0:
-        from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
-            sloppy_tokens_expr,
-        )
-        qualifies = sloppy_tokens_expr(F.col("tokens"), phrase_terms, slop)
+        qualifies = _positional_pred(_TokenPositions(F.col("tokens")),
+                                     _Positional(phrase_terms, slop))
     else:
         qualifies = F.instr(joined, needle) > 0
     return (

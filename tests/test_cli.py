@@ -68,6 +68,39 @@ def test_cli_round_trip(spark, tmp_path, capsys):
     assert scores3 == sorted(scores3, reverse=True)
 
 
+def test_cli_phrase_search_segment_list(spark, tmp_path, capsys):
+    # --phrase fans out over a segment list like the match search: same
+    # hits as the DSL match_phrase on the same two segments
+    from pyspark.sql import functions as F
+
+    from prow_jobs_scraper_spark.index.build import with_doc_ids
+    from prow_jobs_scraper_spark.search.dsl import search_dsl_indexed
+
+    corpus = str(tmp_path / "corpus")
+    _run(capsys, ["synth", "--output", corpus, "--n-turns", "500",
+                  "--n-partitions", "2"])
+    docs = with_doc_ids(spark.read.parquet(corpus))
+    segs = []
+    for part, n_ranges in ((0, "4"), (1, "2")):
+        src, seg = str(tmp_path / f"src{part}"), str(tmp_path / f"seg{part}")
+        docs.where(F.pmod("doc_id", F.lit(2)) == part).drop("doc_id") \
+            .write.parquet(src)
+        _run(capsys, ["build", "--input", src, "--output", seg,
+                      "--n-ranges", n_ranges, "--n-buckets", "2"])
+        segs.append(seg)
+
+    r = _run(capsys, ["search", "--index", ",".join(segs), "--query",
+                      "the_hot_term spark", "--k", "5", "--phrase",
+                      "--corpus", corpus])
+    want = search_dsl_indexed(
+        spark, segs,
+        {"query": {"match_phrase": {"text": "the_hot_term spark"}}}, 5,
+        docs_df=spark.read.parquet(corpus)).collect()
+    assert len(r["hits"]) == 5
+    assert r["hits"] == [{"doc_id": w["doc_id"], "score": w["score"]}
+                         for w in want]
+
+
 def test_cli_requires_subcommand():
     with pytest.raises(SystemExit):
         cli.main([])

@@ -4523,39 +4523,76 @@ def test_dsl_multi_segment_matches_naive(spark, docs, dsl_segments, label, q):
     _assert_rank_identical(got, want, f"multi:{label}")
 
 
-def test_dsl_phrase_from_positions_multi_segment(spark, docs,
-                                                 tmp_path_factory):
-    # match_phrase with docs_df=None: adjacency from the positions
-    # sidecar, across two independently-built segments — identical to
-    # the corpus-recheck path and the naive plan. Segments WITHOUT
-    # positions must refuse loudly.
-    from pyspark.sql import functions as SF
+def _span_terms(*terms):
+    return [{"span_term": {"text": t}} for t in terms]
 
-    from prow_jobs_scraper_spark.search.dsl import DslError
+
+# every positional kind: (id, clause, the kind the no-sidecar error names)
+_POSITIONAL_CLAUSES = [
+    ("phrase-slop0", {"match_phrase": {"text": "the_hot_term spark"}},
+     "match_phrase"),
+    ("phrase-slop2", {"match_phrase": {"text": {
+        "query": "spark the_hot_term", "slop": 2}}}, "match_phrase"),
+    *[(f"span-near-{'ordered' if o else 'unordered'}-slop{s}",
+       {"span_near": {"clauses": _span_terms("the_hot_term", "spark"),
+                      "slop": s, "in_order": o}}, "span_near")
+      for o in (True, False) for s in (0, 2)],
+    ("span-first-end2", {"span_first": {
+        "match": {"span_term": {"text": "the_hot_term"}}, "end": 2}},
+     "span_first"),
+    ("span-not-1-2", {"span_not": {
+        "include": {"span_term": {"text": "spark"}},
+        "exclude": {"span_term": {"text": "agent"}},
+        "pre": 1, "post": 2}}, "span_not"),
+]
+
+
+@pytest.fixture(scope="module")
+def position_segments(spark, docs, tmp_path_factory):
+    """Two segments with the positions sidecar, built with different
+    n_ranges/n_buckets, plus a copy of the second without it."""
+    from pyspark.sql import functions as SF
 
     d1 = str(tmp_path_factory.mktemp("dsl_pseg1"))
     d2 = str(tmp_path_factory.mktemp("dsl_pseg2"))
+    d3 = str(tmp_path_factory.mktemp("dsl_pseg3"))
     a = docs.where(SF.pmod(SF.col("doc_id"), SF.lit(2)) == 0)
     b = docs.where(SF.pmod(SF.col("doc_id"), SF.lit(2)) == 1)
     build_index(spark, a, d1,
                 BuildConfig(n_ranges=8, n_buckets=4, store_positions=True))
     build_index(spark, b, d2,
                 BuildConfig(n_ranges=4, n_buckets=2, store_positions=True))
+    build_index(spark, b, d3, BuildConfig(n_ranges=4, n_buckets=2))
+    return d1, d2, d3
 
+
+@pytest.mark.parametrize(
+    "clause,kind", [(c, k) for _, c, k in _POSITIONAL_CLAUSES],
+    ids=[i for i, _, _ in _POSITIONAL_CLAUSES])
+def test_dsl_phrase_from_positions_multi_segment(spark, docs,
+                                                 position_segments,
+                                                 clause, kind):
+    # every positional kind with docs_df=None: proven from the positions
+    # sidecar across two independently-built segments — identical to
+    # the corpus-recheck path and the naive plan. Segments WITHOUT
+    # positions must refuse loudly, naming the kind.
+    from prow_jobs_scraper_spark.search.dsl import DslError
+
+    d1, d2, d3 = position_segments
     q = {"query": {"bool": {
-        "must": [{"match_phrase": {"text": "the_hot_term spark"}}],
+        "must": [clause],
         "filter": [{"term": {"role": "assistant"}}],
     }}}
-    got = search_dsl_indexed(spark, [d1, d2], q, 10).toPandas()
     want = search_dsl(docs, q, 10).toPandas()
-    _assert_rank_identical(got, want, "phrase-positions-multi")
+    assert len(want) > 0, "vacuous: the clause matches nothing"
+    got = search_dsl_indexed(spark, [d1, d2], q, 10).toPandas()
+    _assert_rank_identical(got, want, "positions-multi")
     rechk = search_dsl_indexed(spark, [d1, d2], q, 10,
                                docs_df=docs).toPandas()
-    _assert_rank_identical(got, rechk, "phrase-positions-vs-recheck")
+    _assert_rank_identical(rechk, want, "recheck-multi")
 
-    d3 = str(tmp_path_factory.mktemp("dsl_pseg3"))
-    build_index(spark, b, d3, BuildConfig(n_ranges=4, n_buckets=2))
-    with pytest.raises(DslError, match="store_positions"):
+    with pytest.raises(DslError,
+                       match=f"{kind} needs docs_df.*store_positions"):
         search_dsl_indexed(spark, [d1, d3], q, 10).toPandas()
 
 

@@ -440,6 +440,9 @@ def test_phrase_search_from_positions_sidecar(spark, transcripts,
                 BuildConfig(n_ranges=8, n_buckets=4, n_chunks=1))
     with pytest.raises(ValueError, match="store_positions"):
         search_phrase(spark, d2, None, "spark agent", 5)
+    # ...and so must a segment list whose LATER segment lacks them
+    with pytest.raises(ValueError, match="store_positions"):
+        search_phrase(spark, [d, d2], None, "spark agent", 5)
 
 
 def test_batch_search_with_per_query_filters(spark, transcripts, index_dir):
@@ -518,6 +521,11 @@ def test_batch_search_rejects_duplicate_query_id(spark, index_dir):
           {"query_id": "q", "query_text": "agent", "k": 5}]
     with pytest.raises(ValueError, match="duplicate query_id 'q'"):
         search_topk_many(spark, index_dir, qs)
+    # a negative k must not silently return no rows (the _msearch rule)
+    with pytest.raises(ValueError, match="k must be non-negative"):
+        search_topk_many(spark, index_dir, [
+            {"query_id": "a", "query_text": "spark", "k": 3},
+            {"query_id": "b", "query_text": "agent", "k": -1}])
 
 
 def _segment_copy(index_dir: str, dest: str, **meta_overrides) -> str:
