@@ -7,10 +7,11 @@ indices/jobs_schema.json:3-11, i.e. zero parallelism). This module is the
 from-scratch Spark-native replacement: one declarative DataFrame plan per
 stage, one explicit shuffle (groupBy term+salt), Arrow-vectorized encode.
 
-Layout (directory-partitioned Parquet standing in for Iceberg — the
-sandbox image ships no Iceberg runtime jars; the layout mirrors Iceberg
-partition transforms ``bucket(term)`` / identity(salt) and every write is
-partition-granular and idempotent, so swapping the I/O layer for
+Layout (directory-partitioned Parquet standing in for Iceberg — no
+Iceberg runtime jar is needed; the layout mirrors Iceberg partition
+transforms ``bucket(term)`` / identity(salt) and every write goes through
+the one commit protocol of :mod:`..commit` — partition-granular,
+idempotent, metadata last — so swapping the I/O layer for
 ``df.writeTo(...)`` on a real catalog is mechanical):
 
     <root>/doc_stats/            doc_id, conv_id, turn_idx, dl
@@ -21,7 +22,8 @@ partition-granular and idempotent, so swapping the I/O layer for
     <root>/flat/tb=*/            optional persisted occurrence stream
     <root>/positions/tb=*/       optional per-(term, doc) token offsets
                                  (ES index_options=positions / Lucene .pos)
-    <root>/meta.json             corpus constants (n_docs, avgdl, params)
+    <root>/meta.json             corpus constants (n_docs, avgdl, params);
+                                 written LAST — present = committed index
 
 Key design points (vs BASELINE.json north_rule):
 
@@ -40,9 +42,13 @@ Key design points (vs BASELINE.json north_rule):
   manifest. Salted-vs-unsalted equivalence is tested (n_ranges=1 vs 32).
 - **Resumability**: the term space is hashed into ``n_buckets`` buckets
   (column ``tb``); the build commits bucket-chunks one write-job at a time
-  and appends a manifest row per bucket (counts, bytes, postings/sec, skew
-  ratio). A rerun skips committed buckets — the partition-granular analog
-  of the reference's deterministic-``_id`` upserts (event.py:204-214).
+  (each a partition overwrite of its buckets) and appends a manifest row
+  per bucket (counts, bytes, postings/sec, skew ratio). A rerun skips
+  committed buckets — the partition-granular analog of the reference's
+  deterministic-``_id`` upserts (event.py:204-214). ``meta.json`` is the
+  index's last, atomic commit: a killed build leaves no ``meta.json``, so
+  no reader opens a half-built index, and the rerun writes it once every
+  bucket is committed.
 - **block_max_tf_norm** is stored instead of block_max_score so the encode
   stage never needs a postings⋈term_stats join: BM25 = idf(term) *
   tf_norm(tf, dl) and max() commutes with the positive scalar idf.
@@ -61,6 +67,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prow_jobs_scraper_spark import commit
 from prow_jobs_scraper_spark.functions.tokenize import tokenize_column
 from prow_jobs_scraper_spark.index import codec
 
@@ -344,10 +351,12 @@ def build_index(
 ) -> dict:
     """Run (or resume) the full index build; returns build metrics.
 
-    Stages: doc_stats → meta (n_docs/avgdl) → per-bucket-chunk
-    [term_stats + encoded postings + manifest row]. Killing the process
-    between chunk commits and rerunning produces the identical index —
-    committed buckets are skipped via the manifest (tested).
+    Stages: doc_stats (→ n_docs/avgdl) → terms dim → per-bucket-chunk
+    [encoded postings + term_stats + manifest row] → ``meta.json``.
+    Killing the process anywhere and rerunning produces the identical
+    index — committed buckets are skipped via the manifest (tested) —
+    and until the rerun writes ``meta.json`` the directory is not an
+    index: readers raise instead of answering from partial postings.
     """
     cfg = cfg or BuildConfig()
     paths = IndexPaths(out_dir)
@@ -363,20 +372,17 @@ def build_index(
     # core count (measured), while the regexp tokenize itself is cheap
     # codegen work that scales linearly. Recompute beats cache.
     docs = tokenized_docs(transcripts)
-    if not os.path.exists(os.path.join(paths.doc_stats, "_SUCCESS")):
+    if not commit.done(paths.doc_stats):
         # carry every filterable doc attribute the input has — the
         # reference's bool queries pair a match with ts/role filters
         # (query.py:28-99); search_topk_filtered and the DSL metadata
         # clauses read these with the predicate pushed to this parquet scan
         attrs = [c for c in docs.columns
                  if c not in ("conv_id", "turn_idx", "doc_id", "tokens")]
-        (
-            docs.select(
-                "doc_id", "conv_id", "turn_idx",
-                F.size("tokens").alias("dl"), *attrs
-            )
-            .write.mode("overwrite").parquet(paths.doc_stats)
-        )
+        commit.overwrite(docs.select(
+            "doc_id", "conv_id", "turn_idx",
+            F.size("tokens").alias("dl"), *attrs
+        ), paths.doc_stats)
 
     stage_sec["doc_stats"] = round(time.time() - t0, 3)
 
@@ -399,8 +405,6 @@ def build_index(
         "fingerprint": int(agg["fingerprint"] or 0),
         "has_positions": bool(cfg.store_positions),
     }
-    with open(paths.meta, "w") as f:
-        json.dump(meta, f, indent=1)
 
     # ---- which buckets are already committed? (resume point)
     # A manifest append commits by moving its part file in; a kill
@@ -417,21 +421,23 @@ def build_index(
         committed = {int(r["tb"]) for r in mrows}
     todo = [tb for tb in range(cfg.n_buckets) if tb not in committed]
     if not todo:
+        commit.write_json(paths.meta, meta)
         return {**meta, "resumed": True, "n_new_buckets": 0,
                 "elapsed_sec": time.time() - t0}
+    # buckets are missing, so this dir is not a committed index (e.g. a
+    # build killed by a version that wrote meta.json first) until the end
+    commit.remove(paths.meta)
 
     # ---- stage 1b: terms dim — the ONLY place term strings are stored.
     # distinct() partial-aggregates map-side, so the shuffle is ~|vocab|
     # rows regardless of corpus size.
-    if not os.path.exists(os.path.join(paths.terms, "_SUCCESS")):
-        (
+    if not commit.done(paths.terms):
+        commit.overwrite(
             docs.select(F.explode("tokens").alias("term")).distinct()
             .select(
                 "term", term_id_expr(F.col("term")).alias("term_id"))
-            .withColumn("tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets))
-            .write.mode("overwrite").partitionBy("tb").parquet(paths.terms)
-        )
-        open(os.path.join(paths.terms, "_SUCCESS"), "a").close()
+            .withColumn("tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets)),
+            paths.terms, ["tb"])
 
     stage_sec["terms_dim"] = round(
         time.time() - t0 - sum(stage_sec.values()), 3)
@@ -439,13 +445,10 @@ def build_index(
     # ---- stage 2: flat occurrence stream (optionally persisted, tb-pruned)
     flat = _flat_occurrences(docs, cfg)
     if persist_flat:
-        if not os.path.exists(os.path.join(paths.flat, "_SUCCESS")):
-            flat.write.mode("overwrite").partitionBy("tb").parquet(paths.flat)
-            # partitionBy drops _SUCCESS at root in some layouts; touch it
-            open(os.path.join(paths.flat, "_SUCCESS"), "a").close()
+        if not commit.done(paths.flat):
+            commit.overwrite(flat, paths.flat, ["tb"])
         flat = spark.read.parquet(paths.flat)
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     encoder = _make_encoder(avgdl, cfg.params, cfg.block_size)
     chunk_size = max(1, (cfg.n_buckets + cfg.n_chunks - 1) // cfg.n_chunks)
     metrics_rows = []
@@ -459,11 +462,10 @@ def build_index(
         part = flat.where(F.col("tb").isin(chunk))
 
         # encoded posting blocks — the one heavy shuffle, salted by design
-        (
+        commit.overwrite_partitions(
             part.groupBy("tb", "salt")
-            .applyInArrow(encoder, schema=BLOCKS_SCHEMA)
-            .write.mode("overwrite").partitionBy("tb").parquet(paths.postings)
-        )
+            .applyInArrow(encoder, schema=BLOCKS_SCHEMA),
+            paths.postings, ["tb"])
 
         # positions sidecar (optional — ES index_options=positions / the
         # Lucene .pos file): one row per (term, doc) with the term's
@@ -473,7 +475,7 @@ def build_index(
         # needed. tb-partitioned like every other per-term table so the
         # phrase read prunes to the query's buckets.
         if cfg.store_positions:
-            (
+            commit.overwrite_partitions(
                 docs.select(
                     "doc_id", F.posexplode("tokens").alias("pos", "term"))
                 .select(term_id_expr(F.col("term")).alias("term_id"),
@@ -482,10 +484,8 @@ def build_index(
                     "tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets))
                 .where(F.col("tb").isin(chunk))
                 .groupBy("tb", "term_id", "doc_id")
-                .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-                .write.mode("overwrite").partitionBy("tb")
-                .parquet(paths.positions)
-            )
+                .agg(F.sort_array(F.collect_list("pos")).alias("positions")),
+                paths.positions, ["tb"])
 
         # term_stats + lineage metrics derive from the committed blocks'
         # METADATA columns only (Parquet prunes the binary payloads):
@@ -504,13 +504,12 @@ def build_index(
             spark.read.parquet(paths.terms)
             .where(F.col("tb").isin(chunk)).select("tb", "term", "term_id")
         )
-        (
+        commit.overwrite_partitions(
             written.groupBy("tb", "term_id")
             .agg(F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("cf"))
             .join(terms_dim, ["tb", "term_id"])
-            .select("tb", "term", "term_id", "df", "cf")
-            .write.mode("overwrite").partitionBy("tb").parquet(paths.term_stats)
-        )
+            .select("tb", "term", "term_id", "df", "cf"),
+            paths.term_stats, ["tb"])
         elapsed = time.time() - tc0
 
         per_group = written.groupBy("tb", "term_id", "salt").agg(
@@ -544,11 +543,12 @@ def build_index(
                 "input_fingerprint": meta["fingerprint"],
                 "committed_at": time.time(),
             })
-        # commit point: manifest append AFTER the chunk's data is written
-        spark.createDataFrame(pd.DataFrame(metrics_rows[-len(stats):])).write.mode(
-            "append"
-        ).parquet(paths.manifest)
+        # chunk commit: manifest append AFTER the chunk's data is written
+        commit.append(spark.createDataFrame(
+            pd.DataFrame(metrics_rows[-len(stats):])), paths.manifest)
 
+    # index commit: meta.json last, once every bucket is in place
+    commit.write_json(paths.meta, meta)
     total = time.time() - t0
     stage_sec["encode_commit"] = round(total - sum(stage_sec.values()), 3)
     n_postings = sum(m["n_postings"] for m in metrics_rows)
@@ -590,6 +590,10 @@ def compact_segments(
     :func:`..search.compressed.search_topk_multi`); this folds N of them
     back into one in a single shuffle over the already-compressed
     postings — no tokenize pass over the raw corpus.
+
+    Every table is a whole-dir overwrite and ``meta.json`` is written
+    last, as in :func:`build_index`: a killed compaction leaves no index
+    at ``out_dir``, and rerunning it rewrites every table.
     """
     cfg = cfg or BuildConfig()
     paths = IndexPaths(out_dir)
@@ -602,6 +606,7 @@ def compact_segments(
     if any((float(m["k1"]), float(m["b"]))
            != (cfg.params.k1, cfg.params.b) for m in metas):
         raise ValueError("segments disagree with target BM25 params")
+    commit.remove(paths.meta)  # an old index here stops being one first
     n_docs = sum(int(m["n_docs"]) for m in metas)
     avgdl = (sum(float(m["avgdl"]) * int(m["n_docs"]) for m in metas)
              / max(n_docs, 1))
@@ -613,7 +618,7 @@ def compact_segments(
         part = spark.read.parquet(IndexPaths(d).doc_stats)
         ds = part if ds is None else ds.unionByName(
             part, allowMissingColumns=True)
-    ds.write.mode("overwrite").parquet(paths.doc_stats)
+    commit.overwrite(ds, paths.doc_stats)
 
     # terms dim: union-distinct, re-bucketed for the target layout
     td = None
@@ -621,12 +626,10 @@ def compact_segments(
         part = spark.read.parquet(IndexPaths(d).terms).select(
             "term", "term_id")
         td = part if td is None else td.unionByName(part)
-    (
+    commit.overwrite(
         td.distinct()
-        .withColumn("tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets))
-        .write.mode("overwrite").partitionBy("tb").parquet(paths.terms)
-    )
-    open(os.path.join(paths.terms, "_SUCCESS"), "a").close()
+        .withColumn("tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets)),
+        paths.terms, ["tb"])
 
     # positions carry through only when EVERY segment has them —
     # a partial sidecar would silently miss phrase matches in the
@@ -645,8 +648,6 @@ def compact_segments(
         "fingerprint": fingerprint,
         "has_positions": has_pos,
     }
-    with open(paths.meta, "w") as f:
-        json.dump(meta, f, indent=1)
 
     if has_pos:
         # disjoint doc sets -> plain union; only tb changes under the
@@ -656,12 +657,10 @@ def compact_segments(
             part = spark.read.parquet(IndexPaths(d).positions).select(
                 "term_id", "doc_id", "positions")
             pos = part if pos is None else pos.unionByName(part)
-        (
+        commit.overwrite(
             pos.withColumn(
-                "tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets))
-            .write.mode("overwrite").partitionBy("tb")
-            .parquet(paths.positions)
-        )
+                "tb", term_bucket_of_id(F.col("term_id"), cfg.n_buckets)),
+            paths.positions, ["tb"])
 
     # decoded postings stream: one row per (term, doc) posting.
     # ONE decode_blocks_bulk call per Arrow batch — the bulk API's
@@ -707,14 +706,11 @@ def compact_segments(
         .withColumn("salt", salt_expr(F.col("doc_id"), cfg.n_ranges))
     )
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     encoder = _make_encoder(avgdl, cfg.params, cfg.block_size,
                             pre_aggregated=True)
-    (
-        flat.groupBy("tb", "salt")
-        .applyInArrow(encoder, schema=BLOCKS_SCHEMA)
-        .write.mode("overwrite").partitionBy("tb").parquet(paths.postings)
-    )
+    commit.overwrite(
+        flat.groupBy("tb", "salt").applyInArrow(encoder, schema=BLOCKS_SCHEMA),
+        paths.postings, ["tb"])
 
     written = spark.read.parquet(paths.postings).select(
         "tb", "term_id", "n_docs", "sum_tf")
@@ -722,14 +718,14 @@ def compact_segments(
     # broadcast it (see build_index term_stats rationale)
     terms_dim = spark.read.parquet(paths.terms).select(
         "tb", "term", "term_id")
-    (
+    commit.overwrite(
         written.groupBy("tb", "term_id")
         .agg(F.sum("n_docs").alias("df"), F.sum("sum_tf").alias("cf"))
         .join(terms_dim, ["tb", "term_id"])
-        .select("tb", "term", "term_id", "df", "cf")
-        .write.mode("overwrite").partitionBy("tb").parquet(paths.term_stats)
-    )
+        .select("tb", "term", "term_id", "df", "cf"),
+        paths.term_stats, ["tb"])
     n_postings = written.agg(F.sum("n_docs")).collect()[0][0] or 0
+    commit.write_json(paths.meta, meta)
     total = time.time() - t0
     return {
         **meta,

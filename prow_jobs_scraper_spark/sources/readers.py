@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from prow_jobs_scraper_spark import commit
+
 # S1 — the ProwJob JSON scan's fixed schema core (flattened JobDetails,
 # reference src/prowjobsscraper/event.py:62-75)
 JOB_EVENT_SCHEMA = T.StructType([
@@ -132,16 +134,6 @@ def parse_junit_xml(artifacts: DataFrame, xml_col: str = "content") -> DataFrame
     return artifacts.mapInPandas(op, schema=JUNIT_STEP_SCHEMA)
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str],
-                      mode: str = "overwrite") -> None:
-    """S7/S9-shaped sink: partition-granular idempotent write (dynamic
-    partition overwrite = the upsert-by-deterministic-key analog of
-    event.py:204-214)."""
-    spark = df.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-
-
 def _partition_columns(path: str) -> list[str]:
     """Discover hive-style partition columns from the directory layout."""
     import os  # noqa: PLC0415
@@ -161,27 +153,8 @@ def _partition_columns(path: str) -> list[str]:
         p = os.path.join(p, subs[0])
 
 
-def recover_table(path: str) -> bool:
-    """Heal an unpartitioned table whose staged swap crashed mid-way.
-
-    Two crash states exist:
-    - ``path`` missing, ``path + ".old"`` present — the crash hit between
-      the two renames; the data is intact under .old: restore it.
-    - BOTH present — the swap completed but the final ``rmtree(.old)``
-      didn't; the live table is authoritative: drop the stale .old (if it
-      survived, a later swap's ``move(path, path + ".old")`` would nest
-      the live table INSIDE it, wedging recovery).
-    Returns True if a recovery ran."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
-    if not os.path.exists(path) and os.path.exists(path + ".old"):
-        shutil.move(path + ".old", path)
-        return True
-    if os.path.exists(path) and os.path.exists(path + ".old"):
-        shutil.rmtree(path + ".old")
-        return True
-    return False
+# the staged-swap crash recovery every rewrite below runs on entry
+recover_table = commit.recover
 
 
 def _locate_partition_dir(path: str, part_cols: list[str],
@@ -218,12 +191,12 @@ def upsert_by_key(spark: SparkSession, path: str, updates: DataFrame,
     partition-scoped rewrite.
 
     Rows in ``updates`` replace existing rows with the same key and are
-    inserted otherwise. Only partitions receiving updates are rewritten
-    (dynamic partition overwrite of a staged merge); every other
-    partition's files are untouched. Idempotent: replaying the same
-    updates yields the same table, so a crashed run is completed by
-    rerunning — the same recovery contract as :func:`delete_where`.
-    Unpartitioned tables use the same staged swap as delete_where.
+    inserted otherwise. Only partitions receiving updates are rewritten;
+    every other partition's files are untouched. The merged rows are
+    committed exactly as :func:`delete_where` commits its kept rows
+    (:func:`_commit_partitioned` / :func:`_commit_unpartitioned`), so the
+    crash contract is the same: idempotent, a crashed run is completed
+    by rerunning it.
 
     ``updates`` must carry the table's full schema (including partition
     columns — an updated row that moves partitions lands in its new
@@ -232,63 +205,37 @@ def upsert_by_key(spark: SparkSession, path: str, updates: DataFrame,
     partition keys stable under update, as the reference's weekly
     indices do).
     """
-    import shutil  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
     recover_table(path)
     part_cols = _partition_columns(path)
     df = spark.read.parquet(path)
     cols = df.columns
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        if part_cols:
-            affected = updates.select(*part_cols).distinct()
-            existing = df.join(F.broadcast(affected), part_cols, "left_semi")
-            keep = existing.join(
-                updates.select(*key_cols).distinct(), key_cols, "left_anti")
-            merged = keep.select(*cols).unionByName(updates.select(*cols))
-            merged.write.mode("overwrite").partitionBy(*part_cols).parquet(
-                staging)
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic")
-            (spark.read.schema(merged.schema).parquet(staging)
-                 .write.mode("overwrite").partitionBy(*part_cols)
-                 .parquet(path))
-        else:
-            merged = (
-                df.join(updates.select(*key_cols).distinct(), key_cols,
-                        "left_anti")
-                .select(*cols).unionByName(updates.select(*cols))
-            )
-            merged.write.mode("overwrite").parquet(staging)
-            shutil.move(path, path + ".old")
-            shutil.move(staging, path)
-            shutil.rmtree(path + ".old")
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    if part_cols:
+        affected = updates.select(*part_cols).distinct().collect()
+        aff_df = spark.createDataFrame(
+            affected, df.select(*part_cols).schema)
+        df = df.join(F.broadcast(aff_df), part_cols, "left_semi")
+    merged = (
+        df.join(updates.select(*key_cols).distinct(), key_cols, "left_anti")
+        .select(*cols).unionByName(updates.select(*cols))
+    )
+    if part_cols:
+        _commit_partitioned(spark, path, part_cols, merged, affected)
+    else:
+        _commit_unpartitioned(path, merged)
 
 
 def delete_where(spark: SparkSession, path: str, condition: str) -> None:
     """S8: bulk delete (reference src/elasticsearch_cleanup/main.py:30-51)
     as a partition-scoped anti-filter rewrite — the Iceberg
-    ``DELETE FROM`` analog with no table-format jars in this sandbox.
+    ``DELETE FROM`` analog with no table-format jars.
 
     Partitioned tables: only partitions that actually contain matching
-    rows are rewritten. Kept rows are staged to a scratch dir first
-    (breaking the read-from/write-to-same-path cycle), then committed via
-    dynamic partition overwrite — Spark's commit protocol swaps each
-    partition's contents only after its staged files are complete, so a
-    crash leaves every partition with either its old or its new rows,
-    never neither, and untouched partitions are never rewritten (their
-    files stay byte-identical). Partitions the delete empties entirely
-    produce no staged rows, so they are removed explicitly afterwards.
-    The whole operation is an idempotent anti-filter: rerunning after any
-    crash completes the delete.
-
-    Unpartitioned tables: staged swap (write .staging → move live table
-    aside to .old → move .staging in → drop .old). Live data is deleted
-    only after the replacement is fully in place; a crash between the two
-    renames is healed by :func:`recover_table` (called on entry).
+    rows are rewritten, through :func:`_commit_partitioned`; untouched
+    partitions' files stay byte-identical. Unpartitioned tables are
+    replaced whole through :func:`_commit_unpartitioned`. Both commit
+    through :mod:`..commit`, and :func:`recover_table` on entry heals a
+    swap a crash cut short. The whole operation is an idempotent
+    anti-filter: rerunning after any crash completes the delete.
     """
     recover_table(path)
     part_cols = _partition_columns(path)
@@ -313,55 +260,38 @@ def _commit_partitioned(spark: SparkSession, path: str,
                         part_cols: list[str], keep: DataFrame,
                         affected: list) -> None:
     """Commit ``keep`` as the new contents of the partitions listed in
-    ``affected`` (staged write → dynamic partition overwrite → explicit
-    removal of partitions the rewrite emptied). Shared by
-    :func:`delete_where` and :func:`cleanup_duplicates`; crash-safety
-    contract documented on delete_where."""
-    import shutil  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
+    ``affected``. Shared by :func:`delete_where`, :func:`upsert_by_key`
+    and :func:`cleanup_duplicates`.
 
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        keep.write.mode("overwrite").partitionBy(*part_cols).parquet(
-            staging)
-        spark.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
+    ``keep`` is staged to a scratch dir first (breaking the
+    read-from/write-to-same-path cycle), then committed as a partition
+    overwrite: each partition gets its old or its new rows, never
+    neither, and partitions outside ``affected`` are never rewritten.
+    Partitions the rewrite empties produce no staged rows, so they are
+    removed explicitly afterwards; on a rerun after a crash there they
+    are re-affected and re-emptied."""
+    with commit.staged(path) as staging:
+        commit.overwrite(keep, staging, part_cols)
         # explicit schema: a delete that empties every affected
         # partition stages zero files, which breaks schema inference
         staged = spark.read.schema(keep.schema).parquet(staging)
-        staged.write.mode("overwrite").partitionBy(*part_cols).parquet(
-            path)
-        # partitions the delete emptied entirely: in `affected`, not
-        # in staging — their old files still exist; remove them (on a
-        # rerun after a crash here they are re-affected and re-empty)
+        commit.overwrite_partitions(staged, path, part_cols)
         kept = {tuple(r) for r in
                 staged.select(*part_cols).distinct().collect()}
-        for row in affected:
-            if tuple(row) not in kept:
-                # located via listdir + unescape, and rmtree fails
-                # loudly — a silently-missed dir would resurrect the
-                # deleted rows
-                shutil.rmtree(
-                    _locate_partition_dir(path, part_cols, tuple(row)))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        # located via listdir + unescape, which fails loudly — a
+        # silently-missed dir would resurrect the deleted rows
+        commit.remove(*(_locate_partition_dir(path, part_cols, tuple(r))
+                        for r in affected if tuple(r) not in kept))
 
 
 def _commit_unpartitioned(path: str, keep: DataFrame) -> None:
-    """Staged swap of an unpartitioned table (write .staging → move live
-    aside → move .staging in → drop .old); crash states are healed by
-    :func:`recover_table` on the next entry."""
-    import shutil  # noqa: PLC0415
-    import uuid  # noqa: PLC0415
-
-    staging = f"{path}.staging-{uuid.uuid4().hex[:8]}"
-    try:
-        keep.write.mode("overwrite").parquet(staging)
-        shutil.move(path, path + ".old")
-        shutil.move(staging, path)
-        shutil.rmtree(path + ".old")
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    """Replace an unpartitioned table by ``keep``: staged write, then a
+    directory swap through ``.old`` (live data is deleted only after the
+    replacement is in place); :func:`recover_table` heals the crash
+    states on the next entry."""
+    with commit.staged(path) as staging:
+        commit.overwrite(keep, staging)
+        commit.swap_dir(staging, path)
 
 
 def cleanup_duplicates(

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from prow_jobs_scraper_spark import commit
+
 TRANSCRIPTS_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
     "tool string, ts timestamp"
@@ -45,10 +47,8 @@ def incremental_ingest(
     )
 
     def write_batch(batch: DataFrame, batch_id: int):
-        (
-            batch.withColumn("ingest_batch", F.lit(batch_id))
-            .write.mode("append").parquet(staging_dir)
-        )
+        commit.append(batch.withColumn("ingest_batch", F.lit(batch_id)),
+                      staging_dir)
 
     return (
         stream.writeStream.foreachBatch(write_batch)
@@ -186,9 +186,11 @@ def ingest_and_index_tick(
        identical to a monolithic index (their global-stats rule).
 
     Crash-safe: the segment dir name is derived from the batch-id range
-    it covers, build_index resumes per-bucket, and the manifest is
-    written AFTER the segment commits — a rerun of a torn tick rebuilds
-    the same segment dir (resumed, idempotent) and then registers it.
+    it covers, build_index resumes per-bucket and commits the segment by
+    writing its ``meta.json`` last, and ``segments.json`` is replaced
+    atomically (:func:`..commit.write_json`) only AFTER that — a rerun of
+    a torn tick rebuilds the same segment dir (resumed, idempotent) and
+    then registers it; until then readers see the previous manifest.
     Returns {"segments": [...], "n_new_turns": int, "new_segment": str|None}.
     """
     import json as _json
@@ -231,20 +233,10 @@ def ingest_and_index_tick(
                           build_config or BuildConfig())
     manifest["segments"].append(seg_dir)
     manifest["indexed_batches"].extend(new_batches)
-    _write_manifest(manifest_path, manifest)
+    commit.write_json(manifest_path, manifest)
     return {"segments": list(manifest["segments"]),
             "n_new_turns": int(metrics["n_docs"]),
             "new_segment": seg_dir}
-
-
-def _write_manifest(path: str, manifest: dict) -> None:
-    import json as _json
-    import os as _os
-
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(manifest, f)
-    _os.replace(tmp, path)  # atomic swap: readers see old or new, never torn
 
 
 def compact_tick(
@@ -261,15 +253,15 @@ def compact_tick(
     monolithic build, pytest-gated there).
 
     Crash-safe ordering: the compacted index is built in a fresh
-    ``compacted_<n>`` dir first, the manifest is atomically swapped to
-    point at it, and only then are the old segment dirs deleted — a
-    crash at any point leaves a manifest whose every entry is a
-    complete, queryable index. Returns {"segments": [...],
-    "compacted": bool}.
+    ``compacted_<n>`` dir first (its ``meta.json`` written last), the
+    manifest is atomically replaced to point at it
+    (:func:`..commit.write_json`), and only then are the old segment
+    dirs deleted (:func:`..commit.remove`) — a crash at any point leaves
+    a manifest whose every entry is a complete, queryable index.
+    Returns {"segments": [...], "compacted": bool}.
     """
     import json as _json
     import os as _os
-    import shutil as _shutil
 
     from prow_jobs_scraper_spark.index.build import (  # noqa: PLC0415
         BuildConfig,
@@ -292,7 +284,6 @@ def compact_tick(
                      build_id=f"compact-{gen}")
     manifest["segments"] = [out_dir]
     manifest["compaction_gen"] = gen
-    _write_manifest(manifest_path, manifest)
-    for d in segs:  # old dirs removable only AFTER the manifest swap
-        _shutil.rmtree(d, ignore_errors=True)
+    commit.write_json(manifest_path, manifest)
+    commit.remove(*segs)  # old dirs removable only AFTER the manifest swap
     return {"segments": [out_dir], "compacted": True}

@@ -148,7 +148,8 @@ def test_ivf_topk_recall_and_exactness(spark):
     assert len(got & want) >= 5  # recall@10 >= 0.5 with 2/8 probes
 
 
-def test_persisted_lsh_index_matches_oneshot(embeddings, tmp_path):
+def test_persisted_lsh_index_matches_oneshot(embeddings, transcripts,
+                                            tmp_path):
     # build/probe split must return exactly what the one-shot bucketed
     # path computes (same planes, same probe set, same rescoring)
     pdf = embeddings.toPandas()
@@ -162,6 +163,32 @@ def test_persisted_lsh_index_matches_oneshot(embeddings, tmp_path):
                                n_planes=8, multi_probe=2).collect()
     assert [(r["vec_id"], r["cosine"]) for r in got] == \
            [(r["vec_id"], r["cosine"]) for r in want]
+
+    # the index build and a partitioned delete set their overwrite mode
+    # per write, never on the session: a later whole-table overwrite
+    # (this LSH rebuild under another seed) still replaces every bucket
+    # instead of keeping the first build's buckets next to the new ones
+    from prow_jobs_scraper_spark.index.build import BuildConfig, build_index
+    from prow_jobs_scraper_spark.sources.readers import delete_where
+
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(mode_key)
+    spark.conf.set(mode_key, "static")
+    try:
+        build_index(spark, transcripts, str(tmp_path / "idx"),
+                    BuildConfig(n_ranges=2, n_buckets=2))
+        part = str(tmp_path / "part")
+        spark.range(30).select(
+            "id", (F.col("id") % 3).cast("int").alias("kind")
+        ).write.partitionBy("kind").parquet(part)
+        delete_where(spark, part, "kind = 1 AND id < 10")
+        assert spark.conf.get(mode_key).lower() == "static"
+
+        S.build_lsh_index(embeddings, d, n_planes=8, seed=2)
+        assert (spark.read.parquet(f"{d}/table").count()
+                == embeddings.count())
+    finally:
+        spark.conf.set(mode_key, saved)
 
 
 def test_persisted_ivf_index_matches_oneshot(embeddings, tmp_path):

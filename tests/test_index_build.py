@@ -197,6 +197,86 @@ def test_noop_rerun(spark, transcripts, tmp_path):
     assert m["resumed"] is True and m["n_new_buckets"] == 0
 
 
+def test_killed_build_is_unreadable_then_resumes(spark, transcripts,
+                                                 tmp_path, monkeypatch):
+    # a build killed in its last chunk has committed bucket 0 but not
+    # meta.json: the dir is not an index yet, so a read raises instead
+    # of answering (and caching) from the partial postings; the resumed
+    # build then answers like a clean one in the same process
+    import os  # noqa: PLC0415
+    import shutil  # noqa: PLC0415
+
+    from prow_jobs_scraper_spark.index import build
+    from prow_jobs_scraper_spark.search.compressed import search_topk
+
+    cfg = BuildConfig(n_ranges=2, n_buckets=2, n_chunks=2)
+    clean = str(tmp_path / "clean")
+    build_index(spark, transcripts, clean, cfg)
+    term = (spark.read.parquet(f"{clean}/term_stats").where("tb = 1")
+            .orderBy(F.desc("df"), "term").first()["term"])
+
+    make_encoder = build._make_encoder
+
+    def killed_at_bucket_1(*args, **kwargs):
+        encode = make_encoder(*args, **kwargs)
+
+        def kill(key, tbl):
+            tb = key[0].as_py() if hasattr(key[0], "as_py") else key[0]
+            if int(tb) == 1:
+                raise RuntimeError("killed in bucket 1")
+            return encode(key, tbl)
+        return kill
+
+    d = str(tmp_path / "killed")
+    monkeypatch.setattr(build, "_make_encoder", killed_at_bucket_1)
+    with pytest.raises(Exception, match="killed in bucket 1"):
+        build_index(spark, transcripts, d, cfg)
+    assert not os.path.exists(f"{d}/meta.json")
+    # a meta.json left by a build that wrote it first is withdrawn
+    # before the missing buckets are written
+    shutil.copy(f"{clean}/meta.json", f"{d}/meta.json")
+    with pytest.raises(Exception, match="killed in bucket 1"):
+        build_index(spark, transcripts, d, cfg)
+    monkeypatch.undo()
+    assert not os.path.exists(f"{d}/meta.json")
+    with pytest.raises(FileNotFoundError):
+        search_topk(spark, d, term, 5).collect()
+
+    m = build_index(spark, transcripts, d, cfg)
+    assert m["resumed"] is True and m["n_new_buckets"] == 1
+    want = search_topk(spark, clean, term, 5).toPandas()
+    got = search_topk(spark, d, term, 5).toPandas()
+    assert len(want) == 5
+    pd.testing.assert_frame_equal(got, want)
+
+
+def test_kill_at_meta_commit_leaves_no_index_then_rerun_commits(
+        spark, transcripts, tmp_path, monkeypatch):
+    # meta.json is the index's last commit and it is atomic: a kill
+    # inside it leaves no meta.json (never a torn one); the rerun finds
+    # every bucket committed, encodes nothing and writes meta.json
+    import json  # noqa: PLC0415
+    import os  # noqa: PLC0415
+
+    from prow_jobs_scraper_spark import commit
+
+    def killed(path, obj):
+        raise RuntimeError("killed at the meta commit")
+
+    d = str(tmp_path / "meta_kill")
+    cfg = BuildConfig(n_ranges=2, n_buckets=2)
+    monkeypatch.setattr(commit, "write_json", killed)
+    with pytest.raises(RuntimeError, match="meta commit"):
+        build_index(spark, transcripts, d, cfg)
+    monkeypatch.undo()
+    assert not os.path.exists(f"{d}/meta.json")
+
+    m = build_index(spark, transcripts, d, cfg)
+    assert m["resumed"] is True and m["n_new_buckets"] == 0
+    with open(f"{d}/meta.json") as f:
+        assert json.load(f)["n_docs"] == m["n_docs"]
+
+
 def test_compact_segments_equals_monolithic_build(spark, transcripts,
                                                   tmp_path):
     # Lucene-style segment merge: two independently-built segments

@@ -339,3 +339,71 @@ def test_compact_tick_folds_segments_and_search_is_identical(
     want = bm25_oracle_topk(docs, "spark agent", 10)
     assert got["doc_id"].tolist() == want["doc_id"].tolist()
     np.testing.assert_allclose(got["score"], want["score"], rtol=1e-9)
+
+
+def test_kill_at_manifest_commit_keeps_previous_segments(
+        spark, transcripts, tmp_path, monkeypatch):
+    """segments.json is replaced atomically and only after the segment
+    (or the compacted index) is committed: a kill at that write leaves
+    the previous manifest in place, loadable and pointing at complete
+    indexes; the rerun registers what the killed run built."""
+    from prow_jobs_scraper_spark import commit
+    from prow_jobs_scraper_spark.index.build import BuildConfig
+    from prow_jobs_scraper_spark.search.compressed import search_topk_multi
+    from prow_jobs_scraper_spark.streaming.incremental import (
+        compact_tick,
+        ingest_and_index_tick,
+    )
+
+    src = str(tmp_path / "ksrc")
+    work = str(tmp_path / "kwork")
+    manifest_path = os.path.join(work, "segments.json")
+    cfg = BuildConfig(n_ranges=2, n_buckets=2)
+    write_json = commit.write_json
+
+    def killed(path, obj):
+        if path == manifest_path:
+            raise RuntimeError("killed at the manifest commit")
+        write_json(path, obj)
+
+    def manifest():
+        with open(manifest_path) as f:
+            return json.load(f)
+
+    def readable(m):
+        assert all(os.path.exists(os.path.join(d, "meta.json"))
+                   for d in m["segments"])
+        search_topk_multi(spark, m["segments"], "spark agent", 5).collect()
+
+    cut = "2025-06-16"
+    transcripts.where(f"ts < '{cut}'").write.mode("append").parquet(src)
+    ingest_and_index_tick(spark, src, work, cfg)
+    first = manifest()
+
+    # tick: the new segment is built, its registration is killed
+    transcripts.where(f"ts >= '{cut}'").write.mode("append").parquet(src)
+    monkeypatch.setattr(commit, "write_json", killed)
+    with pytest.raises(RuntimeError, match="manifest commit"):
+        ingest_and_index_tick(spark, src, work, cfg)
+    monkeypatch.undo()
+    assert manifest() == first
+    readable(first)
+    r = ingest_and_index_tick(spark, src, work, cfg)
+    assert r["new_segment"] is not None and len(r["segments"]) == 2
+    assert manifest()["segments"] == r["segments"]
+    readable(manifest())
+
+    # compaction: the folded index is built, the manifest swap is killed,
+    # so no old segment may be deleted yet
+    second = manifest()
+    monkeypatch.setattr(commit, "write_json", killed)
+    with pytest.raises(RuntimeError, match="manifest commit"):
+        compact_tick(spark, work, max_segments=1, build_config=cfg)
+    monkeypatch.undo()
+    assert manifest() == second
+    readable(second)
+    rc = compact_tick(spark, work, max_segments=1, build_config=cfg)
+    assert rc["compacted"] and len(rc["segments"]) == 1
+    assert manifest()["segments"] == rc["segments"]
+    assert all(not os.path.exists(d) for d in second["segments"])
+    readable(manifest())
