@@ -259,13 +259,14 @@ def cmd_tick(args) -> dict:
 
 
 def cmd_synth(args) -> dict:
+    from prow_jobs_scraper_spark import commit
     from prow_jobs_scraper_spark.synth import synth_transcripts
 
     spark = _spark(args)
     t0 = time.time()
-    synth_transcripts(
+    commit.overwrite(synth_transcripts(
         spark, args.n_turns, seed=args.seed, n_partitions=args.n_partitions
-    ).write.mode("overwrite").parquet(args.output)
+    ), args.output)
     n = spark.read.parquet(args.output).count()
     return {"output": args.output, "n_turns": n,
             "elapsed_sec": round(time.time() - t0, 3)}
@@ -294,6 +295,7 @@ def cmd_textqc(args) -> dict:
     scrubbing, and (with --benchmark) 13-gram contamination flags —
     the one-pass curation features a data pipeline computes before
     training. Writes the augmented table; prints one JSON summary."""
+    from prow_jobs_scraper_spark import commit
     from prow_jobs_scraper_spark.operators.textqc import (
         contamination_check,
         language_id,
@@ -320,7 +322,7 @@ def cmd_textqc(args) -> dict:
             flags.select(args.id_col, "n_contaminated",
                          "contaminated_frac", "is_contaminated"),
             args.id_col, "left")
-    out.write.mode("overwrite").parquet(args.output)
+    commit.overwrite(out, args.output)
     res = spark.read.parquet(args.output)
     stats["n_docs"] = res.count()
     if args.benchmark:

@@ -14,16 +14,22 @@ Two paths, same contract (query vector -> top-k nearest by cosine):
 
 Design for 100 TB: embeddings live columnar (Parquet array<float>);
 signatures are one int64 per row; the LSH table is written bucketed so a
-probe reads only matching files.
+probe reads only matching files. A persisted index (LSH, IVF, IVF-PQ)
+commits like the inverted index (:mod:`..commit`): its tables first, its
+``meta.json`` last, and a loader refuses a directory without one.
 """
 
 from __future__ import annotations
+
+import os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from prow_jobs_scraper_spark import commit
 
 
 def _norm_expr(vec_col):
@@ -126,6 +132,29 @@ def _query_probes(planes: np.ndarray, query_vec: list[float],
     return list(probes)
 
 
+def _commit_vector_index(path: str, tables: list, meta: dict) -> dict:
+    """Write a vector index on the commit protocol: any old ``meta.json``
+    is withdrawn first, each ``(name, frame, partition cols)`` table is a
+    whole-table overwrite, and ``meta`` is written as ``meta.json`` LAST —
+    a build killed part-way leaves no loadable index, never a table from
+    one build beside the sidecars of another."""
+    commit.remove(os.path.join(path, "meta.json"))
+    for name, frame, cols in tables:
+        commit.overwrite(frame, os.path.join(path, name), cols)
+    commit.write_json(os.path.join(path, "meta.json"), meta)
+    return meta
+
+
+def _read_committed(spark, path: str, name: str) -> list:
+    """The rows of sidecar ``name`` of the committed vector index at
+    ``path``; ``FileNotFoundError`` when no build committed there."""
+    if not os.path.exists(os.path.join(path, "meta.json")):
+        raise FileNotFoundError(
+            f"no committed vector index at {path!r} (meta.json missing: "
+            f"the build did not finish — rerun it)")
+    return spark.read.parquet(os.path.join(path, name)).collect()
+
+
 def build_lsh_index(embeddings: DataFrame, path: str, n_planes: int = 12,
                     seed: int = 42, id_col: str = "vec_id",
                     vec_col: str = "embedding") -> dict:
@@ -144,20 +173,20 @@ def build_lsh_index(embeddings: DataFrame, path: str, n_planes: int = 12,
     dim = len(embeddings.select(vec_col).first()[0])
     planes = hyperplanes(dim, n_planes, seed)
     sigs = lsh_signatures(embeddings, planes, id_col, vec_col)
-    (sigs.select(id_col, vec_col, "lsh_bucket")
-         .write.mode("overwrite").partitionBy("lsh_bucket")
-         .parquet(f"{path}/table"))
-    meta = spark.createDataFrame(
+    planes_df = spark.createDataFrame(
         [(int(i), [float(x) for x in planes[i]]) for i in range(n_planes)],
         "plane_id int, w array<double>")
-    meta.write.mode("overwrite").parquet(f"{path}/planes")
-    return {"n_planes": n_planes, "seed": seed, "dim": dim}
+    return _commit_vector_index(path, [
+        ("table", sigs.select(id_col, vec_col, "lsh_bucket"),
+         ["lsh_bucket"]),
+        ("planes", planes_df, [])],
+        {"n_planes": n_planes, "seed": seed, "dim": dim})
 
 
 def load_lsh_planes(spark, path: str) -> np.ndarray:
     """Load a persisted LSH index's hyperplanes (KBs — cache client-side
     to make repeated probes a single partition-pruned Spark job each)."""
-    rows = spark.read.parquet(f"{path}/planes").collect()
+    rows = _read_committed(spark, path, "planes")
     return np.stack([np.asarray(r["w"], dtype=np.float64)
                      for r in sorted(rows, key=lambda r: r["plane_id"])])
 
@@ -330,20 +359,20 @@ def build_ivf_index(embeddings: DataFrame, path: str, n_lists: int = 16,
         C = kmeans_refine(embeddings, C, kmeans_iters, vec_col)
         assigned = embeddings.withColumn(
             "ivf_list", _assign_udf(C)(F.col(vec_col)))
-    (assigned.select(id_col, vec_col, "ivf_list")
-             .write.mode("overwrite").partitionBy("ivf_list")
-             .parquet(f"{path}/table"))
     cent = spark.createDataFrame(
         [(int(i), [float(x) for x in C[i]]) for i in range(C.shape[0])],
         "list_id int, c array<double>")
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
-    return {"n_lists": int(C.shape[0]), "seed": seed, "dim": int(C.shape[1])}
+    return _commit_vector_index(path, [
+        ("table", assigned.select(id_col, vec_col, "ivf_list"),
+         ["ivf_list"]),
+        ("centroids", cent, [])],
+        {"n_lists": int(C.shape[0]), "seed": seed, "dim": int(C.shape[1])})
 
 
 def load_ivf_centroids(spark, path: str) -> np.ndarray:
     """Load a persisted IVF index's centroid matrix (KBs — cache
     client-side so repeated probes are one Spark job each)."""
-    rows = spark.read.parquet(f"{path}/centroids").collect()
+    rows = _read_committed(spark, path, "centroids")
     return np.stack([np.asarray(r["c"], dtype=np.float64)
                      for r in sorted(rows, key=lambda r: r["list_id"])])
 
@@ -478,25 +507,24 @@ def build_ivfpq_index(embeddings: DataFrame, path: str, n_lists: int = 16,
             codes[:, j] = d.argmin(1).astype(np.uint8)
         return pd.Series([c.tobytes() for c in codes])
 
-    (assigned
-     .withColumn("pq_code", encode(F.col(vec_col), F.col("ivf_list")))
-     .select(id_col, vec_col, "pq_code", "ivf_list")
-     .write.mode("overwrite").partitionBy("ivf_list")
-     .parquet(f"{path}/table"))
     cent = spark.createDataFrame(
         [(int(i), [float(x) for x in C[i]]) for i in range(C.shape[0])],
         "list_id int, c array<double>")
-    cent.write.mode("overwrite").parquet(f"{path}/centroids")
     bk = spark.createDataFrame(
         [(int(j), int(c), [float(x) for x in books[j, c]])
          for j in range(m) for c in range(256)],
         "sub int, code int, w array<double>")
-    bk.write.mode("overwrite").parquet(f"{path}/codebooks")
-    return {"n_lists": int(C.shape[0]), "m": m, "dsub": dsub, "seed": seed}
+    return _commit_vector_index(path, [
+        ("table", assigned
+         .withColumn("pq_code", encode(F.col(vec_col), F.col("ivf_list")))
+         .select(id_col, vec_col, "pq_code", "ivf_list"), ["ivf_list"]),
+        ("centroids", cent, []),
+        ("codebooks", bk, [])],
+        {"n_lists": int(C.shape[0]), "m": m, "dsub": dsub, "seed": seed})
 
 
 def load_pq_codebooks(spark, path: str) -> np.ndarray:
-    rows = spark.read.parquet(f"{path}/codebooks").collect()
+    rows = _read_committed(spark, path, "codebooks")
     m = max(int(r["sub"]) for r in rows) + 1
     dsub = len(rows[0]["w"])
     books = np.zeros((m, 256, dsub))

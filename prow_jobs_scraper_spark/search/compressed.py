@@ -3,8 +3,11 @@
 One match top-k path serves every entry point. A single index is a
 segment list of one (:func:`_load_segments`), so :func:`search_topk`,
 :func:`search_topk_filtered` and :func:`search_topk_multi` are short
-wrappers over :func:`_match_topk`, and :func:`search_topk_many` runs the
-same planner and kernel per query over one shared scan.
+wrappers over :func:`_match_topk`. Every posting read runs through one
+(segment, salt) group runner, :func:`_group_frame`, which takes a list
+of planned queries; a batch (:func:`search_topk_many`, the DSL's
+``_msearch``) is a list of many, cut per query by one window,
+:func:`_per_query_topk`.
 
 Query lifecycle (cf. SURVEY.md §3.2 "ours"):
 
@@ -17,12 +20,15 @@ Query lifecycle (cf. SURVEY.md §3.2 "ours"):
    missing terms drop — with their idf and rarity order;
 3. scan only the matching posting blocks (:func:`_segment_blocks`,
    again tb-pruned), each tagged with its segment;
-4. one distributed scoring pass grouped by ``(seg, salt)`` — every
-   term's postings were range-partitioned on the SAME doc-id ranges at
-   build time, so each group holds all query terms' postings for one
-   doc range of one segment: a co-partitioned merge with zero
-   replication; a metadata filter cogroups the allowed doc ids
-   (:func:`_segment_allowed`) with the blocks;
+4. one distributed scoring pass grouped by ``(seg, salt)``
+   (:func:`_group_frame`) — every term's postings were range-partitioned
+   on the SAME doc-id ranges at build time, so each group holds all
+   query terms' postings for one doc range of one segment: a
+   co-partitioned merge with zero replication. The postings are read
+   once for the union of every planned query's terms; each distinct
+   metadata filter cogroups its allowed doc ids
+   (:func:`_segment_allowed`) with the blocks, and the group's queries
+   share one block-decode cache;
 5. per-group numpy kernel :func:`_score_match_group`: one live term runs
    a block-max pruned scan in descending block-max order that stops
    once the k-th score exceeds the next block's upper bound; AND decodes
@@ -31,7 +37,8 @@ Query lifecycle (cf. SURVEY.md §3.2 "ours"):
    (searchsorted block skipping); OR is the MaxScore arm of
    :func:`_wand_bool_topk` with one should clause;
 6. local top-k per group → global ``orderBy(score desc, doc_id).limit(k)``
-   (TakeOrderedAndProject).
+   (TakeOrderedAndProject) for one query, or the per-query window of
+   :func:`_per_query_topk` for a batch.
 
 Every positional check (phrase at any slop, span_near, span_first,
 span_not) lives in one place, as Catalyst higher-order expressions. A
@@ -54,6 +61,7 @@ from __future__ import annotations
 
 import json
 import math
+from collections.abc import Callable
 from functools import reduce
 from typing import NamedTuple
 
@@ -89,6 +97,7 @@ _DF_CACHE_MAX_TERMS = 1 << 20  # per identity; queried terms only
 
 _K_ALL = 1 << 62  # no per-group cut: callers combine or verify every match
 _HITS = "doc_id long, score double"
+_ROWS = "query_id string, doc_id long, score double"
 _NO_IDS = np.empty(0, dtype=np.int64)
 _NO_SCORES = np.empty(0, dtype=np.float64)
 
@@ -604,27 +613,103 @@ def _segment_allowed(spark: SparkSession, dirs: list[str],
     return allowed
 
 
+class _Plan(NamedTuple):
+    """One query of a group pass: its id, the term ids whose postings it
+    reads, its doc_stats filter (SQL, or None) and its kernel
+    ``kernel(by_term, allowed, cache) -> (ids, scores)``."""
+
+    query_id: str
+    term_ids: list[int]
+    doc_filter: str | None
+    kernel: Callable
+
+
 def _group_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
-                 avgdl: float, term_ids: list[int], kernel,
-                 doc_filter: str | None = None) -> DataFrame:
-    """``(doc_id, score)`` rows of ``kernel(by_term, allowed)`` run on
-    every (segment, salt) group of the posting blocks of ``term_ids``.
-    ``doc_filter`` (SQL over doc_stats columns) cogroups each group's
-    SORTED allowed doc ids with its blocks — both sides carry the same
-    (seg, salt), so the cogroup is a co-partitioned merge; without a
-    filter ``allowed`` is None."""
-    groups = _segment_blocks(spark, dirs, metas, avgdl,
-                             term_ids).groupBy("seg", "salt")
+                 avgdl: float, plans: list[_Plan]) -> DataFrame:
+    """``(query_id, doc_id, score)`` rows of every plan's kernel, run on
+    every (segment, salt) group — the one group runner of the engine.
 
-    def score(pdf: pd.DataFrame, allowed=None) -> pd.DataFrame:
-        ids, scores = kernel(_by_term(pdf), allowed)
-        return pd.DataFrame({"doc_id": ids, "score": scores})
+    The posting blocks are read ONCE for the union of the plans' term
+    ids; each plan's kernel sees only its own terms' blocks, and a plan
+    with none of them in a group is skipped there. Each distinct
+    ``doc_filter`` (SQL over doc_stats columns) gets one pushed-down
+    doc_stats scan, tagged with a small int ``fid``; the union of those
+    allowed-id sets cogroups with the blocks — both sides carry the same
+    (seg, salt), so the cogroup is a co-partitioned merge — and a
+    filtered plan's kernel gets its filter's SORTED allowed ids (None
+    without a filter). Every plan of a group shares one block-decode
+    cache (:class:`_Postings`), so a block is decoded at most once there
+    however many queries read it."""
+    groups = _segment_blocks(
+        spark, dirs, metas, avgdl,
+        sorted({t for p in plans for t in p.term_ids})).groupBy("seg", "salt")
+    fid_of: dict[str, int] = {}
+    for p in plans:
+        if p.doc_filter is not None:
+            fid_of.setdefault(p.doc_filter, len(fid_of))
 
-    if doc_filter is None:
-        return groups.applyInPandas(lambda pdf: score(pdf), schema=_HITS)
-    allowed_df = _segment_allowed(spark, dirs, metas, doc_filter)
+    def run(pdf: pd.DataFrame, apdf: pd.DataFrame | None = None):
+        by_term = _by_term(pdf)
+        allowed_of = ({} if apdf is None else
+                      {int(f): _sorted_ids(g) for f, g in apdf.groupby("fid")})
+        cache: dict = {}
+        outs = []
+        for qid, tids, flt, kernel in plans:
+            mine = {t: by_term[t] for t in tids if t in by_term}
+            if not mine:
+                continue
+            allowed = (None if flt is None
+                       else allowed_of.get(fid_of[flt], _NO_IDS))
+            ids, scores = kernel(mine, allowed, cache)
+            if ids.size:
+                outs.append(pd.DataFrame(
+                    {"query_id": qid, "doc_id": ids, "score": scores}))
+        if not outs:
+            return pd.DataFrame({"query_id": pd.Series([], dtype="object"),
+                                 "doc_id": _NO_IDS, "score": _NO_SCORES})
+        return pd.concat(outs, ignore_index=True)
+
+    if not fid_of:
+        return groups.applyInPandas(lambda pdf: run(pdf), schema=_ROWS)
+    allowed_df = reduce(DataFrame.unionByName, [
+        _segment_allowed(spark, dirs, metas, flt).withColumn("fid", F.lit(fid))
+        for flt, fid in fid_of.items()])
     return groups.cogroup(allowed_df.groupBy("seg", "salt")).applyInPandas(
-        lambda pdf, apdf: score(pdf, _sorted_ids(apdf)), schema=_HITS)
+        run, schema=_ROWS)
+
+
+def _per_query_topk(rows: DataFrame, k_of: dict[str, int]) -> DataFrame:
+    """The one per-query top-k cut of every batch: ``(query_id, doc_id,
+    score)`` rows -> each query's best ``k_of[query_id]`` rows by (score
+    desc, doc_id), ordered by query_id, then rank — per query the rows
+    and tie order of the single-query ``orderBy(...).limit(k)``."""
+    k = F.create_map(*[x for qid, n in k_of.items()
+                       for x in (F.lit(qid), F.lit(n))])[F.col("query_id")]
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
+                                               F.asc("doc_id"))
+    return (rows.withColumn("__rn", F.row_number().over(w))
+            .where(F.col("__rn") <= k)
+            .orderBy("query_id", "__rn")
+            .select("query_id", "doc_id", "score"))
+
+
+def _conjunctive(operator: str) -> bool:
+    """A match ``operator``: "and" (True) or "or" (False); anything else
+    raises rather than silently running as OR."""
+    if operator not in ("and", "or"):
+        raise ValueError(
+            f"match operator {operator!r} not supported (use 'and' or 'or')")
+    return operator == "and"
+
+
+def _match_plan(query_id: str, match: _Match, k: int, avgdl: float,
+                metas: list[dict], doc_filter: str | None = None) -> _Plan:
+    """A planned match as a group-runner plan keeping each group's
+    local top-k (``k=_K_ALL`` keeps every match)."""
+    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    return _Plan(query_id, match.rarity, doc_filter,
+                 lambda by_term, allowed, cache: _score_match_group(
+                     by_term, match, k, avgdl, k1, b, allowed, cache))
 
 
 def _match_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
@@ -633,12 +718,10 @@ def _match_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
     """Per-group local top-k ``(doc_id, score)`` of one planned match —
     their union holds the global top-k; ``k=_K_ALL`` keeps every
     match."""
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
     return _group_frame(
-        spark, dirs, metas, avgdl, match.rarity,
-        lambda by_term, allowed: _score_match_group(
-            by_term, match, k, avgdl, k1, b, allowed),
-        doc_filter)
+        spark, dirs, metas, avgdl,
+        [_match_plan("", match, k, avgdl, metas, doc_filter)],
+    ).drop("query_id")
 
 
 def _match_topk(spark: SparkSession, index_dir: str | list[str],
@@ -646,6 +729,7 @@ def _match_topk(spark: SparkSession, index_dir: str | list[str],
                 doc_filter: str | None) -> DataFrame:
     """The one match top-k behind :func:`search_topk`,
     :func:`search_topk_filtered` and :func:`search_topk_multi`."""
+    conjunctive = _conjunctive(operator)
     dirs, metas, n_docs, avgdl = _load_segments(index_dir)
     terms = sorted(set(tokenize_text(query_text)))
     if not terms or n_docs == 0:
@@ -655,7 +739,7 @@ def _match_topk(spark: SparkSession, index_dir: str | list[str],
     # which term buckets to prune
     df_of = _df_stats_multi(spark, dirs, metas,
                             [term_id_py(t) for t in terms])
-    match = _plan_match(terms, df_of, n_docs, operator == "and")
+    match = _plan_match(terms, df_of, n_docs, conjunctive)
     if match is None:
         return spark.createDataFrame([], _HITS)
     return (_match_frame(spark, dirs, metas, avgdl, match, k, doc_filter)
@@ -746,6 +830,9 @@ def search_topk_multi(
                        doc_filter)
 
 
+_QUERY_KEYS = {"query_id", "query_text", "k", "operator", "doc_filter"}
+
+
 def search_topk_many(
     spark: SparkSession,
     index_dir: str,
@@ -757,108 +844,51 @@ def search_topk_many(
     "operator": "and"|"or", "doc_filter": str}, ...]`` (query ids
     unique; operator optional, default "and"; ``doc_filter`` optional —
     ES bool filter context per query, same semantics as
-    :func:`search_topk_filtered`; distinct filters each get ONE
-    pushed-down doc_stats scan shared by every query using them, and
-    the allowed ids cogroup with the blocks per salt). Returns
+    :func:`search_topk_filtered`; any other key raises). Returns
     ``(query_id, doc_id, score)`` — per query the same rows (and tie
     order) :func:`search_topk` / :func:`search_topk_filtered` return one
     at a time (tested equal).
 
-    Per-query execution pays ~2 Spark jobs of fixed overhead; a batch
-    amortizes that to 2 jobs TOTAL: one stats fetch for the union of all
-    query terms, one scoring pass over the union of matching posting
-    blocks. Each query runs the same planner and kernel as
-    :func:`search_topk`; inside a group they share one block-decode
-    cache, so a block is decoded at most once no matter how many
-    queries reference it.
+    A planner over the one group runner: one df fetch for the union of
+    all query terms, :func:`_plan_match` per query, then ONE
+    :func:`_group_frame` pass — one postings read, one pushed-down
+    doc_stats scan per distinct filter, one block-decode cache per group
+    shared by every query — and the one per-query cut,
+    :func:`_per_query_topk`.
     """
     k_of: dict[str, int] = {}
     for q in queries:
+        unknown = set(q) - _QUERY_KEYS
+        if unknown:
+            raise ValueError(f"unsupported query keys {sorted(unknown)} for "
+                             f"query_id {q.get('query_id')!r}")
         if q["query_id"] in k_of:
             raise ValueError(f"duplicate query_id {q['query_id']!r}")
         if int(q["k"]) < 0:
             raise ValueError(
                 f"k must be non-negative, got {q['k']} for query_id "
                 f"{q['query_id']!r}")
+        _conjunctive(q.get("operator", "and"))
         k_of[q["query_id"]] = int(q["k"])
     dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
-    schema = "query_id string, doc_id long, score double"
-    empty = spark.createDataFrame([], schema)
-    if n_docs == 0 or not queries:
-        return empty
-
     terms_of = {q["query_id"]: sorted(set(tokenize_text(q["query_text"])))
                 for q in queries}
     union_tids = sorted({term_id_py(t)
                          for ts in terms_of.values() for t in ts})
-    if not union_tids:
-        return empty
+    if n_docs == 0 or not union_tids:
+        return spark.createDataFrame([], _ROWS)
     df_of = _df_stats_multi(spark, dirs, metas, union_tids)
-
-    # distinct filter strings -> small int fid; queries share scans
-    fid_of: dict[str, int] = {}
-    plans = []  # (query_id, _Match, k, fid or None)
+    plans = []
     for q in queries:
-        qid = q["query_id"]
-        match = _plan_match(terms_of[qid], df_of, n_docs,
-                            q.get("operator", "and") == "and")
-        if match is None:
-            continue
-        flt = q.get("doc_filter")
-        fid = None if flt is None else fid_of.setdefault(flt, len(fid_of))
-        plans.append((qid, match, k_of[qid], fid))
+        match = _plan_match(terms_of[q["query_id"]], df_of, n_docs,
+                            _conjunctive(q.get("operator", "and")))
+        if match is not None:
+            plans.append(_match_plan(q["query_id"], match, int(q["k"]),
+                                     avgdl, metas, q.get("doc_filter")))
     if not plans:
-        return empty
-
-    groups = _segment_blocks(
-        spark, dirs, metas, avgdl,
-        sorted({t for _, m, _, _ in plans for t in m.rarity}),
-    ).groupBy("seg", "salt")
-
-    def score_group(pdf: pd.DataFrame,
-                    allowed_pdf: pd.DataFrame | None = None) -> pd.DataFrame:
-        by_term = _by_term(pdf)
-        allowed_of = ({} if allowed_pdf is None else
-                      {int(f): _sorted_ids(g)
-                       for f, g in allowed_pdf.groupby("fid")})
-        cache: dict = {}  # one block-decode cache for the group's queries
-        outs = []
-        for qid, match, k, fid in plans:
-            allowed = None if fid is None else allowed_of.get(fid, _NO_IDS)
-            ids, scores = _score_match_group(by_term, match, k, avgdl, k1,
-                                             b, allowed, cache)
-            if ids.size:
-                outs.append(pd.DataFrame(
-                    {"query_id": qid, "doc_id": ids, "score": scores}))
-        if not outs:
-            return pd.DataFrame({
-                "query_id": pd.Series([], dtype="object"),
-                "doc_id": pd.Series([], dtype="int64"),
-                "score": pd.Series([], dtype="float64"),
-            })
-        return pd.concat(outs, ignore_index=True)
-
-    if fid_of:
-        allowed_df = reduce(DataFrame.unionByName, [
-            _segment_allowed(spark, dirs, metas, flt)
-            .withColumn("fid", F.lit(fid)) for flt, fid in fid_of.items()])
-        local = groups.cogroup(allowed_df.groupBy("seg", "salt")) \
-            .applyInPandas(score_group, schema=schema)
-    else:
-        local = groups.applyInPandas(lambda pdf: score_group(pdf),
-                                     schema=schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    k_dim = spark.createDataFrame(list(k_of.items()), "query_id string, k int")
-    return (
-        local.withColumn("rn", F.row_number().over(w))
-        .join(F.broadcast(k_dim), "query_id")
-        .where(F.col("rn") <= F.col("k"))
-        .select("query_id", "doc_id", "score")
-        # the docstring promises search_topk's row ORDER too, not just the
-        # row set — the window filter + join above don't guarantee it
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+        return spark.createDataFrame([], _ROWS)
+    return _per_query_topk(_group_frame(spark, dirs, metas, avgdl, plans),
+                           k_of)
 
 
 def _exists_assignment(pos_cols: list, seq_keys: list, accept):

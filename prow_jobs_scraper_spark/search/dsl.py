@@ -256,16 +256,17 @@ from prow_jobs_scraper_spark.index.build import (
 from prow_jobs_scraper_spark.search.compressed import (
     _K_ALL,
     _Positional,
+    _ROWS,
+    _Plan,
     _TokenPositions,
-    _by_term,
     _df_stats_multi,
     _group_frame,
     _idf,
     _load_segments,
     _match_frame,
+    _per_query_topk,
     _plan_match,
     _positional_pred,
-    _segment_blocks,
     _verify_positions,
     _wand_bool_topk,
 )
@@ -3368,10 +3369,10 @@ def _compile_specs(
 
 
 def _parse_msearch(requests: list[dict]):
-    """Validate an _msearch body -> (qids, raw queries, specs, sizes)."""
+    """Validate an _msearch body -> (qids, specs, sizes)."""
     if not isinstance(requests, list) or not requests:
         raise DslError("_msearch needs a non-empty request list")
-    qids, queries_raw, specs, sizes = [], [], [], {}
+    qids, specs, sizes = [], [], {}
     for r in requests:
         if not isinstance(r, dict) or "query_id" not in r:
             raise DslError(f"bad _msearch request {r!r}")
@@ -3389,10 +3390,9 @@ def _parse_msearch(requests: list[dict]):
             raise DslError("size must be non-negative")
         q = r.get("query", {"match_all": {}})
         qids.append(qid)
-        queries_raw.append(q)
         specs.append(parse_query(q))
         sizes[qid] = k
-    return qids, queries_raw, specs, sizes
+    return qids, specs, sizes
 
 
 def search_dsl_many(
@@ -3417,10 +3417,9 @@ def search_dsl_many(
     rows). At 10^12 turns, n queries cost ~one query's scan instead of
     n scans — the same amortization :func:`..compressed.search_topk_many`
     gives the indexed path."""
-    qids, queries_raw, specs, sizes = _parse_msearch(requests)
+    qids, specs, sizes = _parse_msearch(requests)
     spark = docs_df.sparkSession
-    empty = spark.createDataFrame(
-        [], "query_id string, doc_id long, score double")
+    empty = spark.createDataFrame([], _ROWS)
     if ("doc_id" not in docs_df.columns
             and not {"conv_id", "turn_idx"} <= set(docs_df.columns)):
         raise DslError("search_dsl_many needs a doc_id (or "
@@ -3443,20 +3442,10 @@ def search_dsl_many(
         .select(F.col("q.query_id").alias("query_id"), "doc_id",
                 F.col("q.score").alias("score"))
     )
-    k_expr = F.create_map(
-        *[x for qid in qids for x in (F.lit(qid), F.lit(sizes[qid]))]
-    )[F.col("query_id")]
     # one sort law covers both: a pure-filter spec's score is the
     # constant 0.0, so (score desc, doc_id asc) degenerates to the
     # doc_id ordering search_dsl uses for unscored queries
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id"))
-    return (
-        rows.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k_expr)
-        .orderBy("query_id", "__rn")
-        .select("query_id", "doc_id", "score")
-    )
+    return _per_query_topk(rows, sizes)
 
 
 DEFAULT_SIZE = 10  # the ES `_search` default
@@ -7437,56 +7426,47 @@ def _live_clauses(clauses: list, df_of: dict, msm: int):
     return live_clauses
 
 
-def _search_dsl_pruned(
-    spark: SparkSession,
-    dirs: list[str],
-    metas: list[dict],
-    n_docs: int,
-    avgdl: float,
-    spec: QuerySpec,
-    k: int,
-) -> DataFrame:
-    """Top-k for a prunable bool query via cross-clause block-max
-    pruning — ONE kernel over the union of clause terms per
-    (segment, salt) group instead of one score-all frame per clause
-    (round-3 verdict #2: a hot ``should`` term no longer produces a
-    df-sized frame + shuffle; it contributes via block-skipped decodes
-    or is cut by the MaxScore suffix bound, see
-    :func:`..compressed._wand_bool_topk`); rank+score identical to the
-    score-all path (pytest-gated)."""
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
-    clauses = _bool_clause_tids(spec)
-    if clauses is None:
-        return _no_hits(spark)
-    # global df per term, summed across segments (multi-segment rule of
-    # search_topk_multi)
-    all_tids = sorted({t for _, _, tl in clauses for t in tl})
-    df_of = _df_stats_multi(spark, dirs, metas, all_tids)
-    msm = spec.minimum_should_match()
-    live_clauses = _live_clauses(clauses, df_of, msm)
-    if live_clauses is None:
-        return _no_hits(spark)
+def _bool_df_of(spark: SparkSession, dirs: list[str], metas: list[dict],
+             specs: list[QuerySpec]) -> dict[int, int]:
+    """Global df of every text-clause term of the prunable ``specs``,
+    summed across segments — one fetch however many queries."""
+    tids = {t for sp in specs for _, _, tl in (_bool_clause_tids(sp) or [])
+            for t in tl}
+    return _df_stats_multi(spark, dirs, metas, sorted(tids))
 
-    union_tids = sorted({t for _, _, tl in live_clauses for t in tl})
-    idfs = {t: _idf(n_docs, df_of[t]) for t in union_tids}
+
+def _plan_bool(query_id: str, spec: QuerySpec, df_of: dict, n_docs: int,
+               avgdl: float, metas: list[dict], k: int) -> _Plan | None:
+    """The one planner of a prunable bool query (:func:`_prunable_for_topk`)
+    -> a group-runner plan, or None when it provably matches nothing.
+
+    The live clause arrays (:func:`_live_clauses` over ``df_of``, from
+    :func:`_bool_df_of`), their idfs and the msm feed ONE cross-clause
+    block-max kernel per (segment, salt) group,
+    :func:`..compressed._wand_bool_topk` — a hot ``should`` term
+    contributes via block-skipped decodes or is cut by the MaxScore
+    suffix bound, never as a df-sized frame + shuffle. Metadata filters
+    and must_nots become the plan's doc_stats filter, pushed to the
+    parquet scan and co-grouped with the blocks as the allowed set
+    (must_not null-guarded). Rank+score identical to the score-all path
+    (pytest-gated)."""
+    clauses = _bool_clause_tids(spec)
+    msm = spec.minimum_should_match()
+    live = None if clauses is None else _live_clauses(clauses, df_of, msm)
+    if live is None:
+        return None
+    tids = sorted({t for _, _, tl in live for t in tl})
+    idfs = {t: _idf(n_docs, df_of[t]) for t in tids}
     cl_arrays = [(m_, c_, np.array(tl, dtype=np.int64))
-                 for m_, c_, tl in live_clauses]
-    pred = None
-    if spec.filter_sql or spec.must_not_sql:
-        # metadata predicates -> allowed-id set from doc_stats, pushed
-        # to the parquet scan and CO-GROUPED with the posting blocks
-        # per (segment, salt) — the same co-partitioned merge as
-        # ..compressed.search_topk_filtered; must_not null-guarded
-        pred = " AND ".join(
-            [f"({p})" for p in spec.filter_sql]
-            + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql])
-    frame = _group_frame(
-        spark, dirs, metas, avgdl, union_tids,
-        lambda by_term, allowed: _wand_bool_topk(
-            by_term, idfs, cl_arrays, msm, k, avgdl, k1, b,
-            allowed=allowed),
-        pred)
-    return frame.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+                 for m_, c_, tl in live]
+    pred = " AND ".join(
+        [f"({p})" for p in spec.filter_sql]
+        + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql]) or None
+    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    return _Plan(query_id, tids, pred,
+                 lambda by_term, allowed, cache: _wand_bool_topk(
+                     by_term, idfs, cl_arrays, msm, k, avgdl, k1, b,
+                     allowed, cache))
 
 
 def search_dsl_indexed(
@@ -7515,13 +7495,28 @@ def search_dsl_indexed(
     _require_indexed_field(spec)
     if k <= 0:
         return _no_hits(spark)
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
-    _validate_sql_fields(spark, dirs, spec)
+    segs = _load_segments(index_dir)
+    _validate_sql_fields(spark, segs[0], spec)
+    return _dsl_topk(spark, segs, spec, k, docs_df)
+
+
+def _dsl_topk(spark: SparkSession, segs: tuple, spec: QuerySpec, k: int,
+              docs_df: DataFrame | None) -> DataFrame:
+    """Top-k ``(doc_id, score)`` of one validated spec over loaded
+    segments: a prunable spec runs its :func:`_plan_bool` plan through
+    the group runner; every other shape qualifies by score-all
+    (:func:`_qualify_indexed`)."""
+    dirs, metas, n_docs, avgdl = segs
     if n_docs == 0:
         return _no_hits(spark)
     if _prunable_for_topk(spec):
-        return _search_dsl_pruned(spark, dirs, metas, n_docs, avgdl,
-                                  spec, k)
+        plan = _plan_bool("", spec, _bool_df_of(spark, dirs, metas, [spec]),
+                          n_docs, avgdl, metas, k)
+        if plan is None:
+            return _no_hits(spark)
+        return (_group_frame(spark, dirs, metas, avgdl, [plan])
+                .drop("query_id")
+                .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
     anchor, scored = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
                                       spec, docs_df)
     if anchor is None:
@@ -7542,106 +7537,42 @@ def search_dsl_many_indexed(
     rank-identical to its own :func:`search_dsl_indexed` call
     (pytest-gated).
 
-    PRUNABLE unfiltered queries (must/should text clauses — see
-    :func:`_prunable_for_topk`) batch into ONE postings read covering
-    the union of every query's terms and one kernel pass per
-    (segment, salt) group with a SHARED block-decode cache — a block a
-    hot term contributes to query A is reused by queries B..N in the
-    same group, and the df stats for all queries come from one cached
-    fetch. Everything else (phrase, filters, nesting) falls back to its
-    own exact :func:`search_dsl_indexed` call and unions in."""
-    qids, queries_raw, specs, sizes = _parse_msearch(requests)
-    out_schema = "query_id string, doc_id long, score double"
-    empty = spark.createDataFrame([], out_schema)
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    A planner over the one group runner: every PRUNABLE query (must/
+    should text clauses, with or without metadata filters and
+    must_nots — see :func:`_prunable_for_topk`) is planned by
+    :func:`_plan_bool` over one df fetch, and all of them run in ONE
+    :func:`..compressed._group_frame` pass: one postings read for the
+    union of their terms, one pushed-down doc_stats scan per distinct
+    filter, and one block-decode cache per (segment, salt) group shared
+    by every query — a block a hot term contributes to query A is reused
+    by queries B..N. Only non-prunable shapes (phrase, text filters,
+    nesting, ...) fall back to their own exact top-k and union in; the
+    one per-query cut (:func:`..compressed._per_query_topk`) orders the
+    whole batch."""
+    qids, specs, sizes = _parse_msearch(requests)
+    segs = _load_segments(index_dir)
+    dirs, metas, n_docs, avgdl = segs
     for sp in specs:
         _validate_sql_fields(spark, dirs, sp)
     if n_docs == 0:
-        return empty
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
-
-    raw_batch = []   # (qid, msm, [(is_must, conj, [tid...])...])
-    fallback = []    # (qid, raw query)
-    all_tids: set[int] = set()
-    for qid, q, spec in zip(qids, queries_raw, specs):
-        _require_indexed_field(spec)
-        if sizes[qid] == 0:
-            continue
-        if not _prunable_for_topk(spec) or spec.filter_sql \
-                or spec.must_not_sql or spec.match_all:
-            fallback.append((qid, q))
-            continue
-        clauses = _bool_clause_tids(spec)
-        if clauses is None:
-            continue  # provably empty: contributes no rows
-        raw_batch.append((qid, spec.minimum_should_match(), clauses))
-        all_tids.update(t for _, _, tl in clauses for t in tl)
-
-    results = []
-    if raw_batch:
-        df_of = _df_stats_multi(spark, dirs, metas, sorted(all_tids))
-        compiled = []  # (qid, msm, k, cl_arrays, idfs, tids)
-        union_live: set[int] = set()
-        for qid, msm, clauses in raw_batch:
-            live_clauses = _live_clauses(clauses, df_of, msm)
-            if live_clauses is None:
-                continue
-            tids_q = sorted({t for _, _, tl in live_clauses for t in tl})
-            idfs_q = {t: _idf(n_docs, df_of[t]) for t in tids_q}
-            compiled.append((
-                qid, msm, sizes[qid],
-                [(m_, c_, np.array(tl, dtype=np.int64))
-                 for m_, c_, tl in live_clauses],
-                idfs_q, tids_q))
-            union_live.update(tids_q)
-
-        if compiled:
-            blocks = _segment_blocks(spark, dirs, metas, avgdl,
-                                     sorted(union_live))
-
-            def batch_grp(pdf: pd.DataFrame) -> pd.DataFrame:
-                by_term_all = _by_term(pdf)
-                cache: dict = {}  # shared across queries in this group
-                outs = []
-                for qid, msm, k, cl_arrays, idfs_q, tids_q in compiled:
-                    by_term = {t: by_term_all[t] for t in tids_q
-                               if t in by_term_all}
-                    if not by_term:
-                        continue
-                    ids, scores = _wand_bool_topk(
-                        by_term, idfs_q, cl_arrays, msm, k, avgdl,
-                        k1, b, block_cache=cache)
-                    if ids.size:
-                        outs.append(pd.DataFrame({
-                            "query_id": qid, "doc_id": ids,
-                            "score": scores}))
-                if not outs:
-                    return pd.DataFrame({
-                        "query_id": pd.Series([], dtype="object"),
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "score": pd.Series([], dtype="float64")})
-                return pd.concat(outs, ignore_index=True)
-
-            local = blocks.groupBy("seg", "salt").applyInPandas(
-                batch_grp, schema=out_schema)
-            k_expr = F.create_map(
-                *[x for qid in qids
-                  for x in (F.lit(qid), F.lit(sizes[qid]))]
-            )[F.col("query_id")]
-            w = Window.partitionBy("query_id").orderBy(
-                F.desc("score"), F.asc("doc_id"))
-            results.append(
-                local.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") <= k_expr).drop("__rn"))
-
-    for qid, q in fallback:
-        out = search_dsl_indexed(spark, index_dir, q, sizes[qid], docs_df)
-        results.append(out.select(F.lit(qid).alias("query_id"),
-                                  "doc_id", "score"))
-    if not results:
-        return empty
-    combined = reduce(DataFrame.unionByName, results)
-    return combined.orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+        return spark.createDataFrame([], _ROWS)
+    for sp in specs:
+        _require_indexed_field(sp)
+    pruned, rest = [], []
+    for qid, sp in zip(qids, specs):
+        if sizes[qid] > 0:
+            (pruned if _prunable_for_topk(sp) else rest).append((qid, sp))
+    df_of = _bool_df_of(spark, dirs, metas, [sp for _, sp in pruned])
+    plans = [p for p in (_plan_bool(qid, sp, df_of, n_docs, avgdl, metas,
+                                    sizes[qid]) for qid, sp in pruned)
+             if p is not None]
+    frames = [_group_frame(spark, dirs, metas, avgdl, plans)] if plans else []
+    frames += [_dsl_topk(spark, segs, sp, sizes[qid], docs_df)
+               .select(F.lit(qid).alias("query_id"), "doc_id", "score")
+               for qid, sp in rest]
+    if not frames:
+        return spark.createDataFrame([], _ROWS)
+    return _per_query_topk(reduce(DataFrame.unionByName, frames), sizes)
 
 
 def _resolve_from_index(spark: SparkSession, dirs: list[str],

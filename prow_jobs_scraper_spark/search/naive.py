@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from prow_jobs_scraper_spark.functions.tokenize import tokenize_column, tokenize_text
 from prow_jobs_scraper_spark.index.build import BM25Params, with_doc_ids
 from prow_jobs_scraper_spark.search.compressed import (
+    _conjunctive,
     _Positional,
     _positional_pred,
     _TokenPositions,
@@ -52,6 +53,7 @@ def naive_bm25_topk(
     an ES ``filter`` clause never affects ``match`` scores.
     """
     params = params or BM25Params()
+    conjunctive = _conjunctive(operator)
     spark = docs_df.sparkSession
     q_terms = sorted(set(tokenize_text(query_text)))
     empty = spark.createDataFrame([], "doc_id long, score double")
@@ -74,7 +76,7 @@ def naive_bm25_topk(
     if n_docs == 0:
         return empty
     dfs = {t: int(row[f"df_{i}"] or 0) for i, t in enumerate(q_terms)}
-    if operator == "and":
+    if conjunctive:
         if any(dfs[t] == 0 for t in q_terms):
             return empty
     else:
@@ -111,7 +113,7 @@ def naive_bm25_topk(
 
     scored = base.withColumn("score", score).withColumn("__nh", n_hit)
     scored = scored.where(
-        F.col("__nh") == len(q_terms) if operator == "and"
+        F.col("__nh") == len(q_terms) if conjunctive
         else F.col("__nh") > 0)
     if post_filter:  # filter BEFORE the top-k, never the scores
         scored = scored.where(post_filter)

@@ -14,10 +14,11 @@ import pytest
 from prow_jobs_scraper_spark import commit
 
 PACKAGE = pathlib.Path(commit.__file__).parent
-# the primitives that make a write visible or take one back
+# the primitives that make a write visible or take one back; a writer
+# picking its own save mode (`.mode(`) bypasses the commit functions
 COMMIT_PRIMITIVES = re.compile(
     r"os\.replace|shutil\.move|rmtree|_SUCCESS|partitionOverwriteMode"
-    r"|conf\.set\(")
+    r"|conf\.set\(|\.mode\(")
 
 
 def test_only_the_commit_module_uses_commit_primitives():

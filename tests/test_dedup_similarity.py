@@ -191,6 +191,54 @@ def test_persisted_lsh_index_matches_oneshot(embeddings, transcripts,
         spark.conf.set(mode_key, saved)
 
 
+def test_killed_vector_index_rebuild_fails_loud_then_reruns(
+        embeddings, tmp_path, monkeypatch):
+    # a rebuild killed after the new bucket table but before its sidecar
+    # must leave no loadable index (the probe used to answer [] from a
+    # seed-2 table beside seed-1 planes); a rerun commits a whole one
+    from pyspark.sql import DataFrameWriter
+
+    spark = embeddings.sparkSession
+    pdf = embeddings.toPandas()
+    q = [float(x) for x in pdf.loc[pdf.vec_id == 3, "embedding"].iloc[0]]
+    real = DataFrameWriter.parquet
+
+    def kill_at(sidecar):
+        def write(self, path, *args, **kwargs):
+            if str(path).rstrip("/").endswith("/" + sidecar):
+                raise OSError(f"killed before the {sidecar} write")
+            return real(self, path, *args, **kwargs)
+        return write
+
+    d = str(tmp_path / "lsh")
+    S.build_lsh_index(embeddings, d, seed=1)
+    monkeypatch.setattr(DataFrameWriter, "parquet", kill_at("planes"))
+    with pytest.raises(OSError, match="planes"):
+        S.build_lsh_index(embeddings, d, seed=2)
+    monkeypatch.undo()
+    with pytest.raises(FileNotFoundError, match="meta.json"):
+        S.lsh_probe_topk(spark, d, q, 5, multi_probe=0).collect()
+    assert S.build_lsh_index(embeddings, d, seed=2)["seed"] == 2
+    got = S.lsh_probe_topk(spark, d, q, 5, multi_probe=0).collect()
+    want = S.lsh_bucketed_topk(embeddings, q, 5, seed=2,
+                               multi_probe=0).collect()
+    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in want]
+    assert got[0]["vec_id"] == 3
+
+    # the IVF and IVF-PQ builders commit the same way
+    d = str(tmp_path / "ivfpq")
+    S.build_ivfpq_index(embeddings, d, n_lists=4, m=4, sample_n=50)
+    monkeypatch.setattr(DataFrameWriter, "parquet", kill_at("codebooks"))
+    with pytest.raises(OSError, match="codebooks"):
+        S.build_ivfpq_index(embeddings, d, n_lists=4, m=4, seed=7,
+                            sample_n=50)
+    monkeypatch.undo()
+    with pytest.raises(FileNotFoundError, match="meta.json"):
+        S.ivfpq_probe_topk(spark, d, q, 5).collect()
+    with pytest.raises(FileNotFoundError, match="meta.json"):
+        S.load_ivf_centroids(spark, d)
+
+
 def test_persisted_ivf_index_matches_oneshot(embeddings, tmp_path):
     pdf = embeddings.toPandas()
     q = [float(x) for x in pdf.loc[pdf.vec_id == 3, "embedding"].iloc[0]]

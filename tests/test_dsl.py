@@ -6245,12 +6245,30 @@ def test_random_nested_bool_indexed_matches_naive(spark, docs, dsl_index,
         rtol=1e-9, atol=1e-12, err_msg=str(q))
 
 
+# prunable shapes with metadata clauses: each batches with its allowed
+# set (one doc_stats scan per distinct filter) instead of running alone
+_MSEARCH_META_REQS = [
+    {"query_id": "f",  # metadata must_not
+     "query": {"bool": {"must": [{"match": {"text": "agent"}}],
+                        "must_not": [{"term": {"role": "user"}}]}},
+     "size": 7},
+    {"query_id": "g",  # should-only with a filter (beside a filter,
+     # ES defaults msm to 0, which admits zero-score docs: pin it to 1)
+     "query": {"bool": {"should": [{"match": {"text": "spark"}},
+                                   {"match": {"text": "the_hot_term"}}],
+                        "filter": [{"range": {"turn_idx": {"gte": 2}}}],
+                        "minimum_should_match": 1}},
+     "size": 9},
+]
+
+
 def test_msearch_indexed_matches_per_query(spark, docs, dsl_index,
                                            dsl_segments):
-    """Indexed _msearch: prunable queries batch through one postings
-    read + shared block cache, fallback shapes (phrase/filter/nested)
-    union in from their own exact calls — every block rank+score
-    identical to its own search_dsl_indexed."""
+    """Indexed _msearch: prunable queries — metadata filters and
+    must_nots included — batch through one postings read + shared block
+    cache, fallback shapes (phrase, nesting) union in from their own
+    exact top-k — every block rank+score identical to its own
+    search_dsl_indexed."""
     from prow_jobs_scraper_spark.search.dsl import search_dsl_many_indexed
 
     reqs = [
@@ -6262,7 +6280,7 @@ def test_msearch_indexed_matches_per_query(spark, docs, dsl_index,
         {"query_id": "b", "query": {"bool": {"should": [
             {"match": {"text": "spark"}},
             {"match": {"text": "agent"}}]}}, "size": 5},
-        {"query_id": "c",  # fallback: metadata filter
+        {"query_id": "c",  # batched: metadata filter
          "query": {"bool": {"must": [{"match": {"text": "spark"}}],
                             "filter": [{"term": {"role": "assistant"}}]}},
          "size": 4},
@@ -6272,6 +6290,7 @@ def test_msearch_indexed_matches_per_query(spark, docs, dsl_index,
          "query": {"match": {"text": {"query": "zzz_never_appears",
                                       "operator": "and"}}}},
     ]
+    reqs += _MSEARCH_META_REQS
     for idx in (dsl_index, dsl_segments):
         batch = search_dsl_many_indexed(spark, idx, reqs,
                                         docs_df=docs).toPandas()
@@ -6286,6 +6305,36 @@ def test_msearch_indexed_matches_per_query(spark, docs, dsl_index,
             _assert_rank_identical(got, want,
                                    f"msearch-indexed:{r['query_id']}")
             assert len(got) > 0, r["query_id"]
+
+
+def test_msearch_indexed_reads_postings_once(spark, docs, dsl_segments,
+                                             monkeypatch):
+    """A batch of prunable queries — unfiltered, metadata-filtered and
+    metadata must_not — reads the posting blocks ONCE, in one group
+    pass; no query falls back to a read of its own."""
+    from prow_jobs_scraper_spark.search import compressed as C
+    from prow_jobs_scraper_spark.search import dsl as D
+
+    reads = []
+    real = C._segment_blocks
+
+    def counted(*args, **kwargs):
+        reads.append(args[-1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(C, "_segment_blocks", counted)
+    reqs = [
+        {"query_id": "a", "query": {"bool": {"should": [
+            {"match": {"text": "spark"}}, {"match": {"text": "agent"}}]}},
+         "size": 5},
+        {"query_id": "c", "query": {"bool": {
+            "must": [{"match": {"text": "spark"}}],
+            "filter": [{"term": {"role": "assistant"}}]}}, "size": 4},
+        *_MSEARCH_META_REQS,
+    ]
+    batch = D.search_dsl_many_indexed(spark, dsl_segments, reqs).toPandas()
+    assert len(reads) == 1, reads
+    assert set(batch["query_id"]) == {r["query_id"] for r in reqs}
 
 
 # --------------------------------------------------------------------------

@@ -526,6 +526,39 @@ def test_batch_search_rejects_duplicate_query_id(spark, index_dir):
         search_topk_many(spark, index_dir, [
             {"query_id": "a", "query_text": "spark", "k": 3},
             {"query_id": "b", "query_text": "agent", "k": -1}])
+    # a misspelt key (here `filter` for `doc_filter`) must not silently
+    # run the query unfiltered (the _msearch parser's rule)
+    with pytest.raises(ValueError,
+                       match=r"unsupported query keys \['filter'\]"):
+        search_topk_many(spark, index_dir, [
+            {"query_id": "a", "query_text": "spark", "k": 3,
+             "filter": "role = 'assistant'"}])
+
+
+def test_match_operator_fails_loud(spark, transcripts, index_dir):
+    # only "and" / "or" are operators: "AND" (or a typo) must raise on
+    # every match path instead of silently running as a disjunction
+    from prow_jobs_scraper_spark.search.compressed import (
+        search_topk_filtered,
+        search_topk_many,
+        search_topk_multi,
+    )
+
+    bad = "AND"
+    calls = [
+        lambda: search_topk(spark, index_dir, "spark agent", 5, bad),
+        lambda: search_topk_filtered(spark, index_dir, "spark agent", 5,
+                                     "role = 'assistant'", bad),
+        lambda: search_topk_multi(spark, [index_dir], "spark agent", 5, bad),
+        lambda: search_topk_many(spark, index_dir, [
+            {"query_id": "a", "query_text": "spark", "k": 3},
+            {"query_id": "b", "query_text": "spark agent", "k": 3,
+             "operator": bad}]),
+        lambda: naive_bm25_topk(transcripts, "spark agent", 5, operator=bad),
+    ]
+    for call in calls:
+        with pytest.raises(ValueError, match="operator 'AND'"):
+            call()
 
 
 def _segment_copy(index_dir: str, dest: str, **meta_overrides) -> str:
