@@ -1066,8 +1066,8 @@ def _span_dedup(spark, sf_dir):
 
 def _search_aggs_range(spark, sf_dir):
     """ES range + filters bucket aggs and the stats metric in one
-    oracle-checked row (search/dsl.py _apply_multibucket_agg /
-    _stats_exprs): range buckets over purchase values (from-inclusive /
+    oracle-checked row (search/dsl.py _apply_multibucket_agg / the
+    _METRICS stats entry): range buckets over purchase values (from-inclusive /
     to-exclusive, ES default keys) with a stats leaf, plus a filters
     agg (named metadata predicates incl. match_all — multi-membership:
     one doc may land in several buckets). Each is a map-side bucket

@@ -1,9 +1,8 @@
-"""Scalar function inventory (SURVEY.md §2.8, F1-F18): every scalar the
-reference computes in row-at-a-time Python, as Catalyst column expressions
-(JVM-side, codegen'd — zero Python in these paths).
+"""Scalar functions (SURVEY.md §2.8): the reference's row-at-a-time
+Python scalars that the engine still calls, as Catalyst column
+expressions (JVM-side, codegen'd — zero Python in these paths).
 
-Reference citations are per-function; this is the parity surface the
-judge checks line-by-line.
+Reference citations are per-function.
 """
 
 from __future__ import annotations
@@ -11,49 +10,10 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# type → job-name prefix map (reference prowjob.py:13-18)
-_TYPE_PREFIX = {
-    "presubmit": "pull-ci",
-    "postsubmit": "branch-ci",
-    "periodic": "periodic-ci",
-    "batch": "pull-ci",
-}
-
-
-def jtype_prefix(jtype: Column) -> Column:
-    expr = F.lit("periodic-ci")
-    for k, v in _TYPE_PREFIX.items():
-        expr = F.when(jtype == k, F.lit(v)).otherwise(expr)
-    return expr
-
-
-def job_context(name: Column, jtype: Column, org: Column, repo: Column,
-                branch: Column, variant: Column | None = None) -> Column:
-    """F1: job name → context by stripping the computed
-    '{type_prefix}-{org}-{repo}-{branch}-[variant-]' template, with
-    'rehearse-{pull}-' handled first (reference prowjob.py:87-149)."""
-    base = F.concat_ws("-", jtype_prefix(jtype), org, repo, branch)
-    cleaned = F.regexp_replace(name, r"^rehearse-\d+-", "")
-    cleaned = F.regexp_replace(cleaned, F.concat(F.lit("^"), base, F.lit("-")),
-                               F.lit(""))
-    if variant is not None:
-        cleaned = F.when(
-            variant.isNotNull(),
-            F.regexp_replace(cleaned,
-                             F.concat(F.lit("^"), variant, F.lit("-")),
-                             F.lit("")),
-        ).otherwise(cleaned)
-    return cleaned
-
 
 def starts_with(col: Column, prefix: str) -> Column:
     """F2 (reference prowjob.py:89)."""
     return col.startswith(prefix)
-
-
-def build_id_from_name(name: Column) -> Column:
-    """F3: build_id = name.split('-')[-1] (reference equinix_usages.py:46-48)."""
-    return F.element_at(F.split(name, "-"), -1)
 
 
 def url_path_suffix(url: Column, skip: int = 4) -> Column:
@@ -77,42 +37,3 @@ def weekly_index_name(prefix: str, ts: Column) -> Column:
     weekly time-partition key (reference event.py:198-202). In our engine
     this is a partition VALUE, not a physical index."""
     return F.format_string(f"{prefix}-%d.%02d", iso_year(ts), F.weekofyear(ts))
-
-
-def humanize_machine_type(plan: Column) -> Column:
-    """F6: machine_type.replace('.', ' ') (reference slack_report.py:290)."""
-    return F.translate(plan, ".", " ")
-
-
-def duration_seconds(start: Column, end: Column,
-                     bug_parity: bool = False) -> Column:
-    """F9: (end - start) in seconds; 0 when either side is NULL (reference
-    event.py:83-93). The reference uses timedelta ``.seconds``, which
-    TRUNCATES the days component — ``bug_parity=True`` reproduces that
-    quirk bit-for-bit."""
-    secs = F.unix_timestamp(end) - F.unix_timestamp(start)
-    secs = F.when(start.isNull() | end.isNull(), F.lit(0)).otherwise(secs)
-    return (secs % 86400) if bug_parity else secs
-
-
-def report_window_end(now: Column) -> Column:
-    """F11/F12: now − 6h truncated to hour — the reference's indexing-lag
-    allowance (reference jobsautoreport/main.py:41-52)."""
-    return F.date_trunc("hour", now - F.expr("INTERVAL 6 HOURS"))
-
-
-def try_parse_double(col: Column) -> Column:
-    """F13: float parse with 0.0 fallback (reference step.py:36-43)."""
-    return F.coalesce(F.try_cast(col, "double"), F.lit(0.0))
-
-
-def pct_change(cur: Column, prev: Column) -> Column:
-    """F17: signed percent delta (reference trends.py:133-137)."""
-    return F.when(prev != 0, (cur - prev) * 100.0 / prev).otherwise(F.lit(None))
-
-
-def bucket_small_tail(key: Column, value: Column, total: Column,
-                      threshold: float = 0.01) -> Column:
-    """F18: pie-tail bucketing — keys contributing ≤ threshold·total
-    become 'Others' (reference slack_report.py:264-293)."""
-    return F.when(value / total <= threshold, F.lit("Others")).otherwise(key)

@@ -193,15 +193,3 @@ def dedup_keep_first(df: DataFrame, comparison_fields: list[str],
         df.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") == 1).drop("__rn")
     )
-
-
-def machine_leases(steps: DataFrame,
-                   lease_step: str = "baremetalds-packet-setup") -> DataFrame:
-    """A8: packet-machine lease counts by step state — the reference's
-    weekly step query + grouped count (reference query.py:47-74,
-    report.py:334-352). Conjunctive full-text match on step name is the
-    P11 operator; here the exact-name variant."""
-    return (
-        steps.where(F.col("step_name") == lease_step)
-        .groupBy("step_state").agg(F.count(F.lit(1)).alias("n"))
-    )

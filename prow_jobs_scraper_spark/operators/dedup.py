@@ -66,12 +66,6 @@ def shingles_of(toks, n: int = 3):
                   )).otherwise(F.array(F.concat_ws(" ", toks)))
 
 
-def shingles_column(text_col: str, n: int = 3):
-    """Back-compat wrapper; prefer materializing tokens and calling
-    :func:`shingles_of` (see its docstring for why)."""
-    return shingles_of(tokenize_column(F.col(text_col)), n)
-
-
 def minhash_signatures(df: DataFrame, text_col: str = "text",
                        id_col: str = "doc_id", n_hashes: int = 64,
                        shingle_n: int = 3, seed: int = 42) -> DataFrame:

@@ -234,6 +234,7 @@ import datetime as _dt
 import json
 import math
 import re as _re
+from collections.abc import Callable
 from dataclasses import dataclass, field as _field
 from functools import cached_property, reduce
 
@@ -4448,17 +4449,17 @@ def _search_after_pred(scored: bool, after):
 # aggregations: the ES `aggs` block, pushed into the engine
 # --------------------------------------------------------------------------
 
-_METRIC_FNS = {
-    "avg": F.avg, "sum": F.sum, "min": F.min, "max": F.max,
-    "value_count": F.count,
-    # ES `cardinality` is HLL-APPROXIMATE (precision_threshold); the
-    # engine computes the EXACT distinct count — a documented deviation
-    # in the user's favor (Catalyst's partial-aggregated countDistinct
-    # scales fine, and exactness is what the DuckDB oracle can check).
-    # precision_threshold is accordingly rejected as an unknown option.
-    "cardinality": F.countDistinct,
-}
 _CALENDAR_INTERVALS = {"hour", "day", "week", "month", "quarter", "year"}
+
+
+def _pos_int(body: dict, key: str, default, what: str, lo: int = 1) -> int:
+    """An integer option ``>= lo`` of an aggregation body (``size``,
+    ``min_doc_count``, ``shard_size``, ``lag``, ...), ``default`` when
+    absent. Bools are not ints here (JSON ``true`` is no size)."""
+    v = body.get(key, default)
+    if isinstance(v, bool) or not isinstance(v, int) or v < lo:
+        raise DslError(f"{what} {key} must be an int >= {lo}, got {v!r}")
+    return v
 
 
 def _fill_missing(kind: str, body: dict, col, allow_str: bool = False):
@@ -4481,34 +4482,35 @@ def _fill_missing(kind: str, body: dict, col, allow_str: bool = False):
     return F.coalesce(col, F.lit(mv))
 
 
-def _metric_col(kind: str, body, allow_str_missing: bool = False):
-    """Validate a metric body -> its (possibly ``missing``-filled)
-    column. Takes exactly one of ``field`` or ``script`` (round 5: the
-    painless-subset compiler turns a script source into ONE Catalyst
-    column — :func:`_agg_script_col`); other unknown options FAIL — a
+def _metric_col(kind: str, body, allow_str: bool = False, opts=(),
+                script: bool = True):
+    """Validate a metric body -> its (possibly ``missing``-filled) value
+    column. Takes exactly one of ``field`` or — where ``script`` —
+    ``script`` (round 5: the painless-subset compiler turns a script
+    source into ONE Catalyst column — :func:`_agg_script_col`).
+    ``opts`` are the kind's own options; other unknown options FAIL — a
     silently-ignored knob would return different numbers than the
     user's ES cluster (the same rule clause bodies and _search requests
     already enforce). ``missing`` applies to field metrics only (a
     script reads doc values itself; ES ignores missing on script
     metrics — here that combination fails loud instead)."""
-    if not isinstance(body, dict) \
-            or ("field" in body) == ("script" in body):
-        raise DslError(
-            f"{kind} metric needs exactly one of field/script, "
-            f"got {body!r}")
-    if "script" in body:
+    srcs = ("field", "script") if script else ("field",)
+    if not isinstance(body, dict) or sum(s in body for s in srcs) != 1:
+        need = "exactly one of field/script" if script else "a field"
+        raise DslError(f"{kind} metric needs {need}, got {body!r}")
+    if script and "script" in body:
         unknown = set(body) - {"script"}
         if unknown:
             raise DslError(
                 f"unsupported {kind} script-metric options "
                 f"{sorted(unknown)}")
         return _agg_script_col(f"{kind} metric", body["script"])
-    unknown = set(body) - {"field", "missing"}
+    unknown = set(body) - {"field", "missing", *opts}
     if unknown:
         raise DslError(
             f"unsupported {kind} metric options {sorted(unknown)}")
     return _fill_missing(kind, body, F.col(_ident(body["field"])),
-                         allow_str=allow_str_missing)
+                         allow_str=allow_str)
 
 
 def _agg_script_col(ctx: str, sc):
@@ -4528,46 +4530,107 @@ def _agg_script_col(ctx: str, sc):
     return fn(lambda f: F.col(f), None)
 
 
-def _stats_exprs(name: str, f) -> list:
-    """The ES ``stats`` metric — count/min/max/avg/sum in one pass —
-    FLATTENED to five ``<name>_<stat>`` columns (ES nests them under the
-    agg name; a DataFrame result flattens, same documented rule as
-    nested buckets). ``f`` is the (possibly ``missing``-filled) value
-    column from :func:`_metric_col`."""
-    return [
-        F.count(f).alias(f"{name}_count"),
-        F.min(f).alias(f"{name}_min"),
-        F.max(f).alias(f"{name}_max"),
-        F.avg(f).alias(f"{name}_avg"),
-        F.sum(f).alias(f"{name}_sum"),
-    ]
+# Every metric kind's columns are built by ONE function of the
+# `_METRICS` table below: cols(kind, name, body, value) -> its named
+# output columns [(out_name, expr)]. With `value` None the function
+# reads the metric body; otherwise `value` is its input — the bucket
+# column of the `<kind>_bucket` sibling form, or what the kind's `prep`
+# step attached to the frame. Multi-column kinds FLATTEN to
+# `<name>_<part>` columns (ES nests them under the agg name; a
+# DataFrame result flattens, the same rule as nested buckets).
+
+def _one(fn, allow_str: bool = False):
+    """A one-column metric: ``fn`` over the value column, named after
+    the aggregation."""
+    def cols(kind, name, body, value):
+        f = value if value is not None else _metric_col(kind, body,
+                                                        allow_str)
+        return [(name, fn(f))]
+    return cols
 
 
-_EXT_STATS = ("count", "min", "max", "avg", "sum", "sum_of_squares",
-              "variance", "std_deviation")
+def _stat_set(stats, cast: str | None = None, script: bool = True):
+    """A flattened family of ``(stat, fn)`` aggregates over one value
+    column -> ``<name>_<stat>`` columns. ``cast`` applies to the
+    metric form's field (the sibling form keeps the bucket column's
+    type: ``extended_stats_bucket`` over doc counts stays bigint)."""
+    def cols(kind, name, body, value):
+        f = value
+        if f is None:
+            f = _metric_col(kind, body, script=script)
+            f = f if cast is None else f.cast(cast)
+        return [(f"{name}_{s}", fn(f)) for s, fn in stats]
+    return cols
 
 
-def _extended_stats_exprs(name: str, body) -> list:
-    """ES ``extended_stats`` — the ``stats`` columns plus
-    sum_of_squares / POPULATION variance / std_deviation (the ES
-    definitions), flattened to ``<name>_<stat>``. ``sigma`` and the
-    std_deviation_bounds block are derivable client-side from these
-    columns and stay out of grammar (a silently-ignored sigma is the
-    usual divergence trap)."""
-    f = _metric_col("extended_stats", body).cast("double")
-    return [
-        F.count(f).alias(f"{name}_count"),
-        F.min(f).alias(f"{name}_min"),
-        F.max(f).alias(f"{name}_max"),
-        F.avg(f).alias(f"{name}_avg"),
-        F.sum(f).alias(f"{name}_sum"),
-        F.sum(f * f).alias(f"{name}_sum_of_squares"),
-        F.var_pop(f).alias(f"{name}_variance"),
-        F.stddev_pop(f).alias(f"{name}_std_deviation"),
-    ]
+# ES `stats` (count/min/max/avg/sum in one pass); `extended_stats` adds
+# sum_of_squares / POPULATION variance / std_deviation (the ES
+# definitions — `sigma` and the std_deviation_bounds block are derivable
+# client-side from these columns and stay out of grammar: a silently-
+# ignored sigma is the usual divergence trap)
+_STATS = (("count", F.count), ("min", F.min), ("max", F.max),
+          ("avg", F.avg), ("sum", F.sum))
+_EXT_STATS = _STATS + (("sum_of_squares", lambda f: F.sum(f * f)),
+                       ("variance", F.var_pop),
+                       ("std_deviation", F.stddev_pop))
+# ES `boxplot`: EXACT interpolated min/q1/q2/q3/max (ES computes TDigest
+# approximations — the documented percentiles deviation). The
+# `lower`/`upper` whisker fields need a second pass keyed by q1/q3 and
+# stay out of grammar (the option allowlist fails loud)
+_BOXPLOT = tuple((s, lambda f, q=q: F.percentile(f, F.lit(q)))
+                 for s, q in (("min", 0.0), ("q1", 0.25), ("q2", 0.5),
+                              ("q3", 0.75), ("max", 1.0)))
+# the ES default percents list (percentiles agg docs)
+_DEFAULT_PERCENTS = (1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0)
 
 
-def _weighted_avg_expr(name: str, body):
+def _pct_label(p: float) -> str:
+    return ("%g" % p).replace(".", "_")
+
+
+def _percentile_cols(kind, name, body, value):
+    """ES ``percentiles`` -> ``<name>_p<pct>`` columns (97.5 ->
+    ``_p97_5``). ES computes TDigest APPROXIMATIONS; the engine computes
+    EXACT linear-interpolated percentiles (Catalyst ``percentile``) —
+    the same exactness deviation as ``cardinality``, and what the
+    DuckDB oracle (``quantile_cont``) can check. ``percentiles_bucket``
+    is the same interpolation at rank p/100*(n-1) over the bucket
+    values, which is what ES computes there too."""
+    f = value if value is not None else _metric_col(
+        kind, body, opts=("percents",), script=False)
+    ps = body.get("percents", list(_DEFAULT_PERCENTS))
+    if not isinstance(ps, list) or not ps or any(
+            isinstance(p, bool) or not isinstance(p, (int, float))
+            or not 0 < p < 100 for p in ps):
+        raise DslError(
+            f"percents must be numbers strictly between 0 and 100, "
+            f"got {ps!r}")
+    return [(f"{name}_p{_pct_label(float(p))}",
+             F.percentile(f, F.lit(p / 100.0))) for p in ps]
+
+
+def _percentile_rank_cols(kind, name, body, value):
+    """ES ``percentile_ranks`` -> ``<name>_<value>`` columns (value 97.5
+    -> ``_97_5``, negatives -> ``_m<...>``), one per requested value.
+    ES interpolates TDigest ranks; the engine computes the EXACT
+    percentage of non-null field values <= v — the same exactness
+    deviation as ``percentiles``/``cardinality``, and what the DuckDB
+    oracle (``100 * avg(CASE ...)``) replays. NULL when the bucket has
+    no non-null values (ES: null)."""
+    f = _metric_col(kind, body, opts=("values",), script=False)
+    vals = body.get("values")
+    if not isinstance(vals, list) or not vals or any(
+            isinstance(v, bool) or not isinstance(v, (int, float))
+            for v in vals):
+        raise DslError(
+            f"percentile_ranks needs a non-empty numeric values list, "
+            f"got {vals!r}")
+    return [(f"{name}_{_pct_label(float(v)).replace('-', 'm')}",
+             F.avg(F.when(f <= float(v), 1.0)
+                   .when(f.isNotNull(), 0.0)) * 100) for v in vals]
+
+
+def _weighted_avg_cols(kind, name, body, value):
     """ES ``weighted_avg``: ``sum(value * weight) / sum(weight)``.
     Docs where value OR weight is NULL contribute nothing (the ES
     no-``missing`` default; the ``missing`` fills stay out of
@@ -4585,75 +4648,10 @@ def _weighted_avg_expr(name: str, body):
         cols[part] = F.col(_ident(b["field"])).cast("double")
     v, w = cols["value"], cols["weight"]
     both = v.isNotNull() & w.isNotNull()
-    return (F.sum(F.when(both, v * w))
-            / F.sum(F.when(both, w))).alias(name)
+    return [(name, F.sum(F.when(both, v * w)) / F.sum(F.when(both, w)))]
 
 
-# the ES default percents list (percentiles agg docs)
-_DEFAULT_PERCENTS = (1.0, 5.0, 25.0, 50.0, 75.0, 95.0, 99.0)
-
-
-def _percents_of(body) -> list[float]:
-    """Validated ``percents`` list of a percentiles body."""
-    if not isinstance(body, dict) or "field" not in body:
-        raise DslError(f"percentiles metric needs a field, got {body!r}")
-    unknown = set(body) - {"field", "percents", "missing"}
-    if unknown:
-        raise DslError(
-            f"unsupported percentiles options {sorted(unknown)}")
-    ps = body.get("percents", list(_DEFAULT_PERCENTS))
-    if not isinstance(ps, list) or not ps or any(
-            isinstance(p, bool) or not isinstance(p, (int, float))
-            or not 0 < p < 100 for p in ps):
-        raise DslError(
-            f"percents must be numbers strictly between 0 and 100, "
-            f"got {ps!r}")
-    return [float(p) for p in ps]
-
-
-def _pct_label(p: float) -> str:
-    return ("%g" % p).replace(".", "_")
-
-
-def _percentile_exprs(name: str, body: dict) -> list:
-    """ES ``percentiles`` — FLATTENED to ``<name>_p<pct>`` columns
-    (97.5 -> ``_p97_5``), same flattening rule as ``stats``. ES computes
-    TDigest APPROXIMATIONS; the engine computes EXACT
-    linear-interpolated percentiles (Catalyst ``percentile``) — the
-    same exactness deviation as ``cardinality``, and what the DuckDB
-    oracle (``quantile_cont``) can check."""
-    ps = _percents_of(body)
-    f = _fill_missing("percentiles", body, F.col(_ident(body["field"])))
-    return [
-        F.percentile(f, F.lit(p / 100.0)).alias(f"{name}_p{_pct_label(p)}")
-        for p in ps
-    ]
-
-
-_BOXPLOT_STATS = (("min", 0.0), ("q1", 0.25), ("q2", 0.5),
-                  ("q3", 0.75), ("max", 1.0))
-
-
-def _boxplot_exprs(name: str, body: dict) -> list:
-    """ES ``boxplot`` — min/q1/q2/q3/max FLATTENED to
-    ``<name>_<stat>`` columns. ES computes TDigest approximations; the
-    engine computes EXACT interpolated quartiles (the documented
-    percentiles deviation). The ``lower``/``upper`` whisker fields
-    (nearest data points inside 1.5 IQR) need a second pass over the
-    data keyed by q1/q3 and stay out of grammar — fail-loud via the
-    option allowlist rather than silently returning fence values."""
-    if not isinstance(body, dict) or "field" not in body:
-        raise DslError(f"boxplot metric needs a field, got {body!r}")
-    unknown = set(body) - {"field", "missing"}
-    if unknown:
-        raise DslError(f"unsupported boxplot options {sorted(unknown)}")
-    f = _fill_missing("boxplot", body,
-                      F.col(_ident(body["field"]))).cast("double")
-    return [F.percentile(f, F.lit(q)).alias(f"{name}_{s}")
-            for s, q in _BOXPLOT_STATS]
-
-
-def _top_metrics_exprs(name: str, body: dict) -> list:
+def _top_metrics_cols(kind, name, body, value):
     """ES ``top_metrics`` — the metric values of the SINGLE top
     document by sort, FLATTENED to ``<name>_<field>`` columns (the
     same flattening rule as ``stats``). Only ``size: 1`` (the ES
@@ -4709,118 +4707,300 @@ def _top_metrics_exprs(name: str, body: dict) -> list:
         *[F.col(_ident(f)).alias(f"m{i}") for i, f in enumerate(fields)]))
     # identical aggregate expressions collapse to one physical buffer
     top = F.max(w) if sdir == "desc" else F.min(w)
-    return [top.getField(f"m{i}").alias(f"{name}_{f}")
+    return [(f"{name}_{f}", top.getField(f"m{i}"))
             for i, f in enumerate(fields)]
 
 
-def _mad_prepass(frame: DataFrame, pkey, metrics_spec: dict):
-    """Rewrite ``median_absolute_deviation`` sub-aggs for the
-    single-level bucket path: attach each one's per-bucket median as a
-    window-aggregate column (``percentile(0.5) OVER (PARTITION BY
-    bucket key)`` — co-partitioned with the groupBy that follows, so
-    Catalyst plans ONE exchange for both) and replace the spec with an
-    internal ``__mad`` marker :func:`_metric_exprs` turns into
-    ``percentile(abs(x - med), 0.5)``. Specs without MAD pass through
-    untouched (and the frame is unchanged)."""
-    out_spec, i = {}, 0
-    for name, spec in metrics_spec.items():
-        if not (isinstance(spec, dict)
-                and set(spec) == {"median_absolute_deviation"}):
-            out_spec[name] = spec
-            continue
-        f = _metric_col("median_absolute_deviation",
-                        spec["median_absolute_deviation"]).cast("double")
-        med = f"__mad_med_{i}"
-        i += 1
-        frame = frame.withColumn(
-            med, F.percentile(f, F.lit(0.5)).over(Window.partitionBy(pkey)))
-        out_spec[name] = {"__mad": {"col": f, "med": med}}
-    return frame, out_spec
+def _mad_prep(frame: DataFrame, pkey, col: str, kind: str, body):
+    """``median_absolute_deviation`` prep: attach the median of the
+    value column as ``col`` — per bucket as a window aggregate
+    (``percentile(0.5) OVER (PARTITION BY pkey)``, co-partitioned with
+    the groupBy that follows, so Catalyst plans ONE exchange for both),
+    or for a bare metric (``pkey`` None) as a single-row aggregate
+    through a broadcast cross-join (only the 1-row median crosses
+    stages, never the data) -> (frame, (value, median))."""
+    f = _metric_col(kind, body).cast("double")
+    med = F.percentile(f, F.lit(0.5))
+    if pkey is None:
+        frame = frame.crossJoin(F.broadcast(frame.agg(med.alias(col))))
+    else:
+        frame = frame.withColumn(col, med.over(Window.partitionBy(pkey)))
+    return frame, (f, F.col(col))
 
 
-def _percentile_rank_exprs(name: str, body: dict) -> list:
-    """ES ``percentile_ranks`` — FLATTENED to ``<name>_<value>``
-    columns (value 97.5 -> ``_97_5``, negatives -> ``_m<...>``), one
-    per requested value. ES interpolates TDigest ranks; the engine
-    computes the EXACT percentage of non-null field values <= v —
-    the same exactness deviation as ``percentiles``/``cardinality``,
-    and what the DuckDB oracle (``100 * avg(CASE ...)``) replays.
-    NULL when the bucket has no non-null values (ES: null)."""
-    if not isinstance(body, dict) or "field" not in body:
+def _mad_cols(kind, name, body, value):
+    """MAD = the EXACT median of |x - median| (ES is TDigest-approximate
+    — the documented percentiles/cardinality deviation), over what
+    :func:`_mad_prep` attached."""
+    if value is None:
         raise DslError(
-            f"percentile_ranks metric needs a field, got {body!r}")
-    unknown = set(body) - {"field", "values", "missing"}
+            "median_absolute_deviation needs a per-bucket median "
+            "prepass and is supported bare or under a single-level "
+            "bucket aggregation only")
+    f, med = value
+    return [(name, F.percentile(F.abs(f - med), F.lit(0.5)))]
+
+
+def _apply_string_stats(frame: DataFrame, name: str,
+                        body: dict) -> DataFrame:
+    """ES ``string_stats`` (bare): count / min_length / max_length /
+    avg_length / entropy, flattened to ``<name>_<stat>`` columns.
+    Entropy is the Shannon base-2 entropy of the CHARACTER distribution
+    across all non-null values (the ES definition), computed
+    distributively: one char-explode -> char-count aggregation (an
+    alphabet-sized frame, never the corpus) folded through
+    ``-(1/N)*sum(n*log2 n) + log2 N``; a corpus with no characters
+    entropy-0s like ES. Lengths are measured in characters (ES counts
+    Java UTF-16 code units — identical on ASCII/BMP text, the engine's
+    analyzer domain). ``show_distribution`` (response-shape) stays out
+    of grammar."""
+    f = _metric_col("string_stats", body, allow_str=True, script=False)
+    vals = (frame.select(f.alias("__s"))
+            .where(F.col("__s").isNotNull()))
+    stats = vals.agg(
+        F.count("__s").alias(f"{name}_count"),
+        F.min(F.length("__s")).alias(f"{name}_min_length"),
+        F.max(F.length("__s")).alias(f"{name}_max_length"),
+        F.avg(F.length("__s")).alias(f"{name}_avg_length"))
+    chars = (vals.select(F.explode(F.split("__s", "")).alias("__c"))
+             .groupBy("__c").agg(F.count(F.lit(1)).alias("__n")))
+    ent = chars.agg(F.coalesce(
+        -F.sum(F.col("__n") * F.log2("__n")) / F.sum("__n")
+        + F.log2(F.sum("__n")),
+        F.lit(0.0)).alias(f"{name}_entropy"))
+    return stats.crossJoin(F.broadcast(ent))
+
+
+def _apply_matrix_stats(frame: DataFrame, name: str,
+                        body) -> DataFrame:
+    """ES ``matrix_stats`` (the matrix aggregations module): per-field
+    count/mean/variance/skewness/kurtosis plus pairwise covariance and
+    correlation over numeric fields. Output is FLATTENED to one row per
+    ordered (field, other) pair — per-field stats describe ``field``,
+    covariance/correlation describe the pair (the diagonal carries
+    variance and correlation 1) — key-sorted by (field, other).
+
+    Semantics pinned to the documented ES rules:
+
+    - a document missing ANY of the fields is EXCLUDED from the whole
+      matrix unless ``missing`` supplies that field's substitute
+      (``{"missing": {field: value}}``);
+    - variance and covariance are SAMPLE (n-1) estimates, correlation
+      their ratio (ES RunningStats); n <= 1 renders them NULL;
+    - a CONSTANT field (min == max, detected exactly — the raw-moment
+      difference E[x²]−E[x]² cancels to ulp noise, not 0, for
+      non-integer constants) has variance and covariances 0,
+      skewness/kurtosis 0 and a NULL correlation (0/0);
+    - skewness = m3 / m2^1.5 and kurtosis = m4 / m2^2 (Pearson, not
+      excess) over POPULATION central moments, computed closed-form
+      from raw moments — deterministic and replayable in plain SQL,
+      where ES's streaming update order can drift in the last ulps
+      (documented deviation family, like percentiles);
+    - ``mode`` (multi-valued field handling) stays out of grammar:
+      the engine's columns are scalars, so accepting it would imply
+      array semantics that don't exist here.
+
+    Plan shape: ONE aggregation row (Catalyst partial-aggregates
+    map-side) exploded into k^2 pair rows — bucket-cardinality work,
+    never a second scan; no shuffle beyond the single global agg."""
+    if not isinstance(body, dict) or "fields" not in body:
+        raise DslError(f"matrix_stats needs fields, got {body!r}")
+    unknown = set(body) - {"fields", "missing"}
     if unknown:
         raise DslError(
-            f"unsupported percentile_ranks options {sorted(unknown)}")
-    vals = body.get("values")
-    if not isinstance(vals, list) or not vals or any(
-            isinstance(v, bool) or not isinstance(v, (int, float))
-            for v in vals):
+            f"unsupported matrix_stats options {sorted(unknown)}")
+    fields = body["fields"]
+    if (not isinstance(fields, list) or not fields
+            or not all(isinstance(f, str) for f in fields)
+            or len(set(fields)) != len(fields)):
         raise DslError(
-            f"percentile_ranks needs a non-empty numeric values list, "
-            f"got {vals!r}")
-    f = _fill_missing("percentile_ranks", body,
-                      F.col(_ident(body["field"])))
-    return [
-        (F.avg(F.when(f <= float(v), 1.0)
-               .when(f.isNotNull(), 0.0)) * 100).alias(
-            f"{name}_{_pct_label(float(v)).replace('-', 'm')}")
-        for v in vals
-    ]
+            f"matrix_stats fields must be a non-empty list of distinct "
+            f"field names, got {fields!r}")
+    fields = [_ident(f) for f in fields]
+    miss = body.get("missing", {})
+    if not isinstance(miss, dict) or not all(
+            isinstance(k, str) and not isinstance(v, bool)
+            and isinstance(v, (int, float)) for k, v in miss.items()):
+        raise DslError(f"bad matrix_stats missing {miss!r}")
+    extra = set(miss) - set(fields)
+    if extra:
+        raise DslError(
+            f"matrix_stats missing names unknown fields {sorted(extra)}")
+    for f in fields:
+        if f not in frame.columns:
+            raise DslError(f"matrix_stats field {f!r} is not available")
+    vals = {
+        f: (F.coalesce(F.col(f).cast("double"), F.lit(float(miss[f])))
+            if f in miss else F.col(f).cast("double"))
+        for f in fields
+    }
+    keep = reduce(lambda a, b: a & b,
+                  [vals[f].isNotNull() for f in fields])
+    kept = frame.where(keep)
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for f in fields:
+        x = vals[f]
+        aggs += [(F.min(x) == F.max(x)).alias(f"__const_{f}"),
+                 F.avg(x).alias(f"__m1_{f}"),
+                 F.avg(x * x).alias(f"__m2_{f}"),
+                 F.avg(x * x * x).alias(f"__m3_{f}"),
+                 F.avg(x * x * x * x).alias(f"__m4_{f}")]
+    for i, fi in enumerate(fields):
+        for fj in fields[i:]:
+            aggs.append(F.avg(vals[fi] * vals[fj]).alias(f"__xy_{fi}_{fj}"))
+    row = kept.agg(*aggs)
+
+    n = F.col("__n").cast("double")
+
+    def _central(f):
+        m1, m2r = F.col(f"__m1_{f}"), F.col(f"__m2_{f}")
+        m3r, m4r = F.col(f"__m3_{f}"), F.col(f"__m4_{f}")
+        m2 = m2r - m1 * m1
+        m3 = m3r - 3 * m1 * m2r + 2 * m1 * m1 * m1
+        m4 = (m4r - 4 * m1 * m3r + 6 * m1 * m1 * m2r
+              - 3 * m1 * m1 * m1 * m1)
+        return m1, m2, m3, m4
+
+    def _const(*fs):
+        return reduce(lambda a, b: a | b,
+                      [F.col(f"__const_{f}") for f in fs])
+
+    def _cov(fi, fj):
+        a, b = (fi, fj) if f"__xy_{fi}_{fj}" in row.columns else (fj, fi)
+        exy = F.col(f"__xy_{a}_{b}")
+        # sample covariance: n/(n-1) * (E[xy] - E[x]E[y]); exactly 0
+        # against a constant field
+        return F.when(n > 1, F.when(_const(fi, fj), F.lit(0.0)).otherwise(
+            (exy - F.col(f"__m1_{fi}") * F.col(f"__m1_{fj}"))
+            * n / (n - 1)))
+
+    pairs = []
+    for fi in fields:
+        m1, m2, m3, m4 = _central(fi)
+        for fj in fields:
+            cov = _cov(fi, fj)
+            var_j = _cov(fj, fj)
+            corr = F.when(
+                (n > 1) & ~_const(fi, fj),
+                cov / F.sqrt(_cov(fi, fi) * var_j))
+            pairs.append(F.struct(
+                F.lit(fi).alias("field"),
+                F.lit(fj).alias("other"),
+                F.col("__n").alias("doc_count"),
+                F.when(n > 0, m1).alias("mean"),
+                _cov(fi, fi).alias("variance"),
+                F.when(~_const(fi) & (m2 > 0), m3 / F.pow(m2, F.lit(1.5)))
+                .otherwise(F.when(n > 0, F.lit(0.0))).alias("skewness"),
+                F.when(~_const(fi) & (m2 > 0), m4 / (m2 * m2))
+                .otherwise(F.when(n > 0, F.lit(0.0))).alias("kurtosis"),
+                cov.alias("covariance"),
+                corr.alias("correlation"),
+            ))
+    return (row.select(F.explode(F.array(*pairs)).alias("__p"))
+            .select("__p.field", "__p.other", "__p.doc_count", "__p.mean",
+                    "__p.variance", "__p.skewness", "__p.kurtosis",
+                    "__p.covariance", "__p.correlation")
+            .orderBy("field", "other"))
 
 
-def _metric_exprs(sub_aggs: dict) -> list:
-    """{name: {"avg": {"field": f}}, ...} -> aliased agg columns."""
-    cols = []
-    for name, spec in sub_aggs.items():
-        if not isinstance(spec, dict) or len(spec) != 1:
-            raise DslError(f"bad sub-aggregation {name!r}")
-        (kind, body), = spec.items()
-        if kind == "stats":
-            cols.extend(_stats_exprs(name, _metric_col("stats", body)))
-            continue
-        if kind == "extended_stats":
-            cols.extend(_extended_stats_exprs(name, body))
-            continue
-        if kind == "percentiles":
-            cols.extend(_percentile_exprs(name, body))
-            continue
-        if kind == "percentile_ranks":
-            cols.extend(_percentile_rank_exprs(name, body))
-            continue
-        if kind == "boxplot":
-            cols.extend(_boxplot_exprs(name, body))
-            continue
-        if kind == "top_metrics":
-            cols.extend(_top_metrics_exprs(name, body))
-            continue
-        if kind == "weighted_avg":
-            cols.append(_weighted_avg_expr(name, body))
-            continue
-        if kind == "median_absolute_deviation":
+@dataclass(frozen=True)
+class _Metric:
+    """One metric kind. ``cols`` builds its columns (see the note above
+    :func:`_one`); a kind without ``cols`` is root-only and ``frame``
+    computes its whole result instead. ``prep`` attaches what ``cols``
+    needs from the frame first (see :func:`_prepare`). ``sibling`` lists
+    the options of the ``<kind>_bucket`` sibling pipeline besides
+    ``buckets_path``; ``None`` = the kind has no sibling form."""
+    cols: Callable | None = None
+    frame: Callable | None = None
+    prep: Callable | None = None
+    sibling: tuple | None = None
+
+    @property
+    def bucket(self) -> bool:
+        """Whether the kind may sit under a bucket aggregation."""
+        return self.cols is not None
+
+
+# The metric kinds of the aggregation grammar — the ONE place each is
+# defined, for bucket sub-aggs, bare root metrics, output names and the
+# sibling `<kind>_bucket` pipelines.
+_METRICS = {
+    "avg": _Metric(_one(F.avg), sibling=()),
+    "sum": _Metric(_one(F.sum), sibling=()),
+    "min": _Metric(_one(F.min), sibling=()),
+    "max": _Metric(_one(F.max), sibling=()),
+    "value_count": _Metric(_one(F.count, allow_str=True)),
+    # ES `cardinality` is HLL-APPROXIMATE (precision_threshold); the
+    # engine computes the EXACT distinct count — a documented deviation
+    # in the user's favor (Catalyst's partial-aggregated countDistinct
+    # scales fine, and exactness is what the DuckDB oracle can check).
+    # precision_threshold is accordingly rejected as an unknown option.
+    "cardinality": _Metric(_one(F.countDistinct, allow_str=True)),
+    "stats": _Metric(_stat_set(_STATS), sibling=()),
+    "extended_stats": _Metric(_stat_set(_EXT_STATS, cast="double"),
+                              sibling=()),
+    "percentiles": _Metric(_percentile_cols, sibling=("percents",)),
+    "percentile_ranks": _Metric(_percentile_rank_cols),
+    "boxplot": _Metric(_stat_set(_BOXPLOT, cast="double", script=False)),
+    "top_metrics": _Metric(_top_metrics_cols),
+    "weighted_avg": _Metric(_weighted_avg_cols),
+    "median_absolute_deviation": _Metric(_mad_cols, prep=_mad_prep),
+    "string_stats": _Metric(frame=_apply_string_stats),
+    "matrix_stats": _Metric(frame=_apply_matrix_stats),
+}
+# ES sibling pipeline aggregations: top-level aggs computed over the
+# FINAL bucket list of the multi-bucket agg they sit next to (post
+# min_doc_count / order / size — the buckets ES would return)
+_SIBLING_KINDS = {f"{k}_bucket": k for k, m in _METRICS.items()
+                  if m.sibling is not None}
+
+
+def _claim(taken: set, names) -> None:
+    """The output-name check of one aggregation level: bucket columns
+    (``key``, ``doc_count``, ``sub_key``, ``sub_doc_count``), metric
+    outputs, pipeline and sibling names all join ``taken``, and a
+    repeat fails loud — never a duplicate or unresolvable column."""
+    for n in names:
+        if n in taken:
             raise DslError(
-                "median_absolute_deviation needs a per-bucket median "
-                "prepass and is supported bare or under a single-level "
-                "bucket aggregation only")
-        if kind == "__mad":
-            # internal marker installed by _mad_prepass: the per-bucket
-            # median column is already attached to the frame; MAD =
-            # EXACT median of |x - median| (ES is TDigest-approximate —
-            # the documented percentiles/cardinality deviation)
-            cols.append(F.percentile(
-                F.abs(body["col"] - F.col(body["med"])),
-                F.lit(0.5)).alias(name))
-            continue
-        if kind not in _METRIC_FNS:
+                f"aggregation output {n!r} collides with another "
+                f"column of the same level")
+        taken.add(n)
+
+
+def _prepare(frame: DataFrame, pkey, spec: dict):
+    """Run the ``prep`` step of every metric in ``spec`` that has one,
+    per bucket of ``pkey`` (or over the whole frame when ``None``) ->
+    (frame, ``{name: value}`` for :func:`_metric_cols`)."""
+    prepared = {}
+    for i, (name, s) in enumerate(spec.items()):
+        m = (_METRICS.get(next(iter(s)))
+             if isinstance(s, dict) and len(s) == 1 else None)
+        if m is not None and m.prep is not None:
+            (kind, body), = s.items()
+            frame, prepared[name] = m.prep(frame, pkey, f"__prep_{i}",
+                                           kind, body)
+    return frame, prepared
+
+
+def _metric_cols(spec: dict, taken: set, prepared: dict | None = None):
+    """Metric sub-aggs ``{name: {kind: body}}`` -> (output names,
+    aliased agg columns), each kind's columns from :data:`_METRICS`;
+    the names join the level's ``taken`` set (:func:`_claim`)."""
+    pairs = []
+    for name, s in spec.items():
+        if not isinstance(s, dict) or len(s) != 1:
+            raise DslError(f"bad sub-aggregation {name!r}")
+        (kind, body), = s.items()
+        m = _METRICS.get(kind)
+        if m is None or not m.bucket:
             raise DslError(
                 f"sub-aggregation {kind!r} not supported (metrics only)")
-        cols.append(
-            _METRIC_FNS[kind](_metric_col(
-                kind, body,
-                allow_str_missing=kind in ("value_count", "cardinality"),
-            )).alias(name))
-    return cols
+        pairs += m.cols(kind, name, body, (prepared or {}).get(name))
+    names = [n for n, _ in pairs]
+    _claim(taken, names)
+    return names, [e.alias(n) for n, e in pairs]
 
 
 def dsl_aggregate(
@@ -4849,20 +5029,22 @@ def dsl_aggregate(
       (week is ISO/Monday-based, matching ES). ``fixed_interval``
       (``"30m"``, ``"12h"``, ``"7d"`` — s/m/h/d units) buckets on exact
       epoch-anchored multiples instead, exactly one of the two.
-    - a bare metric ``{"avg"|"sum"|"min"|"max"|"value_count"|"cardinality":
-      {"field": f}}`` -> one row, one column named after the agg; the
-      ``stats`` metric -> one row, five ``<name>_<stat>`` columns
-      (count/min/max/avg/sum); ``percentiles`` -> ``<name>_p<pct>``
-      columns (EXACT interpolated — ES is TDigest-approximate;
-      ``cardinality`` is likewise exact where ES is HLL-approximate —
-      both documented deviations in the user's favor);
-      ``percentile_ranks`` -> ``<name>_<value>`` columns (EXACT
-      percentage of non-null values <= v — same deviation family).
-      Every field metric takes the ES ``missing`` parameter (NULL-field
-      docs count as the substitute value — numeric required, except
-      ``value_count``/``cardinality`` which also take a string for
-      keyword fields; ``weighted_avg`` keeps its per-part no-missing
-      rule, fail-loud).
+    - a bare metric ``{<kind>: <body>}`` -> one row of the kind's
+      columns; any kind of the metric table :data:`_METRICS` except the
+      root-only ``string_stats`` / ``matrix_stats`` also works as a
+      bucket sub-agg. One-column kinds (avg/sum/min/max/value_count/
+      cardinality/weighted_avg/median_absolute_deviation) are named
+      after the agg; the others flatten to ``<name>_<part>`` columns
+      (``stats``, ``extended_stats``, ``percentiles`` -> ``_p<pct>``,
+      ``percentile_ranks``, ``boxplot``, ``top_metrics`` ->
+      ``_<field>``). Each kind's function in the table documents its
+      grammar and its documented ES deviations (EXACT percentiles,
+      cardinality and MAD where ES approximates). Field metrics take the
+      ES ``missing`` parameter (NULL-field docs count as the substitute
+      value — numeric required, except ``value_count``/``cardinality``/
+      ``string_stats``, which also take a string). An output name that
+      repeats at one level (a metric named ``key``, ``stats`` ``s`` next
+      to ``s_min``, a repeated percent) fails loud.
     - ``{"histogram": {"field": f, "interval": n, "offset": o?}}`` ->
       (key, doc_count [, sub metrics]) with key =
       floor((v - o)/n)*n + o, ascending; ``min_doc_count``/``missing``
@@ -4892,21 +5074,6 @@ def dsl_aggregate(
     - ``{"adjacency_matrix": {"filters": {...}, "separator": "&"}}``
       -> one bucket per filter plus one per pairwise intersection
       (key "a&b"), key-sorted, non-empty only (the ES rule).
-    - metrics also include ``extended_stats`` (eight
-      ``<name>_<stat>`` columns incl. sum_of_squares / population
-      variance / std_deviation), ``weighted_avg``
-      (``{"value": {"field": v}, "weight": {"field": w}}``),
-      ``boxplot`` (EXACT min/q1/q2/q3/max vs ES TDigest; whisker
-      fields out of grammar — see :func:`_boxplot_exprs`),
-      ``median_absolute_deviation`` (EXACT median(|x - median|), bare
-      or under a single-level bucket via a co-partitioned window
-      median — see :func:`_mad_prepass`), ``string_stats`` (bare:
-      length stats + Shannon character entropy, see
-      :func:`_apply_string_stats`), and ``top_metrics`` (``size: 1``
-      — the winning document's metric values by sort, one
-      struct-ordered max/min, deterministic sort-tie break on the
-      metric values where ES is shard-order-arbitrary — see
-      :func:`_top_metrics_exprs`).
     - ``serial_diff`` joins the parent pipelines (lag-``n``
       difference; the first ``n`` buckets are NULL).
     - ``{"missing": {"field": f}}`` -> one row: the qualifying docs
@@ -4955,18 +5122,19 @@ def dsl_aggregate(
       ``{"avg_bucket"|"sum_bucket"|"min_bucket"|"max_bucket"|
       "stats_bucket"|"extended_stats_bucket"|"percentiles_bucket":
       {"buckets_path": "<bucket-agg>><metric>"[, "percents": [...]]}}``
-      -> aggregates of the FINAL bucket list, flattened as constant
-      columns (see :func:`_apply_siblings`); percentiles_bucket is
+      -> ``<kind>_bucket`` is metric ``<kind>`` of the table over that
+      column of the FINAL bucket list, flattened as constant columns (see
+      :func:`_apply_siblings`); percentiles_bucket is
       linear-interpolated over the sorted bucket values — ES computes
       this one exactly too, so no TDigest deviation.
     - ``{"significant_terms": {"field": f, "size": n,
       "min_doc_count": m}}`` -> terms over-represented in the
       qualifying set vs the whole index, JLH-scored (see
-      :func:`_apply_significant_terms`).
+      :func:`_apply_significant`).
     - ``{"rare_terms": {"field": f, "max_doc_count": m}}`` -> the
       long-tail buckets, exact (see :func:`_apply_rare_terms`).
     - ``{"significant_text": {"field": f, ...}}`` -> the JLH machinery
-      over ANALYZED text (see :func:`_apply_significant_text`).
+      over ANALYZED text (see :func:`_apply_significant`).
     - ``{"sampler": {"shard_size": n}, "aggs": {...}}`` -> the inner
       agg over the top-n best-scoring qualifying docs (one
       TakeOrderedAndProject cut; the ES speed companion of
@@ -5073,13 +5241,9 @@ def _parse_bucket_sort(body, out_cols: list[str]):
                 f"bucket_sort target {fld!r} is not a column of this "
                 f"bucket")
         keys.append((col, d))
-    frm = body.get("from", 0)
-    size = body.get("size")
-    if isinstance(frm, bool) or not isinstance(frm, int) or frm < 0:
-        raise DslError(f"bad bucket_sort from {frm!r}")
-    if size is not None and (isinstance(size, bool)
-                             or not isinstance(size, int) or size < 1):
-        raise DslError(f"bad bucket_sort size {size!r}")
+    frm = _pos_int(body, "from", 0, "bucket_sort", lo=0)
+    size = (None if body.get("size") is None
+            else _pos_int(body, "size", None, "bucket_sort"))
     if not keys and size is None and frm == 0:
         raise DslError("bucket_sort needs sort, from, or size")
     return keys, frm, size
@@ -5165,11 +5329,7 @@ def _parse_moving_fn(body: dict):
     through ES's non-finite-to-null JSON rendering: ``sum`` returns
     0.0 (the fold identity is finite), everything else null
     (NaN / ±Infinity render as null)."""
-    window = body.get("window")
-    if isinstance(window, bool) or not isinstance(window, int) \
-            or window < 1:
-        raise DslError(
-            f"moving_fn needs an int window >= 1, got {window!r}")
+    window = _pos_int(body, "window", None, "moving_fn")
     shift = body.get("shift", 0)
     if isinstance(shift, bool) or not isinstance(shift, int):
         raise DslError(f"moving_fn shift must be an int, got {shift!r}")
@@ -5337,34 +5497,25 @@ def _compile_bucket_script(kind: str, body, metric_cols: list[str]):
     return " ".join(s.strip() for s in out)
 
 
-# ES sibling pipeline aggregations: top-level aggs computed over the
-# FINAL bucket list of the multi-bucket agg they sit next to (post
-# min_doc_count / order / size — the buckets ES would return).
-_SIBLING_KINDS = ("avg_bucket", "sum_bucket", "min_bucket",
-                  "max_bucket", "stats_bucket", "extended_stats_bucket",
-                  "percentiles_bucket")
-_SIBLING_FNS = {"avg_bucket": F.avg, "sum_bucket": F.sum,
-                "min_bucket": F.min, "max_bucket": F.max}
-
-
 def _sibling_exprs(siblings: dict, agg_name: str,
                    out_cols: list[str]) -> list:
     """Validate sibling pipeline bodies against the flattened bucket
-    frame -> aliased aggregate expressions over it. ``buckets_path``
-    takes the ES sibling form ``<bucket-agg>><metric>`` (or ``>_count``
-    / ``><stats-name>.<stat>``), where the prefix must name the one
-    primary aggregation. ES ``gap_policy: skip`` (the default) is the
-    only behaviour: Spark aggregates skip NULL metric values natively.
-    Unknown options FAIL, same rule as parent pipelines."""
+    frame -> aliased aggregate expressions over it: ``<kind>_bucket``
+    is metric ``<kind>`` of :data:`_METRICS` over the bucket column.
+    ``buckets_path`` takes the ES sibling form ``<bucket-agg>><metric>``
+    (or ``>_count`` / ``><stats-name>.<stat>``), where the prefix must
+    name the one primary aggregation. ES ``gap_policy: skip`` (the
+    default) is the only behaviour: Spark aggregates skip NULL metric
+    values natively. Unknown options FAIL, same rule as parent
+    pipelines."""
     taken = set(out_cols)
     exprs = []
     for name, (kind, body) in siblings.items():
+        metric = _SIBLING_KINDS[kind]
+        m = _METRICS[metric]
         if not isinstance(body, dict) or "buckets_path" not in body:
             raise DslError(f"{kind} needs a buckets_path, got {body!r}")
-        allowed = {"buckets_path"} | ({"percents"}
-                                      if kind == "percentiles_bucket"
-                                      else set())
-        unknown = set(body) - allowed
+        unknown = set(body) - {"buckets_path", *m.sibling}
         if unknown:
             raise DslError(f"unsupported {kind} options {sorted(unknown)}")
         p = body["buckets_path"]
@@ -5381,46 +5532,9 @@ def _sibling_exprs(siblings: dict, agg_name: str,
         if col not in out_cols or col in ("key", "sub_key"):
             raise DslError(
                 f"buckets_path {p!r} is not a metric of {agg_name!r}")
-        if kind == "stats_bucket":
-            new = [f"{name}_{s}" for s in
-                   ("count", "min", "max", "avg", "sum")]
-            stat_fns = (F.count, F.min, F.max, F.avg, F.sum)
-        elif kind == "extended_stats_bucket":
-            # the metric extended_stats' exact column set/definitions
-            # (population variance; sigma bounds stay out of grammar)
-            new = [f"{name}_{s}" for s in
-                   ("count", "min", "max", "avg", "sum",
-                    "sum_of_squares", "variance", "std_deviation")]
-            stat_fns = (F.count, F.min, F.max, F.avg, F.sum,
-                        lambda c: F.sum(F.col(c) * F.col(c)),
-                        F.var_pop, F.stddev_pop)
-        elif kind == "percentiles_bucket":
-            # ES percentiles_bucket sorts the bucket values in memory
-            # and LINEARLY INTERPOLATES at rank p/100*(n-1) — exactly
-            # Catalyst `percentile` (unlike the TDigest metric, no
-            # exactness deviation here)
-            pcts = body.get("percents", list(_DEFAULT_PERCENTS))
-            if not isinstance(pcts, list) or not pcts or any(
-                    isinstance(p, bool) or not isinstance(p, (int, float))
-                    or not 0 < p < 100 for p in pcts):
-                raise DslError(
-                    f"percents must be numbers strictly between 0 and "
-                    f"100, got {pcts!r}")
-            pcts = [float(p) for p in pcts]
-            new = [f"{name}_p{_pct_label(p)}" for p in pcts]
-            stat_fns = tuple(
-                (lambda c, _p=p: F.percentile(
-                    F.col(c).cast("double"), F.lit(_p / 100.0)))
-                for p in pcts)
-        else:
-            new, stat_fns = [name], (_SIBLING_FNS[kind],)
-        clash = [n for n in new if n in taken]
-        if clash:
-            raise DslError(
-                f"sibling pipeline {name!r} collides with output "
-                f"columns {clash}")
-        taken.update(new)
-        exprs.extend(fn(col).alias(n) for fn, n in zip(stat_fns, new))
+        pairs = m.cols(metric, name, body, F.col(col))
+        _claim(taken, [n for n, _ in pairs])
+        exprs += [e.alias(n) for n, e in pairs]
     return exprs
 
 
@@ -5437,20 +5551,6 @@ def _apply_siblings(out: DataFrame, siblings: dict, agg_name: str,
     exprs = _sibling_exprs(siblings, agg_name, out.columns)
     sib = out.agg(*exprs)
     return out.crossJoin(F.broadcast(sib)).orderBy(*order_cols)
-
-
-def _parse_min_doc_count(body: dict, allow_zero: bool = False) -> int:
-    """ES ``min_doc_count``: buckets below it are pruned (BEFORE the
-    size cut). Default 1. 0 means emitting EMPTY buckets — supported
-    on single-level histogram-family aggs via gap filling
-    (:func:`_gap_fill`); on terms, 0 would mean enumerating every
-    term of the background set, which stays out-of-grammar."""
-    mdc = body.get("min_doc_count", 1)
-    floor_ = 0 if allow_zero else 1
-    if isinstance(mdc, bool) or not isinstance(mdc, int) or mdc < floor_:
-        raise DslError(
-            f"min_doc_count must be an int >= {floor_}, got {mdc!r}")
-    return mdc
 
 
 _CAL_STEP = {"hour": "interval 1 hour", "day": "interval 1 day",
@@ -5507,10 +5607,7 @@ def _resolve_auto_interval(frame: DataFrame, body: dict):
             f"unsupported auto_date_histogram options {sorted(unknown)}")
     if "field" not in body or not isinstance(body["field"], str):
         raise DslError("auto_date_histogram needs a field")
-    target = body.get("buckets", 10)
-    if isinstance(target, bool) or not isinstance(target, int) \
-            or target < 1:
-        raise DslError(f"bad auto_date_histogram buckets {target!r}")
+    target = _pos_int(body, "buckets", 10, "auto_date_histogram")
     mi = body.get("minimum_interval")
     if mi is not None and mi not in _MIN_INTERVAL_ORDER:
         raise DslError(
@@ -5565,7 +5662,6 @@ def _eb_bucket(kind: str, body: dict, v, which: str):
             raise DslError(
                 f"extended_bounds {which} must be a number, got {v!r}")
         iv, off = float(body["interval"]), float(body.get("offset", 0))
-        import math  # noqa: PLC0415
         return math.floor((float(v) - off) / iv) * iv + off
     t = _resolve_date_math(v, "gte")
     if isinstance(t, str):
@@ -5733,26 +5829,17 @@ def _bucket_key(kind: str, body: dict):
                 raise DslError(
                     f"terms script buckets do not take {sorted(bad)}")
             key = _agg_script_col("terms script", body["script"])
-            size = body.get("size", 10)
-            if isinstance(size, bool) or not isinstance(size, int) \
-                    or size < 1:
-                raise DslError(
-                    f"terms size must be an int >= 1, got {size!r}")
-            return key, size, order, _parse_min_doc_count(body)
-        key = F.col(_ident(body["field"]))
-        if "missing" in body:
+        else:
             # ES terms `missing`: NULL-field docs bucket under this
             # value instead of being dropped
-            mv = body["missing"]
-            if not isinstance(mv, (str, int, float)) \
-                    or isinstance(mv, bool):
-                raise DslError(f"missing must be a scalar, got {mv!r}")
-            key = F.coalesce(key, F.lit(mv))
-        key = _terms_include_exclude(key, body)
-        size = body.get("size", 10)
-        if isinstance(size, bool) or not isinstance(size, int) or size < 1:
-            raise DslError(f"terms size must be an int >= 1, got {size!r}")
-        return key, size, order, _parse_min_doc_count(body)
+            key = _terms_include_exclude(_fill_missing(
+                "terms", body, F.col(_ident(body["field"])),
+                allow_str=True), body)
+        # ES min_doc_count prunes buckets BEFORE the size cut; 0 (empty
+        # buckets) would enumerate every term of the background set on
+        # terms — out of grammar; the histogram family gap-fills it
+        return (key, _pos_int(body, "size", 10, "terms"), order,
+                _pos_int(body, "min_doc_count", 1, "terms"))
     unknown = set(body) - {"field", "calendar_interval", "fixed_interval",
                            "min_doc_count", "order", "extended_bounds",
                            "time_zone", "__cal_years"}
@@ -5775,8 +5862,7 @@ def _bucket_key(kind: str, body: dict):
         # _resolve_auto_interval for the 5y+ rungs of the
         # auto_date_histogram ladder: Jan 1 of the containing
         # 1970-anchored k-year period
-        if isinstance(yk, bool) or not isinstance(yk, int) or yk < 1:
-            raise DslError(f"bad __cal_years {yk!r}")
+        _pos_int(body, "__cal_years", 1, "date_histogram")
         if tz is not None or "extended_bounds" in body:
             raise DslError(
                 "__cal_years supports neither time_zone nor "
@@ -5804,7 +5890,7 @@ def _bucket_key(kind: str, body: dict):
         key = F.timestamp_seconds(
             F.floor(F.unix_timestamp(col) / F.lit(secs)).cast("long")
             * F.lit(secs))
-    mdc = _parse_min_doc_count(body, allow_zero=True)
+    mdc = _pos_int(body, "min_doc_count", 1, "date_histogram", lo=0)
     if tz is not None and mdc == 0:
         raise DslError(
             "time_zone with min_doc_count: 0 is not supported (the "
@@ -5891,14 +5977,8 @@ def _multi_terms_key(body: dict):
         if not isinstance(t, dict) or "field" not in t \
                 or set(t) - {"field", "missing"}:
             raise DslError(f"bad multi_terms source {t!r}")
-        c = F.col(_ident(t["field"]))
-        if "missing" in t:
-            mv = t["missing"]
-            if isinstance(mv, bool) or not isinstance(mv,
-                                                      (str, int, float)):
-                raise DslError(f"missing must be a scalar, got {mv!r}")
-            c = F.coalesce(c, F.lit(mv))
-        cols.append(c)
+        cols.append(_fill_missing("multi_terms", t,
+                                  F.col(_ident(t["field"])), allow_str=True))
     notnull = reduce(lambda a, b: a & b, [c.isNotNull() for c in cols])
     key = F.when(notnull,
                  F.concat_ws("|", *[c.cast("string") for c in cols]))
@@ -5906,11 +5986,8 @@ def _multi_terms_key(body: dict):
     if not isinstance(order, dict) or len(order) != 1:
         raise DslError(
             'multi_terms order must be a single {"target": "asc"|"desc"}')
-    size = body.get("size", 10)
-    if isinstance(size, bool) or not isinstance(size, int) or size < 1:
-        raise DslError(
-            f"multi_terms size must be an int >= 1, got {size!r}")
-    return key, size, order, _parse_min_doc_count(body)
+    return (key, _pos_int(body, "size", 10, "multi_terms"), order,
+            _pos_int(body, "min_doc_count", 1, "multi_terms"))
 
 
 def _histogram_key(body: dict):
@@ -5932,7 +6009,7 @@ def _histogram_key(body: dict):
     col = F.col(_ident(body["field"])).cast("double")
     key = (F.floor((col - F.lit(float(off))) / F.lit(float(iv)))
            * F.lit(float(iv)) + F.lit(float(off)))
-    mdc = _parse_min_doc_count(body, allow_zero=True)
+    mdc = _pos_int(body, "min_doc_count", 1, "histogram", lo=0)
     if "extended_bounds" in body and mdc != 0:
         raise DslError(
             "extended_bounds needs min_doc_count: 0 (ES only honors "
@@ -5994,39 +6071,6 @@ def _split_sub(sub: dict):
                     f"metric sub-aggregation {name!r} cannot nest further")
             metrics[name] = spec
     return metrics, bucket
-
-
-def _metric_out_names(sub_aggs: dict) -> list[str]:
-    """Output column names :func:`_metric_exprs` produces (``stats``
-    flattens to five ``<name>_<stat>`` columns)."""
-    names: list[str] = []
-    for name, spec in sub_aggs.items():
-        (kind, body), = spec.items()
-        if kind == "stats":
-            names.extend(f"{name}_{s}"
-                         for s in ("count", "min", "max", "avg", "sum"))
-        elif kind == "extended_stats":
-            names.extend(f"{name}_{s}" for s in _EXT_STATS)
-        elif kind == "percentiles":
-            names.extend(f"{name}_p{_pct_label(p)}"
-                         for p in _percents_of(body))
-        elif kind == "boxplot":
-            names.extend(f"{name}_{s}" for s, _ in _BOXPLOT_STATS)
-        elif kind == "top_metrics":
-            ms = body.get("metrics")
-            ms = [ms] if isinstance(ms, dict) else (ms or [])
-            names.extend(f"{name}_{m['field']}" for m in ms
-                         if isinstance(m, dict)
-                         and isinstance(m.get("field"), str))
-        elif kind == "percentile_ranks":
-            names.extend(
-                f"{name}_{_pct_label(float(v)).replace('-', 'm')}"
-                for v in (body.get("values") or [])
-                if isinstance(v, (int, float))
-                and not isinstance(v, bool))
-        else:
-            names.append(name)
-    return names
 
 
 def _es_bound(v) -> str:
@@ -6206,7 +6250,8 @@ def _apply_multibucket_agg(frame: DataFrame, agg_name: str, kind: str,
         fr.groupBy(F.col("__b.k").alias("key"))
         .agg(F.min("__b.r").alias("__rank"),
              F.count(F.lit(1)).alias("doc_count"),
-             *_metric_exprs(metrics_spec))
+             *_metric_cols(metrics_spec,
+                           {"key", "doc_count", "__rank"})[1])
         .orderBy("__rank")
         .drop("__rank")
     )
@@ -6287,9 +6332,7 @@ def _apply_top_hits(frame: DataFrame, agg_name: str, kind: str,
     unknown = set(th) - {"size", "sort", "_source"}
     if unknown:
         raise DslError(f"unsupported top_hits options {sorted(unknown)}")
-    size = th.get("size", 3)  # the ES default
-    if isinstance(size, bool) or not isinstance(size, int) or size < 1:
-        raise DslError(f"top_hits size must be an int >= 1, got {size!r}")
+    size = _pos_int(th, "size", 3, "top_hits")  # 3: the ES default
     sort = th.get("sort")
     if not isinstance(sort, list) or not sort:
         raise DslError(
@@ -6385,6 +6428,7 @@ def _apply_composite(frame: DataFrame, agg_name: str, body: dict,
         raise DslError("composite needs a non-empty sources list")
     names: list[str] = []
     cols: list = []
+    taken = {"doc_count"}
     for s in srcs:
         if not isinstance(s, dict) or len(s) != 1:
             raise DslError(f"bad composite source {s!r}")
@@ -6404,13 +6448,10 @@ def _apply_composite(frame: DataFrame, agg_name: str, body: dict,
         if fld not in frame.columns:
             raise DslError(
                 f"composite source field {fld!r} is not available")
-        if nm == "doc_count" or nm in names:
-            raise DslError(f"composite source name {nm!r} collides")
+        _claim(taken, [nm])
         names.append(nm)
         cols.append(F.col(fld))
-    size = body.get("size", 10)
-    if isinstance(size, bool) or not isinstance(size, int) or size < 1:
-        raise DslError(f"composite size must be an int >= 1, got {size!r}")
+    size = _pos_int(body, "size", 10, "composite")
     metrics_spec, sub_bucket = _split_sub(sub)
     if sub_bucket is not None:
         raise DslError(
@@ -6440,83 +6481,106 @@ def _apply_composite(frame: DataFrame, agg_name: str, body: dict,
     out = (frame.where(keep)
            .groupBy(*[c.alias(nm) for c, nm in zip(cols, names)])
            .agg(F.count(F.lit(1)).alias("doc_count"),
-                *_metric_exprs(metrics_spec)))
+                *_metric_cols(metrics_spec, taken)[1]))
     return out.orderBy(*[F.asc(nm) for nm in names]).limit(size)
 
 
-def _apply_significant_terms(frame: DataFrame, bg_frame: DataFrame,
-                             agg_name: str, body: dict,
-                             sub: dict) -> DataFrame:
-    """ES ``significant_terms`` on a keyword field: terms UNUSUALLY
+def _apply_significant(frame: DataFrame, bg_frame: DataFrame, kind: str,
+                       body: dict, sub: dict) -> DataFrame:
+    """ES ``significant_terms`` / ``significant_text``: terms UNUSUALLY
     common in the query's qualifying set (foreground) relative to the
     whole index (background), scored with JLH — ES's default
     significance heuristic — ``(fgPct - bgPct) * (fgPct / bgPct)``.
     Only terms with fgPct > bgPct qualify (the ES positive-significance
-    rule); ``min_doc_count`` defaults to 3 (the documented
-    significant_terms default, higher than terms' 1 to suppress
-    one-off noise). Output: ``key, doc_count, bg_count, score`` rows,
-    score desc / key asc, top ``size`` (default 10).
+    rule); ``min_doc_count`` defaults to 3 (the documented default,
+    higher than terms' 1 to suppress one-off noise). Output: ``key,
+    doc_count, bg_count, score`` rows, score desc / key asc, top
+    ``size`` (default 10); ``shard_size`` is a safe no-op here (exact
+    global counts), as on terms. The two kinds differ only in their
+    term source (:func:`_keyword_counts` / :func:`_token_counts`).
 
-    Scale: exactly TWO corpus passes — one grouped count over the
-    qualifying set, one over the background — joined on the term key
-    (field-cardinality rows, never corpus rows). The set totals the
-    percentages divide by are NOT extra passes: every field-bearing
-    doc lands in exactly one bucket, so each total is an unpartitioned
-    window sum over its own bucket frame (bucket-cardinality rows;
-    plan-gated in tests/test_plans.py). No per-doc state, no driver
-    collection.
+    Scale: exactly one corpus pass per side — a grouped count over the
+    qualifying set and one over the background, joined on the term key
+    (field- or vocabulary-cardinality rows, never corpus rows). The set
+    totals the percentages divide by are NOT extra passes (see the two
+    counters). No per-doc state, no driver collection.
 
-    ``background_filter`` (round 5, this session) narrows the
+    ``background_filter`` (significant_terms only) narrows the
     background set to docs matching a metadata clause or match_all
     (the filters-agg clause grammar, :func:`_filter_cond`) — the ES
     knob for "significant vs a comparable slice, not the whole
     index". Terms absent from the FILTERED background drop (the
     fg ⊆ bg assumption the ES docs state; a background that doesn't
     contain the foreground divides by zero in ES's own arithmetic).
-    Text-field sampling and the other ES heuristics
-    (gnd/chi_square/...) stay out of grammar — fail loud."""
+    The other ES heuristics (gnd/chi_square/...), text sampling and
+    ``filter_duplicate_text`` stay out of grammar — fail loud."""
     metrics_spec, sub_bucket = _split_sub(sub)
     if sub_bucket is not None or metrics_spec:
-        raise DslError(
-            "significant_terms supports no sub-aggregations")
-    # shard_size: a safe no-op here (exact global counts), as on terms
-    unknown = set(body) - {"field", "size", "min_doc_count",
-                           "shard_size", "background_filter"}
+        raise DslError(f"{kind} supports no sub-aggregations")
+    terms = kind == "significant_terms"
+    unknown = set(body) - {"field", "size", "min_doc_count", "shard_size",
+                           *(("background_filter",) if terms else ())}
     if unknown:
-        raise DslError(
-            f"unsupported significant_terms options {sorted(unknown)}")
+        raise DslError(f"unsupported {kind} options {sorted(unknown)}")
     if "background_filter" in body:
         bg_frame = bg_frame.where(
             _filter_cond("background_filter", body["background_filter"]))
     fld = _ident(body.get("field", ""))
     if not fld:
-        raise DslError("significant_terms needs a field")
-    size = body.get("size", 10)
-    if isinstance(size, bool) or not isinstance(size, int) or size < 1:
-        raise DslError(f"bad significant_terms size {size!r}")
-    mdc = body.get("min_doc_count", 3)
-    if isinstance(mdc, bool) or not isinstance(mdc, int) or mdc < 1:
-        raise DslError(f"bad significant_terms min_doc_count {mdc!r}")
-    f = F.col(fld)
-    # totals count docs BEARING the field (ES: the sets whose
-    # percentages are compared) — window sums over the BUCKET frames,
-    # never a corpus re-scan (each field-bearing doc is in exactly
-    # one bucket)
-    tot = Window.partitionBy()
-    fg = (frame.where(f.isNotNull()).groupBy(f.alias("key"))
-          .agg(F.count(F.lit(1)).alias("doc_count"))
-          .withColumn("__fg_total", F.sum("doc_count").over(tot)))
-    bg = (bg_frame.where(f.isNotNull()).groupBy(f.alias("key"))
-          .agg(F.count(F.lit(1)).alias("bg_count"))
-          .withColumn("__bg_total", F.sum("bg_count").over(tot)))
-    out = fg.join(bg, "key")  # fg ⊆ bg: inner join loses nothing
+        raise DslError(f"{kind} needs a field")
+    size = _pos_int(body, "size", 10, kind)
+    mdc = _pos_int(body, "min_doc_count", 3, kind)
+    if terms:
+        counts = _keyword_counts
+    else:
+        counts = _token_counts
+        for f2 in (frame, bg_frame):
+            if fld not in f2.columns:
+                raise DslError(
+                    f"significant_text field {fld!r} is not available "
+                    f"(the compressed index stores postings, not raw "
+                    f"text — pass docs_df)")
+    out = (counts(frame, fld, "doc_count", "__fg_total")
+           .join(counts(bg_frame, fld, "bg_count", "__bg_total"),
+                 "key"))  # fg ⊆ bg: the inner join loses nothing
     fg_pct = F.col("doc_count") / F.col("__fg_total")
     bg_pct = F.col("bg_count") / F.col("__bg_total")
     out = (out.where(F.col("doc_count") >= mdc)
            .where(fg_pct > bg_pct)  # ES: positively significant only
            .withColumn("score", (fg_pct - bg_pct) * (fg_pct / bg_pct))
            .drop("__fg_total", "__bg_total"))
-    return (out.orderBy(F.desc("score"), F.asc("key")).limit(size))
+    return out.orderBy(F.desc("score"), F.asc("key")).limit(size)
+
+
+def _keyword_counts(frame: DataFrame, fld: str, cname: str, total: str):
+    """significant_terms' term source: per-value doc counts of a keyword
+    field, with ``total`` = the docs BEARING the field (the set ES's
+    percentages compare) as an unpartitioned window sum over the BUCKET
+    frame — each field-bearing doc is in exactly one bucket, so no
+    corpus re-scan (plan-gated in tests/test_plans.py)."""
+    f = F.col(fld)
+    return (frame.where(f.isNotNull()).groupBy(f.alias("key"))
+            .agg(F.count(F.lit(1)).alias(cname))
+            .withColumn(total, F.sum(cname).over(Window.partitionBy())))
+
+
+def _token_counts(frame: DataFrame, fld: str, cname: str, total: str):
+    """significant_text's term source: ANALYZED text — per-doc DISTINCT
+    token sets (a term counts once per doc, the df convention), with
+    ``total`` = the token-bearing docs. The total rides the same
+    explode as the term counts via a sentinel element (``"\\x00"``,
+    unreachable by the analyzer's ``[a-z0-9_]+`` tokens) appended to
+    every non-empty token set, then spread with an unpartitioned window
+    over the bucket frame."""
+    ex = F.array_distinct(tokenize_column(F.col(fld)))
+    tagged = F.when(F.size(ex) > 0,
+                    F.concat(ex, F.array(F.lit("\x00")))).otherwise(ex)
+    g = (frame.select(F.explode(tagged).alias("key"))
+         .groupBy("key").agg(F.count(F.lit(1)).alias(cname)))
+    g = g.withColumn(total, F.max(F.when(F.col("key") == "\x00",
+                                         F.col(cname)))
+                     .over(Window.partitionBy()))
+    return g.where(F.col("key") != "\x00")
 
 
 def _parse_sampler(body: dict, sub: dict):
@@ -6528,9 +6592,7 @@ def _parse_sampler(body: dict, sub: dict):
     unknown = set(body) - {"shard_size"}
     if unknown:
         raise DslError(f"unsupported sampler options {sorted(unknown)}")
-    n = body.get("shard_size", 100)
-    if isinstance(n, bool) or not isinstance(n, int) or n < 1:
-        raise DslError(f"bad sampler shard_size {n!r}")
+    n = _pos_int(body, "shard_size", 100, "sampler")
     if not sub:
         raise DslError("sampler needs a sub-aggregation")
     return n, _parse_aggs_block({"aggs": sub})
@@ -6554,82 +6616,11 @@ def _parse_diversified(body: dict, sub: dict):
             f"unsupported diversified_sampler options {sorted(unknown)}")
     if "field" not in body or not isinstance(body["field"], str):
         raise DslError("diversified_sampler needs a field to diversify on")
-    n = body.get("shard_size", 100)
-    if isinstance(n, bool) or not isinstance(n, int) or n < 1:
-        raise DslError(f"bad diversified_sampler shard_size {n!r}")
-    m = body.get("max_docs_per_value", 1)
-    if isinstance(m, bool) or not isinstance(m, int) or m < 1:
-        raise DslError(f"bad max_docs_per_value {m!r}")
+    n = _pos_int(body, "shard_size", 100, "diversified_sampler")
+    m = _pos_int(body, "max_docs_per_value", 1, "diversified_sampler")
     if not sub:
         raise DslError("diversified_sampler needs a sub-aggregation")
     return n, m, _ident(body["field"]), _parse_aggs_block({"aggs": sub})
-
-
-def _apply_significant_text(frame: DataFrame, bg_frame: DataFrame,
-                            agg_name: str, body: dict,
-                            sub: dict) -> DataFrame:
-    """ES ``significant_text``: the :func:`_apply_significant_terms`
-    JLH machinery over ANALYZED text — terms over-represented in the
-    qualifying docs' token sets vs the whole corpus ("what words make
-    this result set special"). Per-doc term sets are DISTINCT (a term
-    counts once per doc, the df convention), percentages divide by the
-    number of token-bearing docs in each set.
-
-    Scale: exactly ONE scan per side — the doc total rides the same
-    explode as the term counts via a sentinel element (``"\\x00"``,
-    unreachable by the analyzer's ``[a-z0-9_]+`` tokens) appended to
-    every non-empty token set, then spread with an unpartitioned
-    window over the bucket frame; the fg/bg join carries
-    vocabulary-cardinality rows. ES's sampling/dedup heuristics
-    (``sampler``, ``filter_duplicate_text``) stay out of grammar."""
-    metrics_spec, sub_bucket = _split_sub(sub)
-    if sub_bucket is not None or metrics_spec:
-        raise DslError("significant_text supports no sub-aggregations")
-    unknown = set(body) - {"field", "size", "min_doc_count",
-                           "shard_size"}
-    if unknown:
-        raise DslError(
-            f"unsupported significant_text options {sorted(unknown)}")
-    fld = _ident(body.get("field", ""))
-    if not fld:
-        raise DslError("significant_text needs a field")
-    size = body.get("size", 10)
-    if isinstance(size, bool) or not isinstance(size, int) or size < 1:
-        raise DslError(f"bad significant_text size {size!r}")
-    mdc = body.get("min_doc_count", 3)
-    if isinstance(mdc, bool) or not isinstance(mdc, int) or mdc < 1:
-        raise DslError(f"bad significant_text min_doc_count {mdc!r}")
-    for f2 in (frame, bg_frame):
-        if fld not in f2.columns:
-            raise DslError(
-                f"significant_text field {fld!r} is not available "
-                f"(the compressed index stores postings, not raw "
-                f"text — pass docs_df)")
-
-    def counted(f2, cname):
-        ex = F.array_distinct(tokenize_column(F.col(fld)))
-        tagged = F.when(F.size(ex) > 0,
-                        F.concat(ex, F.array(F.lit("\x00")))
-                        ).otherwise(ex)
-        tot = Window.partitionBy()
-        g = (f2.select(F.explode(tagged).alias("key"))
-             .groupBy("key").agg(F.count(F.lit(1)).alias(cname)))
-        g = g.withColumn(
-            f"__{cname}_total",
-            F.max(F.when(F.col("key") == "\x00", F.col(cname)))
-            .over(tot))
-        return g.where(F.col("key") != "\x00")
-
-    fg = counted(frame, "doc_count")
-    bg = counted(bg_frame, "bg_count")
-    out = fg.join(bg, "key")  # fg ⊆ bg
-    fg_pct = F.col("doc_count") / F.col("__doc_count_total")
-    bg_pct = F.col("bg_count") / F.col("__bg_count_total")
-    out = (out.where(F.col("doc_count") >= mdc)
-           .where(fg_pct > bg_pct)
-           .withColumn("score", (fg_pct - bg_pct) * (fg_pct / bg_pct))
-           .drop("__doc_count_total", "__bg_count_total"))
-    return out.orderBy(F.desc("score"), F.asc("key")).limit(size)
 
 
 def _apply_rare_terms(frame: DataFrame, agg_name: str, body: dict,
@@ -6652,184 +6643,13 @@ def _apply_rare_terms(frame: DataFrame, agg_name: str, body: dict,
     fld = _ident(body.get("field", ""))
     if not fld:
         raise DslError("rare_terms needs a field")
-    mx = body.get("max_doc_count", 1)
-    if isinstance(mx, bool) or not isinstance(mx, int) or mx < 1:
-        raise DslError(f"bad rare_terms max_doc_count {mx!r}")
+    mx = _pos_int(body, "max_doc_count", 1, "rare_terms")
     f = F.col(fld)
     out = (frame.where(f.isNotNull()).groupBy(f.alias("key"))
            .agg(F.count(F.lit(1)).alias("doc_count"),
-                *_metric_exprs(metrics_spec))
+                *_metric_cols(metrics_spec, {"key", "doc_count"})[1])
            .where(F.col("doc_count") <= mx))
     return out.orderBy(F.asc("doc_count"), F.asc("key"))
-
-
-def _apply_matrix_stats(frame: DataFrame, name: str,
-                        body) -> DataFrame:
-    """ES ``matrix_stats`` (the matrix aggregations module): per-field
-    count/mean/variance/skewness/kurtosis plus pairwise covariance and
-    correlation over numeric fields. Output is FLATTENED to one row per
-    ordered (field, other) pair — per-field stats describe ``field``,
-    covariance/correlation describe the pair (the diagonal carries
-    variance and correlation 1) — key-sorted by (field, other).
-
-    Semantics pinned to the documented ES rules:
-
-    - a document missing ANY of the fields is EXCLUDED from the whole
-      matrix unless ``missing`` supplies that field's substitute
-      (``{"missing": {field: value}}``);
-    - variance and covariance are SAMPLE (n-1) estimates, correlation
-      their ratio (ES RunningStats); n <= 1 renders them NULL;
-    - a CONSTANT field (min == max, detected exactly — the raw-moment
-      difference E[x²]−E[x]² cancels to ulp noise, not 0, for
-      non-integer constants) has variance and covariances 0,
-      skewness/kurtosis 0 and a NULL correlation (0/0);
-    - skewness = m3 / m2^1.5 and kurtosis = m4 / m2^2 (Pearson, not
-      excess) over POPULATION central moments, computed closed-form
-      from raw moments — deterministic and replayable in plain SQL,
-      where ES's streaming update order can drift in the last ulps
-      (documented deviation family, like percentiles);
-    - ``mode`` (multi-valued field handling) stays out of grammar:
-      the engine's columns are scalars, so accepting it would imply
-      array semantics that don't exist here.
-
-    Plan shape: ONE aggregation row (Catalyst partial-aggregates
-    map-side) exploded into k^2 pair rows — bucket-cardinality work,
-    never a second scan; no shuffle beyond the single global agg."""
-    if not isinstance(body, dict) or "fields" not in body:
-        raise DslError(f"matrix_stats needs fields, got {body!r}")
-    unknown = set(body) - {"fields", "missing"}
-    if unknown:
-        raise DslError(
-            f"unsupported matrix_stats options {sorted(unknown)}")
-    fields = body["fields"]
-    if (not isinstance(fields, list) or not fields
-            or not all(isinstance(f, str) for f in fields)
-            or len(set(fields)) != len(fields)):
-        raise DslError(
-            f"matrix_stats fields must be a non-empty list of distinct "
-            f"field names, got {fields!r}")
-    fields = [_ident(f) for f in fields]
-    miss = body.get("missing", {})
-    if not isinstance(miss, dict) or not all(
-            isinstance(k, str) and not isinstance(v, bool)
-            and isinstance(v, (int, float)) for k, v in miss.items()):
-        raise DslError(f"bad matrix_stats missing {miss!r}")
-    extra = set(miss) - set(fields)
-    if extra:
-        raise DslError(
-            f"matrix_stats missing names unknown fields {sorted(extra)}")
-    for f in fields:
-        if f not in frame.columns:
-            raise DslError(f"matrix_stats field {f!r} is not available")
-    vals = {
-        f: (F.coalesce(F.col(f).cast("double"), F.lit(float(miss[f])))
-            if f in miss else F.col(f).cast("double"))
-        for f in fields
-    }
-    keep = reduce(lambda a, b: a & b,
-                  [vals[f].isNotNull() for f in fields])
-    kept = frame.where(keep)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for f in fields:
-        x = vals[f]
-        aggs += [(F.min(x) == F.max(x)).alias(f"__const_{f}"),
-                 F.avg(x).alias(f"__m1_{f}"),
-                 F.avg(x * x).alias(f"__m2_{f}"),
-                 F.avg(x * x * x).alias(f"__m3_{f}"),
-                 F.avg(x * x * x * x).alias(f"__m4_{f}")]
-    for i, fi in enumerate(fields):
-        for fj in fields[i:]:
-            aggs.append(F.avg(vals[fi] * vals[fj]).alias(f"__xy_{fi}_{fj}"))
-    row = kept.agg(*aggs)
-
-    n = F.col("__n").cast("double")
-
-    def _central(f):
-        m1, m2r = F.col(f"__m1_{f}"), F.col(f"__m2_{f}")
-        m3r, m4r = F.col(f"__m3_{f}"), F.col(f"__m4_{f}")
-        m2 = m2r - m1 * m1
-        m3 = m3r - 3 * m1 * m2r + 2 * m1 * m1 * m1
-        m4 = (m4r - 4 * m1 * m3r + 6 * m1 * m1 * m2r
-              - 3 * m1 * m1 * m1 * m1)
-        return m1, m2, m3, m4
-
-    def _const(*fs):
-        return reduce(lambda a, b: a | b,
-                      [F.col(f"__const_{f}") for f in fs])
-
-    def _cov(fi, fj):
-        a, b = (fi, fj) if f"__xy_{fi}_{fj}" in row.columns else (fj, fi)
-        exy = F.col(f"__xy_{a}_{b}")
-        # sample covariance: n/(n-1) * (E[xy] - E[x]E[y]); exactly 0
-        # against a constant field
-        return F.when(n > 1, F.when(_const(fi, fj), F.lit(0.0)).otherwise(
-            (exy - F.col(f"__m1_{fi}") * F.col(f"__m1_{fj}"))
-            * n / (n - 1)))
-
-    pairs = []
-    for fi in fields:
-        m1, m2, m3, m4 = _central(fi)
-        for fj in fields:
-            cov = _cov(fi, fj)
-            var_j = _cov(fj, fj)
-            corr = F.when(
-                (n > 1) & ~_const(fi, fj),
-                cov / F.sqrt(_cov(fi, fi) * var_j))
-            pairs.append(F.struct(
-                F.lit(fi).alias("field"),
-                F.lit(fj).alias("other"),
-                F.col("__n").alias("doc_count"),
-                F.when(n > 0, m1).alias("mean"),
-                _cov(fi, fi).alias("variance"),
-                F.when(~_const(fi) & (m2 > 0), m3 / F.pow(m2, F.lit(1.5)))
-                .otherwise(F.when(n > 0, F.lit(0.0))).alias("skewness"),
-                F.when(~_const(fi) & (m2 > 0), m4 / (m2 * m2))
-                .otherwise(F.when(n > 0, F.lit(0.0))).alias("kurtosis"),
-                cov.alias("covariance"),
-                corr.alias("correlation"),
-            ))
-    return (row.select(F.explode(F.array(*pairs)).alias("__p"))
-            .select("__p.field", "__p.other", "__p.doc_count", "__p.mean",
-                    "__p.variance", "__p.skewness", "__p.kurtosis",
-                    "__p.covariance", "__p.correlation")
-            .orderBy("field", "other"))
-
-
-def _apply_string_stats(frame: DataFrame, name: str,
-                        body: dict) -> DataFrame:
-    """ES ``string_stats`` (bare): count / min_length / max_length /
-    avg_length / entropy, flattened to ``<name>_<stat>`` columns.
-    Entropy is the Shannon base-2 entropy of the CHARACTER distribution
-    across all non-null values (the ES definition), computed
-    distributively: one char-explode -> char-count aggregation (an
-    alphabet-sized frame, never the corpus) folded through
-    ``-(1/N)*sum(n*log2 n) + log2 N``; a corpus with no characters
-    entropy-0s like ES. Lengths are measured in characters (ES counts
-    Java UTF-16 code units — identical on ASCII/BMP text, the engine's
-    analyzer domain). ``show_distribution`` (response-shape) stays out
-    of grammar."""
-    if not isinstance(body, dict) or "field" not in body:
-        raise DslError(f"string_stats metric needs a field, got {body!r}")
-    unknown = set(body) - {"field", "missing"}
-    if unknown:
-        raise DslError(
-            f"unsupported string_stats options {sorted(unknown)}")
-    f = _fill_missing("string_stats", body,
-                      F.col(_ident(body["field"])), allow_str=True)
-    vals = (frame.select(f.alias("__s"))
-            .where(F.col("__s").isNotNull()))
-    stats = vals.agg(
-        F.count("__s").alias(f"{name}_count"),
-        F.min(F.length("__s")).alias(f"{name}_min_length"),
-        F.max(F.length("__s")).alias(f"{name}_max_length"),
-        F.avg(F.length("__s")).alias(f"{name}_avg_length"))
-    chars = (vals.select(F.explode(F.split("__s", "")).alias("__c"))
-             .groupBy("__c").agg(F.count(F.lit(1)).alias("__n")))
-    ent = chars.agg(F.coalesce(
-        -F.sum(F.col("__n") * F.log2("__n")) / F.sum("__n")
-        + F.log2(F.sum("__n")),
-        F.lit(0.0)).alias(f"{name}_entropy"))
-    return stats.crossJoin(F.broadcast(ent))
 
 
 def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
@@ -6860,9 +6680,7 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
         body, label = _resolve_auto_interval(frame, body)
         out = _apply_agg(frame, agg_name, "date_histogram", body, sub,
                          siblings, bg_frame)
-        if "interval" in out.columns:
-            raise DslError(
-                "an aggregation column is already named 'interval'")
+        _claim(set(out.columns), ["interval"])
         return out.withColumn("interval", F.lit(label))
     if siblings and (kind not in _BUCKET_KINDS
                      or _split_sub(_split_pipeline(sub)[1])[1] is not None
@@ -6935,56 +6753,20 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
                .limit(n))
         return _apply_agg(cut, gname, gkind, gbody, gsub, gsibs,
                           bg_frame)
-    if kind == "significant_terms":
+    if kind in ("significant_terms", "significant_text"):
         if bg_frame is None:
-            raise DslError(
-                "significant_terms is only available on full requests")
-        return _apply_significant_terms(frame, bg_frame, agg_name,
-                                        body, sub)
-    if kind == "significant_text":
-        if bg_frame is None:
-            raise DslError(
-                "significant_text is only available on full requests")
-        return _apply_significant_text(frame, bg_frame, agg_name,
-                                       body, sub)
+            raise DslError(f"{kind} is only available on full requests")
+        return _apply_significant(frame, bg_frame, kind, body, sub)
     if kind == "rare_terms":
         return _apply_rare_terms(frame, agg_name, body, sub)
-    if kind in _METRIC_FNS and not sub:
-        return frame.agg(
-            _METRIC_FNS[kind](_metric_col(
-                kind, body,
-                allow_str_missing=kind in ("value_count", "cardinality"),
-            )).alias(agg_name))
-    if kind == "stats" and not sub:
-        return frame.agg(*_stats_exprs(agg_name, _metric_col("stats", body)))
-    if kind == "extended_stats" and not sub:
-        return frame.agg(*_extended_stats_exprs(agg_name, body))
-    if kind == "percentiles" and not sub:
-        return frame.agg(*_percentile_exprs(agg_name, body))
-    if kind == "percentile_ranks" and not sub:
-        return frame.agg(*_percentile_rank_exprs(agg_name, body))
-    if kind == "boxplot" and not sub:
-        return frame.agg(*_boxplot_exprs(agg_name, body))
-    if kind == "top_metrics" and not sub:
-        return frame.agg(*_top_metrics_exprs(agg_name, body))
-    if kind == "median_absolute_deviation" and not sub:
-        # bare MAD: EXACT median(|x - median(x)|) (ES is TDigest-
-        # approximate). Two single-row aggregates chained through a
-        # broadcast cross-join — only the 1-row median crosses stages,
-        # never the data (the per-bucket form rides _mad_prepass's
-        # co-partitioned window instead)
-        f = _metric_col(kind, body).cast("double")
-        med = frame.agg(
-            F.percentile(f, F.lit(0.5)).alias("__mad_med"))
-        return (frame.crossJoin(F.broadcast(med))
-                .agg(F.percentile(F.abs(f - F.col("__mad_med")),
-                                  F.lit(0.5)).alias(agg_name)))
-    if kind == "string_stats" and not sub:
-        return _apply_string_stats(frame, agg_name, body)
-    if kind == "matrix_stats" and not sub:
-        return _apply_matrix_stats(frame, agg_name, body)
-    if kind == "weighted_avg" and not sub:
-        return frame.agg(_weighted_avg_expr(agg_name, body))
+    metric = _METRICS.get(kind)
+    if metric is not None and not sub:
+        # a bare metric = the same table entry over ONE global bucket
+        if metric.frame is not None:
+            return metric.frame(frame, agg_name, body)
+        spec = {agg_name: {kind: body}}
+        frame, prepared = _prepare(frame, None, spec)
+        return frame.agg(*_metric_cols(spec, set(), prepared)[1])
     if kind == "composite":
         return _apply_composite(frame, agg_name, body, sub)
     if sub and any(isinstance(v, dict) and "top_hits" in v
@@ -7017,25 +6799,18 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
         raise DslError("pipeline aggregations cannot combine with "
                        "a nested bucket sub-aggregation")
     pkey, psize, porder_spec, pmdc = _bucket_key(kind, body)
-    # metric order targets resolve against THIS level's metrics — in
-    # nested mode the parent has none (metrics live at the leaf), so a
-    # parent metric order is out-of-grammar by construction
-    porder = _bucket_order(
-        porder_spec, "doc_count", "key",
-        _metric_out_names(metrics_spec) if sub_bucket is None else [])
 
     if sub_bucket is None:
         # ES drops docs missing the bucket field (a `missing` option has
         # already coalesced NULLs away when given); Spark's groupBy
         # would otherwise emit a NULL-key bucket ES never returns
-        base = frame.where(pkey.isNotNull())
-        base, metrics_spec = _mad_prepass(base, pkey, metrics_spec)
-        out = (
-            base
-            .groupBy(pkey.alias("key"))
-            .agg(F.count(F.lit(1)).alias("doc_count"),
-                 *_metric_exprs(metrics_spec))
-        )
+        base, prepared = _prepare(frame.where(pkey.isNotNull()), pkey,
+                                  metrics_spec)
+        taken = {"key", "doc_count"}
+        mcols, mexprs = _metric_cols(metrics_spec, taken, prepared)
+        porder = _bucket_order(porder_spec, "doc_count", "key", mcols)
+        out = (base.groupBy(pkey.alias("key"))
+               .agg(F.count(F.lit(1)).alias("doc_count"), *mexprs))
         if pmdc > 1:  # ES: prune BEFORE ordering + the size cut
             out = out.where(F.col("doc_count") >= pmdc)
         elif pmdc == 0:  # histogram-family gap filling (parse-gated)
@@ -7045,17 +6820,11 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
             # (post min_doc_count). One unpartitioned window — fine at
             # any corpus scale: it sees bucket-cardinality rows (time
             # range / interval bounded), never corpus rows.
-            mcols = _metric_out_names(metrics_spec)
-            taken = set(mcols) | {"key", "doc_count"}
             seq = Window.orderBy(F.asc("key"))
             run = seq.rowsBetween(Window.unboundedPreceding,
                                   Window.currentRow)
             for name, (pk, pb) in pipes.items():
-                if name in taken:
-                    raise DslError(
-                        f"pipeline aggregation name {name!r} collides "
-                        f"with an output column")
-                taken.add(name)
+                _claim(taken, [name])
                 path = _pipeline_path(pk, pb, mcols)
                 # earlier pipelines become valid buckets_path targets
                 # for later ones (ES second-order chaining, e.g. a
@@ -7086,7 +6855,7 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
                             "reference a cardinality sub-aggregation")
                     cfld = _metric_col("cardinality",
                                        spec_m["cardinality"],
-                                       allow_str_missing=True)
+                                       allow_str=True)
                     rows = (frame
                             .where(pkey.isNotNull() & cfld.isNotNull())
                             .select(pkey.alias("__k"),
@@ -7160,10 +6929,7 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
                 elif pk == "serial_diff":
                     # lag-n difference (ES serial differencing); the
                     # first n buckets have no predecessor -> NULL
-                    lag = pb.get("lag", 1)
-                    if isinstance(lag, bool) or not isinstance(lag, int) \
-                            or lag < 1:
-                        raise DslError(f"bad serial_diff lag {lag!r}")
+                    lag = _pos_int(pb, "lag", 1, "serial_diff")
                     out = out.withColumn(
                         name, F.col(path) - F.lag(path, lag).over(seq))
                 else:  # derivative: ES omits the first bucket -> NULL
@@ -7178,16 +6944,10 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
             # projections/filters over bucket-cardinality rows.
             # Sequence-pipeline outputs (computed above) are valid
             # buckets_path targets, as in ES.
-            mcols = _metric_out_names(metrics_spec) + list(pipes)
-            taken = set(out.columns)
             for name, (pk, pb) in scripts.items():
                 expr = _compile_bucket_script(pk, pb, mcols)
                 if pk == "bucket_script":
-                    if name in taken:
-                        raise DslError(
-                            f"pipeline aggregation name {name!r} "
-                            f"collides with an output column")
-                    taken.add(name)
+                    _claim(taken, [name])
                     # painless arithmetic is double-valued
                     out = out.withColumn(
                         name, F.expr(expr).cast("double"))
@@ -7213,6 +6973,10 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
         # min_doc_count / order / size) — exactly the buckets ES returns
         return _apply_siblings(out, siblings, agg_name, porder)
 
+    # metric order targets resolve against THIS level's metrics — in
+    # nested mode the parent has none (metrics live at the leaf), so a
+    # parent metric order is out-of-grammar by construction
+    porder = _bucket_order(porder_spec, "doc_count", "key", [])
     if metrics_spec:
         raise DslError(
             "metric leaves must live inside the bucket sub-aggregation")
@@ -7226,14 +6990,14 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
             "min_doc_count 0 gap filling needs a single-level "
             "histogram-family aggregation (empty buckets have no "
             "(parent, child) cells in the flattened nested output)")
-    corder = _bucket_order(corder_spec, "sub_doc_count", "sub_key",
-                           _metric_out_names(smetrics))
+    cmcols, cmexprs = _metric_cols(
+        smetrics, {"key", "doc_count", "sub_key", "sub_doc_count"})
+    corder = _bucket_order(corder_spec, "sub_doc_count", "sub_key", cmcols)
 
     cells = (
         frame.where(pkey.isNotNull())  # ES: docs missing the field drop
         .groupBy(pkey.alias("key"), ckey.alias("sub_key"))
-        .agg(F.count(F.lit(1)).alias("sub_doc_count"),
-             *_metric_exprs(smetrics))
+        .agg(F.count(F.lit(1)).alias("sub_doc_count"), *cmexprs)
     )
     # parent doc_count = all docs in the parent bucket, INCLUDING those
     # whose child field is NULL (their cell is dropped from the output
@@ -7262,7 +7026,7 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
         cells = (cells.withColumn("__rn", F.row_number().over(wc))
                  .where(F.col("__rn") <= int(csize)).drop("__rn"))
     return (cells.select("key", "doc_count", "sub_key", "sub_doc_count",
-                         *_metric_out_names(smetrics))
+                         *cmcols)
             .orderBy(*porder, *corder))
 
 

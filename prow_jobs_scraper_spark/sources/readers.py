@@ -83,12 +83,6 @@ def read_job_events_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(JOB_EVENT_SCHEMA).json(path)
 
 
-def read_artifacts_binary(spark: SparkSession, path: str) -> DataFrame:
-    """S2/S3: blob fetch as a distributed binaryFile scan (replaces the
-    reference's N sequential GCS GETs, step.py:72-82)."""
-    return spark.read.format("binaryFile").load(path)
-
-
 JUNIT_STEP_SCHEMA = (
     "suite string, step_name string, step_state string, "
     "step_duration double, step_details string"

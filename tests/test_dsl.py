@@ -3470,7 +3470,7 @@ def test_matrix_stats_constant_field(spark, transcripts, tmp_path):
 def test_top_metrics(spark, docs, docs_pdf, dsl_index):
     """ES `top_metrics` (size 1): the winning document's metric values
     by sort, flattened to `<name>_<field>` columns, bare and inside
-    every bucket context via _metric_exprs. The engine's sort-tie
+    every bucket context via _metric_cols. The engine's sort-tie
     break is the metric tuple itself (one struct-ordered max/min —
     deterministic where ES is shard-order-arbitrary), which the pandas
     oracle replays as a lexicographic sort_values. NULL-sort docs
@@ -4073,6 +4073,185 @@ def test_sibling_pipeline_rejects(spark, docs):
         dsl_aggregate(docs, {"aggs": {
             "a": {"terms": {"field": "role"}},
             "b": {"terms": {"field": "tool"}}}})
+
+
+# --------------------------------------------------------------------------
+# the aggregation metric-kind table: output names, bare vs bucketed,
+# sibling pipelines
+# --------------------------------------------------------------------------
+
+from pyspark.sql import functions as F  # noqa: E402
+
+from prow_jobs_scraper_spark.search.dsl import (  # noqa: E402
+    _METRICS,
+    _SIBLING_KINDS,
+)
+
+
+def test_agg_output_name_collisions_fail_loud(spark, docs, dsl_index):
+    """Every output column name of one aggregation level is distinct:
+    a metric named like a bucket column, two metrics flattening to the
+    same column, or a repeated percent fail loud instead of returning
+    duplicate or unresolvable columns — on both executors."""
+    from prow_jobs_scraper_spark.search.dsl import (
+        dsl_aggregate,
+        dsl_aggregate_indexed,
+    )
+
+    avg = {"avg": {"field": "turn_idx"}}
+    pct = {"percentiles": {"field": "turn_idx", "percents": [50, 50.0]}}
+
+    def terms(sub):
+        return {"terms": {"field": "role"}, "aggs": sub}
+
+    cases = [
+        {"a": terms({"key": avg})},
+        {"a": terms({"doc_count": avg})},
+        {"a": terms({"s": {"stats": {"field": "turn_idx"}},
+                     "s_min": avg})},
+        {"p": pct},
+        {"a": terms({"p": pct})},
+        {"a": {"date_histogram": {"field": "ts",
+                                  "calendar_interval": "week"},
+               "aggs": {"b": {"terms": {"field": "tool"},
+                              "aggs": {"sub_key": avg}}}}},
+        {"a": {"filters": {"filters": {"u": {"match_all": {}}}},
+               "aggs": {"key": avg}}},
+        {"a": {"range": {"field": "turn_idx", "ranges": [{"to": 3}]},
+               "aggs": {"__rank": avg}}},
+        {"a": terms({"m": avg}), "m2": {"sum_bucket": {
+            "buckets_path": "a>_count"}},
+         "m": {"sum_bucket": {"buckets_path": "a>_count"}}},
+    ]
+    for aggs in cases:
+        with pytest.raises(DslError, match="collides"):
+            dsl_aggregate(docs, {"aggs": aggs}).collect()
+    for aggs in cases[:2]:
+        with pytest.raises(DslError, match="collides"):
+            dsl_aggregate_indexed(spark, dsl_index,
+                                  {"aggs": aggs}).collect()
+
+
+# one body per metric kind of the aggregation table; the first test
+# fails when a kind is added without one
+_KIND_BODIES = {
+    "avg": {"field": "turn_idx"},
+    "sum": {"field": "turn_idx"},
+    "min": {"field": "turn_idx"},
+    "max": {"field": "turn_idx"},
+    "value_count": {"field": "tool"},
+    "cardinality": {"field": "tool"},
+    "stats": {"field": "turn_idx"},
+    "extended_stats": {"field": "turn_idx"},
+    "percentiles": {"field": "turn_idx", "percents": [25, 50, 97.5]},
+    "percentile_ranks": {"field": "turn_idx", "values": [1, 2.5]},
+    "boxplot": {"field": "turn_idx"},
+    "top_metrics": {"metrics": [{"field": "tool"}, {"field": "turn_idx"}],
+                    "sort": {"ts": "desc"}},
+    "weighted_avg": {"value": {"field": "turn_idx"},
+                     "weight": {"field": "turn_idx"}},
+    "median_absolute_deviation": {"field": "turn_idx"},
+    "string_stats": {"field": "tool"},
+    "matrix_stats": {"fields": ["turn_idx"]},
+}
+_BUCKET_METRICS = sorted(k for k, m in _METRICS.items() if m.bucket)
+_SIBLINGS = sorted(_SIBLING_KINDS)
+
+
+def _rows_close(a: pd.DataFrame, b: pd.DataFrame):
+    assert list(a.columns) == list(b.columns)
+    assert len(a) == len(b)
+    for c in a.columns:
+        for x, y in zip(a[c].tolist(), b[c].tolist()):
+            if isinstance(x, float) and isinstance(y, float):
+                assert x == pytest.approx(y, rel=1e-9, nan_ok=True), c
+            else:
+                assert x == y, c
+
+
+def test_metric_table_has_a_body_per_kind():
+    assert set(_KIND_BODIES) == set(_METRICS)
+    # the root-only kinds stay root-only
+    assert {"string_stats", "matrix_stats"}.isdisjoint(_BUCKET_METRICS)
+
+
+@pytest.mark.parametrize("kind", _BUCKET_METRICS)
+def test_metric_kind_bare_equals_one_bucket(spark, docs, kind):
+    """A metric kind allowed under a bucket gives the same values bare
+    at the root as inside a one-bucket terms parent, and the bucket
+    frame's metric columns are exactly the names its table entry
+    returns."""
+    from prow_jobs_scraper_spark.search.dsl import (
+        _prepare,
+        dsl_aggregate,
+    )
+
+    one = docs.withColumn("one", F.lit("all"))
+    body = _KIND_BODIES[kind]
+    bare = dsl_aggregate(one, {"aggs": {"m": {kind: body}}}).toPandas()
+    bucket = dsl_aggregate(one, {"aggs": {"a": {
+        "terms": {"field": "one"},
+        "aggs": {"m": {kind: body}}}}}).toPandas()
+    assert bucket["key"].tolist() == ["all"]
+    assert bucket["doc_count"].tolist() == [docs.count()]
+
+    spec = {"m": {kind: body}}
+    _, prepared = _prepare(one, F.col("one"), spec)
+    names = [n for n, _ in _METRICS[kind].cols(kind, "m", body,
+                                               prepared.get("m"))]
+    assert list(bucket.columns) == ["key", "doc_count", *names]
+    assert list(bare.columns) == names
+    _rows_close(bare, bucket[names])
+
+
+@pytest.mark.parametrize("path", ["_count", "v"])
+@pytest.mark.parametrize("sibling", _SIBLINGS)
+def test_sibling_kind_equals_metric_over_bucket_column(spark, docs,
+                                                       sibling, path):
+    """``X_bucket`` next to a bucket agg equals metric ``X`` computed
+    over that bucket frame's column (doc counts or a metric leaf)."""
+    from prow_jobs_scraper_spark.search.dsl import _apply_agg, dsl_aggregate
+
+    metric = _SIBLING_KINDS[sibling]
+    opts = {"percents": [10, 50, 97.5]} if metric == "percentiles" else {}
+    parent = {"terms": {"field": "tool", "size": 100},
+              "aggs": {"v": {"avg": {"field": "turn_idx"}}}}
+    buckets = dsl_aggregate(docs, {"aggs": {"a": parent}})
+    with_sib = dsl_aggregate(docs, {"aggs": {
+        "a": parent,
+        "s": {sibling: {"buckets_path": f"a>{path}", **opts}}}}).toPandas()
+    col = "doc_count" if path == "_count" else path
+    want = _apply_agg(buckets, "s", metric, {"field": col, **opts},
+                      {}).toPandas()
+    got = with_sib[list(want.columns)].head(1).reset_index(drop=True)
+    _rows_close(got.astype(object), want.astype(object))
+
+
+def test_sibling_and_metric_dtypes_stay_distinct(spark, docs):
+    """The sibling form keeps the bucket column's type while the
+    ``extended_stats`` metric casts its field to double: the shared
+    table must not unify them."""
+    from prow_jobs_scraper_spark.search.dsl import dsl_aggregate
+
+    stats = ("count", "min", "max", "avg", "sum", "sum_of_squares",
+             "variance", "std_deviation")
+    sib = dsl_aggregate(docs, {"aggs": {
+        "a": {"terms": {"field": "tool"}},
+        "s": {"extended_stats_bucket": {"buckets_path": "a>_count"}}}})
+    assert [t for c, t in sib.dtypes if c.startswith("s_")] == [
+        "bigint", "bigint", "bigint", "double", "bigint", "bigint",
+        "double", "double"]
+    assert [c for c in sib.columns if c.startswith("s_")] == [
+        f"s_{s}" for s in stats]
+    met = dsl_aggregate(docs, {"aggs": {"e": {
+        "extended_stats": {"field": "turn_idx"}}}})
+    assert met.dtypes == [(f"e_{s}", "bigint" if s == "count" else "double")
+                          for s in stats]
+    pct = dsl_aggregate(docs, {"aggs": {
+        "a": {"terms": {"field": "tool"}},
+        "s": {"percentiles_bucket": {"buckets_path": "a>_count",
+                                     "percents": [50]}}}})
+    assert dict(pct.dtypes)["s_p50"] == "double"
 
 
 def test_significant_terms_matches_duckdb(spark, docs, docs_pdf,
