@@ -12,14 +12,19 @@ of planned queries; a batch (:func:`search_topk_many`, the DSL's
 Query lifecycle (cf. SURVEY.md §3.2 "ours"):
 
 1. analyze the query with the engine tokenizer (same as index build);
-2. df per term from each segment's ``term_stats`` (term-bucket ``tb``
-   directory pruning + Parquet min/max on ``term_id``) through the
-   driver-side cache, summed across segments (:func:`_df_stats_multi`);
+2. open each segment's handle (:func:`_load_segments`): one
+   :class:`_Segment` per ``meta.json`` commit, holding the meta, the
+   tables opened once and the df of every term queried so far — a warm
+   read lists no files and infers no schema. df per term comes from
+   each segment's ``term_stats`` (term-bucket ``tb`` directory pruning
+   + Parquet min/max on ``term_id``) only for the terms its handle has
+   not seen, summed across segments (:func:`_df_stats_multi`);
    :func:`_plan_match` keeps the live terms — conjunctive semantics:
    any missing term short-circuits to an empty result; disjunctive:
    missing terms drop — with their idf and rarity order;
-3. scan only the matching posting blocks (:func:`_segment_blocks`,
-   again tb-pruned), each tagged with its segment;
+3. scan only the matching posting blocks of each handle's opened
+   postings (:func:`_segment_blocks`, again tb-pruned), each tagged
+   with its segment;
 4. one distributed scoring pass grouped by ``(seg, salt)``
    (:func:`_group_frame`) — every term's postings were range-partitioned
    on the SAME doc-id ranges at build time, so each group holds all
@@ -61,6 +66,8 @@ from __future__ import annotations
 
 import json
 import math
+import os
+import threading
 from collections.abc import Callable
 from functools import reduce
 from typing import NamedTuple
@@ -82,18 +89,12 @@ from prow_jobs_scraper_spark.index.build import (
     with_doc_ids,
 )
 
-# Driver-side df-stats cache: repeated queries against the same BUILT
-# index re-fetch only terms not seen before, and a fully-warm query
-# skips the term_stats Spark job entirely (the ES analogue: node-level
-# request/query caches). Correctness: entries are keyed by the index's
-# IDENTITY — (root, build_id, fingerprint, n_docs) from meta.json — so
-# any rebuild, compaction or incremental re-ingest that rewrites meta
-# invalidates naturally; df values for a committed build are immutable
-# by construction (build.py writes term_stats once per bucket). A 0
-# entry is a negative cache (term absent from the corpus).
-_DF_CACHE: dict[tuple, dict[int, int]] = {}
-_DF_CACHE_MAX_IDS = 64       # distinct index identities kept
-_DF_CACHE_MAX_TERMS = 1 << 20  # per identity; queried terms only
+# The handles of the segments read so far, one per (session, absolute
+# root), each for the commit it was opened at (:func:`_open_segment`).
+_SEGMENTS: dict[tuple, "_Segment"] = {}
+_SEGMENTS_LOCK = threading.Lock()
+_MAX_SEGMENTS = 64        # handles kept; the oldest opened goes first
+_MAX_DF_TERMS = 1 << 20   # df entries per handle; queried terms only
 
 _K_ALL = 1 << 62  # no per-group cut: callers combine or verify every match
 _HITS = "doc_id long, score double"
@@ -102,57 +103,103 @@ _NO_IDS = np.empty(0, dtype=np.int64)
 _NO_SCORES = np.empty(0, dtype=np.float64)
 
 
-def _index_identity(paths: IndexPaths, meta: dict) -> tuple:
-    return (paths.root, str(meta.get("build_id")),
-            int(meta.get("fingerprint", 0)), int(meta["n_docs"]))
+class _Segment:
+    """One committed index segment, opened once per commit: its meta,
+    its tables and the df of every term queried on it so far.
+
+    :meth:`table` opens a table on its first use. Opening lists the
+    table's files and runs Spark's schema-inference job; every later
+    read filters the opened relation, so a warm query runs only its own
+    jobs. ``df`` maps each queried term id to its df here, 0 for a term
+    the segment lacks (a negative entry). A commit's tables and df never
+    change: a build writes them all before ``meta.json``, and a rebuild
+    withdraws ``meta.json`` first (:mod:`...commit`). Threads may share
+    a handle: its lock guards the tables and the df."""
+
+    def __init__(self, spark: SparkSession, root: str, meta: dict,
+                 commit: tuple):
+        self.spark, self.meta, self.commit = spark, meta, commit
+        self.paths = IndexPaths(root)
+        self.df: dict[int, int] = {}
+        self._tables: dict[str, DataFrame] = {}
+        self._lock = threading.RLock()
+
+    def table(self, name: str) -> DataFrame:
+        """The segment's ``name`` table (``postings``, ``term_stats``,
+        ``doc_stats``, ``positions``, ``terms``)."""
+        with self._lock:
+            if name not in self._tables:
+                self._tables[name] = self.spark.read.parquet(
+                    getattr(self.paths, name))
+            return self._tables[name]
+
+    def term_rows(self, name: str, term_ids: list[int]) -> DataFrame:
+        """The rows of ``term_ids`` in the term-keyed table ``name``
+        (``postings``, ``term_stats``, ``positions``): term-bucket
+        ``tb`` directory pruning + Parquet min/max on ``term_id``."""
+        nb = int(self.meta["n_buckets"])
+        return self.table(name).where(
+            F.col("tb").isin(sorted({t % nb for t in term_ids}))
+            & F.col("term_id").isin(term_ids))
+
+    def df_of(self, term_ids: list[int]) -> dict[int, int]:
+        """df per term id; term_stats is read only for the terms not
+        queried here before -> only terms PRESENT in the segment
+        appear."""
+        with self._lock:
+            missing = [t for t in term_ids if t not in self.df]
+            if missing:
+                if len(self.df) + len(missing) > _MAX_DF_TERMS:
+                    # the clear also drops the terms of THIS call that
+                    # were cached: fetch every one again, or an AND or
+                    # phrase query would read them as df=0 and come back
+                    # empty
+                    self.df.clear()
+                    missing = list(dict.fromkeys(term_ids))
+                rows = (self.term_rows("term_stats", missing)
+                        .select("term_id", "df").collect())
+                for r in rows:
+                    self.df[int(r["term_id"])] = int(r["df"])
+                for t in missing:  # negative entries: absent stays absent
+                    self.df.setdefault(t, 0)
+            return {t: self.df[t] for t in term_ids
+                    if self.df.get(t, 0) > 0}
 
 
-def _df_stats(
-    spark: SparkSession,
-    paths: IndexPaths,
-    meta: dict,
-    term_ids: list[int],
-    n_buckets: int,
-) -> dict[int, int]:
-    """df per term_id from term_stats, through the cache -> only terms
-    PRESENT in the corpus appear in the result."""
-    key = _index_identity(paths, meta)
-    if key not in _DF_CACHE and len(_DF_CACHE) >= _DF_CACHE_MAX_IDS:
-        _DF_CACHE.clear()
-    cached = _DF_CACHE.setdefault(key, {})
-    missing = [t for t in term_ids if t not in cached]
-    if missing:
-        if len(cached) + len(missing) > _DF_CACHE_MAX_TERMS:
-            # The clear wipes entries for terms of THIS query that were
-            # cached; re-derive ``missing`` from the full request so no
-            # term in this call is served from the wiped cache (a stale
-            # ``missing`` would silently treat those terms as df=0 —
-            # AND/phrase queries would wrongly return empty).
-            cached.clear()
-            missing = list(dict.fromkeys(term_ids))
-        buckets = sorted({t % n_buckets for t in missing})
-        rows = (
-            spark.read.parquet(paths.term_stats)
-            .where(F.col("tb").isin(buckets)
-                   & F.col("term_id").isin(missing))
-            .select("term_id", "df").collect()
-        )
-        for r in rows:
-            cached[int(r["term_id"])] = int(r["df"])
-        for t in missing:  # negative entries: absent terms stay absent
-            cached.setdefault(t, 0)
-    return {t: cached[t] for t in term_ids if cached.get(t, 0) > 0}
+def _open_segment(spark: SparkSession, root: str) -> _Segment:
+    """The handle of the index committed at ``root``.
+
+    A handle is reused while ``meta.json`` is the same commit: the same
+    file (``st_ino``, ``st_mtime_ns``, ``st_size``) with the same
+    content. :func:`...commit.write_json` replaces the file atomically,
+    so a rebuild, a compaction or a re-ingest into ``root`` always opens
+    a fresh handle — even one whose meta reads the same. A root without
+    ``meta.json`` (a build killed before its commit, a segment a
+    compaction removed) raises ``FileNotFoundError``."""
+    root = os.path.abspath(root)
+    with open(IndexPaths(root).meta, "rb") as f:
+        st = os.fstat(f.fileno())
+        raw = f.read()
+    commit = (st.st_ino, st.st_mtime_ns, st.st_size, raw)
+    key = (spark, root)
+    with _SEGMENTS_LOCK:
+        seg = _SEGMENTS.get(key)
+        if seg is None or seg.commit != commit:
+            _SEGMENTS.pop(key, None)
+            while len(_SEGMENTS) >= _MAX_SEGMENTS:
+                del _SEGMENTS[next(iter(_SEGMENTS))]
+            seg = _SEGMENTS[key] = _Segment(spark, root, json.loads(raw),
+                                            commit)
+        return seg
 
 
-def _load_segments(index_dir: str | list[str]):
-    """-> (dirs, metas, global n_docs, global avgdl) for one index
+def _load_segments(spark: SparkSession, index_dir: str | list[str]):
+    """-> (segment handles, global n_docs, global avgdl) for one index
     directory (a list of one segment, whose avgdl is kept bit-for-bit)
     or a segment list; BM25 params must agree across segments."""
     dirs = [index_dir] if isinstance(index_dir, str) else list(index_dir)
-    metas = []
-    for d in dirs:
-        with open(IndexPaths(d).meta) as f:
-            metas.append(json.load(f))
+    segs = [_open_segment(spark, d) for d in dirs]
+    metas = [s.meta for s in segs]
     n_docs = sum(int(m["n_docs"]) for m in metas)
     if len(metas) == 1:
         avgdl = float(metas[0]["avgdl"])
@@ -162,25 +209,18 @@ def _load_segments(index_dir: str | list[str]):
     k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
     if any((float(m["k1"]), float(m["b"])) != (k1, b) for m in metas):
         raise ValueError("segments disagree on BM25 params")
-    return dirs, metas, n_docs, avgdl
+    return segs, n_docs, avgdl
 
 
-def _df_stats_multi(
-    spark: SparkSession,
-    dirs: list[str],
-    metas: list[dict],
-    term_ids: list[int],
-) -> dict[int, int]:
-    """Global df per term summed across segments, each segment's fetch
-    through the driver-side cache (:func:`_df_stats`, pruned with that
-    segment's own bucket layout) — a warm repeated query runs ZERO
-    stats jobs, and overlapping terms are fetched at most once per
-    segment."""
+def _df_stats_multi(segs: list[_Segment],
+                    term_ids: list[int]) -> dict[int, int]:
+    """Global df per term summed across segments, each from its
+    segment's handle (:meth:`_Segment.df_of`) — a warm repeated query
+    runs ZERO stats jobs, and overlapping terms are fetched at most
+    once per segment."""
     out: dict[int, int] = {}
-    for d, m in zip(dirs, metas):
-        seg = _df_stats(spark, IndexPaths(d), m, list(term_ids),
-                        int(m["n_buckets"]))
-        for tid, df in seg.items():
+    for s in segs:
+        for tid, df in s.df_of(list(term_ids)).items():
             out[tid] = out.get(tid, 0) + int(df)
     return out
 
@@ -566,8 +606,8 @@ def _sorted_ids(pdf: pd.DataFrame) -> np.ndarray:
     return np.sort(pdf["doc_id"].to_numpy(dtype=np.int64))
 
 
-def _segment_blocks(spark: SparkSession, dirs: list[str], metas: list[dict],
-                    avgdl: float, term_ids: list[int]) -> DataFrame:
+def _segment_blocks(segs: list[_Segment], avgdl: float,
+                    term_ids: list[int]) -> DataFrame:
     """The posting blocks of ``term_ids`` across index segments, each
     tagged with its segment number ``seg``: one ``tb`` + ``term_id``
     pruned scan per segment, block maxes bound-corrected for the global
@@ -575,13 +615,10 @@ def _segment_blocks(spark: SparkSession, dirs: list[str], metas: list[dict],
     avgdl_seg because every denominator term shrinks by at most that
     ratio; <= unchanged bound otherwise)."""
     blocks = None
-    for si, (d, m) in enumerate(zip(dirs, metas)):
-        buckets = sorted({tid % int(m["n_buckets"]) for tid in term_ids})
-        scale = max(1.0, avgdl / max(float(m["avgdl"]), 1e-12))
+    for si, s in enumerate(segs):
+        scale = max(1.0, avgdl / max(float(s.meta["avgdl"]), 1e-12))
         part = (
-            spark.read.parquet(IndexPaths(d).postings)
-            .where(F.col("tb").isin(buckets)
-                   & F.col("term_id").isin(term_ids))
+            s.term_rows("postings", term_ids)
             .select("term_id", "salt", "block_id", "n_docs",
                     "first_doc_id", "last_doc_id", "doc_gaps", "tf_bytes",
                     "dl_bytes",
@@ -593,19 +630,18 @@ def _segment_blocks(spark: SparkSession, dirs: list[str], metas: list[dict],
     return blocks
 
 
-def _segment_allowed(spark: SparkSession, dirs: list[str],
-                     metas: list[dict], pred) -> DataFrame:
+def _segment_allowed(segs: list[_Segment], pred) -> DataFrame:
     """The ``(doc_id, salt, seg)`` rows of every segment's doc_stats
     that pass ``pred`` (pushed to each parquet scan), salted with THAT
     segment's n_ranges so allowed ids land in the same group as their
     posting blocks."""
     allowed = None
-    for si, (d, m) in enumerate(zip(dirs, metas)):
+    for si, s in enumerate(segs):
         part = (
-            spark.read.parquet(IndexPaths(d).doc_stats)
+            s.table("doc_stats")
             .where(pred)
             .select("doc_id",
-                    salt_expr(F.col("doc_id"), int(m["n_ranges"]))
+                    salt_expr(F.col("doc_id"), int(s.meta["n_ranges"]))
                     .alias("salt"))
             .withColumn("seg", F.lit(si))
         )
@@ -624,8 +660,8 @@ class _Plan(NamedTuple):
     kernel: Callable
 
 
-def _group_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
-                 avgdl: float, plans: list[_Plan]) -> DataFrame:
+def _group_frame(segs: list[_Segment], avgdl: float,
+                 plans: list[_Plan]) -> DataFrame:
     """``(query_id, doc_id, score)`` rows of every plan's kernel, run on
     every (segment, salt) group — the one group runner of the engine.
 
@@ -641,7 +677,7 @@ def _group_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
     cache (:class:`_Postings`), so a block is decoded at most once there
     however many queries read it."""
     groups = _segment_blocks(
-        spark, dirs, metas, avgdl,
+        segs, avgdl,
         sorted({t for p in plans for t in p.term_ids})).groupBy("seg", "salt")
     fid_of: dict[str, int] = {}
     for p in plans:
@@ -672,7 +708,7 @@ def _group_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
     if not fid_of:
         return groups.applyInPandas(lambda pdf: run(pdf), schema=_ROWS)
     allowed_df = reduce(DataFrame.unionByName, [
-        _segment_allowed(spark, dirs, metas, flt).withColumn("fid", F.lit(fid))
+        _segment_allowed(segs, flt).withColumn("fid", F.lit(fid))
         for flt, fid in fid_of.items()])
     return groups.cogroup(allowed_df.groupBy("seg", "salt")).applyInPandas(
         run, schema=_ROWS)
@@ -703,24 +739,22 @@ def _conjunctive(operator: str) -> bool:
 
 
 def _match_plan(query_id: str, match: _Match, k: int, avgdl: float,
-                metas: list[dict], doc_filter: str | None = None) -> _Plan:
+                segs: list[_Segment], doc_filter: str | None = None) -> _Plan:
     """A planned match as a group-runner plan keeping each group's
     local top-k (``k=_K_ALL`` keeps every match)."""
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    k1, b = float(segs[0].meta["k1"]), float(segs[0].meta["b"])
     return _Plan(query_id, match.rarity, doc_filter,
                  lambda by_term, allowed, cache: _score_match_group(
                      by_term, match, k, avgdl, k1, b, allowed, cache))
 
 
-def _match_frame(spark: SparkSession, dirs: list[str], metas: list[dict],
-                 avgdl: float, match: _Match, k: int,
+def _match_frame(segs: list[_Segment], avgdl: float, match: _Match, k: int,
                  doc_filter: str | None = None) -> DataFrame:
     """Per-group local top-k ``(doc_id, score)`` of one planned match —
     their union holds the global top-k; ``k=_K_ALL`` keeps every
     match."""
     return _group_frame(
-        spark, dirs, metas, avgdl,
-        [_match_plan("", match, k, avgdl, metas, doc_filter)],
+        segs, avgdl, [_match_plan("", match, k, avgdl, segs, doc_filter)],
     ).drop("query_id")
 
 
@@ -730,19 +764,18 @@ def _match_topk(spark: SparkSession, index_dir: str | list[str],
     """The one match top-k behind :func:`search_topk`,
     :func:`search_topk_filtered` and :func:`search_topk_multi`."""
     conjunctive = _conjunctive(operator)
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    segs, n_docs, avgdl = _load_segments(spark, index_dir)
     terms = sorted(set(tokenize_text(query_text)))
     if not terms or n_docs == 0:
         return spark.createDataFrame([], _HITS)
     # term_id = xxhash64(term) computed CLIENT-side (bit-identity with
     # Spark's xxhash64 is tested) — no cluster round-trip just to learn
     # which term buckets to prune
-    df_of = _df_stats_multi(spark, dirs, metas,
-                            [term_id_py(t) for t in terms])
+    df_of = _df_stats_multi(segs, [term_id_py(t) for t in terms])
     match = _plan_match(terms, df_of, n_docs, conjunctive)
     if match is None:
         return spark.createDataFrame([], _HITS)
-    return (_match_frame(spark, dirs, metas, avgdl, match, k, doc_filter)
+    return (_match_frame(segs, avgdl, match, k, doc_filter)
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
@@ -870,25 +903,24 @@ def search_topk_many(
                 f"{q['query_id']!r}")
         _conjunctive(q.get("operator", "and"))
         k_of[q["query_id"]] = int(q["k"])
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    segs, n_docs, avgdl = _load_segments(spark, index_dir)
     terms_of = {q["query_id"]: sorted(set(tokenize_text(q["query_text"])))
                 for q in queries}
     union_tids = sorted({term_id_py(t)
                          for ts in terms_of.values() for t in ts})
     if n_docs == 0 or not union_tids:
         return spark.createDataFrame([], _ROWS)
-    df_of = _df_stats_multi(spark, dirs, metas, union_tids)
+    df_of = _df_stats_multi(segs, union_tids)
     plans = []
     for q in queries:
         match = _plan_match(terms_of[q["query_id"]], df_of, n_docs,
                             _conjunctive(q.get("operator", "and")))
         if match is not None:
             plans.append(_match_plan(q["query_id"], match, int(q["k"]),
-                                     avgdl, metas, q.get("doc_filter")))
+                                     avgdl, segs, q.get("doc_filter")))
     if not plans:
         return spark.createDataFrame([], _ROWS)
-    return _per_query_topk(_group_frame(spark, dirs, metas, avgdl, plans),
-                           k_of)
+    return _per_query_topk(_group_frame(segs, avgdl, plans), k_of)
 
 
 def _exists_assignment(pos_cols: list, seq_keys: list, accept):
@@ -1072,9 +1104,7 @@ def _positional_pred(src, c: _Positional):
 
 
 def _verify_positions(
-    spark: SparkSession,
-    dirs: list[str],
-    metas: list[dict],
+    segs: list[_Segment],
     cand: DataFrame,
     c: _Positional,
     docs_df: DataFrame | None,
@@ -1102,19 +1132,16 @@ def _verify_positions(
         ok = (docs_df.join(cand.select("doc_id"), "doc_id", "left_semi")
               .where(_positional_pred(src, c)).select("doc_id"))
         return cand.join(ok, "doc_id")
-    if not all(m.get("has_positions") for m in metas):
+    if not all(s.meta.get("has_positions") for s in segs):
         raise error(
             f"{c.kind} needs docs_df, or every index segment built with "
             "BuildConfig(store_positions=True) (a positions sidecar)")
     read = list(c.terms) + ([c.exclude[0]] if c.exclude else [])
     tids = sorted({term_id_py(t) for t in read})
     pos = reduce(DataFrame.unionByName, [
-        spark.read.parquet(IndexPaths(d).positions)
-        .where(F.col("tb").isin(sorted({t % int(m["n_buckets"])
-                                        for t in tids}))
-               & F.col("term_id").isin(tids))
-        .select("term_id", "doc_id", "positions")
-        for d, m in zip(dirs, metas)])
+        s.term_rows("positions", tids).select("term_id", "doc_id",
+                                              "positions")
+        for s in segs])
     pivoted = (
         pos.join(cand.select("doc_id"), "doc_id")
         .groupBy("doc_id")
@@ -1154,22 +1181,21 @@ def search_phrase(
     stats (same formula as ``match``; rank-identical to
     :func:`..naive.naive_phrase_topk` on both paths, tested).
     """
-    dirs, metas, n_docs, avgdl = _load_segments(index_dir)
+    segs, n_docs, avgdl = _load_segments(spark, index_dir)
     empty = spark.createDataFrame([], _HITS)
     phrase_terms = tokenize_text(phrase_text)  # ordered, duplicates kept
     if not phrase_terms or n_docs == 0 or k <= 0:
         return empty
     q_terms = sorted(set(phrase_terms))
-    df_of = _df_stats_multi(spark, dirs, metas,
-                            [term_id_py(t) for t in q_terms])
+    df_of = _df_stats_multi(segs, [term_id_py(t) for t in q_terms])
     match = _plan_match(q_terms, df_of, n_docs, True)  # phrase => AND
     if match is None:
         return empty
     # no cut — every conjunctive candidate survives to the verify
-    cand = _match_frame(spark, dirs, metas, avgdl, match, _K_ALL)
+    cand = _match_frame(segs, avgdl, match, _K_ALL)
     return (
-        _verify_positions(spark, dirs, metas, cand,
-                          _Positional(phrase_terms, slop), docs_df)
+        _verify_positions(segs, cand, _Positional(phrase_terms, slop),
+                          docs_df)
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )

@@ -251,7 +251,6 @@ from prow_jobs_scraper_spark.functions.tokenize import (
 from prow_jobs_scraper_spark.functions.xxh64 import term_id_py
 from prow_jobs_scraper_spark.index.build import (
     BM25Params,
-    IndexPaths,
     with_doc_ids,
 )
 from prow_jobs_scraper_spark.search.compressed import (
@@ -2690,7 +2689,7 @@ def _token_vocab_expander(docs_df: DataFrame):
     return expand
 
 
-def _terms_dim_expander(spark: SparkSession, dirs: list[str]):
+def _terms_dim_expander(segs: list):
     """Indexed-executor expansion: the segments' terms dim (the ONLY
     place term strings persist — |vocab|-sized, bucket-partitioned;
     a fuzzy expansion cannot bucket-prune, so it scans the dim, which
@@ -2700,8 +2699,7 @@ def _terms_dim_expander(spark: SparkSession, dirs: list[str]):
     def expand(fc: FuzzyClause) -> list[str]:
         nonlocal vocab
         if vocab is None:
-            frames = [spark.read.parquet(IndexPaths(d).terms)
-                      .select("term") for d in dirs]
+            frames = [s.table("terms").select("term") for s in segs]
             vocab = reduce(DataFrame.unionByName, frames).distinct()
         return _expand_from_vocab(vocab, fc)
 
@@ -4208,12 +4206,12 @@ class _IndexBackend:
         self.docs_df = docs_df
 
     @cached_property
-    def segs(self):
-        return _load_segments(self.index_dir)
+    def loaded(self):
+        return _load_segments(self.spark, self.index_dir)
 
     @cached_property
     def stats(self) -> DataFrame:
-        return _doc_stats_union(self.spark, self.segs[0])
+        return _doc_stats_union(self.loaded[0])
 
     def topk(self, query: dict, k: int) -> DataFrame:
         return search_dsl_indexed(self.spark, self.index_dir, query, k,
@@ -4221,8 +4219,8 @@ class _IndexBackend:
 
     def qualify(self, query: dict, fields: list[str] = ()):
         spec = parse_query(query)
-        dirs, metas, n_docs, avgdl = self.segs
-        _validate_sql_fields(self.spark, dirs, spec)
+        segs, n_docs, avgdl = self.loaded
+        _validate_sql_fields(segs, spec)
         missing = [f for f in fields if f not in self.stats.columns]
         if missing:
             raise DslError(
@@ -4230,8 +4228,8 @@ class _IndexBackend:
                 f"persists every non-text input column)")
         if n_docs == 0:
             return None
-        anchor, scored = _qualify_indexed(self.spark, dirs, metas, n_docs,
-                                          avgdl, spec, self.docs_df)
+        anchor, scored = _qualify_indexed(segs, n_docs, avgdl, spec,
+                                          self.docs_df)
         if anchor is None:
             return None
         frame = anchor.select("doc_id", F.col("score").alias("__dsl_score"))
@@ -4266,9 +4264,8 @@ class _IndexBackend:
         return self.corpus("_source") if missing else self.stats
 
     def resolved_spec(self, query: dict) -> QuerySpec:
-        dirs, metas, n_docs, _avgdl = self.segs
-        return _resolve_from_index(self.spark, dirs, metas, n_docs,
-                                   parse_query(query))
+        segs, n_docs, _avgdl = self.loaded
+        return _resolve_from_index(segs, n_docs, parse_query(query))
 
 
 def _execute_request(be, request: dict) -> DataFrame:
@@ -7035,16 +7032,14 @@ def _apply_agg(frame: DataFrame, agg_name: str, kind: str, body: dict,
 # --------------------------------------------------------------------------
 
 def _clause_frame_indexed(
-    spark: SparkSession,
-    dirs: list[str],
-    metas: list[dict],
+    segs: list,
     n_docs: int,
     avgdl: float,
     c: TextClause,
     docs_df: DataFrame | None,
 ) -> DataFrame | None:
     """Score-all ``(doc_id, score)`` for one text clause across index
-    SEGMENTS (``len(dirs) == 1`` is the monolithic case — same path),
+    SEGMENTS (``len(segs) == 1`` is the monolithic case — same path),
     or None when the clause is unsatisfiable. Global df = summed
     per-segment dfs and block maxes are bound-corrected by
     ``max(1, avgdl_global/avgdl_seg)`` exactly as
@@ -7055,18 +7050,17 @@ def _clause_frame_indexed(
     terms = _clause_terms(c)
     if not terms or n_docs == 0:
         return None
-    df_of = _df_stats_multi(spark, dirs, metas,
-                            [term_id_py(t) for t in terms])
+    df_of = _df_stats_multi(segs, [term_id_py(t) for t in terms])
     match = _plan_match(terms, df_of, n_docs,
                         c.operator == "and" or c.phrase, boost=c.boost)
     if match is None:
         return None
-    frame = _match_frame(spark, dirs, metas, avgdl, match, _K_ALL)
+    frame = _match_frame(segs, avgdl, match, _K_ALL)
 
     pc = c.positional()
     if pc is not None:
-        frame = _verify_positions(spark, dirs, metas, frame, pc, docs_df,
-                                  c.field, DslError)
+        frame = _verify_positions(segs, frame, pc, docs_df, c.field,
+                                  DslError)
     return frame
 
 
@@ -7090,8 +7084,7 @@ def _require_indexed_field(spec: QuerySpec) -> None:
             f"naive executor (search_dsl) for non-indexed text fields")
 
 
-def _validate_sql_fields(spark: SparkSession, dirs: list[str],
-                         spec: QuerySpec) -> None:
+def _validate_sql_fields(segs: list, spec: QuerySpec) -> None:
     """Metadata predicates resolve against doc_stats — a clause naming
     a column no segment persisted would surface as an opaque Spark
     AnalysisException mid-plan; raise a friendly DslError instead (the
@@ -7102,8 +7095,8 @@ def _validate_sql_fields(spark: SparkSession, dirs: list[str],
     if not wanted:
         return
     have: set = set()
-    for d in dirs:
-        have.update(spark.read.parquet(IndexPaths(d).doc_stats).columns)
+    for s in segs:
+        have.update(s.table("doc_stats").columns)
     missing = sorted(wanted - have)
     if missing:
         raise DslError(
@@ -7111,11 +7104,11 @@ def _validate_sql_fields(spark: SparkSession, dirs: list[str],
             f"in any segment's doc_stats (available: {sorted(have)})")
 
 
-def _doc_stats_union(spark: SparkSession, dirs: list[str]) -> DataFrame:
+def _doc_stats_union(segs: list) -> DataFrame:
     """Union of the segments' doc_stats (each doc lives in exactly one
     segment — the ingest dedup guarantee); attribute columns may differ
     per segment, missing ones read as null."""
-    frames = [spark.read.parquet(IndexPaths(d).doc_stats) for d in dirs]
+    frames = [s.table("doc_stats") for s in segs]
     out = frames[0]
     for fr in frames[1:]:
         out = out.unionByName(fr, allowMissingColumns=True)
@@ -7190,17 +7183,16 @@ def _live_clauses(clauses: list, df_of: dict, msm: int):
     return live_clauses
 
 
-def _bool_df_of(spark: SparkSession, dirs: list[str], metas: list[dict],
-             specs: list[QuerySpec]) -> dict[int, int]:
+def _bool_df_of(segs: list, specs: list[QuerySpec]) -> dict[int, int]:
     """Global df of every text-clause term of the prunable ``specs``,
     summed across segments — one fetch however many queries."""
     tids = {t for sp in specs for _, _, tl in (_bool_clause_tids(sp) or [])
             for t in tl}
-    return _df_stats_multi(spark, dirs, metas, sorted(tids))
+    return _df_stats_multi(segs, sorted(tids))
 
 
 def _plan_bool(query_id: str, spec: QuerySpec, df_of: dict, n_docs: int,
-               avgdl: float, metas: list[dict], k: int) -> _Plan | None:
+               avgdl: float, segs: list, k: int) -> _Plan | None:
     """The one planner of a prunable bool query (:func:`_prunable_for_topk`)
     -> a group-runner plan, or None when it provably matches nothing.
 
@@ -7226,7 +7218,7 @@ def _plan_bool(query_id: str, spec: QuerySpec, df_of: dict, n_docs: int,
     pred = " AND ".join(
         [f"({p})" for p in spec.filter_sql]
         + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql]) or None
-    k1, b = float(metas[0]["k1"]), float(metas[0]["b"])
+    k1, b = float(segs[0].meta["k1"]), float(segs[0].meta["b"])
     return _Plan(query_id, tids, pred,
                  lambda by_term, allowed, cache: _wand_bool_topk(
                      by_term, idfs, cl_arrays, msm, k, avgdl, k1, b,
@@ -7259,30 +7251,29 @@ def search_dsl_indexed(
     _require_indexed_field(spec)
     if k <= 0:
         return _no_hits(spark)
-    segs = _load_segments(index_dir)
-    _validate_sql_fields(spark, segs[0], spec)
-    return _dsl_topk(spark, segs, spec, k, docs_df)
+    loaded = _load_segments(spark, index_dir)
+    _validate_sql_fields(loaded[0], spec)
+    return _dsl_topk(spark, loaded, spec, k, docs_df)
 
 
-def _dsl_topk(spark: SparkSession, segs: tuple, spec: QuerySpec, k: int,
+def _dsl_topk(spark: SparkSession, loaded: tuple, spec: QuerySpec, k: int,
               docs_df: DataFrame | None) -> DataFrame:
     """Top-k ``(doc_id, score)`` of one validated spec over loaded
     segments: a prunable spec runs its :func:`_plan_bool` plan through
     the group runner; every other shape qualifies by score-all
     (:func:`_qualify_indexed`)."""
-    dirs, metas, n_docs, avgdl = segs
+    segs, n_docs, avgdl = loaded
     if n_docs == 0:
         return _no_hits(spark)
     if _prunable_for_topk(spec):
-        plan = _plan_bool("", spec, _bool_df_of(spark, dirs, metas, [spec]),
-                          n_docs, avgdl, metas, k)
+        plan = _plan_bool("", spec, _bool_df_of(segs, [spec]),
+                          n_docs, avgdl, segs, k)
         if plan is None:
             return _no_hits(spark)
-        return (_group_frame(spark, dirs, metas, avgdl, [plan])
+        return (_group_frame(segs, avgdl, [plan])
                 .drop("query_id")
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    anchor, scored = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
-                                      spec, docs_df)
+    anchor, scored = _qualify_indexed(segs, n_docs, avgdl, spec, docs_df)
     if anchor is None:
         return _no_hits(spark)
     order = ([F.desc("score"), F.asc("doc_id")] if scored
@@ -7314,10 +7305,10 @@ def search_dsl_many_indexed(
     one per-query cut (:func:`..compressed._per_query_topk`) orders the
     whole batch."""
     qids, specs, sizes = _parse_msearch(requests)
-    segs = _load_segments(index_dir)
-    dirs, metas, n_docs, avgdl = segs
+    loaded = _load_segments(spark, index_dir)
+    segs, n_docs, avgdl = loaded
     for sp in specs:
-        _validate_sql_fields(spark, dirs, sp)
+        _validate_sql_fields(segs, sp)
     if n_docs == 0:
         return spark.createDataFrame([], _ROWS)
     for sp in specs:
@@ -7326,12 +7317,12 @@ def search_dsl_many_indexed(
     for qid, sp in zip(qids, specs):
         if sizes[qid] > 0:
             (pruned if _prunable_for_topk(sp) else rest).append((qid, sp))
-    df_of = _bool_df_of(spark, dirs, metas, [sp for _, sp in pruned])
-    plans = [p for p in (_plan_bool(qid, sp, df_of, n_docs, avgdl, metas,
+    df_of = _bool_df_of(segs, [sp for _, sp in pruned])
+    plans = [p for p in (_plan_bool(qid, sp, df_of, n_docs, avgdl, segs,
                                     sizes[qid]) for qid, sp in pruned)
              if p is not None]
-    frames = [_group_frame(spark, dirs, metas, avgdl, plans)] if plans else []
-    frames += [_dsl_topk(spark, segs, sp, sizes[qid], docs_df)
+    frames = [_group_frame(segs, avgdl, plans)] if plans else []
+    frames += [_dsl_topk(spark, loaded, sp, sizes[qid], docs_df)
                .select(F.lit(qid).alias("query_id"), "doc_id", "score")
                for qid, sp in rest]
     if not frames:
@@ -7339,18 +7330,16 @@ def search_dsl_many_indexed(
     return _per_query_topk(reduce(DataFrame.unionByName, frames), sizes)
 
 
-def _resolve_from_index(spark: SparkSession, dirs: list[str],
-                        metas: list[dict], n_docs: int,
+def _resolve_from_index(segs: list, n_docs: int,
                         spec: QuerySpec) -> QuerySpec:
     """fuzzy/mlt resolution against the INDEX: fuzzy expands over the
-    terms dim, mlt reads per-term df through the driver-side postings
-    df cache — |like-tokens| lookups, never a corpus scan."""
+    terms dim, mlt reads per-term df through the segment handles' df
+    cache — |like-tokens| lookups, never a corpus scan."""
     if spec.has_fuzzy():
-        spec = _resolve_fuzzy(spec, _terms_dim_expander(spark, dirs))
+        spec = _resolve_fuzzy(spec, _terms_dim_expander(segs))
     if spec.has_mlt():
         def stats(field, terms):
-            dfm = _df_stats_multi(spark, dirs, metas,
-                                  [term_id_py(t) for t in terms])
+            dfm = _df_stats_multi(segs, [term_id_py(t) for t in terms])
             return n_docs, {t: dfm.get(term_id_py(t), 0)
                             for t in terms}
         spec = _resolve_mlt(spec, stats)
@@ -7358,9 +7347,7 @@ def _resolve_from_index(spark: SparkSession, dirs: list[str],
 
 
 def _qualify_indexed(
-    spark: SparkSession,
-    dirs: list[str],
-    metas: list[dict],
+    segs: list,
     n_docs: int,
     avgdl: float,
     spec,
@@ -7375,15 +7362,13 @@ def _qualify_indexed(
     costs one extra postings-sized join per level, never a corpus scan.
     """
     _require_indexed_field(spec)
-    spec = _resolve_from_index(spark, dirs, metas, n_docs, spec)
+    spec = _resolve_from_index(segs, n_docs, spec)
 
     def clause_frame(c: TextClause) -> DataFrame | None:
-        return _clause_frame_indexed(spark, dirs, metas, n_docs, avgdl,
-                                     c, docs_df)
+        return _clause_frame_indexed(segs, n_docs, avgdl, c, docs_df)
 
     def child_qualify(child: QuerySpec):
-        return _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
-                                child, docs_df)
+        return _qualify_indexed(segs, n_docs, avgdl, child, docs_df)
 
     if spec.fscore is not None:
         # ES function_score from the index: the wrapped query resolves
@@ -7395,14 +7380,14 @@ def _qualify_indexed(
         # factors, so exact score-all over the candidates is the
         # correct plan.
         fs = spec.fscore
-        fr, wscored = _qualify_indexed(spark, dirs, metas, n_docs,
-                                       avgdl, fs.wrapped, docs_df)
+        fr, wscored = _qualify_indexed(segs, n_docs, avgdl,
+                                       fs.wrapped, docs_df)
         if fr is None:
             return None, False
         need = _fscore_fields(fs)
         if need:
             fr = fr.join(
-                _doc_stats_union(spark, dirs).select("doc_id", *need),
+                _doc_stats_union(segs).select("doc_id", *need),
                 "doc_id", "left")
         wqs = F.col("score") if wscored else F.lit(1.0)
         final = _fscore_combine(wqs, _fscore_factor(fs, wqs), fs)
@@ -7416,12 +7401,10 @@ def _qualify_indexed(
         # qualifying frame; the negative's doc set left-joins on to
         # demote scores — one postings-sized join, never a corpus scan
         pos, neg, nb = spec.boosting
-        fr, scored = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
-                                      pos, docs_df)
+        fr, scored = _qualify_indexed(segs, n_docs, avgdl, pos, docs_df)
         if fr is None:
             return None, False
-        nfr, _ = _qualify_indexed(spark, dirs, metas, n_docs, avgdl,
-                                  neg, docs_df)
+        nfr, _ = _qualify_indexed(segs, n_docs, avgdl, neg, docs_df)
         if nfr is not None:
             neg_ids = nfr.select("doc_id", F.lit(True).alias("__neg"))
             fr = (fr.join(neg_ids, "doc_id", "left")
@@ -7468,7 +7451,7 @@ def _qualify_indexed(
                 else ts.script_fields)
         if need:
             agg = agg.join(
-                _doc_stats_union(spark, dirs).select("doc_id", *need),
+                _doc_stats_union(segs).select("doc_id", *need),
                 "doc_id")
         if ts.msm_script is not None:
             msm = ts.msm_script(lambda f: F.col(f).cast("double"),
@@ -7563,7 +7546,7 @@ def _qualify_indexed(
             F.when(F.coalesce(F.expr(p), F.lit(False)), F.lit(i))
             for i, p in enumerate(spec.should_sql)])
         should_frames.append(
-            _doc_stats_union(spark, dirs)
+            _doc_stats_union(segs)
             .select("doc_id", F.explode(tags).alias("__m"))
             .where(F.col("__m").isNotNull())
             .select("doc_id", F.lit(0.0).alias("score")))
@@ -7579,7 +7562,7 @@ def _qualify_indexed(
             # decoration. Left-join them onto the full doc set instead
             # of anchoring on the should union (ADVICE r3).
             anchor = (
-                _doc_stats_union(spark, dirs).select("doc_id")
+                _doc_stats_union(segs).select("doc_id")
                 .join(sagg, "doc_id", "left")
                 .select("doc_id",
                         F.coalesce(F.col("s_sum"), F.lit(0.0))
@@ -7616,7 +7599,7 @@ def _qualify_indexed(
                 and msm == 0))
         if not qualifies_all:
             return None, False
-        anchor = _doc_stats_union(spark, dirs).select(
+        anchor = _doc_stats_union(segs).select(
             "doc_id", F.lit(0.0).alias("score"))
 
     # ---- metadata predicates against doc_stats
@@ -7626,7 +7609,7 @@ def _qualify_indexed(
         pred = " AND ".join(
             [f"({p})" for p in spec.filter_sql]
             + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql])
-        allowed = _doc_stats_union(spark, dirs).where(pred).select("doc_id")
+        allowed = _doc_stats_union(segs).where(pred).select("doc_id")
         anchor = anchor.join(allowed, "doc_id", "left_semi")
 
     # ---- must_not text clauses / child bools: anti-join matching ids

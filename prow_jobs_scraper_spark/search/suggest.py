@@ -44,7 +44,7 @@ terms dim — index metadata), never corpus-sized; length + prefix
 bounds prune before the Levenshtein; the per-token rank is a window
 over candidate rows only. The naive path pays one corpus scan for
 (term, df); the indexed path reads the terms dim and resolves df for
-the few survivors through the driver-side postings df cache.
+the few survivors through the segment handles' df cache.
 """
 
 from __future__ import annotations
@@ -650,9 +650,6 @@ def suggest_completion_indexed(
     from prow_jobs_scraper_spark.functions.xxh64 import (  # noqa: PLC0415
         term_id_py,
     )
-    from prow_jobs_scraper_spark.index.build import (  # noqa: PLC0415
-        IndexPaths,
-    )
     from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
         _df_stats_multi,
         _load_segments,
@@ -672,16 +669,14 @@ def suggest_completion_indexed(
         raise DslError(
             f"the compressed index holds the {_INDEXED_TEXT_FIELD!r} "
             f"field only; completion targets {sorted(other)}")
-    dirs, metas, _n_docs, _avgdl = _load_segments(index_dir)
+    segs, _n_docs, _avgdl = _load_segments(spark, index_dir)
     terms = reduce(
         DataFrame.unionByName,
-        [spark.read.parquet(IndexPaths(d).terms).select("term")
-         for d in dirs]).distinct()
+        [s.table("terms").select("term") for s in segs]).distinct()
     cond = reduce(lambda a, b: a | b,
                   [F.col("term").startswith(p) for _, p, _ in entries])
     ball = [r["term"] for r in terms.where(cond).collect()]
-    df_of = _df_stats_multi(spark, dirs, metas,
-                            [term_id_py(t) for t in ball])
+    df_of = _df_stats_multi(segs, [term_id_py(t) for t in ball])
     vocab = spark.createDataFrame(
         [(t, int(df_of.get(term_id_py(t), 0))) for t in ball]
         or [("", 0)], "term string, df long").where(F.col("df") > 0)
@@ -695,14 +690,11 @@ def suggest_terms_indexed(
 ) -> DataFrame:
     """Indexed executor: candidate strings from the segments' terms dim
     (index metadata), df for the FEW levenshtein survivors through the
-    driver-side postings df cache — the corpus is never read. Must stay
+    segment handles' df cache — the corpus is never read. Must stay
     row-identical to :func:`suggest_terms` on the union corpus
     (pytest-gated)."""
     from prow_jobs_scraper_spark.functions.xxh64 import (  # noqa: PLC0415
         term_id_py,
-    )
-    from prow_jobs_scraper_spark.index.build import (  # noqa: PLC0415
-        IndexPaths,
     )
     from prow_jobs_scraper_spark.search.compressed import (  # noqa: PLC0415
         _df_stats_multi,
@@ -718,11 +710,10 @@ def suggest_terms_indexed(
         raise DslError(
             f"the compressed index holds the {_INDEXED_TEXT_FIELD!r} "
             f"field only; suggest targets {sorted(other)}")
-    dirs, metas, _n_docs, _avgdl = _load_segments(index_dir)
+    segs, _n_docs, _avgdl = _load_segments(spark, index_dir)
     terms = reduce(
         DataFrame.unionByName,
-        [spark.read.parquet(IndexPaths(d).terms).select("term")
-         for d in dirs]).distinct()
+        [s.table("terms").select("term") for s in segs]).distinct()
     # prune to the union edit-ball before any df work: length bounds +
     # shared-prefix alternatives, then exact levenshtein
     want = set()
@@ -747,8 +738,7 @@ def suggest_terms_indexed(
         return empty
     ball = terms.where(reduce(lambda a, b: a | b, conds))
     cand_terms = [r["term"] for r in ball.collect()]
-    df_of = _df_stats_multi(spark, dirs, metas,
-                            [term_id_py(t) for t in cand_terms])
+    df_of = _df_stats_multi(segs, [term_id_py(t) for t in cand_terms])
     vocab = spark.createDataFrame(
         [(t, int(df_of.get(term_id_py(t), 0))) for t in cand_terms]
         or [("", 0)], "term string, df long")

@@ -8,6 +8,17 @@ plain public Spark configuration:
 - Arrow on (all Python stages are vectorized pandas UDFs),
 - shuffle partitions sized to cores locally (cluster: 2-3x total cores).
 
+A local session this factory pins runs its Python workers under the
+package's own daemon, :mod:`..daemon`. On CPython 3.11 and older every
+Python task re-reads the central directory of ``pyspark.zip`` before it
+starts (``importlib.invalidate_caches``; CPython 3.12 made the re-read
+lazy, gh-103200) — about 250 ms a task, which dominated warm reads. The
+daemon keeps each zip directory until the archive changes. A session
+whose master comes from a launcher (``spark-submit``) keeps Spark's own
+daemon: there the package may reach the workers only per task, through
+``--py-files``, so a daemon module of it cannot be imported before the
+first task.
+
 The reference runs single-process/single-thread (SURVEY.md §6,
 reference Dockerfile:1); parallelism is entirely this engine's addition.
 """
@@ -17,6 +28,21 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the package: Python workers import the daemon
+# (and every package UDF) from it, whatever the driver's cwd
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _launcher_sets_master() -> bool:
+    """Did a launcher configure this driver's master? ``spark-submit``
+    starts the driver's JVM first and hands it over through
+    ``PYSPARK_GATEWAY_PORT``, with ``--master`` (or its default) already
+    in that JVM's conf; ``PYSPARK_SUBMIT_ARGS`` carries ``--master`` to
+    the JVM pyspark starts itself."""
+    return ("PYSPARK_GATEWAY_PORT" in os.environ
+            or bool(os.environ.get("SPARK_MASTER"))
+            or "--master" in os.environ.get("PYSPARK_SUBMIT_ARGS", "").split())
 
 
 def get_spark(
@@ -29,7 +55,8 @@ def get_spark(
 
     ``cores`` defaults to $SPARK_GRAFT_CPUS or '*'. On a real cluster the
     master/instances come from spark-submit and this builder only sets SQL
-    conf; ``master`` is applied only if no master was configured.
+    conf; ``master`` (and the worker daemon) are applied only if no
+    launcher configured the master.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -55,9 +82,13 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    # Only pin a master when none is set (spark-submit on a cluster sets it).
-    if not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ:
-        builder = builder.master(master)
+    if not _launcher_sets_master():
+        builder = (
+            builder.master(master)
+            .config("spark.python.daemon.module",
+                    "prow_jobs_scraper_spark.daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

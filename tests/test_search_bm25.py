@@ -490,26 +490,26 @@ def test_batch_search_with_per_query_filters(spark, transcripts, index_dir):
 def test_df_cache_overflow_refetches_current_query(spark, transcripts,
                                                    oracle_docs, index_dir,
                                                    monkeypatch):
-    """Regression (ADVICE r3): when the per-identity term cap trips,
-    the clear must not starve terms of the CURRENT query that were
-    already cached — a stale ``missing`` list turned them into df=0
-    and an AND query silently returned empty."""
+    """Regression (ADVICE r3): when a segment handle's df term cap
+    trips, the clear must not starve terms of the CURRENT query that
+    were already cached — a stale ``missing`` list turned them into
+    df=0 and an AND query silently returned empty."""
     from prow_jobs_scraper_spark.search import compressed as C
 
-    # Warm the cache with one term, then issue an AND query mixing that
+    # Warm the handle with one term, then issue an AND query mixing that
     # cached term with an uncached one, sized so the fetch overflows:
     # the clear used to wipe the cached term while only the uncached one
     # was re-fetched -> cached term served as df=0 -> empty result.
-    C._DF_CACHE.clear()
+    C._SEGMENTS.clear()
     search_topk(spark, index_dir, "w00042", 3).collect()
-    assert any(len(v) >= 1 for v in C._DF_CACHE.values())
-    monkeypatch.setattr(C, "_DF_CACHE_MAX_TERMS", 1)
+    assert len(C._open_segment(spark, index_dir).df) >= 1
+    monkeypatch.setattr(C, "_MAX_DF_TERMS", 1)
     mixed = "w00042 w00099"  # cached + uncached
     want = bm25_oracle_topk(oracle_docs, mixed, k=10)
     got = search_topk(spark, index_dir, mixed, 10).toPandas()
     assert len(got) > 0, "AND query starved by the cache clear"
     _assert_rank_identical(got, want, "post-overflow")
-    C._DF_CACHE.clear()
+    C._SEGMENTS.clear()
 
 
 def test_batch_search_rejects_duplicate_query_id(spark, index_dir):
@@ -579,22 +579,21 @@ def _segment_copy(index_dir: str, dest: str, **meta_overrides) -> str:
 
 def test_multi_segment_df_fetch_goes_through_cache(spark, index_dir,
                                                    tmp_path):
-    # one search_topk_multi query leaves a df-cache entry for EVERY
-    # segment's identity, so a warm repeat runs no term_stats job
-    import json as _json
-
+    # one search_topk_multi query leaves the query's df in EVERY
+    # segment's handle, so a warm repeat runs no term_stats job
+    from prow_jobs_scraper_spark.functions.xxh64 import term_id_py
     from prow_jobs_scraper_spark.search import compressed as C
 
     seg_b = _segment_copy(index_dir, str(tmp_path / "seg_b"))
-    C._DF_CACHE.clear()
+    C._SEGMENTS.clear()
     C.search_topk_multi(spark, [index_dir, seg_b], "spark agent",
                         5).collect()
+    assert len(C._SEGMENTS) == 2
     for d in (index_dir, seg_b):
-        paths = C.IndexPaths(d)
-        with open(paths.meta) as f:
-            meta = _json.load(f)
-        assert C._index_identity(paths, meta) in C._DF_CACHE, d
-    C._DF_CACHE.clear()
+        df = C._open_segment(spark, d).df
+        assert {term_id_py("spark"), term_id_py("agent")} <= set(df), d
+    assert len(C._SEGMENTS) == 2  # the same commits: no handle reopened
+    C._SEGMENTS.clear()
 
 
 def test_segments_disagreeing_on_bm25_params_fail_loud(spark, index_dir,
