@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from prow_jobs_scraper_spark import commit
+from prow_jobs_scraper_spark.session import empty_frame
 
 
 def _norm_expr(vec_col):
@@ -590,7 +591,7 @@ def ivfpq_probe_topk(spark, path: str, query_vec: list[float], k: int,
     )
     cand_ids = [int(r["vec_id"]) for r in cand.collect()]
     if not cand_ids:
-        return spark.createDataFrame([], "vec_id long, cosine double")
+        return empty_frame(spark, "vec_id long, cosine double")
     return (
         tab.where(F.col(id_col).isin(cand_ids))
         .select(F.col(id_col).alias("vec_id"),

@@ -16,9 +16,11 @@ Query lifecycle (cf. SURVEY.md §3.2 "ours"):
    :class:`_Segment` per ``meta.json`` commit, holding the meta, the
    tables opened once and the df of every term queried so far — a warm
    read lists no files and infers no schema. df per term comes from
-   each segment's ``term_stats`` (term-bucket ``tb`` directory pruning
-   + Parquet min/max on ``term_id``) only for the terms its handle has
-   not seen, summed across segments (:func:`_df_stats_multi`);
+   each segment's ``term_stats`` (only the term-bucket ``tb``
+   directories prune: each file is one row group whose ``term_id``
+   min/max spans almost the whole int64 range, so its Parquet
+   statistics skip nothing) only for the terms its handle has not seen,
+   summed across segments (:func:`_df_stats_multi`);
    :func:`_plan_match` keeps the live terms — conjunctive semantics:
    any missing term short-circuits to an empty result; disjunctive:
    missing terms drop — with their idf and rarity order;
@@ -88,6 +90,7 @@ from prow_jobs_scraper_spark.index.build import (
     salt_expr,
     with_doc_ids,
 )
+from prow_jobs_scraper_spark.session import empty_frame
 
 # The handles of the segments read so far, one per (session, absolute
 # root), each for the commit it was opened at (:func:`_open_segment`).
@@ -135,8 +138,10 @@ class _Segment:
 
     def term_rows(self, name: str, term_ids: list[int]) -> DataFrame:
         """The rows of ``term_ids`` in the term-keyed table ``name``
-        (``postings``, ``term_stats``, ``positions``): term-bucket
-        ``tb`` directory pruning + Parquet min/max on ``term_id``."""
+        (``postings``, ``term_stats``, ``positions``): the term-bucket
+        ``tb`` directories prune; the ``term_id`` filter then reads each
+        remaining file whole (one row group, min/max spanning almost
+        every term id)."""
         nb = int(self.meta["n_buckets"])
         return self.table(name).where(
             F.col("tb").isin(sorted({t % nb for t in term_ids}))
@@ -767,14 +772,14 @@ def _match_topk(spark: SparkSession, index_dir: str | list[str],
     segs, n_docs, avgdl = _load_segments(spark, index_dir)
     terms = sorted(set(tokenize_text(query_text)))
     if not terms or n_docs == 0:
-        return spark.createDataFrame([], _HITS)
+        return empty_frame(spark, _HITS)
     # term_id = xxhash64(term) computed CLIENT-side (bit-identity with
     # Spark's xxhash64 is tested) — no cluster round-trip just to learn
     # which term buckets to prune
     df_of = _df_stats_multi(segs, [term_id_py(t) for t in terms])
     match = _plan_match(terms, df_of, n_docs, conjunctive)
     if match is None:
-        return spark.createDataFrame([], _HITS)
+        return empty_frame(spark, _HITS)
     return (_match_frame(segs, avgdl, match, k, doc_filter)
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
@@ -909,7 +914,7 @@ def search_topk_many(
     union_tids = sorted({term_id_py(t)
                          for ts in terms_of.values() for t in ts})
     if n_docs == 0 or not union_tids:
-        return spark.createDataFrame([], _ROWS)
+        return empty_frame(spark, _ROWS)
     df_of = _df_stats_multi(segs, union_tids)
     plans = []
     for q in queries:
@@ -919,7 +924,7 @@ def search_topk_many(
             plans.append(_match_plan(q["query_id"], match, int(q["k"]),
                                      avgdl, segs, q.get("doc_filter")))
     if not plans:
-        return spark.createDataFrame([], _ROWS)
+        return empty_frame(spark, _ROWS)
     return _per_query_topk(_group_frame(segs, avgdl, plans), k_of)
 
 
@@ -1182,7 +1187,7 @@ def search_phrase(
     :func:`..naive.naive_phrase_topk` on both paths, tested).
     """
     segs, n_docs, avgdl = _load_segments(spark, index_dir)
-    empty = spark.createDataFrame([], _HITS)
+    empty = empty_frame(spark, _HITS)
     phrase_terms = tokenize_text(phrase_text)  # ordered, duplicates kept
     if not phrase_terms or n_docs == 0 or k <= 0:
         return empty

@@ -221,6 +221,15 @@ index: per-clause score-all frames (salt-cogrouped block decode), combined
 with doc_id joins, metadata predicates resolved against ``doc_stats``.
 Rank-identity with the naive pass is pytest-gated (tests/test_dsl.py).
 
+Both executors walk the bool tree through ONE function, :func:`_bool`,
+which owns every ES rule (context order, unsatisfiable clauses, msm, the
+``scored`` flag, "no required clause = every doc", constant_score /
+boosting / function_score). Each executor supplies only operations on
+its own value: :class:`_RowOps` builds ``(score, qual)`` row expressions,
+:class:`_FrameOps` builds ``(doc_id, score)`` frames and joins them. A
+prunable top-k (:func:`_prunable_for_topk`) skips the walker and runs the
+cross-clause block-max kernel instead.
+
 :func:`dsl_aggregate` adds the ES ``aggs`` block (terms /
 date_histogram buckets with metric sub-aggs, or a bare metric) over the
 query's qualifying set — the aggregations the reference computes
@@ -270,6 +279,7 @@ from prow_jobs_scraper_spark.search.compressed import (
     _verify_positions,
     _wand_bool_topk,
 )
+from prow_jobs_scraper_spark.session import empty_frame
 
 
 # --------------------------------------------------------------------------
@@ -3032,7 +3042,7 @@ def count_dsl(
 
 
 def _no_hits(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "doc_id long, score double")
+    return empty_frame(spark, "doc_id long, score double")
 
 
 def _keyed(docs_df: DataFrame) -> DataFrame:
@@ -3054,12 +3064,105 @@ def _matched_frame(
     of QUALIFYING docs — original columns + ``__dsl_score`` — , scored?)
     or None when the query is provably empty. One stats agg + one
     map-side pass regardless of clause count (module docstring)."""
-    base, results = _compile_specs(docs_df, [spec], params)
-    ok, score_total, qual, scored_q = results[0]
-    if not ok:
+    base, (res,) = _compile_specs(docs_df, [spec], params)
+    if res is None:
         return None
-    return (base.where(qual).withColumn("__dsl_score", score_total),
-            scored_q)
+    (score, qual), scored = res
+    return base.where(qual).withColumn("__dsl_score", score), scored
+
+
+def _meta_pred(spec: QuerySpec) -> str | None:
+    """A spec's metadata filters and must_nots as ONE predicate string
+    (None without any). must_not is null-guarded: ES must_not on a
+    missing/NULL field MATCHES the doc — NOT(NULL) would silently
+    exclude it."""
+    return " AND ".join(
+        [f"({p})" for p in spec.filter_sql]
+        + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql]) or None
+
+
+def _bool(spec: QuerySpec, ops) -> tuple | None:
+    """ES bool semantics, written ONCE for both executors: -> ``(value,
+    scored)``, or None when the query provably matches nothing.
+
+    ``ops`` supplies only operations on its executor's own value —
+    :class:`_RowOps` (naive: ``(score, qual)`` row expressions) or
+    :class:`_FrameOps` (indexed: ``(doc_id, score)`` frames). Its leaves
+    (``clause``, ``dismax``, ``terms_set``) return a value or None when
+    the leaf can never match; its combinators take the value built so
+    far, ``acc``, which is None until a required clause has anchored it.
+    Every policy lives here:
+
+    - contexts run in one order: must, filter, should, the metadata
+      predicates, must_not; must and should scores add, in that order;
+    - an unsatisfiable must/filter empties the query, an unsatisfiable
+      should is dropped and an unsatisfiable must_not ignored;
+    - fewer live shoulds than ``minimum_should_match`` empties the
+      query; a metadata should (``should_sql``) counts toward it at
+      score 0 and never makes the query scored;
+    - no required clause (and msm 0) means every doc, at score 0 — so
+      ``{"bool": {}}`` matches the whole corpus, the ES rule;
+    - constant_score pins the score, boosting demotes by its negative,
+      function_score rescores its wrapped query.
+    Child bools recurse, so a nested bool is one more leaf."""
+    if spec.fscore is not None:
+        wrapped = _bool(spec.fscore.wrapped, ops)
+        return None if wrapped is None else (
+            ops.fscore(*wrapped, spec.fscore), True)
+    if spec.boosting is not None:
+        pos, neg, nb = spec.boosting
+        p = _bool(pos, ops)
+        if p is None:
+            return None
+        n = _bool(neg, ops)
+        return ops.boosting(p[0], None if n is None else n[0], nb), p[1]
+
+    def leaf(x):
+        if isinstance(x, QuerySpec):
+            return _bool(x, ops)
+        v = (ops.clause(x) if isinstance(x, TextClause)
+             else ops.dismax(x) if isinstance(x, DisMax)
+             else ops.terms_set(x))
+        return None if v is None else (v, True)
+
+    def ts(*ctxs):
+        return [t for c, t in spec.terms_set if c in ctxs]
+
+    acc, scored = None, False
+    required = ([(True, x) for x in spec.must + spec.must_dismax
+                 + spec.must_bool]
+                + [(False, x) for x in spec.filter_text + spec.filter_bool]
+                + [(c == "must", t) for c, t in spec.terms_set
+                   if c in ("must", "filter")])
+    for scoring, x in required:
+        r = leaf(x)
+        if r is None:
+            return None
+        acc = ops.must(acc, r[0]) if scoring else ops.filter(acc, r[0])
+        scored = scored or (scoring and r[1])
+    should = [r[0] for r in map(leaf, spec.should + spec.should_bool
+                                + spec.should_dismax + ts("should"))
+              if r is not None]
+    msm = spec.minimum_should_match()
+    if len(should) + len(spec.should_sql) < msm:
+        return None
+    if should or spec.should_sql:
+        if acc is None and msm == 0:
+            acc = ops.every()
+        acc = ops.should(acc, should, spec.should_sql, msm)
+        scored = scored or bool(should)
+    if acc is None:
+        acc = ops.every()
+    pred = _meta_pred(spec)
+    if pred is not None:
+        acc = ops.where(acc, pred)
+    for x in spec.must_not + ts("must_not") + spec.must_not_bool:
+        r = leaf(x)
+        if r is not None:
+            acc = ops.must_not(acc, r[0])
+    if spec.const_boost is not None:
+        return ops.const(acc, spec.const_boost), True
+    return acc, scored
 
 
 def _compile_specs(
@@ -3071,9 +3174,9 @@ def _compile_specs(
     covering every text clause of every spec (corpus size, per-field
     avgdl, per-(field, term) df in a single scan), then per-spec row
     expressions -> (base frame with tokenized columns, [per-spec
-    (ok, score_expr, qual_expr, scored)]). ``ok=False`` marks a spec
-    provably empty. Single-query callers pass a 1-list; the _msearch
-    batch amortizes the scan across queries."""
+    :func:`_bool` result: ``((score_expr, qual_expr), scored)``, or
+    None when the spec is provably empty]). Single-query callers pass a
+    1-list; the _msearch batch amortizes the scan across queries."""
     docs_df = _keyed(docs_df)
 
     if any(sp.has_fuzzy() for sp in specs):
@@ -3109,36 +3212,50 @@ def _compile_specs(
         row = base.agg(*aggs).collect()[0]
         n_docs = int(row["n"])
         if n_docs == 0:
-            return base, [(False, None, None, False)] * len(specs)
+            return base, [None] * len(specs)
         avgdl = {f: float(row[f"avgdl__{f}"] or 0.0) for f in fields}
         dfs = {(f, t): int(row[f"df__{f}__{j}"] or 0)
                for f in fields for j, t in enumerate(terms_by_field[f])}
     else:
         n_docs, avgdl, dfs = 0, {}, {}
+    ops = _RowOps(tok_of, n_docs, avgdl, dfs, params)
+    return base, [_bool(sp, ops) for sp in specs]
 
-    k1, b = params.k1, params.b
 
-    def clause_exprs(c: TextClause):
-        """-> (satisfiable, score_expr, matched_expr)."""
+class _RowOps:
+    """The naive executor's operations for :func:`_bool`: a value is a
+    ``(score, qual)`` pair of row expressions over the one tokenized
+    frame, so the whole bool TREE stays a single map-side pass — no
+    extra scans or joins per clause or nesting level."""
+
+    def __init__(self, tok_of: dict, n_docs: int, avgdl: dict, dfs: dict,
+                 params: BM25Params):
+        self.tok_of, self.n_docs = tok_of, n_docs
+        self.avgdl, self.dfs, self.params = avgdl, dfs, params
+
+    def clause(self, c: TextClause):
+        """BM25 over the clause's live terms + its match predicate."""
         terms = _clause_terms(c)
         if not terms:
-            return False, None, None  # no analyzed terms: never matches
+            return None  # no analyzed terms: never matches
+        dfs = self.dfs
         if c.operator == "and" or c.phrase:
             if any(dfs[(c.field, t)] == 0 for t in terms):
-                return False, None, None
+                return None
             live = terms
         else:
             live = [t for t in terms if dfs[(c.field, t)] > 0]
             if not live:
-                return False, None, None
-        toks = F.col(tok_of[c.field])
+                return None
+        k1, b = self.params.k1, self.params.b
+        toks = F.col(self.tok_of[c.field])
         dl = F.size(toks).cast("double")
         denom = F.lit(k1) * (F.lit(1.0 - b)
-                             + F.lit(b) * dl / F.lit(avgdl[c.field]))
+                             + F.lit(b) * dl / F.lit(self.avgdl[c.field]))
         score = F.lit(0.0)
         hits = F.lit(0)
         for t in live:
-            idf = math.log(1.0 + (n_docs - dfs[(c.field, t)] + 0.5)
+            idf = math.log(1.0 + (self.n_docs - dfs[(c.field, t)] + 0.5)
                            / (dfs[(c.field, t)] + 0.5))
             tf = F.size(
                 F.filter(toks, (lambda tt: (lambda x: x == F.lit(tt)))(t))
@@ -3154,20 +3271,17 @@ def _compile_specs(
                 matched = matched & _positional_pred(src, pc)
         if c.boost != 1.0:
             score = score * F.lit(c.boost)
-        return True, score, matched
+        return score, matched
 
-    def dismax_exprs(dm: DisMax):
-        """-> (satisfiable, score_expr, matched_expr): ES dis_max —
-        score = best matched child + tie_breaker * (sum of the other
-        matched children), matched = any child matched. Still row
-        expressions: a dis_max costs no extra scan."""
-        parts = []
-        for c in dm.children:
-            ok, sc, m = clause_exprs(c)
-            if ok:
-                parts.append((sc, m))
+    def _parts(self, children) -> list:
+        return [v for v in map(self.clause, children) if v is not None]
+
+    def dismax(self, dm: DisMax):
+        """ES dis_max: best matched child + tie_breaker * (sum of the
+        other matched children); matched = any child matched."""
+        parts = self._parts(dm.children)
         if not parts:
-            return False, None, None
+            return None
         matched = reduce(lambda a, b: a | b,
                          [F.coalesce(m, F.lit(False)) for _, m in parts])
         when_scores = [F.when(m, sc) for sc, m in parts]  # NULL unmatched
@@ -3177,23 +3291,16 @@ def _compile_specs(
         total = reduce(lambda a, b: a + b,
                        [F.when(m, sc).otherwise(F.lit(0.0))
                         for sc, m in parts])
-        score = best + F.lit(dm.tie_breaker) * (total - best)
-        return True, score, matched
+        return best + F.lit(dm.tie_breaker) * (total - best), matched
 
-    def terms_set_exprs(ts: TermsSetClause):
-        """-> (satisfiable, score_expr, matched_expr): Lucene
-        CoveringQuery — matched when the number of present terms
-        clears the PER-DOC minimum (field or script, truncated to
-        long, clamped >= 1; NULL minimum never matches), score = sum
-        of the matched terms' BM25. Still row expressions — no extra
-        pass."""
-        parts = []
-        for c in ts.children:
-            ok, sc, m = clause_exprs(c)
-            if ok:
-                parts.append((sc, m))
+    def terms_set(self, ts: TermsSetClause):
+        """Lucene CoveringQuery: matched when the number of present
+        terms clears the PER-DOC minimum (field or script, truncated to
+        long, clamped >= 1; NULL minimum never matches), score = sum of
+        the matched terms' BM25."""
+        parts = self._parts(ts.children)
         if not parts:
-            return False, None, None
+            return None
         hits = reduce(lambda a, b: a + b,
                       [m.cast("int") for _, m in parts])
         score = reduce(lambda a, b: a + b,
@@ -3209,162 +3316,59 @@ def _compile_specs(
                       >= F.greatest(F.lit(1).cast("long"), msm)))
         if ts.boost != 1.0:
             score = score * F.lit(ts.boost)
-        return True, score, matched
+        return score, matched
 
-    def spec_exprs(sp: QuerySpec):
-        """One (sub)bool -> (ok, score_expr, qual_expr, scored); ok=False
-        means provably empty (a required clause can never match). Child
-        bools recurse — still row expressions, so the whole TREE stays a
-        single map-side pass (no extra scans or joins per nesting level)."""
-        if sp.fscore is not None:
-            # ES function_score: wrapped exprs -> factor -> combine.
-            # Still row expressions — no extra pass; an unscored
-            # wrapped query contributes query score 1.0 (the ES
-            # constant-score-leaf rule, FunctionScore docstring).
-            fs = sp.fscore
-            wok, wsc, wq, wscored = spec_exprs(fs.wrapped)
-            if not wok:
-                return False, None, None, False
-            wqs = wsc if wscored else F.lit(1.0)
-            final = _fscore_combine(wqs, _fscore_factor(fs, wqs), fs)
-            qual = wq
-            if fs.min_score is not None:
-                qual = (F.coalesce(qual, F.lit(False))
-                        & (final >= F.lit(fs.min_score)))
-            return True, final, qual, True
-        if sp.boosting is not None:
-            # ES boosting: qualify by POSITIVE only; demote (never
-            # exclude) docs the negative clause also matches. Still
-            # row expressions — no extra pass.
-            pos, neg, nb = sp.boosting
-            pok, psc, pq, pscored = spec_exprs(pos)
-            if not pok:
-                return False, None, None, False
-            nok, _, nq, _ = spec_exprs(neg)
-            if nok:
-                nq = F.coalesce(nq, F.lit(False))
-                psc = F.when(nq, psc * F.lit(nb)).otherwise(psc)
-            return True, psc, pq, pscored
-        qual = F.lit(True)
-        score = F.lit(0.0)
-        scored = False
-        for c in sp.must:
-            ok, sc, m = clause_exprs(c)
-            if not ok:
-                return False, None, None, False
-            qual = qual & m
-            score = score + sc
-            scored = True
-        for dm in sp.must_dismax:
-            ok, sc, m = dismax_exprs(dm)
-            if not ok:
-                return False, None, None, False
-            qual = qual & m
-            score = score + sc
-            scored = True
-        for child in sp.must_bool:
-            cok, csc, cq, cscored = spec_exprs(child)
-            if not cok:
-                return False, None, None, False
-            qual = qual & cq
-            score = score + csc
-            scored = scored or cscored
-        for tctx, ts in sp.terms_set:
-            ok, tsc, tm = terms_set_exprs(ts)
-            if tctx == "must":
-                if not ok:
-                    return False, None, None, False
-                qual = qual & tm
-                score = score + tsc
-                scored = True
-            elif tctx == "filter":
-                if not ok:
-                    return False, None, None, False
-                qual = qual & tm
-            elif tctx == "must_not":
-                if ok:
-                    qual = qual & ~F.coalesce(tm, F.lit(False))
-            # should handled below with the other should clauses
-        for c in sp.filter_text:
-            ok, _, m = clause_exprs(c)
-            if not ok:
-                return False, None, None, False
-            qual = qual & m
-        for child in sp.filter_bool:
-            cok, _, cq, _ = spec_exprs(child)
-            if not cok:
-                return False, None, None, False
-            qual = qual & cq  # filter context qualifies, never scores
-        n_should_live = 0
-        should_cnt = F.lit(0)
-        for c in sp.should:
-            ok, sc, m = clause_exprs(c)
-            if not ok:
-                continue  # an unsatisfiable should simply never matches
-            n_should_live += 1
-            score = score + F.when(m, sc).otherwise(F.lit(0.0))
-            should_cnt = should_cnt + m.cast("int")
-        for child in sp.should_bool:
-            cok, csc, cq, _ = spec_exprs(child)
-            if not cok:
-                continue
-            n_should_live += 1
-            cq = F.coalesce(cq, F.lit(False))
-            score = score + F.when(cq, csc).otherwise(F.lit(0.0))
-            should_cnt = should_cnt + cq.cast("int")
-        for dm in sp.should_dismax:
-            ok, sc, m = dismax_exprs(dm)
-            if not ok:
-                continue
-            n_should_live += 1
-            score = score + F.when(m, sc).otherwise(F.lit(0.0))
-            should_cnt = should_cnt + m.cast("int")
-        for tctx, ts in sp.terms_set:
-            if tctx != "should":
-                continue
-            ok, tsc, tm = terms_set_exprs(ts)
-            if not ok:
-                continue
-            n_should_live += 1
-            score = score + F.when(tm, tsc).otherwise(F.lit(0.0))
-            should_cnt = should_cnt + tm.cast("int")
-        if n_should_live:
-            scored = True
-        for pred in sp.should_sql:
-            # meta-in-should: counts toward minimum_should_match at
-            # score 0 (never unsatisfiable, never sets `scored`);
-            # null-guarded — a NULL field does NOT match the clause
-            m = F.coalesce(F.expr(pred), F.lit(False))
-            n_should_live += 1
-            should_cnt = should_cnt + m.cast("int")
-        for c in sp.must_not:
-            ok, _, m = clause_exprs(c)
-            if ok:
-                qual = qual & ~m
-        for child in sp.must_not_bool:
-            cok, _, cq, _ = spec_exprs(child)
-            if cok:
-                # a NULL child-qual (filter on a NULL field) means the
-                # child did NOT match -> the doc stays (ES must_not)
-                qual = qual & ~F.coalesce(cq, F.lit(False))
-        msm = sp.minimum_should_match()
-        if msm > 0:
-            if n_should_live < msm:
-                return False, None, None, False
-            qual = qual & (should_cnt >= msm)
-        for pred in sp.filter_sql:
-            qual = qual & F.expr(pred)
-        for pred in sp.must_not_sql:
-            # ES: must_not against a missing/NULL field MATCHES the doc —
-            # null-guard so ~NULL doesn't silently exclude it
-            qual = qual & ~F.coalesce(F.expr(pred), F.lit(False))
-        if sp.const_boost is not None:
-            # ES constant_score: every qualifying doc scores exactly
-            # `boost`, whatever the wrapped clause would have scored
-            return True, F.lit(sp.const_boost), qual, True
-        return True, score, qual, scored
+    def every(self):
+        return F.lit(0.0), F.lit(True)
 
-    return base, [spec_exprs(sp) for sp in specs]
+    def must(self, acc, v):
+        score, qual = acc or self.every()
+        return score + v[0], qual & v[1]
+
+    def filter(self, acc, v):
+        score, qual = acc or self.every()
+        return score, qual & v[1]
+
+    def should(self, acc, vs: list, preds: list[str], msm: int):
+        """Each matched should adds its score; matches (metadata ones
+        included, null-guarded) count toward msm."""
+        score, qual = acc or self.every()
+        cnt = F.lit(0)
+        for sc, m in vs:
+            m = F.coalesce(m, F.lit(False))
+            score = score + F.when(m, sc).otherwise(F.lit(0.0))
+            cnt = cnt + m.cast("int")
+        for p in preds:
+            cnt = cnt + F.coalesce(F.expr(p), F.lit(False)).cast("int")
+        return score, (qual & (cnt >= msm) if msm > 0 else qual)
+
+    def where(self, acc, pred: str):
+        return acc[0], acc[1] & F.expr(pred)
+
+    def must_not(self, acc, v):
+        # a NULL match (a filter on a NULL field) means the clause did
+        # NOT match -> the doc stays (ES must_not)
+        return acc[0], acc[1] & ~F.coalesce(v[1], F.lit(False))
+
+    def const(self, acc, boost: float):
+        return F.lit(boost), acc[1]
+
+    def boosting(self, pos, neg, nb: float):
+        if neg is None:
+            return pos
+        nq = F.coalesce(neg[1], F.lit(False))
+        return F.when(nq, pos[0] * F.lit(nb)).otherwise(pos[0]), pos[1]
+
+    def fscore(self, v, scored: bool, fs: FunctionScore):
+        # an unscored wrapped query contributes query score 1.0 (the
+        # ES constant-score-leaf rule, FunctionScore docstring)
+        wqs = v[0] if scored else F.lit(1.0)
+        final = _fscore_combine(wqs, _fscore_factor(fs, wqs), fs)
+        qual = v[1]
+        if fs.min_score is not None:
+            qual = (F.coalesce(qual, F.lit(False))
+                    & (final >= F.lit(fs.min_score)))
+        return final, qual
 
 
 def _parse_msearch(requests: list[dict]):
@@ -3418,7 +3422,7 @@ def search_dsl_many(
     gives the indexed path."""
     qids, specs, sizes = _parse_msearch(requests)
     spark = docs_df.sparkSession
-    empty = spark.createDataFrame([], _ROWS)
+    empty = empty_frame(spark, _ROWS)
     if ("doc_id" not in docs_df.columns
             and not {"conv_id", "turn_idx"} <= set(docs_df.columns)):
         raise DslError("search_dsl_many needs a doc_id (or "
@@ -3426,9 +3430,10 @@ def search_dsl_many(
     base, results = _compile_specs(docs_df, specs, params or BM25Params())
 
     cells = []
-    for qid, (ok, score, qual, scored) in zip(qids, results):
-        if not ok or sizes[qid] == 0:
+    for qid, res in zip(qids, results):
+        if res is None or sizes[qid] == 0:
             continue  # provably-empty query: contributes no rows
+        (score, qual), _scored = res
         cells.append(
             F.when(F.coalesce(qual, F.lit(False)),
                    F.struct(F.lit(qid).alias("query_id"),
@@ -4228,10 +4233,10 @@ class _IndexBackend:
                 f"persists every non-text input column)")
         if n_docs == 0:
             return None
-        anchor, scored = _qualify_indexed(segs, n_docs, avgdl, spec,
-                                          self.docs_df)
-        if anchor is None:
+        q = _qualify_indexed(segs, n_docs, avgdl, spec, self.docs_df)
+        if q is None:
             return None
+        anchor, scored = q
         frame = anchor.select("doc_id", F.col("score").alias("__dsl_score"))
         if fields:
             frame = frame.join(self.stats.select("doc_id", *fields),
@@ -7215,9 +7220,7 @@ def _plan_bool(query_id: str, spec: QuerySpec, df_of: dict, n_docs: int,
     idfs = {t: _idf(n_docs, df_of[t]) for t in tids}
     cl_arrays = [(m_, c_, np.array(tl, dtype=np.int64))
                  for m_, c_, tl in live]
-    pred = " AND ".join(
-        [f"({p})" for p in spec.filter_sql]
-        + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql]) or None
+    pred = _meta_pred(spec)
     k1, b = float(segs[0].meta["k1"]), float(segs[0].meta["b"])
     return _Plan(query_id, tids, pred,
                  lambda by_term, allowed, cache: _wand_bool_topk(
@@ -7273,9 +7276,10 @@ def _dsl_topk(spark: SparkSession, loaded: tuple, spec: QuerySpec, k: int,
         return (_group_frame(segs, avgdl, [plan])
                 .drop("query_id")
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-    anchor, scored = _qualify_indexed(segs, n_docs, avgdl, spec, docs_df)
-    if anchor is None:
+    q = _qualify_indexed(segs, n_docs, avgdl, spec, docs_df)
+    if q is None:
         return _no_hits(spark)
+    anchor, scored = q
     order = ([F.desc("score"), F.asc("doc_id")] if scored
              else [F.asc("doc_id")])
     return anchor.orderBy(*order).limit(k)
@@ -7310,7 +7314,7 @@ def search_dsl_many_indexed(
     for sp in specs:
         _validate_sql_fields(segs, sp)
     if n_docs == 0:
-        return spark.createDataFrame([], _ROWS)
+        return empty_frame(spark, _ROWS)
     for sp in specs:
         _require_indexed_field(sp)
     pruned, rest = [], []
@@ -7326,7 +7330,7 @@ def search_dsl_many_indexed(
                .select(F.lit(qid).alias("query_id"), "doc_id", "score")
                for qid, sp in rest]
     if not frames:
-        return spark.createDataFrame([], _ROWS)
+        return empty_frame(spark, _ROWS)
     return _per_query_topk(reduce(DataFrame.unionByName, frames), sizes)
 
 
@@ -7352,79 +7356,47 @@ def _qualify_indexed(
     avgdl: float,
     spec,
     docs_df: DataFrame | None,
-):
+) -> tuple | None:
     """The bool query's QUALIFYING set from the index: -> (frame of
-    ``(doc_id, score)`` or None when provably empty, scored?). Shared
+    ``(doc_id, score)``, scored?), or None when provably empty. Shared
     by :func:`search_dsl_indexed` (adds order + top-k) and
-    :func:`dsl_aggregate_indexed` (aggregates over it, no cut). Child
-    bools recurse — each nested level resolves to its own qualifying
-    frame and combines by doc_id join (semi/anti/score-add), so nesting
-    costs one extra postings-sized join per level, never a corpus scan.
-    """
+    :func:`dsl_aggregate_indexed` (aggregates over it, no cut). The ES
+    rules are :func:`_bool`'s; :class:`_FrameOps` supplies the frames
+    and joins."""
     _require_indexed_field(spec)
     spec = _resolve_from_index(segs, n_docs, spec)
+    return _bool(spec, _FrameOps(segs, n_docs, avgdl, docs_df))
 
-    def clause_frame(c: TextClause) -> DataFrame | None:
-        return _clause_frame_indexed(segs, n_docs, avgdl, c, docs_df)
 
-    def child_qualify(child: QuerySpec):
-        return _qualify_indexed(segs, n_docs, avgdl, child, docs_df)
+class _FrameOps:
+    """The indexed executor's operations for :func:`_bool`: a value is a
+    ``(doc_id, score)`` frame. Leaves are score-all postings frames
+    (:func:`_clause_frame_indexed`); combinators are doc_id joins —
+    inner (must: scores add), left_semi (filter, metadata predicates),
+    left_anti (must_not) and union + groupBy (should) — so each clause
+    or nesting level costs one postings-sized join, never a corpus
+    scan. "Every doc" is the segments' doc_stats, read only when the
+    walker asks for it."""
 
-    if spec.fscore is not None:
-        # ES function_score from the index: the wrapped query resolves
-        # to its own qualifying frame; the function columns join in
-        # from doc_stats (one candidate-sized join, never a corpus
-        # scan) and the factor/combine run as row expressions. Block-
-        # max pruning stays off for this shape (_prunable_for_topk):
-        # per-term score bounds don't survive arbitrary per-doc
-        # factors, so exact score-all over the candidates is the
-        # correct plan.
-        fs = spec.fscore
-        fr, wscored = _qualify_indexed(segs, n_docs, avgdl,
-                                       fs.wrapped, docs_df)
-        if fr is None:
-            return None, False
-        need = _fscore_fields(fs)
-        if need:
-            fr = fr.join(
-                _doc_stats_union(segs).select("doc_id", *need),
-                "doc_id", "left")
-        wqs = F.col("score") if wscored else F.lit(1.0)
-        final = _fscore_combine(wqs, _fscore_factor(fs, wqs), fs)
-        fr = fr.select("doc_id", final.alias("score"))
-        if fs.min_score is not None:
-            fr = fr.where(F.col("score") >= F.lit(fs.min_score))
-        return fr, True
+    def __init__(self, segs: list, n_docs: int, avgdl: float,
+                 docs_df: DataFrame | None):
+        self.segs, self.n_docs, self.avgdl = segs, n_docs, avgdl
+        self.docs_df = docs_df
 
-    if spec.boosting is not None:
-        # ES boosting from the index: positive resolves to its own
-        # qualifying frame; the negative's doc set left-joins on to
-        # demote scores — one postings-sized join, never a corpus scan
-        pos, neg, nb = spec.boosting
-        fr, scored = _qualify_indexed(segs, n_docs, avgdl, pos, docs_df)
-        if fr is None:
-            return None, False
-        nfr, _ = _qualify_indexed(segs, n_docs, avgdl, neg, docs_df)
-        if nfr is not None:
-            neg_ids = nfr.select("doc_id", F.lit(True).alias("__neg"))
-            fr = (fr.join(neg_ids, "doc_id", "left")
-                  .select("doc_id",
-                          F.when(F.coalesce(F.col("__neg"),
-                                            F.lit(False)),
-                                 F.col("score") * F.lit(nb))
-                          .otherwise(F.col("score")).alias("score")))
-        return fr, scored
+    def clause(self, c: TextClause) -> DataFrame | None:
+        return _clause_frame_indexed(self.segs, self.n_docs, self.avgdl,
+                                     c, self.docs_df)
 
-    def children_union(children) -> DataFrame | None:
+    def _union(self, children) -> DataFrame | None:
         parts = [fr.select("doc_id", "score")
-                 for fr in map(clause_frame, children) if fr is not None]
+                 for fr in map(self.clause, children) if fr is not None]
         return reduce(DataFrame.unionByName, parts) if parts else None
 
-    def dismax_frame(dm: DisMax) -> DataFrame | None:
-        """ES dis_max from the index: union the children's score
-        frames, combine per doc as best + tie_breaker * (sum - best)
-        — one postings-sized aggregation, never a corpus scan."""
-        u = children_union(dm.children)
+    def dismax(self, dm: DisMax) -> DataFrame | None:
+        """ES dis_max: union the children's score frames, combine per
+        doc as best + tie_breaker * (sum - best) — one postings-sized
+        aggregation."""
+        u = self._union(dm.children)
         if u is None:
             return None
         agg = u.groupBy("doc_id").agg(F.max("score").alias("mx"),
@@ -7434,14 +7406,14 @@ def _qualify_indexed(
             (F.col("mx") + F.lit(dm.tie_breaker)
              * (F.col("sm") - F.col("mx"))).alias("score"))
 
-    def terms_set_frame(ts: TermsSetClause) -> DataFrame | None:
-        """terms_set from the index: one postings frame per distinct
-        term -> union -> per-doc (score sum, matched count) in ONE
-        aggregation, then the per-doc minimum joins in from doc_stats
-        (candidate-sized join, never a corpus scan) — the Lucene
-        CoveringQuery rule exactly as the naive executor compiles it
-        (truncate to long, clamp >= 1, NULL minimum never matches)."""
-        u = children_union(ts.children)
+    def terms_set(self, ts: TermsSetClause) -> DataFrame | None:
+        """terms_set: one postings frame per distinct term -> union ->
+        per-doc (score sum, matched count) in ONE aggregation, then the
+        per-doc minimum joins in from doc_stats (candidate-sized join)
+        — the Lucene CoveringQuery rule exactly as :class:`_RowOps`
+        compiles it (truncate to long, clamp >= 1, NULL minimum never
+        matches)."""
+        u = self._union(ts.children)
         if u is None:
             return None
         agg = u.groupBy("doc_id").agg(
@@ -7451,7 +7423,7 @@ def _qualify_indexed(
                 else ts.script_fields)
         if need:
             agg = agg.join(
-                _doc_stats_union(segs).select("doc_id", *need),
+                _doc_stats_union(self.segs).select("doc_id", *need),
                 "doc_id")
         if ts.msm_script is not None:
             msm = ts.msm_script(lambda f: F.col(f).cast("double"),
@@ -7466,166 +7438,93 @@ def _qualify_indexed(
                  else F.col("score"))
         return out.select("doc_id", score.alias("score"))
 
-    # ---- anchor frame: must/must_bool (scores add) + filter* (semi)
-    anchor: DataFrame | None = None
-    child_scored = False
+    def every(self) -> DataFrame:
+        return _doc_stats_union(self.segs).select(
+            "doc_id", F.lit(0.0).alias("score"))
 
-    def add_scoring(anchor, fr):
+    def must(self, acc, fr):
         fr = fr.withColumnRenamed("score", "s_")
-        if anchor is None:
+        if acc is None:
             return fr.withColumnRenamed("s_", "score")
-        return (anchor.join(fr, "doc_id")
+        return (acc.join(fr, "doc_id")
                 .select("doc_id",
                         (F.col("score") + F.col("s_")).alias("score")))
 
-    def add_filtering(anchor, fr):
-        if anchor is None:
+    def filter(self, acc, fr):
+        if acc is None:
             return fr.select("doc_id", F.lit(0.0).alias("score"))
-        return anchor.join(fr.select("doc_id"), "doc_id", "left_semi")
+        return acc.join(fr.select("doc_id"), "doc_id", "left_semi")
 
-    for c in spec.must:
-        fr = clause_frame(c)
-        if fr is None:
-            return None, False
-        anchor = add_scoring(anchor, fr)
-    for dm in spec.must_dismax:
-        fr = dismax_frame(dm)
-        if fr is None:
-            return None, False
-        anchor = add_scoring(anchor, fr)
-    for child in spec.must_bool:
-        fr, cs = child_qualify(child)
-        if fr is None:
-            return None, False
-        anchor = add_scoring(anchor, fr)
-        child_scored = child_scored or cs
-    for c in spec.filter_text:
-        fr = clause_frame(c)
-        if fr is None:
-            return None, False
-        anchor = add_filtering(anchor, fr)
-    for child in spec.filter_bool:
-        fr, _ = child_qualify(child)
-        if fr is None:
-            return None, False
-        anchor = add_filtering(anchor, fr)
-    ts_scored = False
-    for tctx, ts in spec.terms_set:
-        if tctx in ("should", "must_not"):
-            continue  # handled in their own sections below
-        fr = terms_set_frame(ts)
-        if fr is None:
-            return None, False
-        if tctx == "must":
-            anchor = add_scoring(anchor, fr)
-            ts_scored = True
-        else:  # filter
-            anchor = add_filtering(anchor, fr)
-
-    msm = spec.minimum_should_match()
-
-    # ---- should frames: union -> per-doc (sum, matched-count)
-    should_frames = [
-        fr.select("doc_id", "score") for fr in (
-            [clause_frame(c) for c in spec.should]
-            + [child_qualify(child)[0] for child in spec.should_bool]
-            + [dismax_frame(dm) for dm in spec.should_dismax]
-            + [terms_set_frame(ts) for tctx, ts in spec.terms_set
-               if tctx == "should"])
-        if fr is not None]
-    n_scoring_should = len(should_frames)
-    n_live_should = n_scoring_should + len(spec.should_sql)
-    if spec.should_sql:
-        # meta-in-should: resolves against doc_stats, counts toward
-        # minimum_should_match at score 0 (module docstring); null-
-        # guarded — a NULL field does not match the clause. ALL the
-        # predicates evaluate in ONE doc_stats scan (explode over
-        # per-row when() tags — one row per matched clause, exactly
-        # the per-clause union the old N-scan form produced)
-        tags = F.array(*[
-            F.when(F.coalesce(F.expr(p), F.lit(False)), F.lit(i))
-            for i, p in enumerate(spec.should_sql)])
-        should_frames.append(
-            _doc_stats_union(segs)
-            .select("doc_id", F.explode(tags).alias("__m"))
-            .where(F.col("__m").isNotNull())
-            .select("doc_id", F.lit(0.0).alias("score")))
-    if msm > 0 and n_live_should < msm:
-        return None, False
-    if should_frames:
-        su = reduce(DataFrame.unionByName, should_frames)
-        sagg = su.groupBy("doc_id").agg(
+    def should(self, acc, frs: list, preds: list[str], msm: int):
+        """Union -> per-doc (score sum, matched count), left-joined onto
+        ``acc`` (or anchoring the result when there is none)."""
+        frames = [fr.select("doc_id", "score") for fr in frs]
+        if preds:
+            # ALL metadata shoulds evaluate in ONE doc_stats scan:
+            # explode per-row when() tags — one row per matched clause;
+            # null-guarded, a NULL field does not match the clause
+            tags = F.array(*[
+                F.when(F.coalesce(F.expr(p), F.lit(False)), F.lit(i))
+                for i, p in enumerate(preds)])
+            frames.append(
+                _doc_stats_union(self.segs)
+                .select("doc_id", F.explode(tags).alias("__m"))
+                .where(F.col("__m").isNotNull())
+                .select("doc_id", F.lit(0.0).alias("score")))
+        sagg = reduce(DataFrame.unionByName, frames).groupBy("doc_id").agg(
             F.sum("score").alias("s_sum"), F.count(F.lit(1)).alias("s_cnt"))
-        if anchor is None and msm == 0:
-            # explicit minimum_should_match: 0 with no anchor — ES (and
-            # the naive executor) match EVERY doc; the should scores are
-            # decoration. Left-join them onto the full doc set instead
-            # of anchoring on the should union (ADVICE r3).
-            anchor = (
-                _doc_stats_union(segs).select("doc_id")
-                .join(sagg, "doc_id", "left")
-                .select("doc_id",
-                        F.coalesce(F.col("s_sum"), F.lit(0.0))
-                        .alias("score"),
-                        F.coalesce(F.col("s_cnt"), F.lit(0))
-                        .alias("s_cnt")))
-        elif anchor is None:
-            anchor = sagg.select(
-                "doc_id", F.col("s_sum").alias("score"), "s_cnt")
+        if acc is None:
+            acc = sagg.select("doc_id", F.col("s_sum").alias("score"),
+                              "s_cnt")
         else:
-            anchor = (anchor.join(sagg, "doc_id", "left")
-                      .select("doc_id",
-                              (F.col("score")
-                               + F.coalesce(F.col("s_sum"), F.lit(0.0))
-                               ).alias("score"),
-                              F.coalesce(F.col("s_cnt"), F.lit(0))
-                              .alias("s_cnt")))
+            acc = (acc.join(sagg, "doc_id", "left")
+                   .select("doc_id",
+                           (F.col("score")
+                            + F.coalesce(F.col("s_sum"), F.lit(0.0))
+                            ).alias("score"),
+                           F.coalesce(F.col("s_cnt"), F.lit(0))
+                           .alias("s_cnt")))
         if msm > 0:
-            anchor = anchor.where(F.col("s_cnt") >= msm)
-        anchor = anchor.drop("s_cnt")
+            acc = acc.where(F.col("s_cnt") >= msm)
+        return acc.drop("s_cnt")
 
-    scored = bool(spec.must or spec.must_dismax or n_scoring_should
-                  or child_scored or ts_scored)
-    if anchor is None:
-        # pure filter / match_all / pure must_not / explicit msm=0 with
-        # no live should: every doc qualifies at score 0
-        qualifies_all = (
-            spec.match_all or spec.filter_sql or spec.must_not
-            or spec.must_not_sql or spec.must_not_bool
-            or any(c == "must_not" for c, _ in spec.terms_set)
-            or ((spec.should or spec.should_bool or spec.should_sql
-                 or spec.should_dismax
-                 or any(c == "should" for c, _ in spec.terms_set))
-                and msm == 0))
-        if not qualifies_all:
-            return None, False
-        anchor = _doc_stats_union(segs).select(
-            "doc_id", F.lit(0.0).alias("score"))
+    def where(self, acc, pred: str):
+        allowed = _doc_stats_union(self.segs).where(pred).select("doc_id")
+        return acc.join(allowed, "doc_id", "left_semi")
 
-    # ---- metadata predicates against doc_stats
-    if spec.filter_sql or spec.must_not_sql:
-        # must_not null-guarded: ES must_not on a missing/NULL field
-        # MATCHES the doc — NOT(NULL) would silently exclude it
-        pred = " AND ".join(
-            [f"({p})" for p in spec.filter_sql]
-            + [f"NOT coalesce(({p}), false)" for p in spec.must_not_sql])
-        allowed = _doc_stats_union(segs).where(pred).select("doc_id")
-        anchor = anchor.join(allowed, "doc_id", "left_semi")
+    def must_not(self, acc, fr):
+        return acc.join(fr.select("doc_id"), "doc_id", "left_anti")
 
-    # ---- must_not text clauses / child bools: anti-join matching ids
-    for fr in ([clause_frame(c) for c in spec.must_not]
-               + [terms_set_frame(ts) for tctx, ts in spec.terms_set
-                  if tctx == "must_not"]
-               + [child_qualify(child)[0] for child in spec.must_not_bool]):
-        if fr is not None:
-            anchor = anchor.join(fr.select("doc_id"), "doc_id", "left_anti")
+    def const(self, acc, boost: float):
+        return acc.select("doc_id", F.lit(boost).alias("score"))
 
-    if spec.const_boost is not None:
-        # ES constant_score: the qualifying set is whatever the wrapped
-        # filter resolved to above — pin every doc's score to `boost`
-        return (anchor.select(
-            "doc_id", F.lit(spec.const_boost).alias("score")), True)
-    return anchor, scored
+    def boosting(self, fr, nfr, nb: float):
+        """The negative's doc set left-joins on to demote scores."""
+        if nfr is None:
+            return fr
+        neg_ids = nfr.select("doc_id", F.lit(True).alias("__neg"))
+        return (fr.join(neg_ids, "doc_id", "left")
+                .select("doc_id",
+                        F.when(F.coalesce(F.col("__neg"), F.lit(False)),
+                               F.col("score") * F.lit(nb))
+                        .otherwise(F.col("score")).alias("score")))
+
+    def fscore(self, fr, scored: bool, fs: FunctionScore):
+        """The function columns join in from doc_stats (candidate-sized)
+        and the factor/combine run as row expressions. Block-max pruning
+        stays off for this shape (:func:`_prunable_for_topk`): per-term
+        score bounds don't survive arbitrary per-doc factors."""
+        need = _fscore_fields(fs)
+        if need:
+            fr = fr.join(
+                _doc_stats_union(self.segs).select("doc_id", *need),
+                "doc_id", "left")
+        wqs = F.col("score") if scored else F.lit(1.0)
+        final = _fscore_combine(wqs, _fscore_factor(fs, wqs), fs)
+        fr = fr.select("doc_id", final.alias("score"))
+        if fs.min_score is not None:
+            fr = fr.where(F.col("score") >= F.lit(fs.min_score))
+        return fr
 
 
 def dsl_aggregate_indexed(

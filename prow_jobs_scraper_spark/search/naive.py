@@ -26,6 +26,7 @@ from prow_jobs_scraper_spark.search.compressed import (
     _positional_pred,
     _TokenPositions,
 )
+from prow_jobs_scraper_spark.session import empty_frame
 
 
 def naive_bm25_topk(
@@ -56,7 +57,7 @@ def naive_bm25_topk(
     conjunctive = _conjunctive(operator)
     spark = docs_df.sparkSession
     q_terms = sorted(set(tokenize_text(query_text)))
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = empty_frame(spark, "doc_id long, score double")
     if not q_terms:
         return empty
 
@@ -150,7 +151,7 @@ def naive_phrase_topk(
     params = params or BM25Params()
     spark = docs_df.sparkSession
     phrase_terms = tokenize_text(phrase_text)  # ordered, duplicates kept
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = empty_frame(spark, "doc_id long, score double")
     if not phrase_terms:
         return empty
 

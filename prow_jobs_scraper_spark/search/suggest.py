@@ -66,6 +66,7 @@ from prow_jobs_scraper_spark.functions.tokenize import (
     tokenize_text,
 )
 from prow_jobs_scraper_spark.search.dsl import DslError
+from prow_jobs_scraper_spark.session import empty_frame
 
 _TERM_KEYS = {"field", "size", "sort", "suggest_mode", "max_edits",
               "prefix_length", "min_word_length", "min_doc_freq"}
@@ -734,7 +735,7 @@ def suggest_terms_indexed(
     if not conds:
         empty = _suggest_over_vocab(
             spark, entries,
-            spark.createDataFrame([], "term string, df long"))
+            empty_frame(spark, "term string, df long"))
         return empty
     ball = terms.where(reduce(lambda a, b: a | b, conds))
     cand_terms = [r["term"] for r in ball.collect()]

@@ -27,7 +27,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 # the directory holding the package: Python workers import the daemon
 # (and every package UDF) from it, whatever the driver's cwd
@@ -94,3 +96,15 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: str) -> DataFrame:
+    """An empty frame of the DDL ``schema``, planned as an empty local
+    relation: collecting it runs no Spark job. (``createDataFrame([],
+    schema)`` plans an RDD scan, and collecting it starts a Python
+    task.)"""
+    fields = DataType.fromDDL(schema).fields
+    return (spark.range(1)
+            .select(*[F.lit(None).cast(f.dataType).alias(f.name)
+                      for f in fields])
+            .where(F.lit(False)))

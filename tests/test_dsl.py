@@ -891,6 +891,13 @@ DSL_QUERIES = [
         "query": {"match": {"text": "hash"}},
         "script": "1 + _score * 2 - -3 / (1 + Math.abs("
                   "doc['turn_idx'].value - 10))"}}}),
+    # ---- no required clause: an empty bool matches every doc at score
+    # 0 (ES match_all), in every context that wraps it
+    ("empty-bool", {"query": {"bool": {}}}),
+    ("must-not-empty-bool", {"query": {"bool": {
+        "must_not": [{"bool": {}}]}}}),
+    ("constant-score-empty-bool", {"query": {"constant_score": {
+        "filter": {"bool": {}}}}}),
 ]
 
 
@@ -5233,6 +5240,10 @@ AGG_REQUESTS = [
         }},
         "aggs": {"by_tool": {"terms": {"field": "tool", "size": 5}}},
     }),
+    ("empty-bool", {
+        "query": {"bool": {}},
+        "aggs": {"by_role": {"terms": {"field": "role"}}},
+    }),
 ]
 
 
@@ -5712,7 +5723,7 @@ def test_msearch_rejects_bad_requests(spark, docs):
 # recursive numpy/duckdb oracle (hypothesis — SURVEY.md §5 item 4 style)
 # --------------------------------------------------------------------------
 
-from hypothesis import given, settings  # noqa: E402
+from hypothesis import HealthCheck, Phase, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
 _VOCAB = ["spark", "agent", "the_hot_term", "w00042", "w00099", "w00005",
@@ -6422,6 +6433,132 @@ def test_random_nested_bool_indexed_matches_naive(spark, docs, dsl_index,
         got["score"].to_numpy(dtype=np.float64),
         want["score"].to_numpy(dtype=np.float64),
         rtol=1e-9, atol=1e-12, err_msg=str(q))
+
+
+# --------------------------------------------------------------------------
+# generated bool trees: naive == indexed == _spec_eval on the FULL
+# qualifying set, every context rule of the one bool walker exercised —
+# empty bools, explicit msm, metadata shoulds, unsatisfiable leaves
+# --------------------------------------------------------------------------
+
+from prow_jobs_scraper_spark.search.dsl import (  # noqa: E402
+    search_dsl_many,
+    search_dsl_many_indexed,
+)
+
+_TREE_TERMS = ["spark", "agent", "the_hot_term", "w00013", "w00042",
+               "zzz_never_appears"]
+_TREE_BATCH = 25
+
+
+@st.composite
+def _tree_leaf(draw):
+    kind = draw(st.sampled_from(["match", "match", "term", "range",
+                                 "terms", "dis_max"]))
+    if kind in ("match", "dis_max"):
+        ms = [{"match": {"text": {
+            "query": " ".join(draw(st.lists(st.sampled_from(_TREE_TERMS),
+                                            min_size=1, max_size=2))),
+            "operator": draw(st.sampled_from(["and", "or"]))}}}
+            for _ in range(draw(st.integers(1, 2)))]
+        if kind == "match":
+            return ms[0]
+        return {"dis_max": {"queries": ms, "tie_breaker": draw(
+            st.sampled_from([0.0, 0.4, 1.0]))}}
+    if kind == "term":
+        field = draw(st.sampled_from(["role", "tool"]))  # tool has NULLs
+        return {"term": {field: draw(st.sampled_from(
+            ["user", "tool", "bash", "sql"]))}}
+    if kind == "terms":
+        return {"terms": {"role": draw(st.lists(st.sampled_from(
+            ["user", "assistant", "system"]), min_size=1, max_size=2))}}
+    op = draw(st.sampled_from(["gte", "lt"]))
+    return {"range": {"turn_idx": {op: draw(st.integers(0, 120))}}}
+
+
+@st.composite
+def _tree(draw, depth: int = 3):
+    """One ES query: a leaf, or (depth permitting) a bool — possibly
+    empty, with an explicit minimum_should_match or not — a
+    constant_score or a boosting over smaller trees."""
+    kind = (draw(st.sampled_from(["leaf", "bool", "bool", "constant_score",
+                                  "boosting"])) if depth else "leaf")
+    if kind == "leaf":
+        return draw(_tree_leaf())
+    if kind == "constant_score":
+        return {"constant_score": {"filter": draw(_tree(depth - 1)),
+                                   "boost": draw(st.sampled_from([1.0,
+                                                                  2.5]))}}
+    if kind == "boosting":
+        return {"boosting": {"positive": draw(_tree(depth - 1)),
+                             "negative": draw(_tree(depth - 1)),
+                             "negative_boost": draw(st.sampled_from(
+                                 [0.0, 0.5, 1.0]))}}
+    body = {}
+    for ctx in ("must", "filter", "should", "must_not"):
+        n = draw(st.integers(0, 2))
+        if n:
+            body[ctx] = [draw(_tree(depth - 1)) for _ in range(n)]
+    if draw(st.integers(0, 3)) == 0:
+        body["minimum_should_match"] = draw(st.sampled_from(
+            [0, 1, 2, -1, "50%"]))
+    return {"bool": body}
+
+
+@pytest.fixture(scope="module")
+def tree_corpus(spark, tmp_path_factory):
+    """A small corpus, its pandas copy and its index."""
+    from prow_jobs_scraper_spark.synth import synth_transcripts_pandas
+    pdf = synth_transcripts_pandas(n_turns=400, seed=11)
+    df = spark.createDataFrame(pdf)
+    docs_ = with_doc_ids(df.withColumn("ts", df["ts"].cast("timestamp")))
+    docs_ = docs_.cache()
+    d = str(tmp_path_factory.mktemp("tree_idx"))
+    build_index(spark, docs_, d, BuildConfig(n_ranges=2, n_buckets=2))
+    return docs_, docs_.toPandas(), d
+
+
+def _oracle_rows(pdf, fstats, spec) -> dict:
+    ok, total, qual, _ = _spec_eval(pdf, fstats, len(pdf), spec)
+    if not ok:
+        return {}
+    return dict(zip(pdf["doc_id"].to_numpy()[qual].tolist(),
+                    total[qual].tolist()))
+
+
+def _assert_same_rows(got: dict, want: dict, what: str, q: dict):
+    import json
+    msg = f"{what}: {json.dumps(q)}"
+    assert sorted(got) == sorted(want), msg
+    ids = sorted(want)
+    np.testing.assert_allclose([got[i] for i in ids], [want[i] for i in ids],
+                               rtol=1e-9, atol=1e-12, err_msg=msg)
+
+
+@settings(max_examples=200 // _TREE_BATCH, deadline=None, derandomize=True,
+          database=None, phases=[Phase.generate],
+          suppress_health_check=list(HealthCheck))
+@given(st.lists(_tree(), min_size=_TREE_BATCH, max_size=_TREE_BATCH))
+def test_generated_bool_trees_match_across_executors(spark, tree_corpus,
+                                                     trees):
+    """Random bool trees (depth <= 3) through both _msearch executors,
+    each query sized past the corpus so the whole qualifying set comes
+    back: naive rows == indexed rows == the _spec_eval oracle, doc ids
+    and scores, and the count with them."""
+    docs_, pdf, idx = tree_corpus
+    reqs = [{"query_id": f"t{i:02d}", "query": q, "size": len(pdf) + 1}
+            for i, q in enumerate(trees)]
+    runs = {"naive": search_dsl_many(docs_, reqs).toPandas(),
+            "indexed": search_dsl_many_indexed(spark, idx, reqs,
+                                               docs_df=docs_).toPandas()}
+    fstats = _field_stats(pdf, {"text"})
+    for r in reqs:
+        want = _oracle_rows(pdf, fstats, parse_query(r["query"]))
+        for what, out in runs.items():
+            block = out[out["query_id"] == r["query_id"]]
+            got = dict(zip(block["doc_id"].tolist(), block["score"].tolist()))
+            assert len(block) == len(got), f"{what}: duplicate doc_ids"
+            _assert_same_rows(got, want, what, r["query"])
 
 
 # prunable shapes with metadata clauses: each batches with its allowed

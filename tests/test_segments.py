@@ -24,6 +24,7 @@ from prow_jobs_scraper_spark.search.compressed import (
     search_topk,
     search_topk_multi,
 )
+from prow_jobs_scraper_spark.search.dsl import execute_request_indexed
 from prow_jobs_scraper_spark.synth import synth_transcripts_pandas
 
 QUERY = "spark error"
@@ -139,22 +140,76 @@ def test_compact_tick_reads_raise_or_answer_fresh(spark, corpora,
     check(rc["segments"])
 
 
-def test_warm_search_topk_runs_two_jobs(spark, corpora, tmp_path):
-    # one job for the group pass and one for the top-k cut; the df
-    # fetch, the file listing and the schema inference are all cached
-    first, _ = corpora
-    idx = str(tmp_path / "idx")
-    build_index(spark, first, idx, BuildConfig(n_ranges=2, n_buckets=2))
-    cold = search_topk(spark, idx, "spark agent", 5).collect()
-    assert cold
+def _warm_jobs(spark, group: str, read):
+    """Run ``read`` twice -> (its second, warm answer, the number of
+    Spark jobs that warm run started)."""
+    cold = read()
     sc = spark.sparkContext
-    sc.setJobGroup("warm-topk", "a warm search_topk")
+    sc.setJobGroup(group, group)
     try:
-        warm = search_topk(spark, idx, "spark agent", 5).collect()
+        warm = read()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert warm == cold
-    assert len(sc.statusTracker().getJobIdsForGroup("warm-topk")) == 2
+    return warm, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def warm_index(spark, corpora, tmp_path_factory):
+    idx = str(tmp_path_factory.mktemp("warm") / "idx")
+    build_index(spark, corpora[0], idx, BuildConfig(n_ranges=2, n_buckets=2))
+    return idx
+
+
+def test_warm_search_topk_runs_two_jobs(spark, warm_index):
+    # one job for the group pass and one for the top-k cut; the df
+    # fetch, the file listing and the schema inference are all cached
+    warm, jobs = _warm_jobs(spark, "warm-topk", lambda: search_topk(
+        spark, warm_index, "spark agent", 5).collect())
+    assert warm
+    assert jobs == 2
+
+
+def test_provably_empty_read_runs_no_job(spark, warm_index):
+    # an AND whose term the index lacks is answered on the driver: the
+    # empty result is a local relation, which collects without a task
+    warm, jobs = _warm_jobs(spark, "warm-empty", lambda: search_topk(
+        spark, warm_index, "spark zzz_never_appears", 5, "and").collect())
+    assert warm == []
+    assert jobs == 0
+
+
+# the three `_search` body shapes perfbench times (perfbench/inputs.py
+# `_request`), with the warm job count each ran when it was pinned
+_SEARCH_BODIES = {
+    "bool_filter": ({"query": {"bool": {
+        "must": [{"match": {"text": {"query": "spark agent",
+                                     "operator": "or"}}}],
+        "filter": [{"term": {"role": "user"}},
+                   {"range": {"ts": {"gte": "2025-06-02",
+                                     "lte": "2025-06-14"}}}]}},
+        "size": 10}, 3),
+    "should_page": ({"query": {"bool": {"should": [
+        {"match": {"text": {"query": "spark"}}},
+        {"match": {"text": {"query": "agent"}}}]}},
+        "from": 10, "size": 10}, 2),
+    "terms_agg": ({"query": {"match": {"text": {"query": "spark",
+                                                "operator": "and"}}},
+                   "aggs": {"by_tool": {"terms": {"field": "tool",
+                                                  "size": 10}}}}, 4),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_SEARCH_BODIES))
+def test_warm_search_request_job_budget(spark, warm_index, shape):
+    # bool_filter and should_page take the pruned bool kernel, terms_agg
+    # qualifies through the bool walker; a fixed cost added to either
+    # path shows up here as one more job
+    body, budget = _SEARCH_BODIES[shape]
+    warm, jobs = _warm_jobs(spark, f"warm-{shape}", lambda: (
+        execute_request_indexed(spark, warm_index, body).collect()))
+    assert len(warm) > 0
+    assert jobs == budget
 
 
 def test_search_reads_index_tables_only_through_the_handle():
