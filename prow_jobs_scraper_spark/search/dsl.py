@@ -3125,8 +3125,8 @@ def _bool(spec: QuerySpec, ops) -> tuple | None:
              else ops.terms_set(x))
         return None if v is None else (v, True)
 
-    def ts(*ctxs):
-        return [t for c, t in spec.terms_set if c in ctxs]
+    def ts(ctx):
+        return [t for c, t in spec.terms_set if c == ctx]
 
     acc, scored = None, False
     required = ([(True, x) for x in spec.must + spec.must_dismax

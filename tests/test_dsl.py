@@ -6481,8 +6481,9 @@ def _tree(draw, depth: int = 3):
     """One ES query: a leaf, or (depth permitting) a bool — possibly
     empty, with an explicit minimum_should_match or not — a
     constant_score or a boosting over smaller trees."""
-    kind = (draw(st.sampled_from(["leaf", "bool", "bool", "constant_score",
-                                  "boosting"])) if depth else "leaf")
+    kind = (draw(st.sampled_from(["leaf", "leaf", "bool", "bool",
+                                  "constant_score", "boosting"]))
+            if depth else "leaf")
     if kind == "leaf":
         return draw(_tree_leaf())
     if kind == "constant_score":
@@ -6496,7 +6497,7 @@ def _tree(draw, depth: int = 3):
                                  [0.0, 0.5, 1.0]))}}
     body = {}
     for ctx in ("must", "filter", "should", "must_not"):
-        n = draw(st.integers(0, 2))
+        n = draw(st.sampled_from([0, 0, 1, 1, 2]))
         if n:
             body[ctx] = [draw(_tree(depth - 1)) for _ in range(n)]
     if draw(st.integers(0, 3)) == 0:
